@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Observation, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Data-quality operators (SURVEY.md §2.2 P7–P14, §2.4 A1/A7–A9/A13).
   *
@@ -55,15 +57,75 @@ object Quality {
   def clean(df: DataFrame, cols: Seq[String], policy: CleanPolicy): DataFrame =
     df.filter(cleanFilter(cols, policy))
 
+  private def nullAggs(metricCols: Seq[String]): Seq[Column] =
+    metricCols.map(c => sum(col(c).isNull.cast("long")).as(s"nulls_$c"))
+
   /** Full quality report in ONE job (vs the reference's ~15 actions,
     * SURVEY §4.3.2): total rows, per-column null counts, duplicate-key
-    * count, and completeness ratio per column.
+    * count, and completeness ratio per column. A pipeline that dedups
+    * and writes anyway takes [[keepFirstReported]] instead: the same
+    * row, observed on that write, with no job of its own.
     */
   def report(df: DataFrame, metricCols: Seq[String], keys: Seq[String]): DataFrame = {
-    val nullAggs = metricCols.map(c => sum(col(c).isNull.cast("long")).as(s"nulls_$c"))
     val dupAgg = countDistinct(col(keys.head), keys.tail.map(col): _*).as("distinct_keys")
-    df.agg(count(lit(1)).as("total_rows"), (nullAggs :+ dupAgg): _*)
+    df.agg(count(lit(1)).as("total_rows"), (nullAggs(metricCols) :+ dupAgg): _*)
       .withColumn("duplicate_rows", col("total_rows") - col("distinct_keys"))
+  }
+
+  /** [[Dedup.keepFirst]] with the [[report]] of its input riding along
+    * as `Dataset.observe` metrics: whichever action runs the returned
+    * frame (a pipeline's Silver write) also fills the report, so the
+    * report costs no scan of its own.
+    *
+    *  - `total_rows` and `nulls_<c>` are observed on `df`, below the
+    *    window's shuffle;
+    *  - `distinct_keys` is observed on keepFirst's output as the count
+    *    of rows whose keys are all non-null: keepFirst leaves exactly
+    *    one row per key (null keys group together), so this equals
+    *    `countDistinct(keys)`, which ignores null keys — and DISTINCT
+    *    aggregates are not allowed inside `observe`;
+    *  - `duplicate_rows` is derived from the two, as in [[report]].
+    *
+    * The aggregates run as accumulators in shuffle-map stages (the
+    * window's, and the write's own partitioning shuffle above it), so
+    * they carry the caveat of Spark's SQL metrics: a stage re-executed
+    * after a lost shuffle may count its re-run tasks twice.
+    */
+  def keepFirstReported(df: DataFrame, metricCols: Seq[String], keys: Seq[String],
+                        order: Seq[Column]): (DataFrame, ObservedReport) = {
+    val id = java.util.UUID.randomUUID().toString.take(8)
+    val in = Observation(s"graft_quality_in_$id")
+    val out = Observation(s"graft_quality_out_$id")
+    val firsts = Dedup.keepFirst(
+        df.observe(in, count(lit(1)).as("total_rows"), nullAggs(metricCols): _*), keys, order)
+      .observe(out, count_if(keys.map(col(_).isNotNull).reduce(_ && _)).as("distinct_keys"))
+    (firsts, new ObservedReport(df, metricCols, keys, in, out))
+  }
+
+  /** The pending report of [[keepFirstReported]]. `schema` is exactly
+    * [[report]]'s (analysis only, no job).
+    */
+  final class ObservedReport private[Quality] (input: DataFrame, metricCols: Seq[String],
+                                               keys: Seq[String], in: Observation,
+                                               out: Observation) {
+    private val scanned = report(input, metricCols, keys)
+    val schema: StructType = scanned.schema
+
+    /** The report row once the observing action's metrics arrived, or
+      * None if they will not (see [[GraftSqlBridge.awaitObserved]]).
+      */
+    def await(): Option[Row] =
+      for {
+        i <- GraftSqlBridge.awaitObserved(in)
+        o <- GraftSqlBridge.awaitObserved(out)
+      } yield {
+        val m = i ++ o + ("duplicate_rows" ->
+          (i("total_rows").asInstanceOf[Long] - o("distinct_keys").asInstanceOf[Long]))
+        new GenericRowWithSchema(schema.fieldNames.map(m), schema)
+      }
+
+    /** The same row from [[report]]: a job of its own over the input. */
+    def scan(): Row = scanned.collect()(0)
   }
 
   /** Per-group z-score outliers: rows whose |value − μ_group| exceeds

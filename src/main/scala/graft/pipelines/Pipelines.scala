@@ -1,17 +1,18 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Joins, Quality, TimeAgg}
+import graft.operators.{Joins, Quality, TimeAgg}
 import graft.sources.{ColumnarJson, TableManager}
 
 /** The three reference pipelines (SURVEY §3), re-expressed Spark-first.
   *
   * Differences from the reference, by design (SURVEY §4.3):
   *  - flattening happens on executors (ColumnarJson), not the driver;
-  *  - the quality report is ONE job (Quality.report), not ~15 count()
-  *    actions;
+  *  - the quality report and the row counts have no job of their own,
+  *    not ~15 count() actions: they are observed on the Silver write
+  *    (Quality.keepFirstReported) and describe the run that made them;
   *  - keep-first dedup is deterministic (explicit ordering);
   *  - the clean-row policy is an explicit parameter, not an accident
   *    of which LLM wrote the script.
@@ -25,8 +26,48 @@ object AirQuality {
 
 /** Result bundle for a pipeline run: target row counts + the quality
   * report the reference prints (null counts, dup counts, retention).
+  * `report` is a one-row local frame with [[Quality.report]]'s schema:
+  * collecting it launches no job.
   */
 case class PipelineResult(bronzeRows: Long, silverRows: Long, report: DataFrame)
+
+private[pipelines] object RunMetrics {
+  private lazy val log = org.apache.log4j.Logger.getLogger(getClass)
+
+  /** `df` with its row count observed by whichever action runs it. */
+  def counted(df: DataFrame): (DataFrame, Observation) = {
+    val obs = Observation(s"graft_rows_${java.util.UUID.randomUUID().toString.take(8)}")
+    (df.observe(obs, count(lit(1)).as("rows")), obs)
+  }
+
+  /** The result from the Silver write's observations. `bronze` is the
+    * observed Bronze input and the table it counts; None means Bronze is
+    * the report's whole input, so its row count is `total_rows`. Should
+    * the metrics not arrive, log a WARN and compute the same figures
+    * with scans of their own (the report job plus counts).
+    */
+  def result(spark: SparkSession, pipeline: String, report: Quality.ObservedReport,
+             silverRows: Observation, silverTable: String,
+             bronze: Option[(Observation, DataFrame)] = None): PipelineResult = {
+    def rows(obs: Observation) =
+      GraftSqlBridge.awaitObserved(obs).map(_("rows").asInstanceOf[Long])
+    val observed = for {
+      rep <- report.await()
+      b <- bronze.fold(Option(rep.getAs[Long]("total_rows")))(b => rows(b._1))
+      s <- rows(silverRows)
+    } yield (rep, b, s)
+    val (rep, b, s) = observed.getOrElse {
+      log.warn(s"$pipeline: the Silver write's metrics did not arrive (an empty " +
+        "Silver write drops them); recomputing the quality report and row counts " +
+        "with scans of their own")
+      val rep = report.scan()
+      (rep, bronze.fold(rep.getAs[Long]("total_rows"))(_._2.count()),
+        spark.table(silverTable).count())
+    }
+    PipelineResult(b, s,
+      spark.createDataFrame(java.util.Collections.singletonList(rep), report.schema))
+  }
+}
 
 /** E1: ingest → Bronze (partitioned append) → quality → dedup/clean →
   * Silver. Canonical reference flow: `First experiment/GPT 5.py:70-172`.
@@ -51,14 +92,12 @@ class BronzeSilverPipeline(spark: SparkSession, tables: TableManager,
       tables.append(hourly, bronzeTable, partitionBy = Seq("ingestion_date"))
 
     val bronze = spark.table(bronzeTable)
-    val report = Quality.report(bronze, Pollutants, keys = Seq("time"))
-
-    val silver = Quality.clean(
-      Dedup.keepFirst(bronze, Seq("time"), col("ingestion_date") +: Pollutants.map(col)),
-      Pollutants, cleanPolicy)
+    val (firsts, report) = Quality.keepFirstReported(bronze, Pollutants, keys = Seq("time"),
+      col("ingestion_date") +: Pollutants.map(col))
+    val (silver, silverRows) = RunMetrics.counted(Quality.clean(firsts, Pollutants, cleanPolicy))
     tables.overwrite(silver, silverTable, partitionBy = Seq("ingestion_date"))
 
-    PipelineResult(bronze.count(), spark.table(silverTable).count(), report)
+    RunMetrics.result(spark, "BronzeSilverPipeline", report, silverRows, silverTable)
   }
 }
 
@@ -70,8 +109,10 @@ class MonthlyAggPipeline(spark: SparkSession, tables: TableManager) {
 
   def run(sourcePath: String, monthlyTable: String = "air_quality_monthly_avg"): DataFrame = {
     val hourly = ColumnarJson.read(spark, sourcePath, Pollutants)
+    // One row per month: a single sorted partition, not a global sort
+    // (whose range partitioning runs a sampling job every call).
     val monthly = TimeAgg.monthlyAvg(hourly, "time", Pollutants)
-      .orderBy(col("year"), col("month"))
+      .coalesce(1).sortWithinPartitions(col("year"), col("month"))
     tables.overwrite(monthly, monthlyTable)
     spark.table(monthlyTable)
   }
@@ -97,17 +138,18 @@ class JoinedSilverPipeline(spark: SparkSession, tables: TableManager) {
     tables.append(wx, wxBronze, partitionBy = Seq("ingestion_date"))
 
     // J4 disambiguation: keep one ingestion_date, drop the other side's.
-    val joined = Joins.equi(
-      spark.table(aqBronze),
-      spark.table(wxBronze).drop("ingestion_date"),
-      keys = Seq("time"))
+    // The join reads all of aq Bronze: its row count is observed there.
+    val (aqIn, aqRows) = RunMetrics.counted(spark.table(aqBronze))
+    val joined = Joins.equi(aqIn, spark.table(wxBronze).drop("ingestion_date"), keys = Seq("time"))
 
-    val report = Quality.report(joined, Pollutants ++ WeatherMetrics, keys = Seq("time"))
-    val silver = Dedup.keepFirst(joined, Seq("time"),
-      col("ingestion_date") +: (Pollutants ++ WeatherMetrics).map(col))
+    val metrics = Pollutants ++ WeatherMetrics
+    val (firsts, report) = Quality.keepFirstReported(joined, metrics, keys = Seq("time"),
+      col("ingestion_date") +: metrics.map(col))
+    val (silver, silverRows) = RunMetrics.counted(firsts)
     tables.overwrite(silver, silverTable, partitionBy = Seq("ingestion_date"))
 
-    PipelineResult(spark.table(aqBronze).count(), spark.table(silverTable).count(), report)
+    RunMetrics.result(spark, "JoinedSilverPipeline", report, silverRows, silverTable,
+      Some((aqRows, spark.table(aqBronze))))
   }
 }
 

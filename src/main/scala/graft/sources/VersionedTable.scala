@@ -806,13 +806,13 @@ class VersionedTable(spark: SparkSession, dir: String,
       aggs.tail.zipWithIndex.map { case (a, i) => a.as(s"_${i + 1}") }: _*)
     // column mapping: files always spell PHYSICAL names
     toPhysicalDf(observed, l2p).write.parquet(dataDir.toString)
-    // The metrics arrive via an ASYNC listener bus: poll briefly, and
+    // The metrics arrive via an ASYNC listener bus: wait with a bound, and
     // if the bus dropped the event (bounded queue under pressure —
     // never observed, but a hung commit would be worse than a second
     // scan) fall back to the historical read-back, which computes the
     // same numbers from the files.
     val (rows, stats, violations) =
-      awaitObserved(obs).map(m =>
+      org.apache.spark.sql.GraftSqlBridge.awaitObserved(obs).map(m =>
         decodeStatRow(statCols, cNames, l2p, i => m.getOrElse(s"_$i", null)))
       .getOrElse(statsOf(dataDir.toString, constraints, l2p.map(_.swap)))
     val broken = violations.filter(_._2 > 0L)
@@ -1041,25 +1041,6 @@ class VersionedTable(spark: SparkSession, dir: String,
       n -> longAt(base + i)
     }.toMap
     (longAt(0), stats, violations)
-  }
-
-  /** Wait for a write-fused observation's metrics. The listener bus
-    * delivering them is asynchronous, so the common case is a handful
-    * of milliseconds after the write action returns; None after the
-    * bound means the bus dropped the event — the caller falls back to
-    * the read-back scan rather than hanging a commit forever.
-    */
-  private def awaitObserved(obs: org.apache.spark.sql.Observation,
-                            maxWaitMs: Long = 30000L)
-      : Option[Map[String, Any]] = {
-    import org.apache.spark.sql.GraftSqlBridge.observedOrEmpty
-    val deadline = System.nanoTime() + maxWaitMs * 1000000L
-    var m = observedOrEmpty(obs)
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(2L)
-      m = observedOrEmpty(obs)
-    }
-    if (m.isEmpty) None else Some(m.toMap)
   }
 
   /** Per-directory [[statsOf]] for SEVERAL directories in ONE job:

@@ -20,13 +20,22 @@ object GraftSqlBridge {
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[CDataFrame].queryExecution.analyzed
 
-  /** Non-blocking read of an Observation's metrics (`getOrEmpty` is
-    * `private[sql]`; the public `get` blocks with no timeout, and a
-    * dropped listener event would hang the caller forever): empty
-    * until the async listener bus delivers the query's metrics.
+  /** Wait for a write-fused observation's metrics. The listener bus
+    * delivers them asynchronously, so the common case is a handful of
+    * milliseconds after the write action returns. None means they will
+    * not come: the bound passed (the bus dropped the event, or the
+    * query never ran), or Spark completed the observation with an
+    * empty row because the observed node left the final plan (AQE
+    * replaces a stage that produced no rows by an empty relation when
+    * an operator above it, such as a partitioned write's sort, consumes
+    * nothing). The caller then recomputes the figures with a scan of
+    * its own rather than hang in the unbounded `Observation.get`.
     */
-  def observedOrEmpty(obs: Observation): Map[String, Any] =
-    obs.getOrEmpty
+  def awaitObserved(obs: Observation, maxWaitMs: Long = 30000L): Option[Map[String, Any]] =
+    scala.util.Try(scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(maxWaitMs, "ms")))
+      .toOption.filter(_.schema != null)
+      .map(r => r.getValuesMap[Any](r.schema.fieldNames.toIndexedSeq))
 
   /** The planner strategies an extensions object would inject — lets a
     * test assert the `spark.sql.extensions` wiring without building a

@@ -18,6 +18,20 @@ class StatsFusionSpec extends SparkSuite {
   private def freshDir(): String =
     java.nio.file.Files.createTempDirectory("graft_statsfusion").toString
 
+  test("awaitObserved: a query that never runs yields None within the bound") {
+    import org.apache.spark.sql.{GraftSqlBridge, Observation}
+    val never = Observation("graft_await_never")
+    spark.range(3).observe(never, count(lit(1)).as("n")) // never executed
+    val t0 = System.nanoTime()
+    assert(GraftSqlBridge.awaitObserved(never, maxWaitMs = 200L).isEmpty)
+    val waitedMs = (System.nanoTime() - t0) / 1000000L
+    assert(waitedMs >= 200L && waitedMs < 5000L, s"waited $waitedMs ms")
+    // the same wait returns the metrics once the observed query runs
+    val ran = Observation("graft_await_ran")
+    spark.range(3).observe(ran, count(lit(1)).as("n")).collect()
+    assert(GraftSqlBridge.awaitObserved(ran, maxWaitMs = 30000L) === Some(Map("n" -> 3L)))
+  }
+
   test("observe-fused append records exact bounds, null counts, and row counts across types") {
     val dir = freshDir()
     val vt = new VersionedTable(spark, dir)
