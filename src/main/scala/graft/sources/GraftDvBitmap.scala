@@ -268,34 +268,31 @@ private[graft] object GraftDvBitmap {
 
   /** List every bitmap of the given sidecars as (dataDir, dataFile,
     * bitmapPath) — driver-side, #bitmap-files-sized (metadata, not
-    * positions).
+    * positions). A sidecar the log names but the filesystem lacks, or
+    * one in the pre-bitmap positions-parquet layout, fails LOUDLY:
+    * reading either as an empty hidden set would silently resurrect
+    * deleted rows.
     */
   def listBitmaps(spark: SparkSession, root: Path, sidecars: Seq[String])
       : Seq[(String, String, String)] = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     sidecars.flatMap { sc =>
       val base = new Path(root, sc)
-      if (!fs.exists(base)) Nil
-      else {
-        val entries = fs.listStatus(base).toSeq
-        // a PRE-BITMAP sidecar (the earlier (dir,file,pos) parquet
-        // layout) must fail LOUDLY, not read as an empty hidden set —
-        // silently resurrecting deleted rows is the one outcome a
-        // format change may never have
-        require(!entries.exists(e =>
-          e.isFile && e.getPath.getName.endsWith(".parquet")),
-          s"deletion-vector sidecar $sc under $root is in the " +
-            "pre-bitmap (positions parquet) layout this reader no " +
-            "longer speaks; run VersionedTable.migrateDv() — a " +
-            "metadata-only transcode commit that touches no data " +
-            "file — to upgrade the table's live DV state")
-        entries.filter(_.isDirectory).flatMap { d =>
-          fs.listStatus(d.getPath).toSeq
-            .filter(_.getPath.getName.endsWith(".dvb"))
-            .map(f => (d.getPath.getName,
-              f.getPath.getName.stripSuffix(".dvb"),
-              f.getPath.toString))
-        }
+      if (!fs.exists(base)) throw new IllegalStateException(
+        s"deletion-vector sidecar $base is named by the transaction log " +
+          "but missing on disk; its deleted rows cannot be hidden")
+      val entries = fs.listStatus(base).toSeq
+      require(!entries.exists(e =>
+        e.isFile && e.getPath.getName.endsWith(".parquet")),
+        s"deletion-vector sidecar $sc under $root is in the " +
+          "pre-bitmap (positions parquet) layout, which this reader " +
+          "does not read")
+      entries.filter(_.isDirectory).flatMap { d =>
+        fs.listStatus(d.getPath).toSeq
+          .filter(_.getPath.getName.endsWith(".dvb"))
+          .map(f => (d.getPath.getName,
+            f.getPath.getName.stripSuffix(".dvb"),
+            f.getPath.toString))
       }
     }
   }

@@ -1,7 +1,14 @@
 package graft.sources
 
+import scala.collection.immutable.SortedSet
 import scala.util.chaining._
 
+import com.fasterxml.jackson.annotation.{JsonInclude, JsonProperty}
+import com.fasterxml.jackson.annotation.JsonInclude.Include
+import com.fasterxml.jackson.databind.DeserializationFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -87,6 +94,133 @@ object VersionedTable {
     v
   }
 
+  /** Per-directory, per-column min/max + null count — the
+    * data-skipping index (Delta's file statistics): `kind` is "l"
+    * (integral/timestamp/date normalized to Long), "d" (fractional),
+    * or "s" (string); bounds are inclusive over the directory's
+    * NON-NULL rows. An ALL-NULL column records `min = max = null`,
+    * which lets range/IS NOT NULL predicates SKIP the directory (no
+    * range matches a null). `nulls` is the column's null-row count,
+    * the fact IS NULL pruning needs (`nulls == 0` → no row can satisfy
+    * it); a log entry without it is refused at decode.
+    */
+  case class ColStat(@JsonProperty("k") kind: String,
+                     @JsonProperty("lo") min: Any,
+                     @JsonProperty("hi") max: Any,
+                     @JsonProperty(value = "n", required = true) nulls: Long)
+
+  /** One committed manifest — a DELTA against the previous version.
+    * `numRows` is the rows ADDED by this commit. `txn` optionally tags
+    * the commit with a (writer-app, batch-id) pair — the idempotence
+    * token streaming sinks use (Delta's `txnAppId`/`txnVersion`).
+    * `addedStats` carries the data-skipping bounds of each added
+    * directory. The annotations are the on-disk field names; empty
+    * fields are omitted.
+    */
+  case class Commit(@JsonProperty(required = true) version: Int,
+                    @JsonProperty(required = true) op: String,
+                    @JsonInclude(Include.ALWAYS) added: Seq[String],
+                    @JsonInclude(Include.ALWAYS) removed: Seq[String],
+                    @JsonProperty(value = "num_rows", required = true) numRows: Long,
+                    @JsonProperty(value = "ts_ms", required = true) tsMs: Long,
+                    @JsonProperty("txn_app") txnApp: Option[String] = None,
+                    @JsonProperty("txn_batch") txnBatch: Option[Long] = None,
+                    @JsonProperty("added_stats")
+                    addedStats: Map[String, Map[String, ColStat]] = Map.empty,
+                    cdf: Option[String] = None,
+                    @JsonProperty("constraint_add_name")
+                    constraintAddName: Option[String] = None,
+                    @JsonProperty("constraint_add_expr")
+                    constraintAddExpr: Option[String] = None,
+                    @JsonProperty("constraint_drop") constraintDrop: Option[String] = None,
+                    @JsonProperty("added_rows") addedRows: Map[String, Long] = Map.empty,
+                    @JsonProperty("added_bytes") addedBytes: Map[String, Long] = Map.empty,
+                    @JsonProperty("schema") schemaJson: Option[String] = None,
+                    @JsonProperty("props_set") propsSet: Map[String, String] = Map.empty,
+                    @JsonProperty("props_unset") propsUnset: Seq[String] = Nil,
+                    @JsonProperty("partition_cols") partitionCols: Seq[String] = Nil,
+                    @JsonProperty("dv_name") dvAdd: Option[String] = None,
+                    @JsonProperty("dv_dirs") dvDirs: Seq[String] = Nil,
+                    @JsonProperty("dv_dir_rows") dvDirRows: Map[String, Long] = Map.empty,
+                    // a reset to the EMPTY DV state (restoring a DV-free
+                    // version) is still a reset, so it is written when empty
+                    @JsonProperty("dv_reset")
+                    dvReset: Option[Map[String, Seq[String]]] = None,
+                    @JsonProperty("dv_reset_rows")
+                    dvResetRows: Option[Map[String, Long]] = None,
+                    @JsonProperty("features_add") featuresAdd: Seq[String] = Nil) {
+    def txn: Option[(String, Long)] = txnApp.zip(txnBatch)
+    def constraintAdd: Option[(String, String)] =
+      constraintAddName.zip(constraintAddExpr)
+  }
+
+  /** A resolved table state: active data directories, their
+    * data-skipping stats, the newest txn tag per streaming app, and the
+    * CHECK constraints in force — also the body of a checkpoint file.
+    */
+  private[graft] case class Snapshot(
+      @JsonInclude(Include.ALWAYS) active: Seq[String] = Nil,
+      stats: Map[String, Map[String, ColStat]] = Map.empty,
+      txns: Map[String, Long] = Map.empty,
+      constraints: Map[String, String] = Map.empty,
+      @JsonProperty("dir_rows") dirRows: Map[String, Long] = Map.empty,
+      @JsonProperty("dir_bytes") dirBytes: Map[String, Long] = Map.empty,
+      @JsonProperty("schema") schemaJson: Option[String] = None,
+      props: Map[String, String] = Map.empty,
+      @JsonProperty("partition_cols") partitionCols: Seq[String] = Nil,
+      dvs: Map[String, Seq[String]] = Map.empty,
+      @JsonProperty("dv_rows_by_dir") dvRowsByDir: Map[String, Long] = Map.empty,
+      features: SortedSet[String] = SortedSet.empty)
+
+  /** The transaction log's JSON codec: the case classes above are its
+    * schema. `None`, null stat bounds and empty collection fields are
+    * omitted; empty strings and map entries are written as they are.
+    * Integral numbers decode as Long (a `Long` inside an `Option` or
+    * `Map` is erased, and would otherwise come back as an Integer);
+    * unknown fields are ignored.
+    */
+  private val logJson: JsonMapper = {
+    val b = JsonMapper.builder()
+      .addModule(DefaultScalaModule)
+      .defaultPropertyInclusion(
+        JsonInclude.Value.construct(Include.NON_ABSENT, Include.ALWAYS))
+      .enable(DeserializationFeature.USE_LONG_FOR_INTS)
+      .disable(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES)
+    Seq(classOf[Seq[_]], classOf[Map[_, _]], classOf[SortedSet[_]]).foreach(
+      b.withConfigOverride(_, _.setIncludeAsProperty(
+        JsonInclude.Value.construct(Include.NON_EMPTY, Include.ALWAYS))))
+    b.build()
+  }
+
+  // JSON spells non-finite doubles as strings ("NaN", "-Infinity")
+  private def typedStats(stats: Map[String, Map[String, ColStat]])
+      : Map[String, Map[String, ColStat]] = {
+    def bound(kind: String, b: Any): Any = (kind, b) match {
+      case ("d", s: String) => s.toDouble
+      case _ => b
+    }
+    stats.map { case (d, cols) => d -> cols.map { case (c, st) =>
+      c -> st.copy(min = bound(st.kind, st.min), max = bound(st.kind, st.max)) } }
+  }
+
+  private[graft] def encodeCommit(c: Commit): Array[Byte] =
+    logJson.writerWithDefaultPrettyPrinter().writeValueAsBytes(c)
+
+  private[graft] def decodeCommit(in: java.io.InputStream): Commit = {
+    val c = logJson.readValue(in, classOf[Commit])
+    c.copy(addedStats = typedStats(c.addedStats))
+  }
+
+  private[graft] def encodeCheckpoint(v: Int, s: Snapshot): Array[Byte] =
+    logJson.writerWithDefaultPrettyPrinter().writeValueAsBytes(
+      logJson.createObjectNode().put("version", v)
+        .setAll[ObjectNode](logJson.valueToTree[ObjectNode](s)))
+
+  private[graft] def decodeCheckpoint(in: java.io.InputStream): Snapshot = {
+    val s = logJson.readValue(in, classOf[Snapshot])
+    s.copy(stats = typedStats(s.stats))
+  }
+
   /** CONVERT an existing FLAT parquet directory into a versioned table
     * IN PLACE (Delta's `CONVERT TO DELTA`): every `*.parquet` file is
     * RENAMED (metadata-only — no data copied or rewritten, whatever
@@ -120,7 +254,7 @@ object VersionedTable {
     files.foreach(f =>
       vt.fs.rename(f.getPath, new Path(target, f.getPath.getName)))
     val (rows, stats, _) = vt.statsOf(target.toString)
-    vt.publish(vt.Commit(0, "convert", Seq(name), Seq.empty, rows,
+    vt.publish(Commit(0, "convert", Seq(name), Seq.empty, rows,
       System.currentTimeMillis(), addedStats = Map(name -> stats),
       addedRows = Map(name -> rows),
       schemaJson = Some(spark.read.option("mergeSchema", "true")
@@ -140,177 +274,28 @@ class VersionedTable(spark: SparkSession, dir: String,
   private def fs: FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** Per-directory, per-column min/max + null count — the
-    * data-skipping index (Delta's file statistics): `kind` is "l"
-    * (integral/timestamp/date normalized to Long), "d" (fractional),
-    * or "s" (string); bounds are inclusive over the directory's
-    * NON-NULL rows. An ALL-NULL column records `min = max = null`
-    * (pre-round-12 manifests simply omitted the entry — readers treat
-    * both as "no non-null bounds known" where bounds are needed, but
-    * the explicit entry lets range/IS NOT NULL predicates SKIP the
-    * directory: no range matches a null). `nulls` is the column's
-    * null-row count (-1 in pre-round-12 manifests = unknown), the fact
-    * IS NULL pruning needs (`nulls == 0` → no row can satisfy it).
-    */
-  case class ColStat(kind: String, min: Any, max: Any, nulls: Long = -1L)
-
-  /** One committed manifest — a DELTA against the previous version.
-    * `numRows` is the rows ADDED by this commit. `txn` optionally tags
-    * the commit with a (writer-app, batch-id) pair — the idempotence
-    * token streaming sinks use (Delta's `txnAppId`/`txnVersion`).
-    * `addedStats` carries the data-skipping bounds of each added
-    * directory (empty for pre-stats manifests — readers keep such
-    * directories conservatively).
-    */
-  case class Commit(version: Int, op: String, added: Seq[String],
-                    removed: Seq[String], numRows: Long, tsMs: Long,
-                    txn: Option[(String, Long)] = None,
-                    addedStats: Map[String, Map[String, ColStat]] = Map.empty,
-                    cdf: Option[String] = None,
-                    constraintAdd: Option[(String, String)] = None,
-                    constraintDrop: Option[String] = None,
-                    addedRows: Map[String, Long] = Map.empty,
-                    addedBytes: Map[String, Long] = Map.empty,
-                    schemaJson: Option[String] = None,
-                    propsSet: Map[String, String] = Map.empty,
-                    propsUnset: Seq[String] = Nil,
-                    partitionCols: Seq[String] = Nil,
-                    dvAdd: Option[String] = None,
-                    dvDirs: Seq[String] = Nil,
-                    dvDirRows: Map[String, Long] = Map.empty,
-                    dvReset: Option[(Map[String, Seq[String]],
-                                     Map[String, Long])] = None,
-                    featuresAdd: Seq[String] = Nil)
+  import VersionedTable.{ColStat, Commit, Snapshot}
 
   private def manifestPath(v: Int): Path = new Path(logDir, f"$v%08d.json")
   private def checkpointPath(v: Int): Path =
     new Path(logDir, f"$v%08d.checkpoint.json")
 
-  private def readArray(node: com.fasterxml.jackson.databind.JsonNode,
-                        field: String): Seq[String] = {
-    val arr = node.get(field)
-    if (arr == null) Seq.empty
-    else (0 until arr.size()).map(arr.get(_).asText())
-  }
-
-  private def parseStats(node: com.fasterxml.jackson.databind.JsonNode)
-      : Map[String, Map[String, ColStat]] = {
-    if (node == null) return Map.empty
-    import scala.jdk.CollectionConverters._
-    node.properties().asScala.map { dirEnt =>
-      dirEnt.getKey -> dirEnt.getValue.properties().asScala.map { colEnt =>
-        val c = colEnt.getValue
-        def v(f: String): Any =
-          if (!c.has(f)) null // all-null column: no non-null bounds
-          else c.get("k").asText() match {
-            case "l" => c.get(f).asLong()
-            case "d" => c.get(f).asDouble()
-            case _ => c.get(f).asText()
-          }
-        val nulls = if (c.has("n")) c.get("n").asLong() else -1L
-        colEnt.getKey -> ColStat(c.get("k").asText(), v("lo"), v("hi"), nulls)
-      }.toMap
-    }.toMap
-  }
-
-  private def writeStats(node: com.fasterxml.jackson.databind.node.ObjectNode,
-                         field: String,
-                         stats: Map[String, Map[String, ColStat]]): Unit = {
-    if (stats.isEmpty) return
-    val dirsNode = node.putObject(field)
-    stats.foreach { case (dir, cols) =>
-      val dirNode = dirsNode.putObject(dir)
-      cols.foreach { case (col, st) =>
-        val cn = dirNode.putObject(col)
-        cn.put("k", st.kind)
-        if (st.min != null) st.kind match {
-          case "l" =>
-            cn.put("lo", st.min.asInstanceOf[Long]); cn.put("hi", st.max.asInstanceOf[Long])
-          case "d" =>
-            cn.put("lo", st.min.asInstanceOf[Double]); cn.put("hi", st.max.asInstanceOf[Double])
-          case _ =>
-            cn.put("lo", st.min.asInstanceOf[String]); cn.put("hi", st.max.asInstanceOf[String])
-        }
-        if (st.nulls >= 0L) cn.put("n", st.nulls)
-      }
-    }
-  }
-
-  private def parseManifest(p: Path): Commit = {
+  /** Decode one log file, refusing an undecodable one with the file
+    * and version named.
+    */
+  private def readLog[T](p: Path, v: Int)(decode: java.io.InputStream => T): T = {
     val in = fs.open(p)
-    val node = try mapper.readTree(in) finally in.close()
-    val txn =
-      if (node.has("txn_app")) Some((node.get("txn_app").asText(),
-        node.get("txn_batch").asLong()))
-      else None
-    Commit(node.get("version").asInt(), node.get("op").asText(),
-      readArray(node, "added"), readArray(node, "removed"),
-      node.get("num_rows").asLong(), node.get("ts_ms").asLong(), txn,
-      parseStats(node.get("added_stats")),
-      if (node.has("cdf")) Some(node.get("cdf").asText()) else None,
-      if (node.has("constraint_add_name"))
-        Some((node.get("constraint_add_name").asText(),
-          node.get("constraint_add_expr").asText()))
-      else None,
-      if (node.has("constraint_drop")) Some(node.get("constraint_drop").asText())
-      else None,
-      {
-        val ar = node.get("added_rows")
-        if (ar == null) Map.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          ar.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-        }
-      },
-      {
-        val ab = node.get("added_bytes")
-        if (ab == null) Map.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          ab.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-        }
-      },
-      if (node.has("schema")) Some(node.get("schema").asText()) else None,
-      {
-        val ps = node.get("props_set")
-        if (ps == null) Map.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          ps.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-        }
-      },
-      readArray(node, "props_unset"),
-      readArray(node, "partition_cols"),
-      if (node.has("dv_name")) Some(node.get("dv_name").asText()) else None,
-      readArray(node, "dv_dirs"),
-      {
-        val dr = node.get("dv_dir_rows")
-        if (dr == null) Map.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          dr.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-        }
-      },
-      {
-        val rs = node.get("dv_reset")
-        if (rs == null) None
-        else {
-          import scala.jdk.CollectionConverters._
-          val dvs = rs.properties().asScala.map(e =>
-            e.getKey -> (0 until e.getValue.size())
-              .map(e.getValue.get(_).asText())).toMap
-          val rr = node.get("dv_reset_rows")
-          val rows =
-            if (rr == null) Map.empty[String, Long]
-            else rr.properties().asScala.map(e =>
-              e.getKey -> e.getValue.asLong()).toMap
-          Some((dvs, rows))
-        }
-      },
-      readArray(node, "features_add"))
+    try decode(in)
+    catch {
+      case e: com.fasterxml.jackson.core.JacksonException =>
+        throw new IllegalStateException(
+          s"undecodable transaction-log file $p (version $v of $dir): " +
+            e.getOriginalMessage, e)
+    } finally in.close()
   }
+
+  private def parseManifest(v: Int): Commit =
+    readLog(manifestPath(v), v)(VersionedTable.decodeCommit)
 
   private val lastCheckpointPath = new Path(logDir, "_last_checkpoint")
 
@@ -326,7 +311,7 @@ class VersionedTable(spark: SparkSession, dir: String,
       if (!fs.exists(lastCheckpointPath)) None
       else {
         val in = fs.open(lastCheckpointPath)
-        val node = try mapper.readTree(in) finally in.close()
+        val node = try VersionedTable.logJson.readTree(in) finally in.close()
         val v = node.get("version").asInt()
         if (fs.exists(checkpointPath(v))) Some(v) else None
       }
@@ -335,11 +320,9 @@ class VersionedTable(spark: SparkSession, dir: String,
   private def writeLastCheckpointHint(v: Int): Unit =
     try {
       val out = fs.create(lastCheckpointPath, true)
-      try {
-        val node = mapper.createObjectNode()
-        node.put("version", v)
-        out.write(mapper.writeValueAsBytes(node))
-      } finally out.close()
+      try out.write(VersionedTable.logJson.writeValueAsBytes(
+        VersionedTable.logJson.createObjectNode().put("version", v)))
+      finally out.close()
     } catch { case _: Exception => () } // a failed hint write costs a listing
 
   /** Latest committed version, or -1 for an empty/new table. Only
@@ -382,11 +365,6 @@ class VersionedTable(spark: SparkSession, dir: String,
     */
   private[graft] def cdfSummary(v: Int): Option[String] = commitAt(v).cdf
 
-  /** The DV-FOLDED read of specific directories at a version, with the
-    * version's log schema imposed — the DSv2 scan's fallback path when
-    * a kept directory carries deletion vectors (a stock parquet scan
-    * would resurrect the hidden rows).
-    */
   /** Recorded (logical rows, physical bytes) of specific directories
     * at a version — the V1 fallback scan's reported statistics, so
     * joins against DV/renamed snapshots still plan sanely. None when
@@ -412,7 +390,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     require(fs.exists(p),
       s"version $v does not exist in $dir (latest: $latestVersion; " +
         "it may have been vacuumed)")
-    parseManifest(p)
+    parseManifest(v)
   }
 
   /** The newest checkpoint at or below `v`, if any. The common case —
@@ -420,23 +398,6 @@ class VersionedTable(spark: SparkSession, dir: String,
     * hint without listing; time travel below the hinted checkpoint
     * falls back to the listing.
     */
-  /** A resolved table state: active data directories, their
-    * data-skipping stats, the newest txn tag per streaming app, and the
-    * CHECK constraints in force.
-    */
-  private case class Snapshot(active: Seq[String],
-                              stats: Map[String, Map[String, ColStat]],
-                              txns: Map[String, Long],
-                              constraints: Map[String, String],
-                              dirRows: Map[String, Long],
-                              dirBytes: Map[String, Long],
-                              schemaJson: Option[String] = None,
-                              props: Map[String, String] = Map.empty,
-                              partitionCols: Seq[String] = Nil,
-                              dvs: Map[String, Seq[String]] = Map.empty,
-                              dvRowsByDir: Map[String, Long] = Map.empty,
-                              features: Set[String] = Set.empty)
-
   private def checkpointAtOrBelow(v: Int): Option[(Int, Snapshot)] = {
     if (!fs.exists(logDir)) return None
     val best = lastCheckpointHint.filter(_ <= v).getOrElse {
@@ -446,43 +407,10 @@ class VersionedTable(spark: SparkSession, dir: String,
         .foldLeft(-1)(math.max)
     }
     if (best < 0) None
-    else {
-      val in = fs.open(checkpointPath(best))
-      val node = try mapper.readTree(in) finally in.close()
-      import scala.jdk.CollectionConverters._
-      def strMap(field: String, as: com.fasterxml.jackson.databind.JsonNode => String)
-          : Map[String, String] = {
-        val t = node.get(field)
-        if (t == null) Map.empty
-        else t.properties().asScala.map(e => e.getKey -> as(e.getValue)).toMap
-      }
-      val txns = strMap("txns", _.asText()).map { case (k, s) => k -> s.toLong }
-      val dirRows = strMap("dir_rows", _.asText()).map { case (k, s) => k -> s.toLong }
-      val dirBytes = strMap("dir_bytes", _.asText()).map { case (k, s) => k -> s.toLong }
-      Some((best, Snapshot(readArray(node, "active"),
-        parseStats(node.get("stats")), txns, strMap("constraints", _.asText()),
-        dirRows, dirBytes,
-        if (node.has("schema")) Some(node.get("schema").asText()) else None,
-        strMap("props", _.asText()),
-        readArray(node, "partition_cols"),
-        {
-          val dn = node.get("dvs")
-          if (dn == null) Map.empty
-          else dn.properties().asScala.map(e =>
-            e.getKey -> (0 until e.getValue.size())
-              .map(e.getValue.get(_).asText())).toMap
-        },
-        strMap("dv_rows_by_dir", _.asText()).map { case (k, s2) =>
-          k -> s2.toLong },
-        readArray(node, "features").toSet)))
-    }
+    else Some((best,
+      readLog(checkpointPath(best), best)(VersionedTable.decodeCheckpoint)))
   }
 
-  /** The resolved [[Snapshot]] of version `v`: nearest checkpoint plus
-    * the delta manifests since it. O(checkpointInterval) manifest reads
-    * on a checkpointed log, never O(v). Directories without recorded
-    * stats map to an empty stat set (readers keep them conservatively).
-    */
   /** Per-instance snapshot memo: a version's folded state is IMMUTABLE
     * once its manifest exists (publish is atomic, manifests are never
     * rewritten), so repeated `snapshotAt` of the same version — the
@@ -493,6 +421,11 @@ class VersionedTable(spark: SparkSession, dir: String,
   private val snapMemo =
     new java.util.concurrent.ConcurrentHashMap[Int, Snapshot]()
 
+  /** The resolved [[Snapshot]] of version `v`: nearest checkpoint plus
+    * the delta manifests since it. O(checkpointInterval) manifest reads
+    * on a checkpointed log, never O(v). Directories without recorded
+    * stats map to an empty stat set (readers keep them conservatively).
+    */
   private def snapshotAt(v: Int): Snapshot = {
     val hit = snapMemo.get(v)
     // a hit still verifies the version's log entry EXISTS — another
@@ -518,15 +451,20 @@ class VersionedTable(spark: SparkSession, dir: String,
         s"not implement (implemented: " +
         s"${VersionedTable.KnownFeatures.toSeq.sorted.mkString(", ")}); " +
         "upgrade the library to operate on this table")
+    // Every writer records the table schema with its first data
+    // directory and every reader imposes it (no footer inference): a
+    // log with data but no schema cannot be read correctly.
+    if (computed.active.nonEmpty && computed.schemaJson.isEmpty)
+      throw new IllegalStateException(
+        s"table $dir (at version $v) has data directories but its log " +
+          "records no schema; this reader/writer cannot operate on it")
     if (snapMemo.size > 32) snapMemo.clear()
     snapMemo.put(v, computed)
     computed
   }
 
   private def snapshotAtUncached(v: Int): Snapshot = {
-    val (start, base) = checkpointAtOrBelow(v).getOrElse(
-      (-1, Snapshot(Seq.empty, Map.empty, Map.empty, Map.empty, Map.empty,
-        Map.empty)))
+    val (start, base) = checkpointAtOrBelow(v).getOrElse((-1, Snapshot()))
     (start + 1 to v).foldLeft(base) { (s, i) =>
       val c = commitAt(i)
       Snapshot(
@@ -545,12 +483,12 @@ class VersionedTable(spark: SparkSession, dir: String,
         // delete-dv commit appends its sidecar to each touched
         // directory's list; RESTORE replaces the whole map with the
         // target version's.
-        c.dvReset.map(_._1).getOrElse {
+        c.dvReset.getOrElse {
           val base = (s.dvs -- c.removed)
           c.dvAdd.fold(base)(n => c.dvDirs.foldLeft(base)((m, d) =>
             m + (d -> (m.getOrElse(d, Nil) :+ n))))
         },
-        c.dvReset.map(_._2).getOrElse {
+        c.dvResetRows.getOrElse {
           val base = (s.dvRowsByDir -- c.removed)
           c.dvDirRows.foldLeft(base) { case (m, (d, r)) =>
             m + (d -> (m.getOrElse(d, 0L) + r)) }
@@ -594,6 +532,12 @@ class VersionedTable(spark: SparkSession, dir: String,
   private def atomicClaim(tmp: Path, target: Path): Boolean =
     logStore.atomicClaim(fs, tmp, target)
 
+  /** Total on-disk bytes of one data directory — a filesystem listing,
+    * no data read.
+    */
+  private def dirSizeBytes(name: String): Long =
+    fs.getContentSummary(new Path(root, name)).getLength
+
   /** Atomically publish manifest `c` as version `c.version`: write to a
     * `.tmp` sibling, then [[atomicClaim]] the final slot — of two
     * racing writers exactly one wins; the loser must re-read the log
@@ -601,12 +545,6 @@ class VersionedTable(spark: SparkSession, dir: String,
     * silently — the caller decides whether replaying its write is
     * safe).
     */
-  /** Total on-disk bytes of one data directory — a filesystem listing,
-    * no data read.
-    */
-  private def dirSizeBytes(name: String): Long =
-    fs.getContentSummary(new Path(root, name)).getLength
-
   private def publish(c0: Commit): Unit = {
     // Every committed directory carries its byte size in the log (the
     // listing is metadata-only), so DESCRIBE DETAIL and size-based
@@ -623,7 +561,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     // resurrecting deleted rows). Explicit featuresAdd (widening,
     // column mapping, clones) ride through; re-announcing is free —
     // the snapshot folds features as a set.
-    val c = if (c1.dvAdd.isDefined || c1.dvReset.exists(_._1.nonEmpty))
+    val c = if (c1.dvAdd.isDefined || c1.dvReset.exists(_.nonEmpty))
       c1.copy(featuresAdd = (c1.featuresAdd :+ VersionedTable.FeatureBitmapDv)
         .distinct)
     else c1
@@ -635,66 +573,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     val tmp = new Path(logDir,
       f"${c.version}%08d.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val out = fs.create(tmp, true)
-    try {
-      val node = mapper.createObjectNode()
-      node.put("version", c.version); node.put("op", c.op)
-      node.put("num_rows", c.numRows); node.put("ts_ms", c.tsMs)
-      val aArr = node.putArray("added")
-      c.added.foreach(aArr.add)
-      val rArr = node.putArray("removed")
-      c.removed.foreach(rArr.add)
-      c.txn.foreach { case (app, batch) =>
-        node.put("txn_app", app); node.put("txn_batch", batch)
-      }
-      c.cdf.foreach(node.put("cdf", _))
-      c.constraintAdd.foreach { case (n, ex) =>
-        node.put("constraint_add_name", n); node.put("constraint_add_expr", ex)
-      }
-      c.constraintDrop.foreach(node.put("constraint_drop", _))
-      if (c.addedRows.nonEmpty) {
-        val rn = node.putObject("added_rows")
-        c.addedRows.foreach { case (d, n) => rn.put(d, n) }
-      }
-      if (c.addedBytes.nonEmpty) {
-        val bn = node.putObject("added_bytes")
-        c.addedBytes.foreach { case (d, n) => bn.put(d, n) }
-      }
-      c.schemaJson.foreach(node.put("schema", _))
-      if (c.propsSet.nonEmpty) {
-        val pn = node.putObject("props_set")
-        c.propsSet.foreach { case (k, v2) => pn.put(k, v2) }
-      }
-      if (c.propsUnset.nonEmpty) {
-        val pu = node.putArray("props_unset")
-        c.propsUnset.foreach(pu.add)
-      }
-      if (c.partitionCols.nonEmpty) {
-        val pc = node.putArray("partition_cols")
-        c.partitionCols.foreach(pc.add)
-      }
-      c.dvAdd.foreach { n =>
-        node.put("dv_name", n)
-        val dd = node.putArray("dv_dirs")
-        c.dvDirs.foreach(dd.add)
-        val dr = node.putObject("dv_dir_rows")
-        c.dvDirRows.foreach { case (d, r) => dr.put(d, r) }
-      }
-      c.dvReset.foreach { case (dvs, rows) =>
-        val rs = node.putObject("dv_reset")
-        dvs.foreach { case (d, names) =>
-          val arr = rs.putArray(d)
-          names.foreach(arr.add)
-        }
-        val rr = node.putObject("dv_reset_rows")
-        rows.foreach { case (d, r) => rr.put(d, r) }
-      }
-      if (c.featuresAdd.nonEmpty) {
-        val fa = node.putArray("features_add")
-        c.featuresAdd.foreach(fa.add)
-      }
-      writeStats(node, "added_stats", c.addedStats)
-      out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-    } finally out.close()
+    try out.write(VersionedTable.encodeCommit(c)) finally out.close()
     val target = manifestPath(c.version)
     if (!atomicClaim(tmp, target)) {
       fs.delete(tmp, false)
@@ -721,52 +600,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     val tmp = new Path(logDir,
       f"$v%08d.checkpoint.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val out = fs.create(tmp, true)
-    try {
-      val node = mapper.createObjectNode()
-      node.put("version", v)
-      val arr = node.putArray("active")
-      snap.active.foreach(arr.add)
-      writeStats(node, "stats", snap.stats)
-      if (snap.txns.nonEmpty) {
-        val tn = node.putObject("txns")
-        snap.txns.foreach { case (app, b) => tn.put(app, b) }
-      }
-      if (snap.constraints.nonEmpty) {
-        val cn = node.putObject("constraints")
-        snap.constraints.foreach { case (n, ex) => cn.put(n, ex) }
-      }
-      if (snap.dirRows.nonEmpty) {
-        val dr = node.putObject("dir_rows")
-        snap.dirRows.foreach { case (d, n) => dr.put(d, n) }
-      }
-      if (snap.dirBytes.nonEmpty) {
-        val db = node.putObject("dir_bytes")
-        snap.dirBytes.foreach { case (d, n) => db.put(d, n) }
-      }
-      snap.schemaJson.foreach(node.put("schema", _))
-      if (snap.props.nonEmpty) {
-        val pn = node.putObject("props")
-        snap.props.foreach { case (k, v2) => pn.put(k, v2) }
-      }
-      if (snap.partitionCols.nonEmpty) {
-        val pc = node.putArray("partition_cols")
-        snap.partitionCols.foreach(pc.add)
-      }
-      if (snap.dvs.nonEmpty) {
-        val dn = node.putObject("dvs")
-        snap.dvs.foreach { case (d, names) =>
-          val arr = dn.putArray(d)
-          names.foreach(arr.add)
-        }
-        val dr = node.putObject("dv_rows_by_dir")
-        snap.dvRowsByDir.foreach { case (d, r) => dr.put(d, r) }
-      }
-      if (snap.features.nonEmpty) {
-        val fn = node.putArray("features")
-        snap.features.toSeq.sorted.foreach(fn.add)
-      }
-      out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-    } finally out.close()
+    try out.write(VersionedTable.encodeCheckpoint(v, snap)) finally out.close()
     if (atomicClaim(tmp, checkpointPath(v))) writeLastCheckpointHint(v)
     else fs.delete(tmp, false)
   }
@@ -1018,8 +852,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     * `logToPhys` — physical names are stable across renames, so the
     * stats index never needs rewriting when a column does. An all-null
     * column keeps an explicit (null, null) entry: it PROVES no row can
-    * satisfy a range or IS NOT NULL predicate — omitting it (the
-    * pre-round-12 shape) forced conservative keeps.
+    * satisfy a range or IS NOT NULL predicate.
     */
   private def decodeStatRow(cols: Array[(String, String, org.apache.spark.sql.Column)],
                             cNames: Seq[String],
@@ -1093,21 +926,21 @@ class VersionedTable(spark: SparkSession, dir: String,
     * footer merge — Delta stores its schema in the log for exactly
     * this reason). The evolved schema is the existing fields followed
     * by the genuinely-new incoming fields, nullable-normalized (file
-    * reads are always nullable). Pre-schema logs fall back to one
-    * footer merge. Taking `base` explicitly keeps alignment, schema,
-    * and the commit slot CONSISTENT: the caller publishes at base + 1,
-    * and a commit landing in between fails the publish instead of
-    * letting a schema computed against an older snapshot land.
+    * reads are always nullable). Taking `base` explicitly keeps
+    * alignment, schema, and the commit slot CONSISTENT: the caller
+    * publishes at base + 1, and a commit landing in between fails the
+    * publish instead of letting a schema computed against an older
+    * snapshot land.
     */
   private def alignedForAppend(df: DataFrame, base: Int): (DataFrame, String) = {
     if (base < 0) return (df, df.schema.pipe(graft.sources.SchemaCompat.nullableJson))
     val snap = snapshotAt(base)
-    // A constraint-only commit 0 (or a schema-holder-free state) has no
-    // data directories — nothing to be compatible with.
-    if (snap.active.isEmpty && snap.schemaJson.isEmpty)
-      return (df, df.schema.pipe(graft.sources.SchemaCompat.nullableJson))
-    val existing = snap.schemaJson.map(schemaFromJson)
-      .getOrElse(readAt(base).schema)
+    // A constraint-only commit 0 records no schema (and has no data
+    // directories) — nothing to be compatible with.
+    val existing = snap.schemaJson match {
+      case None => return (df, df.schema.pipe(graft.sources.SchemaCompat.nullableJson))
+      case Some(j) => schemaFromJson(j)
+    }
     val aligned = SchemaCompat.alignWidening(df, existing, dir)
     val fresh = aligned.schema.fields.filterNot(f =>
       existing.fieldNames.contains(f.name))
@@ -1142,14 +975,7 @@ class VersionedTable(spark: SparkSession, dir: String,
       : String = {
     if (asOf < 0) return SchemaCompat.nullableJson(payload)
     val snap = snapshotAt(asOf)
-    // A pre-schema (legacy) log still has an EXISTING schema — the
-    // footer merge readAt falls back to. Recording only the payload's
-    // fields here would silently NARROW the table (columns the payload
-    // lacks would vanish from every later read).
-    val existing: Option[org.apache.spark.sql.types.StructType] =
-      snap.schemaJson.map(schemaFromJson).orElse(
-        if (snap.active.isEmpty) None else Some(readAt(asOf).schema))
-    existing match {
+    snap.schemaJson.map(schemaFromJson) match {
       case None => SchemaCompat.nullableJson(payload)
       case Some(current) =>
         def loud(msg: String): Nothing = {
@@ -1430,11 +1256,14 @@ class VersionedTable(spark: SparkSession, dir: String,
     v
   }
 
-  /** The table schema of a version: the log-recorded schema when the
-    * manifest carries one, else the snapshot read's inferred schema.
+  /** The log-recorded table schema of a version; a version with no
+    * schema also has no data directories.
     */
-  private def tableSchemaAt(v: Int): org.apache.spark.sql.types.StructType =
-    snapshotAt(v).schemaJson.map(schemaFromJson).getOrElse(readAt(v).schema)
+  private def tableSchemaAt(v: Int): org.apache.spark.sql.types.StructType = {
+    val j = snapshotAt(v).schemaJson
+    require(j.isDefined, s"version $v of $dir has no data directories")
+    schemaFromJson(j.get)
+  }
 
   // ---- Column mapping (ALTER TABLE RENAME COLUMN) --------------------
   // A renamed field keeps its PHYSICAL parquet name (the name its bytes
@@ -1593,8 +1422,8 @@ class VersionedTable(spark: SparkSession, dir: String,
   private[sources] def commitSchemaJson(v: Int): Option[String] =
     commitAt(v).schemaJson
 
-  /** The folded schema of a version (None for pre-schema legacy logs)
-    * — the snapshot-initial batch's guard input.
+  /** The folded schema of a version (None before the first schema
+    * commit) — the snapshot-initial batch's guard input.
     */
   private[sources] def snapshotSchemaJson(v: Int): Option[String] =
     snapshotAt(v).schemaJson
@@ -1602,8 +1431,7 @@ class VersionedTable(spark: SparkSession, dir: String,
   /** The table schema from PURE metadata (the log-recorded schema) —
     * what schema-inference callers (the catalog's loadTable, the DSv2
     * provider) must use instead of `readAt(v).schema`, whose file-index
-    * construction lists every active directory on every call. Only a
-    * pre-schema legacy log pays the footer-merge fallback.
+    * construction lists every active directory on every call.
     */
   def tableSchema(version: Option[Int] = None)
       : org.apache.spark.sql.types.StructType = {
@@ -1762,7 +1590,8 @@ class VersionedTable(spark: SparkSession, dir: String,
           s"$n existing row(s) violate it")
     }
     publish(Commit(v, "constraint", Seq.empty, Seq.empty, 0L,
-      System.currentTimeMillis(), constraintAdd = Some((name, sqlExpr))))
+      System.currentTimeMillis(), constraintAddName = Some(name),
+      constraintAddExpr = Some(sqlExpr)))
     v
   }
 
@@ -1933,7 +1762,7 @@ class VersionedTable(spark: SparkSession, dir: String,
       try {
         publish(Commit(expected, "append", names, Seq.empty,
           parts.map(_._2).sum, System.currentTimeMillis(),
-          Some((app, batchId)),
+          Some(app), Some(batchId),
           addedStats = parts.map(p => p._1 -> p._3).toMap,
           addedRows = parts.map(p => p._1 -> p._2).toMap,
           schemaJson = Some(schemaJson)))
@@ -3056,7 +2885,7 @@ class VersionedTable(spark: SparkSession, dir: String,
         return publishMutationRetrying("merge", latest, maxRetries, touched,
           revalidate = Seq(name), addedMayMatch,
           mkCommit = vv => Commit(vv, "merge", Seq(name), Seq.empty, rows,
-            System.currentTimeMillis(), txn, addedStats = Map(name -> st),
+            System.currentTimeMillis(), txn.map(_._1), txn.map(_._2), addedStats = Map(name -> st),
             cdf = cdfName, addedRows = Map(name -> rows),
             schemaJson = evolvedJson, featuresAdd = mergeFeatures),
           validated0 = constraints, schemaConflicts = schemaRace, txn = txn)
@@ -3137,7 +2966,7 @@ class VersionedTable(spark: SparkSession, dir: String,
           return publishMutationRetrying("merge-dv", latest, maxRetries,
             touched, revalidate = added, addedMayMatch,
             mkCommit = vv => Commit(vv, "merge-dv", added, Seq.empty, rows,
-              System.currentTimeMillis(), txn, addedStats = addedStats,
+              System.currentTimeMillis(), txn.map(_._1), txn.map(_._2), addedStats = addedStats,
               cdf = Some(cdfName), addedRows = addedRows,
               dvAdd = Some(dvName), dvDirs = perDir.keys.toSeq.sorted,
               dvDirRows = perDir, schemaJson = evolvedJson, featuresAdd = mergeFeatures),
@@ -3164,7 +2993,7 @@ class VersionedTable(spark: SparkSession, dir: String,
       publishMutationRetrying("merge", latest, maxRetries, touched,
         revalidate = Seq(name), addedMayMatch,
         mkCommit = vv => Commit(vv, "merge", Seq(name), touched, rows,
-          System.currentTimeMillis(), txn, addedStats = Map(name -> st),
+          System.currentTimeMillis(), txn.map(_._1), txn.map(_._2), addedStats = Map(name -> st),
           cdf = cdfName, addedRows = Map(name -> rows),
           schemaJson = evolvedJson, featuresAdd = mergeFeatures),
         validated0 = constraints, schemaConflicts = schemaRace, txn = txn)
@@ -3460,23 +3289,17 @@ class VersionedTable(spark: SparkSession, dir: String,
     val newV = latest + 1
     val removed = cur.active.filterNot(target.active.toSet)
     val added = target.active.filterNot(cur.active.toSet)
-    // The restored snapshot reads with the TARGET version's schema (a
-    // later evolution must roll back with the data); a pre-schema
-    // target pays one footer merge here, once.
-    val restoredSchema = target.schemaJson.orElse(
-      if (target.active.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true")
-        .parquet(target.active.map(n => new Path(root, n).toString): _*)
-        .schema.pipe(graft.sources.SchemaCompat.nullableJson)))
     publish(Commit(newV, "restore", added, removed, 0L,
       System.currentTimeMillis(),
       addedStats = target.stats.filter(kv => added.contains(kv._1)),
       addedRows = target.dirRows.filter(kv => added.contains(kv._1)),
-      schemaJson = restoredSchema,
+      // the restored snapshot reads with the TARGET version's schema (a
+      // later evolution must roll back with the data)
+      schemaJson = target.schemaJson,
       // the DV state is part of the snapshot: a restore must roll it
       // back too (an explicit RESET — merging would leak later DVs
       // onto directories both versions share)
-      dvReset = Some((target.dvs, target.dvRowsByDir))))
+      dvReset = Some(target.dvs), dvResetRows = Some(target.dvRowsByDir)))
     newV
   }
 
@@ -3526,25 +3349,21 @@ class VersionedTable(spark: SparkSession, dir: String,
     val snap = snapshotAt(v)
     def abs(n: String): String = new Path(root, n).toUri.getPath
     val rows = snap.active.map(n => snap.dirRows.getOrElse(n, 0L)).sum
-    target.publish(target.Commit(0, "clone",
+    target.publish(Commit(0, "clone",
       added = snap.active.map(abs),
       removed = Seq.empty,
       numRows = rows,
       tsMs = System.currentTimeMillis(),
-      // ColStat is instance-path-dependent: rebuild under the target
-      addedStats = snap.stats.map { case (d, st) => abs(d) -> st.map {
-        case (c, cs) => c -> target.ColStat(cs.kind, cs.min, cs.max, cs.nulls)
-      } },
+      addedStats = snap.stats.map { case (d, st) => abs(d) -> st },
       addedRows = snap.dirRows.map { case (d, r) => abs(d) -> r },
       addedBytes = snap.dirBytes.map { case (d, b) => abs(d) -> b },
       schemaJson = snap.schemaJson,
       propsSet = snap.props,
       partitionCols = snap.partitionCols,
-      dvReset =
-        if (snap.dvs.isEmpty) None
-        else Some((
-          snap.dvs.map { case (d, scs) => abs(d) -> scs.map(abs) },
-          snap.dvRowsByDir.map { case (d, r) => abs(d) -> r })),
+      dvReset = Option.when(snap.dvs.nonEmpty)(
+        snap.dvs.map { case (d, scs) => abs(d) -> scs.map(abs) }),
+      dvResetRows = Option.when(snap.dvs.nonEmpty)(
+        snap.dvRowsByDir.map { case (d, r) => abs(d) -> r }),
       featuresAdd =
         (snap.features + VersionedTable.FeatureAbsolutePaths).toSeq.sorted))
     // constraints bind the table, not a snapshot: re-announce each on
@@ -3552,9 +3371,9 @@ class VersionedTable(spark: SparkSession, dir: String,
     // passed it on the source)
     snap.constraints.toSeq.sortBy(_._1).zipWithIndex.foreach {
       case ((name, ex), i) =>
-        target.publish(target.Commit(i + 1, "constraint", Seq.empty,
+        target.publish(Commit(i + 1, "constraint", Seq.empty,
           Seq.empty, 0L, System.currentTimeMillis(),
-          constraintAdd = Some((name, ex))))
+          constraintAddName = Some(name), constraintAddExpr = Some(ex)))
     }
     0
   }
@@ -4135,11 +3954,10 @@ class VersionedTable(spark: SparkSession, dir: String,
   /** Metadata-only COUNT(col) — the non-null count of a column from
     * the manifest fold alone: per-directory `rows - nulls`, summed over
     * the active set. Returns None (never guesses) when any active
-    * directory predates row-count recording, lacks a stats entry for
+    * directory predates row-count recording, or lacks a stats entry for
     * the column (unsupported type, or the column was appended later and
     * this directory's files never held it — its rows READ as null, but
-    * the manifest cannot prove that), or recorded stats before null
-    * counts existed (`nulls = -1`).
+    * the manifest cannot prove that).
     */
   def fastNonNullCount(colName: String, version: Option[Int] = None)
       : Option[Long] = {
@@ -4153,7 +3971,6 @@ class VersionedTable(spark: SparkSession, dir: String,
         // the manifest cannot tell which; never guess
         if !snap.dvs.contains(d)
         cs <- snap.stats.get(d).flatMap(_.get(toPhysicalName(colName, snap)))
-        if cs.nulls >= 0L
       } yield rows - cs.nulls
     }
     if (parts.exists(_.isEmpty)) None else Some(parts.flatten.sum)
@@ -4501,87 +4318,13 @@ class VersionedTable(spark: SparkSession, dir: String,
       try {
         publish(Commit(v0, "coalesce-dv", Seq.empty, Seq.empty, 0L,
           System.currentTimeMillis(),
-          dvReset = Some((newDvs, snap.dvRowsByDir))))
+          dvReset = Some(newDvs), dvResetRows = Some(snap.dvRowsByDir)))
         return v0
       } catch {
         case e: IllegalStateException =>
           // lost the slot: the merged map may be stale (the winner may
           // have attached or folded sidecars) — drop this attempt's
           // merge and recompute from the new snapshot
-          fs.delete(new Path(root, merged), true)
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    sys.error("unreachable: the retry loop returns or throws")
-  }
-
-  /** METADATA-ONLY migration of pre-bitmap deletion-vector sidecars
-    * (the earlier (dir, file, pos) positions-parquet layout) to the
-    * GDV1 bitmap layout: every legacy sidecar's triples are transcoded
-    * into ONE new bitmap sidecar per migration commit, the affected
-    * directories' sidecar lists are re-pointed in a single `dvReset`
-    * commit, and the per-directory HIDDEN COUNTS are carried verbatim
-    * — no data file is read, touched, or rewritten (the upgrade cliff
-    * the loud-fail in [[GraftDvBitmap.listBitmaps]] would otherwise
-    * resolve only through a full OPTIMIZE). Directories mixing legacy
-    * and bitmap sidecars fold BOTH into the merged sidecar (same
-    * union the read would have performed). Returns the current version
-    * unchanged when no legacy sidecar is live, so running it on an
-    * already-migrated table is free. Time travel to versions BELOW the
-    * migration still resolves the legacy sidecars and keeps failing
-    * loudly — the migration upgrades the live state, not history;
-    * vacuum reclaims the legacy files with those versions. Losing a
-    * commit race drops the transcode and recomputes, same protocol as
-    * [[coalesceDv]].
-    */
-  def migrateDv(maxRetries: Int = 5): Int = {
-    import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (true) {
-      val latest = latestVersion
-      require(latest >= 0, s"$dir has no committed versions")
-      val snap = snapshotAt(latest)
-      val all = snap.dvs.values.flatten.toSeq.distinct
-      val legacy = all.filter { sc =>
-        val p = new Path(root, sc)
-        fs.exists(p) && fs.listStatus(p).exists(e =>
-          e.isFile && e.getPath.getName.endsWith(".parquet"))
-      }.toSet
-      if (legacy.isEmpty) return latest
-      val victims = snap.dvs.collect {
-        case (d, scs) if scs.exists(legacy.contains) => d -> scs.distinct
-      }
-      val victimSet = victims.keySet
-      val legacyNames = victims.values.flatten.filter(legacy.contains)
-        .toSeq.distinct
-      val bitmapNames = victims.values.flatten.filterNot(legacy.contains)
-        .toSeq.distinct
-      val v0 = latest + 1
-      val merged = f"dv-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-      val legacyDf = spark.read
-        .parquet(legacyNames.map(n => new Path(root, n).toString): _*)
-        .select(col("__graft_dv_dir").cast("string"),
-          col("__graft_dv_file").cast("string"),
-          col("__graft_dv_pos").cast("long"))
-      val triples =
-        if (bitmapNames.isEmpty) legacyDf
-        else legacyDf.unionByName(
-          GraftDvBitmap.asFrame(spark, root, bitmapNames))
-      GraftDvBitmap.write(spark, root, merged,
-        triples.filter(col("__graft_dv_dir").isInCollection(victimSet)))
-      val newDvs = snap.dvs.map { case (d, scs) =>
-        d -> (if (victimSet.contains(d)) Seq(merged) else scs.distinct)
-      }
-      try {
-        publish(Commit(v0, "migrate-dv", Seq.empty, Seq.empty, 0L,
-          System.currentTimeMillis(),
-          dvReset = Some((newDvs, snap.dvRowsByDir))))
-        return v0
-      } catch {
-        case e: IllegalStateException =>
-          // lost the slot: recompute from the new snapshot (the winner
-          // may itself have migrated or reset sidecars)
           fs.delete(new Path(root, merged), true)
           attempt += 1
           if (attempt > maxRetries) throw e
@@ -4946,8 +4689,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     * at plan time — at 10k active directories the old mergeSchema
     * inference was an O(directories) footer sweep per query; files
     * missing an evolved column pad null under an explicit schema
-    * exactly as they did under mergeSchema. Pre-schema logs keep the
-    * footer-merge fallback.
+    * exactly as they did under mergeSchema.
     */
   def readAt(v: Int): DataFrame = {
     commitAt(v) // fail fast on a vacuumed/unknown version
@@ -5043,8 +4785,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     * (`IS NOT NULL` can match nothing there); `isNullCols` skips
     * directories whose recorded null count is ZERO (`IS NULL` can
     * match nothing) — Delta's nullCount statistics, the shape the
-    * DataSourceV2 scan pushes. Unknown null counts (pre-round-12
-    * manifests) keep conservatively.
+    * DataSourceV2 scan pushes.
     */
   def pruneActiveAll(predicates: Seq[(String, Option[Any], Option[Any])],
                      version: Option[Int] = None,
@@ -5136,9 +4877,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     if (kept.isEmpty) readAt(v).limit(0)
     else {
       val sn = snapshotAt(v)
-      readDirsFolded(None, kept, sn.dvs,
-        sn.schemaJson.map(j => renameMap(schemaFromJson(j)).map(_.swap))
-          .getOrElse(Map.empty))
+      readDirsFolded(sn.schemaJson.map(schemaFromJson), kept, sn.dvs)
     }
   }
 
@@ -5209,7 +4948,7 @@ class VersionedTable(spark: SparkSession, dir: String,
         var active: Set[String] = ckptAtF.map(_._2.active.toSet).getOrElse(Set.empty)
         (f to latest).flatMap { v =>
           if (fs.exists(manifestPath(v))) {
-            val c = parseManifest(manifestPath(v))
+            val c = parseManifest(v)
             if (!(v == f && ckptAtF.isDefined))
               active = active -- c.removed ++ c.added
             Some((c.version, c.op, c.numRows, active.size, c.tsMs))
@@ -5297,7 +5036,7 @@ class VersionedTable(spark: SparkSession, dir: String,
           else {
             val c = commitAt(v)
             c.dvAdd.toSeq ++
-              c.dvReset.map(_._1.values.flatten.toSeq).getOrElse(Nil)
+              c.dvReset.map(_.values.flatten.toSeq).getOrElse(Nil)
           }
         }
     var removed = 0

@@ -674,55 +674,23 @@ class DeletionVectorSpec extends SparkSuite {
     assert(e.getMessage.contains("pre-bitmap"))
   }
 
-  test("migrateDv transcodes a pre-bitmap sidecar metadata-only: reads equal, data untouched") {
+  test("a live sidecar missing on disk fails loudly, never as an empty hidden set") {
     val dir = tmpVt()
     val vt = new graft.sources.VersionedTable(spark, dir)
     vt.append((0L until 100L).map(k => (k, k * 1.0)).toDF("k", "p")) // v0
-    vt.delete(col("k") < 7L, useDeletionVectors = true)              // v1 (bitmap)
-    // forge the r14 fixture: rewrite the live sidecar into the legacy
-    // positions-parquet layout with the SAME triples (read them out of
-    // the bitmap first, then replace the directory)
-    val d = vt.dvsAt(1).keys.head
-    val sc = vt.dvsAt(1)(d).head
+    vt.delete(col("k") < 7L, useDeletionVectors = true)              // v1
+    val sc = vt.dvsAt(1).values.flatten.head
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val triples = graft.sources.GraftDvBitmap.asFrame(spark, root, Seq(sc))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-    assert(triples.size === 7)
-    fs.delete(new org.apache.hadoop.fs.Path(root, sc), true)
-    triples.toDF("__graft_dv_dir", "__graft_dv_file", "__graft_dv_pos")
-      .coalesce(1).write
-      .parquet(new org.apache.hadoop.fs.Path(root, sc).toString)
-    // the legacy layout fails loudly and names the remedy
-    val e = intercept[Exception] { vt.read().count() }
-    assert(e.getMessage.contains("migrateDv"))
-    def dataFiles = {
-      val it = fs.listFiles(root, true)
-      val buf = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet") &&
-            !f.getPath.toString.contains("dv-v"))
-          buf += ((f.getPath.toString, f.getModificationTime))
-      }
-      buf.sortBy(_._1).toSeq
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(root, sc), true)
+    val fresh = new graft.sources.VersionedTable(spark, dir)
+    val e = intercept[IllegalStateException] { fresh.read().count() }
+    assert(e.getMessage.contains(sc) && e.getMessage.contains("missing on disk"))
+    // collect, not count: COUNT(*) is answered from the log alone
+    val e2 = intercept[IllegalStateException] {
+      spark.read.format("graftvt").load(dir).collect()
     }
-    val before = dataFiles
-    val v = vt.migrateDv()
-    assert(v === 2)
-    assert(vt.history().orderBy(col("version")).collect()
-      .last.getAs[String]("op") === "migrate-dv")
-    // data files byte-identical (paths AND mtimes), reads + metadata
-    // count exactly what the bitmap sidecar served pre-forgery
-    assert(dataFiles === before)
-    assert(vt.read().orderBy("k").collect().map(_.getLong(0)).toSeq
-      === (7L until 100L))
-    assert(vt.fastCount() === Some(93L))
-    // idempotent: a second call is a no-op at the same version
-    assert(vt.migrateDv() === 2)
-    // and the new DV machinery keeps working on the migrated table
-    vt.delete(col("k") >= 95L, useDeletionVectors = true)
-    assert(vt.read().count() === 88)
+    assert(e2.getMessage.contains(sc))
   }
 
   test("an in-flight DV mutation retries THROUGH a concurrent coalesce-dv (maintenance never kills writers)") {

@@ -82,6 +82,33 @@ class TableFeaturesSpec extends SparkSuite {
     assert(fresh.readAt(0).count() === 2)
   }
 
+  /** A seeded table (v0..v2) whose manifest 3 is `body`. */
+  private def forgedAt3(body: String): graft.sources.VersionedTable = {
+    val (dir, vt) = seeded()
+    vt.append(Seq((3, "c")).toDF("k", "s")) // v1
+    vt.append(Seq((4, "d")).toDF("k", "s")) // v2
+    java.nio.file.Files.write(
+      new java.io.File(new java.io.File(dir, "_graft_log"), "00000003.json").toPath,
+      body.getBytes("UTF-8"))
+    new graft.sources.VersionedTable(spark, dir)
+  }
+
+  test("an empty-object manifest is refused as undecodable, naming file and version") {
+    val fresh = forgedAt3("{}")
+    val e = intercept[IllegalStateException] { fresh.read().collect() }
+    assert(e.getMessage.contains("00000003.json"))
+    assert(e.getMessage.contains("version 3"))
+    assert(fresh.readAt(2).count() === 4)
+  }
+
+  test("a torn manifest is refused as undecodable, naming file and version") {
+    val fresh = forgedAt3("{gar")
+    val e = intercept[IllegalStateException] { fresh.read().collect() }
+    assert(e.getMessage.contains("00000003.json"))
+    assert(e.getMessage.contains("version 3"))
+    assert(fresh.readAt(2).count() === 4)
+  }
+
   test("features survive checkpoints (a folded log keeps demanding them)") {
     val dir = tmpVt()
     // checkpointInterval=2 forces a checkpoint soon after the feature
