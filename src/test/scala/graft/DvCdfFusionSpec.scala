@@ -30,29 +30,6 @@ class DvCdfFusionSpec extends SparkSuite {
       .filter(f => f.isDirectory && f.getName.startsWith(prefix))
       .map(_.getName).toSeq
 
-  private class JobCounter extends org.apache.spark.scheduler.SparkListener {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      n.incrementAndGet()
-  }
-
-  private def countingJobs[A](body: => A): (A, Int) = {
-    val c = new JobCounter
-    spark.sparkContext.addSparkListener(c)
-    try {
-      val r = body
-      // the listener bus is async (and its drain API is private):
-      // poll until the counter is quiescent before reading it
-      var last = -1
-      var spins = 0
-      while (c.n.get() != last && spins < 50) {
-        last = c.n.get(); Thread.sleep(100); spins += 1
-      }
-      (r, c.n.get())
-    } finally spark.sparkContext.removeSparkListener(c)
-  }
-
   test("DV delete: one fused pass emits exact bitmaps AND exact CDC") {
     val dir = tmpVt()
     val vt = new graft.sources.VersionedTable(spark, dir)

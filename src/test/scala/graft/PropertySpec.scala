@@ -482,74 +482,187 @@ class PropertySpec extends SparkSuite {
   }
 
   test("versioned table model check: random op sequences match an in-memory reference") {
-    // Model-based property test for the whole transaction-log surface:
-    // a random sequence of append / overwrite / merge / delete /
-    // optimize / restore ops is applied BOTH to a real VersionedTable
-    // and to a driver-side Map[k -> s] reference model; after every op
-    // the table's snapshot must equal the model exactly, fastCount must
-    // equal its size, and at the end every recorded historical version
-    // must time-travel back to its recorded model state.
-    import org.apache.spark.sql.functions.col
+    // Model-based property test for the whole row-level surface: one
+    // seeded sequence of append / overwrite / upsert merge / delete /
+    // update / clause merge / optimize / restore / compact ops is
+    // applied to TWO real VersionedTables, one mutating with deletion
+    // vectors and one copy-on-write, and to a driver-side Map[k -> s]
+    // reference model. After every op, on both tables:
+    //   - the snapshot equals the model and fastCount its size;
+    //   - statRange("k"), wherever the metadata answers (outstanding
+    //     DVs or a stat-less directory make it decline), is the model's
+    //     exact key range;
+    //   - replaying changes(v, v) onto the model at v-1 gives the model
+    //     at v (removals: delete / update_preimage; additions: insert /
+    //     update_postimage; multiset, so a removal of a row the model
+    //     never held fails).
+    // At the end every recorded version time-travels back to its model.
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import graft.sources.{MergeAction, MergeClause, VersionedTable}
+    type Model = Map[Long, String]
     val tables = new graft.sources.TableManager(spark)
+    def bag(rows: Iterable[(Long, String)]): Map[(Long, String), Int] =
+      rows.groupBy(identity).map { case (r, xs) => r -> xs.size }
+    def replay(vt: VersionedTable, v: Int, prev: Model, what: String): Model = {
+      val feed = vt.changes(v, v).select("k", "s", "_change_type").collect()
+        .map(r => ((r.getLong(0), r.getString(1)), r.getString(2)))
+      var b = bag(prev)
+      feed.filter(f => f._2 == "delete" || f._2 == "update_preimage").foreach {
+        case (r, _) =>
+          assert(b.getOrElse(r, 0) > 0, s"$what: changes($v, $v) removes $r, " +
+            "which the model at v-1 does not hold")
+          b = if (b(r) == 1) b - r else b.updated(r, b(r) - 1)
+      }
+      feed.filter(f => f._2 == "insert" || f._2 == "update_postimage").foreach {
+        case (r, _) => b = b.updated(r, b.getOrElse(r, 0) + 1)
+      }
+      assert(b.values.forall(_ == 1), s"$what: replay duplicates a row")
+      b.keys.toMap
+    }
+    val opsSeen = scala.collection.mutable.Set.empty[String]
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)
-      val dir = java.nio.file.Files.createTempDirectory(s"vt-model-$seed").toString
-      val vt = tables.versioned(dir)
+      // (useDeletionVectors, table)
+      val vts: Seq[(Boolean, VersionedTable)] = Seq(false, true).map(dv =>
+        dv -> tables.versioned(java.nio.file.Files
+          .createTempDirectory(s"vt-model-$seed-${if (dv) "dv" else "cow"}").toString))
       def df(rows: Seq[(Long, String)]) = rows.toDF("k", "s")
       def randRows(n: Int) =
         Seq.fill(n)((rnd.nextInt(40).toLong, s"s${rnd.nextInt(1000)}"))
-          .distinctBy(_._1) // unique keys per op (merge's contract)
-      var model = Map.empty[Long, String]
-      // version -> model at that version, for the time-travel sweep
-      var history = Vector.empty[(Int, Map[Long, String])]
-      def commit(v: Int): Unit = history :+= ((v, model))
+          .distinctBy(_._1) // unique source keys (the multi-match refusal)
+      def each(op: (VersionedTable, Boolean) => Int): Unit =
+        vts.foreach { case (dv, vt) => op(vt, dv) }
+      var model: Model = Map.empty
+      // (version per table, model at those versions): time-travel sweep
+      var history = Vector.empty[(Seq[Int], Model)]
       val init = randRows(6)
       model = init.toMap
-      commit(vt.append(df(init)))
-      for (step <- 1 to 12) {
-        rnd.nextInt(8) match {
+      each((vt, _) => vt.append(df(init)))
+      history :+= ((vts.map(_._2.latestVersion), model))
+      for (step <- 1 to 14) {
+        val prev = model
+        val before = vts.map(_._2.latestVersion)
+        // a persisted row-level CDC and the coarse synthesis must both
+        // replay exactly
+        val cdc = rnd.nextBoolean()
+        val opKind = rnd.nextInt(10)
+        opKind match {
           case 0 => // append fresh keys only (append never upserts)
             val rows = randRows(4).filterNot(r => model.contains(r._1))
-            if (rows.nonEmpty) { model ++= rows; commit(vt.append(df(rows))) }
+            if (rows.nonEmpty) { model ++= rows; each((vt, _) => vt.append(df(rows))) }
           case 1 =>
             val rows = randRows(5)
-            model = rows.toMap; commit(vt.overwrite(df(rows)))
+            model = rows.toMap; each((vt, _) => vt.overwrite(df(rows)))
           case 2 => // merge (upsert)
             val rows = randRows(4)
-            model ++= rows; commit(vt.merge(df(rows), Seq("k")))
+            model ++= rows
+            each((vt, dv) => vt.merge(df(rows), Seq("k"), writeChangeData = cdc,
+              useDeletionVectors = dv))
           case 3 => // delete a random key band (may be a no-op)
             val lo = rnd.nextInt(40).toLong
-            val v0 = vt.latestVersion
-            val v = vt.delete(col("k") >= lo && col("k") < lo + 8L)
             model = model.filterNot { case (k, _) => k >= lo && k < lo + 8L }
-            if (v != v0) commit(v)
+            each((vt, dv) => vt.delete(col("k") >= lo && col("k") < lo + 8L,
+              writeChangeData = cdc, useDeletionVectors = dv))
           case 4 => // optimize: data identical, new version
-            if (model.nonEmpty) commit(vt.optimize("k", 1 + rnd.nextInt(3)))
+            if (model.nonEmpty) {
+              val chunks = 1 + rnd.nextInt(3)
+              each((vt, _) => vt.optimize("k", chunks))
+            }
           case 5 => // restore to a random recorded version
-            val (tv, tm) = history(rnd.nextInt(history.length))
-            model = tm; commit(vt.restore(tv))
+            val (tvs, tm) = history(rnd.nextInt(history.length))
+            model = tm
+            vts.zip(tvs).foreach { case ((_, vt), tv) => vt.restore(tv) }
           case 6 => // bin-packing compact: data identical, new version
-            if (model.nonEmpty) commit(vt.compact(1 + rnd.nextInt(3)))
+            if (model.nonEmpty) {
+              val chunks = 1 + rnd.nextInt(3)
+              each((vt, _) => vt.compact(chunks))
+            }
           case 7 => // scoped optimize: rewrites only in-scope dirs,
             // data identical (may be a no-op when nothing intersects)
             if (model.nonEmpty) {
               val lo = rnd.nextInt(40).toLong
-              val v0 = vt.latestVersion
-              val v = vt.optimizeWhere("k", 1 + rnd.nextInt(2), "k",
-                Some(lo), Some(lo + 10L))
-              if (v != v0) commit(v)
+              val chunks = 1 + rnd.nextInt(2)
+              each((vt, _) => vt.optimizeWhere("k", chunks, "k",
+                Some(lo), Some(lo + 10L)))
             }
+          case 8 => // update a random key band (may be a no-op)
+            val lo = rnd.nextInt(40).toLong
+            model = model.map { case (k, s) =>
+              k -> (if (k >= lo && k < lo + 6L) s + "u" else s) }
+            each((vt, dv) => vt.update(col("k") >= lo && col("k") < lo + 6L,
+              Map("s" -> concat(col("s"), lit("u"))), writeChangeData = cdc,
+              useDeletionVectors = dv))
+          case 9 => // clause merge: one of three clause shapes
+            val rows = randRows(5)
+            val src = rows.toMap
+            val lo = rnd.nextInt(40).toLong
+            val (matched, notMatched, bySource) = rnd.nextInt(3) match {
+              case 0 => // conditional MATCHED DELETE, MATCHED UPDATE, INSERT *
+                model = model.flatMap { case (k, s) => src.get(k) match {
+                  case Some(_) if k % 3 == 0 => None
+                  case Some(ss) => Some(k -> (s + ss))
+                  case None => Some(k -> s)
+                } } ++ src.filterNot(r => model.contains(r._1))
+                (Seq(MergeClause(Some(col("s.k") % 3 === 0), MergeAction.Delete),
+                  MergeClause(None, MergeAction.Update(Some(Map(
+                    "s" -> concat(col("t.s"), col("s.s"))))))),
+                  Seq(MergeClause(None, MergeAction.Insert(None))),
+                  Seq.empty[MergeClause])
+              case 1 => // the upsert shape: UPDATE SET *, INSERT *
+                model ++= src
+                (Seq(MergeClause(None, MergeAction.Update(None))),
+                  Seq(MergeClause(None, MergeAction.Insert(None))),
+                  Seq.empty[MergeClause])
+              case _ => // conditional UPDATE SET * and INSERT VALUES, plus
+                // NOT MATCHED BY SOURCE DELETE and UPDATE
+                model = model.flatMap { case (k, s) => src.get(k) match {
+                  case Some(ss) => Some(k -> (if (k % 2 == 0) ss else s))
+                  case None if k < lo => None
+                  case None if k < lo + 10L => Some(k -> (s + "b"))
+                  case None => Some(k -> s)
+                } } ++ src.collect {
+                  case (k, ss) if !model.contains(k) && k % 2 == 1 => k -> ("i" + ss)
+                }
+                (Seq(MergeClause(Some(col("s.k") % 2 === 0), MergeAction.Update(None))),
+                  Seq(MergeClause(Some(col("s.k") % 2 === 1), MergeAction.Insert(Some(Map(
+                    "k" -> col("s.k"), "s" -> concat(lit("i"), col("s.s"))))))),
+                  Seq(MergeClause(Some(col("t.k") < lo), MergeAction.Delete),
+                    MergeClause(Some(col("t.k") < lo + 10L), MergeAction.Update(Some(Map(
+                      "s" -> concat(col("t.s"), lit("b"))))))))
+            }
+            each((vt, dv) => vt.mergeClauses(df(rows), Seq("k"), matched, notMatched,
+              bySource, writeChangeData = cdc, useDeletionVectors = dv))
         }
-        // invariant after every op: snapshot == model, fastCount == size
-        val snap = vt.read().collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-        assert(snap === model, s"seed $seed step $step: snapshot != model")
-        assert(vt.fastCount() === Some(model.size.toLong), s"seed $seed step $step")
+        val after = vts.map(_._2.latestVersion)
+        if (after != before) history :+= ((after, model))
+        val range: Option[(Any, Any)] =
+          if (model.isEmpty) None else Some((model.keys.min, model.keys.max))
+        vts.zip(before.zip(after)).foreach { case ((dv, vt), (v0, v)) =>
+          val what = s"seed $seed step $step op $opKind ${if (dv) "dv" else "cow"}"
+          val snap = vt.read().collect().map(r => r.getLong(0) -> r.getString(1))
+          assert(snap.length === snap.toMap.size, s"$what: duplicate keys")
+          assert(snap.toMap === model, s"$what: snapshot != model")
+          assert(vt.fastCount() === Some(model.size.toLong), what)
+          val sr = vt.statRange("k")
+          assert(sr.isEmpty || sr === range, s"$what: statRange $sr != model $range")
+          if (v != v0) assert(replay(vt, v, prev, what) === model,
+            s"$what: changes($v, $v) replayed onto v-1 != model at v")
+        }
       }
+      vts.foreach { case (_, vt) =>
+        opsSeen ++= vt.history().collect().map(_.getString(1)) }
       // time travel: every recorded version reads its recorded state
-      history.foreach { case (v, m) =>
-        val snap = vt.readAt(v).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-        assert(snap === m, s"seed $seed: version $v time-travel mismatch")
+      history.foreach { case (vs, m) =>
+        vts.zip(vs).foreach { case ((dv, vt), v) =>
+          val snap = vt.readAt(v).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+          assert(snap === m, s"seed $seed ${if (dv) "dv" else "cow"}: " +
+            s"version $v time-travel mismatch")
+        }
       }
     }
+    // the sequences reach every mutation in both commit shapes
+    Seq("merge", "merge-dv", "delete", "delete-dv", "update", "update-dv", "restore")
+      .foreach(op => assert(opsSeen.contains(op), s"no $op commit: $opsSeen"))
   }
 }

@@ -28,6 +28,28 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
 
+  /** Runs `body` and counts the Spark jobs it started. */
+  def countingJobs[A](body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val c = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(c)
+    try {
+      val r = body
+      // the listener bus is async (and its drain API is private):
+      // poll until the counter is quiescent before reading it
+      var last = -1
+      var spins = 0
+      while (n.get() != last && spins < 50) {
+        last = n.get(); Thread.sleep(100); spins += 1
+      }
+      (r, n.get())
+    } finally spark.sparkContext.removeSparkListener(c)
+  }
+
   override def afterAll(): Unit = {
     // deliberately keep the session (shared JVM across suites in sbt)
     super.afterAll()
