@@ -87,7 +87,7 @@ object PlanDumps {
       fmt(fused))
 
     // ---- DV mutation: per-directory policy counts ride the bitmap
-    // write (deleteViaDv / updateViaDv / mergeViaDvBody / mergeClauses)
+    // write (VersionedTable.commitMutation, shared by every DML command)
     val matched = spark.read.parquet(dir)
       .withColumn("__graft_file", input_file_name())
       .withColumn("__graft_pos", monotonically_increasing_id())

@@ -1927,57 +1927,24 @@ class VersionedTable(spark: SparkSession, dir: String,
     * rewrite reads folded and drops the rewritten directories' DV
     * entries). `schema` imposed when given, mergeSchema otherwise,
     * matching [[readDirsAs]]/[[readDirs]].
+    *
+    * `tag` (and `posTag`) RETAIN each surviving row's source file path
+    * (and row index) as columns — the mutation scans need the file
+    * identity of every row, and `input_file_name()` is only reliable
+    * BEFORE a join/exchange, so the identity is captured from
+    * `_metadata` on the scan side of the DV anti-join.
     */
   private def readDirsFolded(schema: Option[org.apache.spark.sql.types.StructType],
                              dirs: Seq[String],
                              dvs: Map[String, Seq[String]],
-                             physToLogical: Map[String, String] = Map.empty)
-      : DataFrame = {
+                             physToLogical: Map[String, String] = Map.empty,
+                             tag: Option[String] = None,
+                             posTag: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, split}
     // column mapping: an imposed schema carries its own map; a
     // mergeSchema read gets the caller's current physical→logical map
     val p2l = schema.map(sc => renameMap(sc).map(_.swap))
       .getOrElse(physToLogical)
-    def alias(df: DataFrame): DataFrame =
-      if (p2l.isEmpty) df else df.withColumnsRenamed(p2l)
-    def read(ds: Seq[String]): DataFrame = schema match {
-      case Some(s) => spark.read.schema(physicalize(s))
-        .parquet(ds.map(n => new Path(root, n).toString): _*)
-      case None => spark.read.option("mergeSchema", "true")
-        .parquet(ds.map(n => new Path(root, n).toString): _*)
-    }
-    val dvd = dirs.filter(dvs.contains)
-    if (dvd.isEmpty) return alias(read(dirs))
-    val clean = dirs.filterNot(dvs.contains)
-    val hidden = dvFrame(dvd.flatMap(dvs).distinct)
-    val tagged = read(dvd)
-      .withColumn("__graft_d",
-        element_at(split(col("_metadata.file_path"), "/"), -2))
-      .withColumn("__graft_f",
-        element_at(split(col("_metadata.file_path"), "/"), -1))
-      .withColumn("__graft_i", col("_metadata.row_index"))
-    val folded = tagged.join(hidden,
-      tagged("__graft_d") === hidden("__graft_dv_dir") &&
-        tagged("__graft_f") === hidden("__graft_dv_file") &&
-        tagged("__graft_i") === hidden("__graft_dv_pos"), "left_anti")
-      .drop("__graft_d", "__graft_f", "__graft_i")
-    alias(if (clean.isEmpty) folded
-      else read(clean).unionByName(folded, allowMissingColumns = schema.isEmpty))
-  }
-
-  /** [[readDirsFolded]] RETAINING the source file path as column `tag`
-    * (and, when `withPos`, the row index as `posTag`) — the mutation
-    * discovery scans need the file identity of each surviving row, and
-    * `input_file_name()` is only reliable BEFORE a join/exchange, so
-    * the identity is captured from the parquet reader's `_metadata` on
-    * the scan side of the DV anti-join.
-    */
-  private def readDirsFoldedTagged(
-      schema: Option[org.apache.spark.sql.types.StructType],
-      dirs: Seq[String], dvs: Map[String, Seq[String]],
-      tag: String, posTag: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, element_at, split}
-    val p2l = schema.map(sc => renameMap(sc).map(_.swap)).getOrElse(Map.empty)
     def alias(df: DataFrame): DataFrame =
       if (p2l.isEmpty) df else df.withColumnsRenamed(p2l)
     def read(ds: Seq[String]): DataFrame = {
@@ -1987,18 +1954,18 @@ class VersionedTable(spark: SparkSession, dir: String,
         case None => spark.read.option("mergeSchema", "true")
           .parquet(ds.map(n => new Path(root, n).toString): _*)
       }
-      val t = r.withColumn(tag, col("_metadata.file_path"))
+      val t = tag.fold(r)(tg => r.withColumn(tg, col("_metadata.file_path")))
       posTag.fold(t)(pt => t.withColumn(pt, col("_metadata.row_index")))
     }
     val dvd = dirs.filter(dvs.contains)
     if (dvd.isEmpty) return alias(read(dirs))
     val clean = dirs.filterNot(dvs.contains)
     val hidden = dvFrame(dvd.flatMap(dvs).distinct)
+    val file = tag.fold(col("_metadata.file_path"))(col)
     val tagged = read(dvd)
-      .withColumn("__graft_d", element_at(split(col(tag), "/"), -2))
-      .withColumn("__graft_f", element_at(split(col(tag), "/"), -1))
-      .withColumn("__graft_i",
-        posTag.map(col).getOrElse(col("_metadata.row_index")))
+      .withColumn("__graft_d", element_at(split(file, "/"), -2))
+      .withColumn("__graft_f", element_at(split(file, "/"), -1))
+      .withColumn("__graft_i", posTag.fold(col("_metadata.row_index"))(col))
     val folded = tagged.join(hidden,
       tagged("__graft_d") === hidden("__graft_dv_dir") &&
         tagged("__graft_f") === hidden("__graft_dv_file") &&
@@ -2176,146 +2143,45 @@ class VersionedTable(spark: SparkSession, dir: String,
     kept
   }
 
-  /** Delta-style MERGE — copy-on-write upsert in ONE atomic commit:
-    * every source row replaces the target row with the same `keys`
-    * (when matched → update, whole-row) or is inserted (when not
-    * matched). Only TOUCHED directories are rewritten: the source's
-    * [min, max] on EVERY indexable key is computed first (one scalar
-    * agg) and [[pruneActiveAll]] splits the active set conjunctively —
-    * a directory whose recorded range on ANY key cannot intersect the
-    * source's span provably holds no matching row and survives the
-    * merge untouched. At 100 TB
-    * this is the difference between rewriting an ingestion-day and
-    * rewriting the table; after an [[optimize]] clustered on the merge
-    * key, touched ≈ the key span's chunks exactly (clustering layout
-    * and merge write-amplification are the same decision, as in Delta).
-    *
-    * Old versions still read the pre-merge rows until [[vacuum]]. The
-    * caller must ensure source keys are UNIQUE (Delta raises on
-    * multi-match; here the last-writer row would be both kept and
-    * joined ambiguously — same contract, enforced upstream). Source
-    * schema must equal the snapshot schema up to column order.
+  /** Delta-style MERGE upsert in ONE atomic commit: every source row
+    * replaces the target row with the same `keys` (whole-row) or is
+    * inserted — [[mergeClauses]] with `WHEN MATCHED THEN UPDATE SET *`
+    * and `WHEN NOT MATCHED THEN INSERT *`, sharing its conjunctive
+    * key-span pruning of the touched directories, its commit shapes
+    * (copy-on-write, or deletion vectors with `useDeletionVectors`)
+    * and its conflict rules. A target row matched by more than one
+    * source row fails loudly, as in Delta — dedupe the source on the
+    * keys first. Source schema must equal the snapshot schema up to
+    * column order; an empty table takes the source as an append. Old
+    * versions still read the pre-merge rows until [[vacuum]].
     *
     * `writeChangeData = true` additionally persists the commit's exact
     * row-level change feed (Delta's CDC files) next to the data:
     * matched target rows as `update_preimage`, their source
     * replacements as `update_postimage`, unmatched source rows as
     * `insert` — [[changes]] then serves the merge precisely instead of
-    * the coarse added/removed synthesis. Costs two extra joins over the
-    * touched directories at write time; off by default.
+    * the coarse added/removed synthesis; off by default.
     */
   def merge(source: DataFrame, keys: Seq[String],
             writeChangeData: Boolean = false, maxRetries: Int = 5,
             useDeletionVectors: Boolean = false): Int = {
-    import org.apache.spark.sql.functions.{col, lit}
     require(keys.nonEmpty, "merge needs at least one key column")
     keys.foreach(k => require(source.columns.contains(k),
       s"merge key `$k` missing from source (has: ${source.columns.mkString(", ")})"))
     val latest = latestVersion
     if (latest < 0) return append(source) // empty table: all inserts
-    val snapCols = read().columns
+    val snapCols = tableSchemaAt(latest).fieldNames
     require(source.columns.sorted.sameElements(snapCols.sorted),
       s"merge source schema ${source.columns.sorted.mkString(",")} != " +
         s"table schema ${snapCols.sorted.mkString(",")}")
-    val srcAligned = source.select(snapCols.map(col).toIndexedSeq: _*)
-
-    // Touched-directory pruning over EVERY indexable merge key, in the
-    // stat domain ([[mergeSpanState]]) — conjunctive, matching the
-    // equality semantics: a target row matches only when ALL keys
-    // equal, so a directory is touched only when EVERY key's recorded
-    // range can intersect the source's span ([[pruneActiveAll]]); a
-    // multi-key merge therefore never rewrites a directory a single
-    // key's span alone would admit.
-    val snapState = snapshotAt(latest)
-    val active = snapState.active
-    val spanState = mergeSpanState(source, keys)
-    val touched: Seq[String] = spanState match {
-      case None => active
-      case Some(None) => Seq.empty
-      case Some(Some(preds)) => pruneActiveAll(preds, Some(latest))._1
-    }
-    // Align touched directories to the SNAPSHOT schema: an evolving
-    // append means an old directory can predate a column — pad it with
-    // typed nulls so a merge whose key span only touches old data still
-    // runs (and unions cleanly with the source).
-    // the LOG schema, not read().schema: the read aliases physical →
-    // logical and drops the column-mapping metadata the rename paths
-    // need (types and names are identical)
-    val snapSchema = tableSchemaAt(latest)
-    val mergeL2p = renameMap(snapSchema)
-    def alignTo(df: DataFrame): DataFrame =
-      snapCols.foldLeft(df)((d, c) =>
-        if (d.columns.contains(c)) d
-        else d.withColumn(c, lit(null).cast(snapSchema(c).dataType)))
-        .select(snapCols.map(col).toIndexedSeq: _*)
-    // Which of a concurrent winner's added directories may hold rows
-    // matching the merge keys: its recorded stats tested against the
-    // source's conjunctive span, same rule as the touched prune.
-    // (Hoisted above the merge-on-read branch — both commit shapes ride
-    // the same disjointness test.)
-    val addedMayMatch = mergeAddedMayMatch(spanState, mergeL2p)
-    val srcKeys = source.select(keys.map(col).toIndexedSeq: _*)
-    if (useDeletionVectors && touched.nonEmpty)
-      mergeViaDv(srcAligned, srcKeys, keys, latest, snapSchema, mergeL2p,
-        snapState.dvs, snapState.constraints, touched, addedMayMatch,
-        maxRetries) match {
-        case Some(v) => return v
-        case None => () // matched fraction too large: rewrite pays off
-      }
-    val touchedData =
-      if (touched.isEmpty) None
-      else Some(alignTo(readDirsFolded(None, touched, snapState.dvs,
-        mergeL2p.map(_.swap))))
-    val newData = touchedData match {
-      case Some(td) =>
-        td.join(srcKeys, keys, "left_anti").unionByName(srcAligned)
-      case None => srcAligned
-    }
-    val v = latest + 1
-    val (name, rows, st) = writePayload(newData, v, snapState.constraints,
-      renameMap(snapSchema))
-    if (touched.isEmpty && rows == 0L) {
-      // Empty/all-null-key source touching nothing: a no-op. Committing
-      // would add a stat-less empty directory every prune keeps forever.
-      fs.delete(new Path(root, name), true)
-      return latest
-    }
-    val cdfName =
-      if (!writeChangeData) None
-      else {
-        val n = f"cdf-v$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-        val tgtKeys = touchedData.map(_.select(keys.map(col).toIndexedSeq: _*))
-        val pre = touchedData.map(_.join(srcKeys, keys, "left_semi")
-          .withColumn("_change_type", lit("update_preimage")))
-        val post = tgtKeys.map(tk => srcAligned.join(tk, keys, "left_semi")
-          .withColumn("_change_type", lit("update_postimage")))
-        val ins = tgtKeys.fold(srcAligned)(tk => srcAligned.join(tk, keys, "left_anti"))
-          .withColumn("_change_type", lit("insert"))
-        toPhysicalDf((pre.toSeq ++ post.toSeq :+ ins).reduce(_.unionByName(_)),
-          mergeL2p).write.parquet(new Path(root, n).toString)
-        Some(n)
-      }
-    publishMutationRetrying("merge", latest, maxRetries, touched,
-      revalidate = Seq(name), addedMayMatch,
-      mkCommit = vv => Commit(vv, "merge", Seq(name), touched, rows,
-        System.currentTimeMillis(), addedStats = Map(name -> st),
-        cdf = cdfName, addedRows = Map(name -> rows)),
-      validated0 = snapState.constraints)
+    // the star forms never spell an alias, so none may collide with a key
+    mergeClauses(source, keys,
+      matched = Seq(MergeClause(None, MergeAction.Update(None))),
+      notMatched = Seq(MergeClause(None, MergeAction.Insert(None))),
+      targetAlias = "__graft_t", sourceAlias = "__graft_s",
+      writeChangeData = writeChangeData, maxRetries = maxRetries,
+      useDeletionVectors = useDeletionVectors)
   }
-
-  /** Conjunctive per-key span of a merge source in the STAT domain —
-    * the shared foundation of touched-directory pruning and the
-    * concurrent-add conflict test for every merge commit shape.
-    * `None` = unprovable (an unindexable key TYPE contributes no
-    * predicate — any concurrently added data may match); `Some(None)`
-    * = provably matchless (a key whose source values are ALL NULL —
-    * SQL equality never matches null, so no source row can match any
-    * target row); `Some(Some(preds))` = the conjunctive bounds. All
-    * spans ride ONE scalar aggregate over the source.
-    */
-  private def mergeSpanState(source: DataFrame, keys: Seq[String])
-      : Option[Option[Seq[(String, Option[Any], Option[Any])]]] =
-    mergeSpanAndDupState(source, keys, needDup = false)._1
 
   /** The merge source's key-span state and (optionally) its
     * duplicate-key flag in ONE pass. When `needDup` is set, the span
@@ -2325,13 +2191,19 @@ class VersionedTable(spark: SparkSession, dir: String,
     * fusion (one full source pass per merge removed). Without
     * `needDup` (insert-only merges, the CDC append shape) the span
     * stays the cheap global aggregate: map-side partials to one row,
-    * no keyed shuffle.
+    * no keyed shuffle. A source the planner estimates below the
+    * broadcast threshold aggregates in ONE task — no exchange, one job
+    * (the sizes merge sources usually have; a large one keeps the
+    * parallel plan).
     */
-  private def mergeSpanAndDupState(source: DataFrame, keys: Seq[String],
+  private def mergeSpanAndDupState(source0: DataFrame, keys: Seq[String],
                                    needDup: Boolean)
       : (Option[Option[Seq[(String, Option[Any], Option[Any])]]], Boolean) = {
     import org.apache.spark.sql.functions.{col, count, lit, max => fmax, min => fmin, unix_micros}
     import org.apache.spark.sql.types._
+    val small = source0.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.autoBroadcastJoinThreshold
+    val source = if (small) source0.coalesce(1) else source0
     val keyDomain: Seq[(String, Option[org.apache.spark.sql.Column])] =
       keys.map { k =>
         k -> (source.schema(k).dataType match {
@@ -2412,27 +2284,22 @@ class VersionedTable(spark: SparkSession, dir: String,
     * unchanged, a source row no INSERT claims is dropped.
     *
     * The join is ONE full-outer join on the same-name equality `keys`
-    * (the same contract as [[merge]] — per-key conjunctive stat
-    * pruning and the disjoint-writer retry both hang off the key
-    * spans), with each side packed into a struct named by its alias so
-    * clause expressions reference `t.col` / `s.col` naturally and the
-    * keys stay available unqualified. Clause conditions evaluate as
-    * one CASE chain per row class — no per-clause re-scan; the
-    * evaluated join is persisted and every output (payload, deletion
-    * vector, CDC, policy counts) projects from it.
+    * (per-key conjunctive stat pruning of the touched directories and
+    * the disjoint-writer retry both hang off the key spans), with each
+    * side packed into a struct named by its alias so clause
+    * expressions reference `t.col` / `s.col` naturally and the keys
+    * stay available unqualified. Clause conditions evaluate as one
+    * CASE chain per row class — no per-clause re-scan; the claimed
+    * rows are persisted and every output (payload, deletion vector,
+    * CDC, policy counts) projects from them. The unconditioned
+    * replace-by-key shape ([[merge]]'s upsert) skips the
+    * classification: carried rows are the touched rows the source's
+    * keys miss, and the images are semi-joins.
     *
-    * Commit shapes, decided by what the clauses actually DID:
-    *   - nothing affected, nothing inserted → no-op (no commit);
-    *   - inserts only → append-shaped commit (touched directories are
-    *     provably unchanged — rewriting them would be pure write
-    *     amplification);
-    *   - `useDeletionVectors` and the affected rows pass the same
-    *     cumulative-fraction policy as delete/update → merge-on-read:
-    *     ONE sidecar hides every updated/deleted target row, the
-    *     payload appends post-images + inserts, data files stay
-    *     byte-identical, exact CDC always persists;
-    *   - otherwise copy-on-write: touched directories are rewritten
-    *     (carried rows + post-images + inserts).
+    * Commit shapes ([[commitMutation]]): nothing affected and nothing
+    * inserted → no-op; inserts only → append-shaped; otherwise
+    * merge-on-read with `useDeletionVectors` (under the same
+    * cumulative-fraction policy as delete/update), else copy-on-write.
     *
     * `WHEN NOT MATCHED BY SOURCE` reads the WHOLE active set (any
     * target row may be claimed), so span pruning is off and any
@@ -2468,7 +2335,7 @@ class VersionedTable(spark: SparkSession, dir: String,
                    useDeletionVectors: Boolean = false,
                    evolveSchema: Boolean = false,
                    txn: Option[(String, Long)] = None): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, element_at, lit, split, struct, sum, when}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, struct, sum, when}
     import MergeAction.{Delete => MDelete, Insert => MInsert, Update => MUpdate}
     require(keys.nonEmpty, "merge needs at least one key column")
     keys.foreach(k => require(source.columns.contains(k),
@@ -2649,11 +2516,11 @@ class VersionedTable(spark: SparkSession, dir: String,
     val sCol = col(sourceAlias)
     // The source pipeline is evaluated ONCE and cached: the span
     // aggregate, the duplicate-key gate, the clause join (twice, when
-    // the full-outer decomposition's anti side runs), and the
-    // copy-on-write carried recompute all read this projection — an
-    // unpersisted source would re-run an arbitrary pipeline for each
-    // (the same reasoning as mergeViaDv's srcAligned persist), and a
-    // non-deterministic one could diverge between them.
+    // the full-outer decomposition's anti side runs), the upsert's
+    // payload and change-data images, and the copy-on-write carried
+    // recompute all read this projection — an unpersisted source would
+    // re-run an arbitrary pipeline for each, and a non-deterministic
+    // one could diverge between them.
     val src = source.select((keys.map(col) :+
       struct(source.columns.toIndexedSeq.map(col): _*).as(sourceAlias)): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2683,6 +2550,55 @@ class VersionedTable(spark: SparkSession, dir: String,
       case Some(Some(preds)) => pruneActiveAll(preds, Some(latest))._1
     }
     val addedMayMatch = mergeAddedMayMatch(spanState, mergeL2p)
+    val castTo = snapSchema.fields.map(f => f.name -> f.dataType).toMap
+    def scan(withPos: Boolean): DataFrame = readDirsFolded(Some(snapSchema),
+      touched, snapState.dvs, tag = Some("__graft_file"),
+      posTag = if (withPos) Some("__graft_pos") else None)
+    val insertOnly = matched.isEmpty && notMatchedBySource.isEmpty
+    // A target row matched by MORE than one source row fails loudly (its
+    // update/delete/carry outcome would be nondeterministic). Only a
+    // duplicated source key can do that, so the exact test — does a
+    // duplicated key equal any touched target key? — runs only when the
+    // flag that rode the span job (or the BY SOURCE probe) is set.
+    if (!insertOnly && touched.nonEmpty && srcHasDupKeys) {
+      val dupKeys = src.groupBy(keys.map(col): _*).count()
+        .filter(col("count") > 1).select(keys.map(col): _*)
+      require(scan(withPos = false).join(dupKeys, keys, "left_semi").isEmpty,
+        "MERGE found a target row matched by more than one source row — " +
+          "the update/delete/carry outcome would be nondeterministic; " +
+          "dedupe the source on the merge keys first")
+    }
+    def commit(pre: Option[DataFrame], post: Option[DataFrame],
+               inserts: Option[DataFrame], rewrite: () => DataFrame,
+               dvPayload: Option[DataFrame] = None): Int =
+      commitMutation("merge", latest, touched, snapSchema, pre, post, inserts,
+        rewrite, addedMayMatch, snapState.constraints, writeChangeData,
+        useDeletionVectors, maxRetries, dvPayload, txn, evolvedJson,
+        mergeFeatures, schemaRace)
+    // The unconditioned replace-by-key shape ([[merge]]'s upsert: UPDATE
+    // SET * and INSERT * over exactly the table's columns) needs no
+    // per-row classification: the touched rows whose keys the source
+    // misses are carried, every source row is written, and the images
+    // the deletion vector and the change data need are semi-joins — no
+    // claimed-row persist and no count job.
+    val replaceByKey = notMatchedBySource.isEmpty &&
+      matched == Seq(MergeClause(None, MUpdate(None))) &&
+      notMatched == Seq(MergeClause(None, MInsert(None))) &&
+      source.columns.sorted.sameElements(snapCols.sorted)
+    if (replaceByKey) {
+      val rows = src.select(snapCols.map(c => sCol.getField(c).cast(castTo(c)).as(c)): _*)
+      if (touched.isEmpty) return commit(None, None, Some(rows), () => rows)
+      val srcKeys = src.select(keys.map(col): _*)
+      val tgtKeys = scan(withPos = false).select(keys.map(col): _*)
+      return commit(
+        pre = Some(scan(withPos = true).join(srcKeys, keys, "left_semi")
+          .withColumn("_change_type", lit("update_preimage"))),
+        post = Some(rows.join(tgtKeys, keys, "left_semi")),
+        inserts = Some(rows.join(tgtKeys, keys, "left_anti")),
+        rewrite = () => scan(withPos = false).drop("__graft_file")
+          .join(srcKeys, keys, "left_anti").unionByName(rows),
+        dvPayload = Some(rows))
+    }
     // Join shape by what the clauses can CLAIM — a full-outer join can
     // never broadcast, so one is never planned:
     //   - no NOT MATCHED clauses → target-side rows suffice: LEFT
@@ -2706,22 +2622,18 @@ class VersionedTable(spark: SparkSession, dir: String,
           lit(null).cast(org.apache.spark.sql.types.LongType))
         .withColumn(targetAlias, lit(null).cast(tgtStructT))
     }
-    val insertOnly = matched.isEmpty && notMatchedBySource.isEmpty
     val joined0 =
       if (touched.isEmpty) {
         // span-disjoint (or empty-active) target: every source row is
         // a NOT MATCHED row; a typed null struct keeps one code path
         nullTagged(src)
       } else {
-        lazy val tgt = readDirsFoldedTagged(Some(snapSchema), touched,
-          snapState.dvs, "__graft_file", Some("__graft_pos"))
+        lazy val tgt = scan(withPos = true)
           .select((keys.map(col) :+ col("__graft_file") :+
             col("__graft_pos") :+
             struct(snapCols.map(col): _*).as(targetAlias)): _*)
         lazy val srcOnly = nullTagged(src.join(
-          readDirsFoldedTagged(Some(snapSchema), touched, snapState.dvs,
-            "__graft_file").select(keys.map(col): _*),
-          keys, "left_anti"))
+          scan(withPos = false).select(keys.map(col): _*), keys, "left_anti"))
         if (insertOnly) srcOnly
         else if (notMatched.isEmpty) tgt.join(src, keys, "left_outer")
         else tgt.join(src, keys, "left_outer").unionByName(srcOnly)
@@ -2766,39 +2678,22 @@ class VersionedTable(spark: SparkSession, dir: String,
           .otherwise(lit(0)))
     // Persist only the rows some clause CLAIMED — deleted/updated/
     // inserted-sized, not touched-sized. A 0.3%-selectivity merge into
-    // a 100×-scale table must not materialize the whole touched join
-    // (the specialized upsert path persists its semi-join matches for
-    // the same reason); carried rows are re-derived only by the
-    // copy-on-write rewrite, which re-reads everything by definition.
+    // a 100×-scale table must not materialize the whole touched join;
+    // carried rows are re-derived only by the copy-on-write rewrite,
+    // which re-reads everything by definition.
     val actedHot = acted.filter(col("__graft_act") > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val act = col("__graft_act")
-      def idxs(cs: Seq[MergeClause])(p: MergeAction => Boolean): Seq[Int] =
-        cs.zipWithIndex.collect { case (c, i) if p(c.action) => i + 1 }
+      def actIn(cs: Seq[MergeClause])(p: MergeAction => Boolean)
+          : org.apache.spark.sql.Column = {
+        val is = cs.zipWithIndex.collect { case (c, i) if p(c.action) => i + 1 }
+        if (is.isEmpty) lit(false) else act.isin(is: _*)
+      }
       val isUpd: MergeAction => Boolean =
         { case _: MUpdate => true; case _ => false }
-      val mUpd = idxs(matched)(isUpd)
-      val mDel = idxs(matched)(_ == MDelete)
-      val nUpd = idxs(notMatchedBySource)(isUpd)
-      val nDel = idxs(notMatchedBySource)(_ == MDelete)
-      def actIn(is: Seq[Int]): org.apache.spark.sql.Column =
-        if (is.isEmpty) lit(false) else act.isin(is: _*)
       val affected = (isM || isT) && act > 0
       val insApplied = isS && act > 0
-      // Multi-match detection pays only when it CAN happen: a target
-      // row matched twice implies the source carries a duplicate key —
-      // one small agg on the source gates the (join-sized) exact test.
-      // the flag rode the span job (or the BY SOURCE probe) above
-      val srcDups = !insertOnly && touched.nonEmpty && srcHasDupKeys
-      if (srcDups) {
-        val dup = acted.filter(isM)
-          .groupBy(col("__graft_file"), col("__graft_pos")).count()
-          .filter(col("count") > 1).limit(1).count() > 0
-        require(!dup, "MERGE found a target row matched by more than one " +
-          "source row — the update/delete/carry outcome would be " +
-          "nondeterministic; dedupe the source on the merge keys first")
-      }
       // one pass over the (cached, claimed-rows-only) join
       val cRow = actedHot.agg(
         sum(when(affected, 1L).otherwise(0L)),
@@ -2807,7 +2702,6 @@ class VersionedTable(spark: SparkSession, dir: String,
       val (affectedCnt, insertCnt) = (cnt(0), cnt(1))
       if (affectedCnt == 0L && insertCnt == 0L) return latest // no-op
 
-      val castTo = snapSchema.fields.map(f => f.name -> f.dataType).toMap
       def tF(c: String) = tCol.getField(c)
       def sF(c: String) = sCol.getField(c)
       val tImage: Seq[org.apache.spark.sql.Column] =
@@ -2846,159 +2740,161 @@ class VersionedTable(spark: SparkSession, dir: String,
         case _ => None
       }
       val updPost = unionAll(
-        perClause(matched, isM)(updOf) ++
-          perClause(notMatchedBySource, isT)(updOf))
+        perClause(matched, isM)(updOf) ++ perClause(notMatchedBySource, isT)(updOf))
       val inserts = unionAll(perClause(notMatched, isS) {
         case MInsert(v) => Some(insImage(v))
         case _ => None
       })
-      val updPre =
-        if (mUpd.isEmpty && nUpd.isEmpty) None
-        else Some(actedHot.filter((isM && actIn(mUpd)) || (isT && actIn(nUpd)))
-          .select(tImage: _*))
-      val delPre =
-        if (mDel.isEmpty && nDel.isEmpty) None
-        else Some(actedHot.filter((isM && actIn(mDel)) || (isT && actIn(nDel)))
-          .select(tImage: _*))
-      def cdcFrame: DataFrame =
-        (updPre.map(_.withColumn("_change_type", lit("update_preimage"))).toSeq ++
-          updPost.map(_.withColumn("_change_type", lit("update_postimage"))) ++
-          delPre.map(_.withColumn("_change_type", lit("delete"))) ++
-          inserts.map(_.withColumn("_change_type", lit("insert"))))
-          .reduce(_.unionByName(_))
-      val v0 = latest + 1
-      val constraints = snapState.constraints
-
-      if (affectedCnt == 0L) {
-        // inserts only: the touched directories are provably unchanged
-        // — an append-shaped commit, never a rewrite
-        val (name, rows, st) =
-          writePayload(inserts.get, v0, constraints, mergeL2p)
-        val cdfName =
-          if (!writeChangeData) None
-          else {
-            val n = f"cdf-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-            toPhysicalDf(cdcFrame, mergeL2p)
-              .write.parquet(new Path(root, n).toString)
-            Some(n)
-          }
-        return publishMutationRetrying("merge", latest, maxRetries, touched,
-          revalidate = Seq(name), addedMayMatch,
-          mkCommit = vv => Commit(vv, "merge", Seq(name), Seq.empty, rows,
-            System.currentTimeMillis(), txn.map(_._1), txn.map(_._2), addedStats = Map(name -> st),
-            cdf = cdfName, addedRows = Map(name -> rows),
-            schemaJson = evolvedJson, featuresAdd = mergeFeatures),
-          validated0 = constraints, schemaConflicts = schemaRace, txn = txn)
-      }
-
-      val dirOf = element_at(split(col("__graft_file"), "/"), -2)
-      // With DVs on, the sidecar AND the exact CDC are written
-      // optimistically in ONE job: the bitmap emission rides the CDC
-      // write's affected-pre-image branch ([[GraftDvBitmap.fuseWrite]]
-      // — see [[deleteViaDv]]) and the per-dir counts ride the same
-      // job's accumulator, one pass over the claimed rows instead of a
-      // bitmap job plus a second CDC pass. A policy refusal deletes
-      // the sidecar and falls through to copy-on-write, REUSING the
-      // already-written CDC when the table records change data (the
-      // content is the same cdcFrame by construction — the fused
-      // pre-image branch is updPre ∪ delPre typed per row).
-      var reusableCdf: Option[String] = None
-      val dvAttempt: Option[(String, String, Map[String, Long])] =
-        if (!useDeletionVectors) None
-        else {
-          val dvName = f"dv-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-          val cdfName = f"cdf-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-          val isUpdPre = (isM && actIn(mUpd)) || (isT && actIn(nUpd))
-          val preTyped = actedHot.filter(affected).select(
-            (tImage :+
-              when(isUpdPre, lit("update_preimage")).otherwise(lit("delete"))
-                .as("_change_type") :+
-              dirOf.as("__graft_dv_dir") :+
-              element_at(split(col("__graft_file"), "/"), -1)
-                .as("__graft_dv_file") :+
-              col("__graft_pos").as("__graft_dv_pos")): _*)
-          val (fusedPre, perDirOf) =
-            GraftDvBitmap.fuseWrite(spark, root, dvName, preTyped)
-          val fusedCdc = (Seq(fusedPre
-              .drop("__graft_dv_dir", "__graft_dv_file", "__graft_dv_pos")) ++
-            updPost.map(_.withColumn("_change_type", lit("update_postimage"))) ++
-            inserts.map(_.withColumn("_change_type", lit("insert"))))
-            .reduce(_.unionByName(_))
-          try toPhysicalDf(fusedCdc, mergeL2p)
-            .write.parquet(new Path(root, cdfName).toString)
-          catch { case t: Throwable =>
-            fs.delete(new Path(root, dvName), true)
-            fs.delete(new Path(root, cdfName), true)
-            throw t
-          }
-          val perDir = perDirOf()
-          // perDir.nonEmpty matches the other three DV paths: an empty
-          // claim set wrote no sidecar directory at all, and committing
-          // dvAdd = Some(name) for it would make a genuinely lost
-          // sidecar indistinguishable from an intentionally empty one —
-          // fall through to the generic commit shapes instead
-          if (perDir.nonEmpty && dvFractionOk(perDir, latest))
-            Some((dvName, cdfName, perDir))
-          else {
-            fs.delete(new Path(root, dvName), true)
-            if (writeChangeData) reusableCdf = Some(cdfName)
-            else fs.delete(new Path(root, cdfName), true)
-            None
-          }
-        }
-      dvAttempt match {
-        case Some((dvName, cdfName, perDir)) =>
-          // merge-on-read: hide the claimed rows, append images+inserts
-          val payload = unionAll(updPost.toSeq ++ inserts.toSeq)
-          val (added, addedRows, addedStats, rows) =
-            try payload match {
-              case Some(p) =>
-                val (name, r, st) = writePayload(p, v0, constraints, mergeL2p)
-                (Seq(name), Map(name -> r), Map(name -> st), r)
-              case None => // pure delete clauses: sidecar-only commit
-                (Seq.empty[String], Map.empty[String, Long],
-                  Map.empty[String, Map[String, ColStat]], 0L)
-            } catch { case t: Throwable =>
-              fs.delete(new Path(root, dvName), true)
-              fs.delete(new Path(root, cdfName), true)
-              throw t
-            }
-          return publishMutationRetrying("merge-dv", latest, maxRetries,
-            touched, revalidate = added, addedMayMatch,
-            mkCommit = vv => Commit(vv, "merge-dv", added, Seq.empty, rows,
-              System.currentTimeMillis(), txn.map(_._1), txn.map(_._2), addedStats = addedStats,
-              cdf = Some(cdfName), addedRows = addedRows,
-              dvAdd = Some(dvName), dvDirs = perDir.keys.toSeq.sorted,
-              dvDirRows = perDir, schemaJson = evolvedJson, featuresAdd = mergeFeatures),
-            validated0 = constraints, schemaConflicts = schemaRace, txn = txn)
-        case None => ()
-      }
-
-      // copy-on-write: rewrite the touched directories — carried rows
-      // byte-equal, claimed rows replaced by their post-images, plus
-      // the inserts
-      // copy-on-write re-derives the carried rows from the UNPERSISTED
-      // join — the rewrite reads every touched row by definition
-      val carried = acted.filter((isM || isT) && act === 0).select(tImage: _*)
-      val payload = unionAll(Seq(carried) ++ updPost.toSeq ++ inserts.toSeq).get
-      val (name, rows, st) = writePayload(payload, v0, constraints, mergeL2p)
-      val cdfName =
-        if (!writeChangeData) None
-        else reusableCdf.orElse {
-          val n = f"cdf-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-          toPhysicalDf(cdcFrame, mergeL2p)
-            .write.parquet(new Path(root, n).toString)
-          Some(n)
-        }
-      publishMutationRetrying("merge", latest, maxRetries, touched,
-        revalidate = Seq(name), addedMayMatch,
-        mkCommit = vv => Commit(vv, "merge", Seq(name), touched, rows,
-          System.currentTimeMillis(), txn.map(_._1), txn.map(_._2), addedStats = Map(name -> st),
-          cdf = cdfName, addedRows = Map(name -> rows),
-          schemaJson = evolvedJson, featuresAdd = mergeFeatures),
-        validated0 = constraints, schemaConflicts = schemaRace, txn = txn)
+      val isUpdPre = (isM && actIn(matched)(isUpd)) || (isT && actIn(notMatchedBySource)(isUpd))
+      commit(
+        pre = if (affectedCnt == 0L) None // inserts only: nothing replaced
+          else Some(actedHot.filter(affected).select(tImage :+
+            when(isUpdPre, lit("update_preimage")).otherwise(lit("delete"))
+              .as("_change_type") :+ col("__graft_file") :+ col("__graft_pos"): _*)),
+        post = updPost, inserts = inserts,
+        // copy-on-write re-derives the carried rows from the UNPERSISTED
+        // join — the rewrite reads every touched row by definition
+        rewrite = () => unionAll(
+          acted.filter((isM || isT) && act === 0).select(tImage: _*) +:
+            (updPost.toSeq ++ inserts)).get)
     } finally actedHot.unpersist()
     } finally src.unpersist()
+  }
+
+  /** The shared strategy and publish of every row-level mutation —
+    * [[merge]], [[mergeClauses]], [[delete]] and [[update]] are front
+    * ends that discover the `touched` directories and describe what
+    * changes as frames over the table's logical columns:
+    *  - `pre`: the touched rows the mutation hides or replaces, typed
+    *    by `_change_type` (`delete` / `update_preimage`) and carrying
+    *    their `__graft_file` / `__graft_pos` identity; `None` = provably
+    *    none (an insert-only merge);
+    *  - `post` / `inserts`: update post-images and inserted rows;
+    *  - `rewrite`: the copy-on-write payload replacing `touched`;
+    *  - `dvPayload`: what a DV commit appends, when the front end has a
+    *    cheaper frame equal to `post ∪ inserts`.
+    *
+    * Commit shapes:
+    *  - nothing replaced (`pre` is None): append-shaped — the touched
+    *    directories are provably unchanged, so rewriting them would be
+    *    pure write amplification;
+    *  - `useDeletionVectors` → merge-on-read (Delta's deletion
+    *    vectors): the sidecar hiding `pre` and the exact CDC (always
+    *    persisted — the change feed has no synthesis for a DV commit)
+    *    are written OPTIMISTICALLY in ONE job, the bitmap emission
+    *    riding the CDC write's pre-image branch
+    *    ([[GraftDvBitmap.fuseWrite]]) and the per-directory counts its
+    *    accumulator; data files stay byte-identical and `post ∪
+    *    inserts` is appended. [[dvFractionOk]] still gates the commit:
+    *    when the matches dominate their directories, a rows-sized
+    *    sidecar every reader anti-joins forever is worse than the
+    *    rewrite, so the sidecar is dropped (the CDC is reused when the
+    *    table records change data) and copy-on-write follows. A DV
+    *    attempt that hid nothing commits append-shaped, or nothing;
+    *  - otherwise copy-on-write: `rewrite` replaces `touched`.
+    *    Emptied directories disappear, except that emptying the whole
+    *    table keeps one 0-row directory as the schema holder.
+    * A write that throws reclaims the sidecar and CDC this attempt
+    * already wrote. A commit that hides, removes and adds nothing is a
+    * no-op: the current version is returned. Conflicts ride
+    * [[publishMutationRetrying]] with the front end's `addedMayMatch`;
+    * a `delete` payload holds only rows the table already validated,
+    * so it is neither validated nor revalidated against constraints.
+    */
+  private def commitMutation(op: String, base: Int, touched: Seq[String],
+      schema: org.apache.spark.sql.types.StructType,
+      pre: Option[DataFrame], post: Option[DataFrame],
+      inserts: Option[DataFrame], rewrite: () => DataFrame,
+      addedMayMatch: Commit => Seq[String], constraints: Map[String, String],
+      writeChangeData: Boolean, useDeletionVectors: Boolean, maxRetries: Int,
+      dvPayload: Option[DataFrame] = None, txn: Option[(String, Long)] = None,
+      schemaJson: Option[String] = None, features: Seq[String] = Nil,
+      schemaRace: Commit => Boolean = _ => false): Int = {
+    import org.apache.spark.sql.functions.{col, element_at, lit, split}
+    val v0 = base + 1
+    val l2p = renameMap(schema)
+    val checks = if (op == "delete") Map.empty[String, String] else constraints
+    def fresh(kind: String): String =
+      f"$kind-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
+    def reclaim(names: Iterable[String]): Unit =
+      names.foreach(n => fs.delete(new Path(root, n), true))
+    def guarded[A](written: String*)(body: => A): A =
+      try body catch { case t: Throwable => reclaim(written); throw t }
+    val images = post.map(_.withColumn("_change_type", lit("update_postimage"))).toSeq ++
+      inserts.map(_.withColumn("_change_type", lit("insert")))
+    def writeCdc(name: String, preImages: Option[DataFrame]): Unit =
+      toPhysicalDf((preImages.toSeq ++ images).reduce(_.unionByName(_)), l2p)
+        .write.parquet(new Path(root, name).toString)
+    def write(df: Option[DataFrame]): (Seq[String], Long, Map[String, Map[String, ColStat]]) =
+      df.fold((Seq.empty[String], 0L, Map.empty[String, Map[String, ColStat]])) { p =>
+        val (name, rows, st) = writePayload(p, v0, checks, l2p)
+        (Seq(name), rows, Map(name -> st))
+      }
+    def publishAs(commitOp: String, added: Seq[String], removed: Seq[String], rows: Long,
+                  addedStats: Map[String, Map[String, ColStat]], cdf: Option[String],
+                  dv: Option[(String, Map[String, Long])] = None): Int = {
+      if (rows == 0L && removed.isEmpty && dv.isEmpty) {
+        reclaim(added ++ cdf) // hides, removes and adds nothing: no-op
+        return base
+      }
+      publishMutationRetrying(commitOp, base, maxRetries, touched,
+        revalidate = if (commitOp.startsWith("delete")) Nil else added, addedMayMatch,
+        mkCommit = vv => Commit(vv, commitOp, added, removed, rows,
+          System.currentTimeMillis(), txn.map(_._1), txn.map(_._2),
+          addedStats = addedStats, cdf = cdf, addedRows = added.map(_ -> rows).toMap,
+          dvAdd = dv.map(_._1), dvDirs = dv.toSeq.flatMap(_._2.keys).sorted,
+          dvDirRows = dv.fold(Map.empty[String, Long])(_._2),
+          schemaJson = schemaJson, featuresAdd = features),
+        validated0 = checks, schemaConflicts = schemaRace, txn = txn)
+    }
+    val appended = dvPayload.orElse((post.toSeq ++ inserts).reduceOption(_.unionByName(_)))
+    val preImages = pre match {
+      case Some(p) => p
+      case None =>
+        val (added, rows, st) = write(appended)
+        val cdf = if (!writeChangeData) None
+          else { val n = fresh("cdf"); guarded(added: _*)(writeCdc(n, None)); Some(n) }
+        return publishAs(op, added, Nil, rows, st, cdf)
+    }
+    var reusableCdf: Option[String] = None
+    if (useDeletionVectors && touched.nonEmpty) {
+      val dvName = fresh("dv")
+      val cdfName = fresh("cdf")
+      val file = col("__graft_file")
+      val (fusedPre, perDirOf) = GraftDvBitmap.fuseWrite(spark, root, dvName,
+        preImages.withColumn("__graft_dv_dir", element_at(split(file, "/"), -2))
+          .withColumn("__graft_dv_file", element_at(split(file, "/"), -1))
+          .withColumnRenamed("__graft_pos", "__graft_dv_pos").drop("__graft_file"))
+      guarded(dvName, cdfName)(writeCdc(cdfName,
+        Some(fusedPre.drop("__graft_dv_dir", "__graft_dv_file", "__graft_dv_pos"))))
+      val perDir = perDirOf()
+      // An empty claim set wrote no sidecar directory and commits no
+      // dvAdd (a lost sidecar must stay distinguishable from an empty
+      // one): the attempt is append-shaped, or nothing.
+      if (perDir.isEmpty || dvFractionOk(perDir, base)) {
+        val dv = if (perDir.isEmpty) None else Some((dvName, perDir))
+        if (dv.isEmpty) reclaim(Seq(dvName))
+        val (added, rows, st) = guarded(dvName, cdfName)(write(appended))
+        return publishAs(if (dv.isDefined) s"$op-dv" else op, added, Nil, rows, st,
+          Some(cdfName), dv)
+      }
+      reclaim(Seq(dvName))
+      if (writeChangeData) reusableCdf = Some(cdfName) else reclaim(Seq(cdfName))
+    }
+    val (written, rows, st) = write(Some(rewrite()))
+    val (added, addedStats) =
+      if (rows > 0L) (written, st)
+      else if (touched.size < snapshotAt(base).active.size) {
+        reclaim(written) // every touched row went; other directories remain
+        (Nil, Map.empty[String, Map[String, ColStat]])
+      } else (written, Map.empty[String, Map[String, ColStat]])
+    val cdf = if (!writeChangeData) None
+      else reusableCdf.orElse {
+        val n = fresh("cdf")
+        guarded(added: _*)(writeCdc(n, Some(preImages.drop("__graft_file", "__graft_pos"))))
+        Some(n)
+      }
+    publishAs(op, added, touched, rows, addedStats, cdf)
   }
 
   /** Test seam: runs once after a merge/delete result is fully written
@@ -3378,27 +3274,6 @@ class VersionedTable(spark: SparkSession, dir: String,
     0
   }
 
-  /** Delta-style DELETE — copy-on-write row deletion in ONE atomic
-    * commit. One scan over the current snapshot (tagged with
-    * `input_file_name`) finds the directories that actually hold
-    * matching rows — only those are rewritten without the matches;
-    * every other directory survives untouched, so the write
-    * amplification is bounded by where the condition's rows live, not
-    * the table size (after an [[optimize]] clustered on the predicate
-    * column, that's the matching chunks exactly). SQL DELETE null
-    * semantics: rows where `condition` is NULL are KEPT (only
-    * provably-true rows are deleted). Directories whose every row
-    * matches simply disappear (no empty payload is written), except
-    * that emptying the whole table keeps one 0-row directory as the
-    * schema holder so the table still reads as an empty frame. Returns
-    * the committed version, or the CURRENT version unchanged when
-    * nothing matches (no empty commit).
-    *
-    * `writeChangeData = true` persists the deleted rows as the
-    * commit's CDC (`_change_type = "delete"`), making [[changes]]
-    * exact; without it the synthesis reports the rewritten
-    * directories' survivors as delete+insert pairs too.
-    */
   /** Resolve scanned FILE paths back to the MANIFEST names of their
     * parent directories. The last path segment is NOT always the
     * manifest key: a shallow clone references foreign directories by
@@ -3418,400 +3293,112 @@ class VersionedTable(spark: SparkSession, dir: String,
       .sorted
   }
 
+  /** Delta-style DELETE — row deletion in ONE atomic commit. SQL DELETE
+    * null semantics: rows where `condition` is NULL are KEPT (only
+    * provably-true rows are deleted). Only the directories that hold
+    * matching rows are touched ([[mutateWhere]]'s discovery), so write
+    * amplification is bounded by where the condition's rows live, not
+    * the table size (after an [[optimize]] clustered on the predicate
+    * column, that's the matching chunks exactly). Copy-on-write
+    * rewrites them without the matches; `useDeletionVectors` hides the
+    * matches behind a sidecar instead ([[commitMutation]]). Returns the
+    * committed version, or the CURRENT version unchanged when nothing
+    * matches (no empty commit).
+    *
+    * `writeChangeData = true` persists the deleted rows as the
+    * commit's CDC (`_change_type = "delete"`), making [[changes]]
+    * exact; without it the synthesis reports the rewritten
+    * directories' survivors as delete+insert pairs too (a DV commit
+    * always persists its CDC).
+    */
   def delete(condition: org.apache.spark.sql.Column,
              writeChangeData: Boolean = false, maxRetries: Int = 5,
+             useDeletionVectors: Boolean = false): Int =
+    mutateWhere("delete", condition, Map.empty, writeChangeData, maxRetries,
+      useDeletionVectors)
+
+  /** Delta-style UPDATE — row update in ONE atomic commit: each assigned
+    * column is replaced by its new expression on the matching rows
+    * (CAST to the column's type — the table schema never drifts), every
+    * other row carried through byte-equal. SQL UPDATE null semantics:
+    * rows where `condition` is NULL are NOT updated. Same discovery,
+    * commit shapes and conflict rules as [[delete]]; new values are
+    * validated against the table's CHECK constraints in the same job
+    * that indexes the payload ([[writePayload]]). `writeChangeData =
+    * true` persists the exact CDC (`update_preimage`/
+    * `update_postimage`). Returns the committed version, or the
+    * CURRENT version unchanged when nothing matches.
+    */
+  def update(condition: org.apache.spark.sql.Column,
+             assignments: Map[String, org.apache.spark.sql.Column],
+             writeChangeData: Boolean = false, maxRetries: Int = 5,
              useDeletionVectors: Boolean = false): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    require(assignments.nonEmpty, "update needs at least one SET assignment")
+    mutateWhere("update", condition, assignments, writeChangeData, maxRetries,
+      useDeletionVectors)
+  }
+
+  /** The source-less front end of [[commitMutation]]: `condition` maps
+    * each row to the action — deleted when `assignments` is empty,
+    * updated otherwise. Discovery is stats-bounded
+    * ([[discoveryCandidates]]), then ONE scan over the candidates
+    * yields a metadata-sized result (distinct FILE names → their
+    * parent directories); only those are touched. The table schema is
+    * the LOG-recorded one: a condition or assignment on an evolved
+    * column works before any file holds it, and a dropped column stays
+    * invisible. A concurrent winner's added directories conflict iff
+    * they hold any row the condition matches — checked EXACTLY by
+    * scanning just those directories, not by stats: an arbitrary
+    * Column has no stat-domain form.
+    */
+  private def mutateWhere(op: String, condition: org.apache.spark.sql.Column,
+                          assignments: Map[String, org.apache.spark.sql.Column],
+                          writeChangeData: Boolean, maxRetries: Int,
+                          useDeletionVectors: Boolean): Int = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
     val latest = latestVersion
     require(latest >= 0, s"$dir has no committed versions")
-    val active = snapshotAt(latest).active
-    if (active.isEmpty) return latest // created-but-never-written: no-op
-    // Log-recorded schema, like [[update]]: a condition on an evolved
-    // column works before any file holds it, dropped columns stay
-    // invisible to both the condition and the rewritten payload.
-    val tblSchema = tableSchemaAt(latest)
-    // Which directories hold matching rows? The candidate set is first
-    // bounded by the manifest stats ([[discoveryCandidates]] — a
-    // stat-expressible predicate scans only the directories whose
-    // recorded ranges can intersect it, not the table), then ONE scan
-    // over the candidates yields a metadata-sized result (distinct FILE
-    // names → their parent directories).
-    val candidates = discoveryCandidates(condition, tblSchema, active, latest)
+    val snap = snapshotAt(latest)
+    if (snap.active.isEmpty) return latest // created-but-never-written: no-op
+    val schema = tableSchemaAt(latest)
+    assignments.keys.foreach(k => require(schema.fieldNames.contains(k),
+      s"update SET column `$k` is not in the table schema " +
+        s"(${schema.fieldNames.mkString(", ")})"))
+    val hit = coalesce(condition, lit(false))
+    val candidates = discoveryCandidates(condition, schema, snap.active, latest)
     if (candidates.isEmpty) return latest // provably nothing matches
-    val dvState = snapshotAt(latest).dvs
-    val snap = readDirsFoldedTagged(Some(tblSchema), candidates, dvState,
-      "__graft_file")
+    def scan(dirs: Seq[String], withPos: Boolean): DataFrame =
+      readDirsFolded(Some(schema), dirs, snap.dvs, tag = Some("__graft_file"),
+        posTag = if (withPos) Some("__graft_pos") else None)
     val touched = touchedManifestNames(
-      snap.filter(condition).select(col("__graft_file")).distinct()
-        .collect().map(_.getString(0)).toSeq, candidates)
+      scan(candidates, withPos = false).filter(hit).select(col("__graft_file"))
+        .distinct().collect().map(_.getString(0)).toSeq, candidates)
     if (touched.isEmpty) return latest
-    if (useDeletionVectors)
-      deleteViaDv(condition, latest, tblSchema, dvState, touched,
-        maxRetries) match {
-        case Some(v) => return v
-        case None => () // matched fraction too large: rewrite pays off
+    val matched = scan(touched, withPos = true).filter(hit)
+    // the updated image of a row; `guarded` keeps non-matching rows as
+    // they are (the copy-on-write rewrite reads every touched row)
+    def assigned(guarded: Boolean): Seq[org.apache.spark.sql.Column] =
+      schema.fields.toSeq.map { f =>
+        assignments.get(f.name).fold(col(f.name)) { a =>
+          val v = a.cast(f.dataType)
+          if (guarded) when(hit, v).otherwise(col(f.name)) else v
+        }.as(f.name)
       }
-    val keep = not(coalesce(condition, lit(false)))
-    val v = latest + 1
-    val survivors = readDirsFolded(Some(tblSchema), touched, dvState).filter(keep)
-    val (name, rows, st) = writePayload(survivors, v,
-      l2p = renameMap(tblSchema))
-    val (added, addedStats) =
-      if (rows == 0L && touched.size < active.size) {
-        // every row of every touched dir matched; other dirs remain
-        fs.delete(new Path(root, name), true)
-        (Seq.empty[String], Map.empty[String, Map[String, ColStat]])
-      } else if (rows == 0L) {
-        // the delete empties the TABLE: keep the 0-row directory as the
-        // schema holder so read()/merge() keep working (an empty table
-        // must read as an empty frame, not throw)
-        (Seq(name), Map.empty[String, Map[String, ColStat]])
-      } else (Seq(name), Map(name -> st))
-    val cdfName =
-      if (!writeChangeData) None
-      else {
-        val n = f"cdf-v$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-        toPhysicalDf(readDirsFolded(Some(tblSchema), touched, dvState)
-          .filter(coalesce(condition, lit(false)))
-          .withColumn("_change_type", lit("delete")), renameMap(tblSchema))
-          .write.parquet(new Path(root, n).toString)
-        Some(n)
-      }
-    // A concurrent winner's added directories conflict iff they hold
-    // any row the condition matches — checked EXACTLY by scanning just
-    // those directories (bounded by the winner's own commit size), not
-    // by stats: an arbitrary Column has no stat-domain form.
-    val addedMayMatch: Commit => Seq[String] = c =>
-      if (c.added.isEmpty) Seq.empty
-      else if (!readDirsAs(tblSchema, c.added)
-        .filter(coalesce(condition, lit(false))).isEmpty) c.added
-      else Seq.empty
-    // No constraint revalidation on retry: the survivors are a subset
-    // of rows a concurrently added constraint already validated (its
-    // own table scan saw the pre-delete snapshot, which contains them).
-    publishMutationRetrying("delete", latest, maxRetries, touched,
-      revalidate = Seq.empty, addedMayMatch,
-      mkCommit = vv => Commit(vv, "delete", added, touched, rows,
-        System.currentTimeMillis(), addedStats = addedStats, cdf = cdfName,
-        addedRows = added.map(_ -> rows).toMap),
-      validated0 = Map.empty)
-  }
-
-  /** MERGE-ON-READ update (Delta's DV-based UPDATE): ONE commit hides
-    * the matched rows behind a DV sidecar AND appends a directory
-    * holding their updated images — no touched directory is rewritten,
-    * so a selective UPDATE costs the matched rows twice (the sidecar
-    * and the new images) instead of the touched directories once;
-    * the win is exactly Delta's: wherever matches are a small fraction
-    * of the directories they live in. The appended images validate
-    * against CHECK constraints like any payload, carry fresh stats
-    * (so pruning serves them), and the exact CDC
-    * (update_preimage/postimage) is always persisted — the change feed
-    * has no synthesis for a DV commit. OPTIMIZE compacts the sidecar
-    * debt away; readers fold it like any DV.
-    */
-  private def updateViaDv(condition: org.apache.spark.sql.Column,
-                          assignments: Map[String, org.apache.spark.sql.Column],
-                          latest: Int,
-                          schema: org.apache.spark.sql.types.StructType,
-                          dvState: Map[String, Seq[String]],
-                          touched: Seq[String],
-                          constraints: Map[String, String],
-                          maxRetries: Int): Option[Int] = {
-    import org.apache.spark.sql.functions.{coalesce, col, element_at, lit, split}
-    val hit = coalesce(condition, lit(false))
-    val v0 = latest + 1
-    val matched = readDirsFoldedTagged(Some(schema), touched, dvState,
-      "__graft_file", Some("__graft_pos")).filter(hit)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dirOf = element_at(split(col("__graft_file"), "/"), -2)
-      // sidecar + exact CDC written optimistically in ONE job: the
-      // bitmap emission rides the CDC write's pre-image branch
-      // ([[GraftDvBitmap.fuseWrite]] — see [[deleteViaDv]]) and the
-      // per-dir counts ride its accumulator; the DV-vs-rewrite policy
-      // is checked after (a refused sidecar+CDC pair is deleted)
-      val dvName = f"dv-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-      val cdfName = f"cdf-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-      // the updated images: every assigned column replaced, CAST to the
-      // physical type (the schema never drifts) — same projection as
-      // the copy-on-write path, applied to the matches only
-      val updatedCols = schema.fields.map { f =>
-        assignments.get(f.name) match {
-          case Some(e) => e.cast(f.dataType).as(f.name)
-          case None => col(f.name)
-        }
-      }.toIndexedSeq
-      val pre = matched.drop("__graft_file", "__graft_pos")
-      val images = pre.select(updatedCols: _*)
-      val withDv = matched
-        .withColumn("__graft_dv_dir", dirOf)
-        .withColumn("__graft_dv_file",
-          element_at(split(col("__graft_file"), "/"), -1))
-        .withColumnRenamed("__graft_pos", "__graft_dv_pos")
-        .drop("__graft_file")
-      val (fusedPre, perDirOf) = GraftDvBitmap.fuseWrite(spark, root, dvName, withDv)
-      try toPhysicalDf(fusedPre
-          .drop("__graft_dv_dir", "__graft_dv_file", "__graft_dv_pos")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(images.withColumn("_change_type", lit("update_postimage"))),
-          renameMap(schema))
-        .write.parquet(new Path(root, cdfName).toString)
-      catch { case t: Throwable =>
-        fs.delete(new Path(root, dvName), true)
-        fs.delete(new Path(root, cdfName), true)
-        throw t
-      }
-      val perDir = perDirOf()
-      if (perDir.isEmpty) { // raced to nothing: no commit
-        fs.delete(new Path(root, dvName), true)
-        fs.delete(new Path(root, cdfName), true)
-        return Some(latest)
-      }
-      if (!dvFractionOk(perDir, latest)) { // rewrite instead
-        fs.delete(new Path(root, dvName), true)
-        fs.delete(new Path(root, cdfName), true)
-        return None
-      }
-      // images are a PAYLOAD: constraint-validated in their stats job;
-      // an abort must reclaim the already-written sidecar and CDC too
-      // (a violation is a NORMAL outcome, not a crash for vacuum)
-      val (name, rows, st) =
-        try writePayload(images, v0, constraints, renameMap(schema))
-        catch { case t: Throwable =>
-          fs.delete(new Path(root, dvName), true)
-          fs.delete(new Path(root, cdfName), true)
-          throw t
-        }
-      val addedMayMatch: Commit => Seq[String] = c =>
-        if (c.added.isEmpty) Seq.empty
-        else if (!readDirsAs(schema, c.added).filter(hit).isEmpty) c.added
-        else Seq.empty
-      Some(publishMutationRetrying("update-dv", latest, maxRetries, touched,
-        revalidate = Seq(name), addedMayMatch,
-        mkCommit = vv => Commit(vv, "update-dv", Seq(name), Seq.empty, rows,
-          System.currentTimeMillis(), addedStats = Map(name -> st),
-          cdf = Some(cdfName), addedRows = Map(name -> rows),
-          dvAdd = Some(dvName), dvDirs = perDir.keys.toSeq.sorted,
-          dvDirRows = perDir),
-        validated0 = constraints))
-    } finally matched.unpersist()
-  }
-
-  /** MERGE-ON-READ upsert (the DV commit shape applied to MERGE — the
-    * reference's whole append+dedup ingestion pattern, and Delta's
-    * headline DV use case): ONE commit hides the MATCHED target rows
-    * behind a DV sidecar and appends a directory holding every source
-    * row (updated images AND inserts) — no touched directory is
-    * rewritten, so an upsert-heavy pipeline pays the matched rows
-    * twice instead of every touched directory once. Directories whose
-    * key span admitted them but held no actual match are left entirely
-    * alone (the CoW path rewrites them; the DV path provably cannot
-    * change them). The appended payload validates against CHECK
-    * constraints and carries fresh stats; the exact CDC
-    * (update_preimage / update_postimage / insert) is ALWAYS persisted
-    * — the change feed has no synthesis for a DV commit. The same
-    * cumulative-fraction policy as delete/update decides DV vs
-    * rewrite; `None` = caller falls back to copy-on-write.
-    */
-  private def mergeViaDv(srcAligned0: DataFrame, srcKeys: DataFrame,
-                         keys: Seq[String], latest: Int,
-                         schema: org.apache.spark.sql.types.StructType,
-                         mergeL2p: Map[String, String],
-                         dvState: Map[String, Seq[String]],
-                         constraints: Map[String, String],
-                         touched: Seq[String],
-                         addedMayMatch: Commit => Seq[String],
-                         maxRetries: Int): Option[Int] = {
-    // The source is evaluated THREE times on this path (the appended
-    // payload, the CDC post-images semi-join, the CDC inserts
-    // anti-join) — cache it, or an expensive source pipeline costs the
-    // whole merge 3× and the merge-on-read saving evaporates. Both
-    // persists release in finally even when CONSTRUCTION throws (a
-    // leaked cache entry pins the plan for the session).
-    val srcAligned = srcAligned0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try mergeViaDvBody(srcAligned, srcKeys, keys, latest, schema, mergeL2p,
-      dvState, constraints, touched, addedMayMatch, maxRetries)
-    finally srcAligned.unpersist()
-  }
-
-  private def mergeViaDvBody(srcAligned: DataFrame, srcKeys: DataFrame,
-                             keys: Seq[String], latest: Int,
-                             schema: org.apache.spark.sql.types.StructType,
-                             mergeL2p: Map[String, String],
-                             dvState: Map[String, Seq[String]],
-                             constraints: Map[String, String],
-                             touched: Seq[String],
-                             addedMayMatch: Commit => Seq[String],
-                             maxRetries: Int): Option[Int] = {
-    import org.apache.spark.sql.functions.{col, element_at, lit, split}
-    val v0 = latest + 1
-    // the matched target rows WITH file identity (existing DVs folded —
-    // a row an earlier delete hid must not be re-hidden or double-
-    // counted); the imposed schema pads evolved-away columns with null
-    val matched = readDirsFoldedTagged(Some(schema), touched, dvState,
-      "__graft_file", Some("__graft_pos"))
-      .join(srcKeys, keys, "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dirOf = element_at(split(col("__graft_file"), "/"), -2)
-      // sidecar + exact CDC written optimistically in ONE job: the
-      // bitmap emission rides the CDC write's pre-image branch
-      // ([[GraftDvBitmap.fuseWrite]] — one pass over the matches, see
-      // [[deleteViaDv]]); a match-free merge is a pure insert into the
-      // touched span and carries no DV, a policy refusal drops the
-      // sidecar+CDC and falls back to copy-on-write
-      val dvTry = f"dv-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-      val cdfName = f"cdf-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-      val pre = matched.drop("__graft_file", "__graft_pos")
-      val tgtKeys = pre.select(keys.map(col).toIndexedSeq: _*)
-      val withDv = matched
-        .withColumn("__graft_dv_dir", dirOf)
-        .withColumn("__graft_dv_file",
-          element_at(split(col("__graft_file"), "/"), -1))
-        .withColumnRenamed("__graft_pos", "__graft_dv_pos")
-        .drop("__graft_file")
-      val (fusedPre, perDirOf) = GraftDvBitmap.fuseWrite(spark, root, dvTry, withDv)
-      try toPhysicalDf(fusedPre
-          .drop("__graft_dv_dir", "__graft_dv_file", "__graft_dv_pos")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(srcAligned.join(tgtKeys, keys, "left_semi")
-            .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(srcAligned.join(tgtKeys, keys, "left_anti")
-            .withColumn("_change_type", lit("insert"))),
-          mergeL2p).write.parquet(new Path(root, cdfName).toString)
-      catch { case t: Throwable =>
-        fs.delete(new Path(root, dvTry), true)
-        fs.delete(new Path(root, cdfName), true)
-        throw t
-      }
-      val perDir = perDirOf()
-      if (perDir.nonEmpty && !dvFractionOk(perDir, latest)) {
-        fs.delete(new Path(root, dvTry), true)
-        fs.delete(new Path(root, cdfName), true)
-        return None
-      }
-      val dvName =
-        if (perDir.isEmpty) { // pure insert into touched span: no DV
-          fs.delete(new Path(root, dvTry), true)
-          None
-        } else Some(dvTry)
-      val (name, rows, st) =
-        try writePayload(srcAligned, v0, constraints, mergeL2p)
-        catch { case t: Throwable =>
-          dvName.foreach(n => fs.delete(new Path(root, n), true))
-          fs.delete(new Path(root, cdfName), true)
-          throw t
-        }
-      if (rows == 0L && perDir.isEmpty) {
-        // empty source touching nothing: a no-op, not an empty commit
-        fs.delete(new Path(root, name), true)
-        fs.delete(new Path(root, cdfName), true)
-        return Some(latest)
-      }
-      Some(publishMutationRetrying("merge-dv", latest, maxRetries, touched,
-        revalidate = Seq(name), addedMayMatch,
-        mkCommit = vv => Commit(vv, "merge-dv", Seq(name), Seq.empty, rows,
-          System.currentTimeMillis(), addedStats = Map(name -> st),
-          cdf = Some(cdfName), addedRows = Map(name -> rows),
-          dvAdd = dvName, dvDirs = perDir.keys.toSeq.sorted,
-          dvDirRows = perDir),
-        validated0 = constraints))
-      // srcAligned is released by mergeViaDv's own finally — exactly
-      // one owner, even on the success path
-    } finally matched.unpersist()
-  }
-
-  /** MERGE-ON-READ delete (Delta's deletion vectors): instead of
-    * rewriting the touched directories, commit a DV SIDECAR — the
-    * (directory, file, row-index) triples of the matched rows — and
-    * let every reader anti-join them away ([[readDirsFolded]]). Every
-    * data file stays byte-identical, so a selective DELETE on a 100 TB
-    * table costs the matched rows' scan and a deleted-rows-sized write
-    * instead of rewriting whole directories; OPTIMIZE later compacts
-    * the read-side debt away (its rewrite folds the DVs and the
-    * rewritten directories' DV entries die with them). The deleted
-    * rows are ALWAYS persisted as the commit's exact CDC — the change
-    * feed has no add/remove synthesis to fall back on here, and the
-    * CDC write is the same deleted-rows size as the DV itself.
-    * Metadata answers stay honest: COUNT(*) subtracts the recorded
-    * per-directory DV row counts (still exact, still scan-free);
-    * MIN/MAX/COUNT(col) decline (a deleted row may have held the
-    * bound). Conflict rules ride [[publishMutationRetrying]] with the
-    * same exact-scan added-data test as the copy-on-write path.
-    */
-  private def deleteViaDv(condition: org.apache.spark.sql.Column,
-                          latest: Int,
-                          tblSchema: org.apache.spark.sql.types.StructType,
-                          dvState: Map[String, Seq[String]],
-                          touched: Seq[String], maxRetries: Int)
-      : Option[Int] = {
-    import org.apache.spark.sql.functions.{coalesce, col, element_at, lit, split}
-    val hit = coalesce(condition, lit(false))
-    val v0 = latest + 1
-    // NOT persisted: the fused sidecar+CDC job below is the matches'
-    // only consumer, so a cache materialization pass would be pure
-    // overhead — the scan feeds the one shuffle directly (guide §5).
-    val matched = readDirsFoldedTagged(Some(tblSchema), touched, dvState,
-      "__graft_file", Some("__graft_pos")).filter(hit)
-    val dirOf = element_at(split(col("__graft_file"), "/"), -2)
-    // The sidecar AND the exact CDC are written OPTIMISTICALLY in ONE
-    // job: the bitmap emission rides the CDC payload write as a
-    // pass-through above the (dir, file) shuffle
-    // ([[GraftDvBitmap.fuseWrite]]) and the per-directory counts ride
-    // the same job's accumulator — one pass over the matches instead
-    // of a bitmap job plus a second read of the persisted matches
-    // (guide §1.2/§6). The POLICY still gates the commit: when the
-    // matches dominate the touched directories, accumulating a
-    // rows-sized sidecar every reader must anti-join forever is
-    // strictly worse than the rewrite — drop the just-written sidecar
-    // and CDC and fall back to copy-on-write (Delta tunes the same
-    // trade; the sidecar is for SELECTIVE deletes). The wasted write
-    // on that path is deleted-rows-sized, paid only when a full
-    // directory rewrite follows anyway.
-    val dvName = f"dv-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-    val cdfName = f"cdf-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-    val withDv = matched
-      .withColumn("__graft_dv_dir", dirOf)
-      .withColumn("__graft_dv_file",
-        element_at(split(col("__graft_file"), "/"), -1))
-      .withColumnRenamed("__graft_pos", "__graft_dv_pos")
-      .drop("__graft_file")
-    val (fusedPre, perDirOf) = GraftDvBitmap.fuseWrite(spark, root, dvName, withDv)
-    try toPhysicalDf(fusedPre
-        .drop("__graft_dv_dir", "__graft_dv_file", "__graft_dv_pos")
-        .withColumn("_change_type", lit("delete")), renameMap(tblSchema))
-      .write.parquet(new Path(root, cdfName).toString)
-    catch { case t: Throwable =>
-      fs.delete(new Path(root, dvName), true)
-      fs.delete(new Path(root, cdfName), true)
-      throw t
-    }
-    val perDir = perDirOf()
-    if (perDir.isEmpty) { // raced to nothing: no commit
-      fs.delete(new Path(root, dvName), true)
-      fs.delete(new Path(root, cdfName), true)
-      return Some(latest)
-    }
-    if (!dvFractionOk(perDir, latest)) { // rewrite instead
-      fs.delete(new Path(root, dvName), true)
-      fs.delete(new Path(root, cdfName), true)
-      return None
-    }
-    // A concurrent winner's added data conflicts iff the condition
-    // matches any of it — exact scan, same rule as copy-on-write.
-    val addedMayMatch: Commit => Seq[String] = c =>
-      if (c.added.isEmpty) Seq.empty
-      else if (!readDirsAs(tblSchema, c.added).filter(hit).isEmpty) c.added
-      else Seq.empty
-    Some(publishMutationRetrying("delete-dv", latest, maxRetries, touched,
-      revalidate = Seq.empty, addedMayMatch,
-      mkCommit = vv => Commit(vv, "delete-dv", Seq.empty, Seq.empty, 0L,
-        System.currentTimeMillis(), cdf = Some(cdfName),
-        dvAdd = Some(dvName), dvDirs = perDir.keys.toSeq.sorted,
-        dvDirRows = perDir),
-      validated0 = Map.empty))
+    commitMutation(op, latest, touched, schema,
+      pre = Some(matched.withColumn("_change_type",
+        lit(if (assignments.isEmpty) "delete" else "update_preimage"))),
+      post = if (assignments.isEmpty) None else Some(matched.select(assigned(guarded = false): _*)),
+      inserts = None,
+      rewrite = () => {
+        val rows = readDirsFolded(Some(schema), touched, snap.dvs)
+        if (assignments.isEmpty) rows.filter(not(hit))
+        else rows.select(assigned(guarded = true): _*)
+      },
+      addedMayMatch = c =>
+        if (c.added.nonEmpty && !readDirsAs(schema, c.added).filter(hit).isEmpty) c.added
+        else Nil,
+      constraints = snap.constraints, writeChangeData = writeChangeData,
+      useDeletionVectors = useDeletionVectors, maxRetries = maxRetries)
   }
 
   /** The DV-vs-rewrite policy: a DV commits only while every touched
@@ -3833,111 +3420,6 @@ class VersionedTable(spark: SparkSession, dir: String,
         case _ => false // unknown size: rewrite, never an unbounded sidecar
       }
     }
-  }
-
-  /** Delta-style UPDATE — copy-on-write row update in ONE atomic
-    * commit, the third row-level mutation next to [[merge]] and
-    * [[delete]]. One snapshot scan (tagged with `input_file_name`)
-    * finds the directories actually holding matching rows; ONLY those
-    * are rewritten, with each assigned column replaced by its new
-    * expression on the matching rows (CAST to the column's physical
-    * type — the table schema never drifts) and every other row carried
-    * through byte-equal. SQL UPDATE null semantics: rows where
-    * `condition` is NULL are NOT updated. Write amplification is
-    * bounded by where the condition's rows live, exactly like
-    * [[delete]] — after an [[optimize]] clustered on the predicate
-    * column, that's the matching chunks only. New values are validated
-    * against the table's CHECK constraints in the same stats job that
-    * indexes the rewrite ([[writePayload]]). Returns the committed
-    * version, or the CURRENT version unchanged when nothing matches.
-    *
-    * Conflict semantics ride [[publishMutationRetrying]]: a concurrent
-    * append of rows that cannot match the condition retries through; a
-    * winner that rewrote this update's inputs, or added data the
-    * condition may match (checked EXACTLY by scanning just the winner's
-    * added directories — an arbitrary Column has no stat form), fails
-    * loudly. `writeChangeData = true` persists the exact row-level CDC
-    * (`update_preimage`/`update_postimage`), making [[changes]] serve
-    * this commit precisely instead of the coarse delete+insert
-    * synthesis.
-    */
-  def update(condition: org.apache.spark.sql.Column,
-             assignments: Map[String, org.apache.spark.sql.Column],
-             writeChangeData: Boolean = false, maxRetries: Int = 5,
-             useDeletionVectors: Boolean = false): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    require(assignments.nonEmpty, "update needs at least one SET assignment")
-    val latest = latestVersion
-    require(latest >= 0, s"$dir has no committed versions")
-    val snapState = snapshotAt(latest)
-    val active = snapState.active
-    if (active.isEmpty) return latest // created-but-never-written: no-op
-    // The LOG-RECORDED table schema, not a physical mergeSchema read:
-    // a metadata-only evolved column must be assignable even before any
-    // file holds it, a dropped column must stay invisible, and touched
-    // directories missing an evolved column must read it as null.
-    val schema = tableSchemaAt(latest)
-    assignments.keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"update SET column `$k` is not in the table schema " +
-        s"(${schema.fieldNames.mkString(", ")})"))
-    val hit = coalesce(condition, lit(false))
-    // Which directories hold matching rows? Stats-bounded candidates,
-    // then one scan — same discovery as [[delete]].
-    val candidates = discoveryCandidates(condition, schema, active, latest)
-    if (candidates.isEmpty) return latest // provably nothing matches
-    val dvState = snapState.dvs
-    val snap = readDirsFoldedTagged(Some(schema), candidates, dvState,
-      "__graft_file")
-    val touched = touchedManifestNames(
-      snap.filter(hit).select(col("__graft_file")).distinct()
-        .collect().map(_.getString(0)).toSeq, candidates)
-    if (touched.isEmpty) return latest
-    if (useDeletionVectors)
-      updateViaDv(condition, assignments, latest, schema, dvState,
-        touched, snapState.constraints, maxRetries) match {
-        case Some(v) => return v
-        case None => () // matched fraction too large: rewrite pays off
-      }
-    val v = latest + 1
-    val updatedCols = schema.fields.map { f =>
-      assignments.get(f.name) match {
-        case Some(e) =>
-          when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }.toIndexedSeq
-    val rewritten =
-      readDirsFolded(Some(schema), touched, dvState).select(updatedCols: _*)
-    // New values validate against the CURRENT constraints inside the
-    // stats job; a violation aborts before anything publishes.
-    val (name, rows, st) = writePayload(rewritten, v, snapState.constraints,
-      renameMap(schema))
-    val cdfName =
-      if (!writeChangeData) None
-      else {
-        val n = f"cdf-v$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-        val matched = readDirsFolded(Some(schema), touched, dvState).filter(hit)
-        toPhysicalDf(matched.withColumn("_change_type", lit("update_preimage"))
-          .unionByName(matched.select(updatedCols: _*)
-            .withColumn("_change_type", lit("update_postimage"))),
-          renameMap(schema))
-          .write.parquet(new Path(root, n).toString)
-        Some(n)
-      }
-    // A concurrent winner's added directories conflict iff they hold
-    // any row the condition matches — exact scan, same rule as delete.
-    val addedMayMatch: Commit => Seq[String] = c =>
-      if (c.added.isEmpty) Seq.empty
-      else if (!readDirsAs(schema, c.added).filter(hit).isEmpty) c.added
-      else Seq.empty
-    // The payload carries NEW values a concurrently added constraint
-    // never saw — revalidate it on retry, same as merge.
-    publishMutationRetrying("update", latest, maxRetries, touched,
-      revalidate = Seq(name), addedMayMatch,
-      mkCommit = vv => Commit(vv, "update", Seq(name), touched, rows,
-        System.currentTimeMillis(), addedStats = Map(name -> st),
-        cdf = cdfName, addedRows = Map(name -> rows)),
-      validated0 = snapState.constraints)
   }
 
   /** Per-directory recorded row counts of a version's snapshot (the

@@ -192,6 +192,17 @@ class MergeClausesSpec extends SparkSuite {
         Seq("k"), matchedClauses, notMatchedClauses)
     }
     assert(multi.getMessage.contains("more than one"))
+    // upsert merge shares the refusal, in both commit shapes: it once
+    // wrote both source rows for key 1
+    val before = vt.latestVersion
+    Seq(false, true).foreach { dv =>
+      val upsertMulti = intercept[Exception] {
+        vt.merge(Seq((1L, 1.0, "a"), (1L, 2.0, "b")).toDF("k", "v", "cat"),
+          Seq("k"), useDeletionVectors = dv)
+      }
+      assert(upsertMulti.getMessage.contains("more than one"), s"dv=$dv")
+    }
+    assert(vt.latestVersion === before)
     // alias colliding with a key column is rejected, not mis-resolved
     val collide = intercept[Exception] {
       vt.mergeClauses(srcRows.toDF("k", "v", "cat"), Seq("k"),
