@@ -2520,10 +2520,16 @@ class VersionedTable(spark: SparkSession, dir: String,
     // payload and change-data images, and the copy-on-write carried
     // recompute all read this projection — an unpersisted source would
     // re-run an arbitrary pipeline for each, and a non-deterministic
-    // one could diverge between them.
-    val src = source.select((keys.map(col) :+
+    // one could diverge between them. A deterministic source that
+    // optimizes to rows the driver already holds (a local relation)
+    // re-reads for free, and caching it costs more than the re-reads.
+    val local = source.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] &&
+      source.queryExecution.analyzed.find(_.expressions.exists(!_.deterministic)).isEmpty
+    val src0 = source.select((keys.map(col) :+
       struct(source.columns.toIndexedSeq.map(col): _*).as(sourceAlias)): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val src =
+      if (local) src0 else src0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     // NOT MATCHED BY SOURCE claims rows no key span can bound: every
     // active directory is read and every concurrent add conflicts.
@@ -2551,9 +2557,10 @@ class VersionedTable(spark: SparkSession, dir: String,
     }
     val addedMayMatch = mergeAddedMayMatch(spanState, mergeL2p)
     val castTo = snapSchema.fields.map(f => f.name -> f.dataType).toMap
-    def scan(withPos: Boolean): DataFrame = readDirsFolded(Some(snapSchema),
-      touched, snapState.dvs, tag = Some("__graft_file"),
-      posTag = if (withPos) Some("__graft_pos") else None)
+    // the touched rows with their file identity: one relation (one file
+    // listing) every target-side frame below derives from
+    lazy val tgtRows = readDirsFolded(Some(snapSchema), touched, snapState.dvs,
+      tag = Some("__graft_file"), posTag = Some("__graft_pos"))
     val insertOnly = matched.isEmpty && notMatchedBySource.isEmpty
     // A target row matched by MORE than one source row fails loudly (its
     // update/delete/carry outcome would be nondeterministic). Only a
@@ -2563,7 +2570,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     if (!insertOnly && touched.nonEmpty && srcHasDupKeys) {
       val dupKeys = src.groupBy(keys.map(col): _*).count()
         .filter(col("count") > 1).select(keys.map(col): _*)
-      require(scan(withPos = false).join(dupKeys, keys, "left_semi").isEmpty,
+      require(tgtRows.join(dupKeys, keys, "left_semi").isEmpty,
         "MERGE found a target row matched by more than one source row — " +
           "the update/delete/carry outcome would be nondeterministic; " +
           "dedupe the source on the merge keys first")
@@ -2589,13 +2596,13 @@ class VersionedTable(spark: SparkSession, dir: String,
       val rows = src.select(snapCols.map(c => sCol.getField(c).cast(castTo(c)).as(c)): _*)
       if (touched.isEmpty) return commit(None, None, Some(rows), () => rows)
       val srcKeys = src.select(keys.map(col): _*)
-      val tgtKeys = scan(withPos = false).select(keys.map(col): _*)
+      val tgtKeys = tgtRows.select(keys.map(col): _*)
       return commit(
-        pre = Some(scan(withPos = true).join(srcKeys, keys, "left_semi")
+        pre = Some(tgtRows.join(srcKeys, keys, "left_semi")
           .withColumn("_change_type", lit("update_preimage"))),
         post = Some(rows.join(tgtKeys, keys, "left_semi")),
         inserts = Some(rows.join(tgtKeys, keys, "left_anti")),
-        rewrite = () => scan(withPos = false).drop("__graft_file")
+        rewrite = () => tgtRows.drop("__graft_file", "__graft_pos")
           .join(srcKeys, keys, "left_anti").unionByName(rows),
         dvPayload = Some(rows))
     }
@@ -2628,12 +2635,12 @@ class VersionedTable(spark: SparkSession, dir: String,
         // a NOT MATCHED row; a typed null struct keeps one code path
         nullTagged(src)
       } else {
-        lazy val tgt = scan(withPos = true)
+        lazy val tgt = tgtRows
           .select((keys.map(col) :+ col("__graft_file") :+
             col("__graft_pos") :+
             struct(snapCols.map(col): _*).as(targetAlias)): _*)
         lazy val srcOnly = nullTagged(src.join(
-          scan(withPos = false).select(keys.map(col): _*), keys, "left_anti"))
+          tgtRows.select(keys.map(col): _*), keys, "left_anti"))
         if (insertOnly) srcOnly
         else if (notMatched.isEmpty) tgt.join(src, keys, "left_outer")
         else tgt.join(src, keys, "left_outer").unionByName(srcOnly)
@@ -3314,7 +3321,7 @@ class VersionedTable(spark: SparkSession, dir: String,
   def delete(condition: org.apache.spark.sql.Column,
              writeChangeData: Boolean = false, maxRetries: Int = 5,
              useDeletionVectors: Boolean = false): Int =
-    mutateWhere("delete", condition, Map.empty, writeChangeData, maxRetries,
+    mutateWhere(condition, Map.empty, writeChangeData, maxRetries,
       useDeletionVectors)
 
   /** Delta-style UPDATE — row update in ONE atomic commit: each assigned
@@ -3334,7 +3341,7 @@ class VersionedTable(spark: SparkSession, dir: String,
              writeChangeData: Boolean = false, maxRetries: Int = 5,
              useDeletionVectors: Boolean = false): Int = {
     require(assignments.nonEmpty, "update needs at least one SET assignment")
-    mutateWhere("update", condition, assignments, writeChangeData, maxRetries,
+    mutateWhere(condition, assignments, writeChangeData, maxRetries,
       useDeletionVectors)
   }
 
@@ -3351,7 +3358,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     * scanning just those directories, not by stats: an arbitrary
     * Column has no stat-domain form.
     */
-  private def mutateWhere(op: String, condition: org.apache.spark.sql.Column,
+  private def mutateWhere(condition: org.apache.spark.sql.Column,
                           assignments: Map[String, org.apache.spark.sql.Column],
                           writeChangeData: Boolean, maxRetries: Int,
                           useDeletionVectors: Boolean): Int = {
@@ -3367,14 +3374,15 @@ class VersionedTable(spark: SparkSession, dir: String,
     val hit = coalesce(condition, lit(false))
     val candidates = discoveryCandidates(condition, schema, snap.active, latest)
     if (candidates.isEmpty) return latest // provably nothing matches
-    def scan(dirs: Seq[String], withPos: Boolean): DataFrame =
-      readDirsFolded(Some(schema), dirs, snap.dvs, tag = Some("__graft_file"),
-        posTag = if (withPos) Some("__graft_pos") else None)
+    def scan(dirs: Seq[String]): DataFrame = readDirsFolded(Some(schema), dirs,
+      snap.dvs, tag = Some("__graft_file"), posTag = Some("__graft_pos"))
     val touched = touchedManifestNames(
-      scan(candidates, withPos = false).filter(hit).select(col("__graft_file"))
+      scan(candidates).filter(hit).select(col("__graft_file"))
         .distinct().collect().map(_.getString(0)).toSeq, candidates)
     if (touched.isEmpty) return latest
-    val matched = scan(touched, withPos = true).filter(hit)
+    val isDelete = assignments.isEmpty
+    val rows = scan(touched)
+    val matched = rows.filter(hit)
     // the updated image of a row; `guarded` keeps non-matching rows as
     // they are (the copy-on-write rewrite reads every touched row)
     def assigned(guarded: Boolean): Seq[org.apache.spark.sql.Column] =
@@ -3384,15 +3392,15 @@ class VersionedTable(spark: SparkSession, dir: String,
           if (guarded) when(hit, v).otherwise(col(f.name)) else v
         }.as(f.name)
       }
-    commitMutation(op, latest, touched, schema,
+    commitMutation(if (isDelete) "delete" else "update", latest, touched, schema,
       pre = Some(matched.withColumn("_change_type",
-        lit(if (assignments.isEmpty) "delete" else "update_preimage"))),
-      post = if (assignments.isEmpty) None else Some(matched.select(assigned(guarded = false): _*)),
+        lit(if (isDelete) "delete" else "update_preimage"))),
+      post = if (isDelete) None else Some(matched.select(assigned(guarded = false): _*)),
       inserts = None,
       rewrite = () => {
-        val rows = readDirsFolded(Some(schema), touched, snap.dvs)
-        if (assignments.isEmpty) rows.filter(not(hit))
-        else rows.select(assigned(guarded = true): _*)
+        val untagged = rows.drop("__graft_file", "__graft_pos")
+        if (isDelete) untagged.filter(not(hit))
+        else untagged.select(assigned(guarded = true): _*)
       },
       addedMayMatch = c =>
         if (c.added.nonEmpty && !readDirsAs(schema, c.added).filter(hit).isEmpty) c.added
