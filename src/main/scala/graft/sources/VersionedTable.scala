@@ -3382,7 +3382,13 @@ class VersionedTable(spark: SparkSession, dir: String,
     if (touched.isEmpty) return latest
     val isDelete = assignments.isEmpty
     val rows = scan(touched)
-    val matched = rows.filter(hit)
+    // A DV update reads its matches three times (sidecar, change data,
+    // appended images), and every read of a directory that already
+    // carries a sidecar re-runs the hidden-row join: cache them once.
+    val matched =
+      if (isDelete || !useDeletionVectors || !touched.exists(snap.dvs.contains))
+        rows.filter(hit)
+      else rows.filter(hit).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the updated image of a row; `guarded` keeps non-matching rows as
     // they are (the copy-on-write rewrite reads every touched row)
     def assigned(guarded: Boolean): Seq[org.apache.spark.sql.Column] =
@@ -3392,7 +3398,7 @@ class VersionedTable(spark: SparkSession, dir: String,
           if (guarded) when(hit, v).otherwise(col(f.name)) else v
         }.as(f.name)
       }
-    commitMutation(if (isDelete) "delete" else "update", latest, touched, schema,
+    try commitMutation(if (isDelete) "delete" else "update", latest, touched, schema,
       pre = Some(matched.withColumn("_change_type",
         lit(if (isDelete) "delete" else "update_preimage"))),
       post = if (isDelete) None else Some(matched.select(assigned(guarded = false): _*)),
@@ -3407,6 +3413,7 @@ class VersionedTable(spark: SparkSession, dir: String,
         else Nil,
       constraints = snap.constraints, writeChangeData = writeChangeData,
       useDeletionVectors = useDeletionVectors, maxRetries = maxRetries)
+    finally matched.unpersist()
   }
 
   /** The DV-vs-rewrite policy: a DV commits only while every touched

@@ -7,7 +7,9 @@ import graft.sources.{MergeAction, MergeClause, VersionedTable}
   * Every shape runs against the same 300k-row table laid out in 20
   * range-disjoint directories (base row `i` has the even id `2i`, as in
   * the benchmark's `vt_mixed` table), restored to that base state before
-  * each measurement. Merge sources hold 500 rows inside one
+  * each measurement; the "directory carries DVs" shapes first hide rows
+  * of the touched directory with a DV delete, as a table under a DV
+  * workload does. Merge sources hold 500 rows inside one
   * directory's key range. A budget is the job count the shape ran
   * before the mutation paths were folded into one core; a path that
   * grows an extra pass fails it.
@@ -47,24 +49,40 @@ class MutationJobBudgetSpec extends SparkSuite {
     Seq(MergeClause(None, MergeAction.Update(None))),
     Seq(MergeClause(None, MergeAction.Insert(None))))
 
-  private val shapes: Seq[(String, Boolean => Int)] = Seq(
-    "merge (key matches)" -> (dv =>
-      vt.merge(source(100000L, matching = true), Seq("id"), useDeletionVectors = dv)),
-    "merge (no key match)" -> (dv =>
+  /** A DV delete of every tenth row in [200000, 201000]: the directory
+    * holding that span carries a sidecar when the shape runs, so every
+    * folded read of it anti-joins the hidden rows.
+    */
+  private def priorDv(): Unit =
+    vt.delete(col("id").between(200000L, 201000L) && col("id") % 20 === 6L,
+      useDeletionVectors = true)
+
+  private def merge(dv: Boolean) =
+    vt.merge(source(100000L, matching = true), Seq("id"), useDeletionVectors = dv)
+  private def delete(dv: Boolean) =
+    vt.delete(col("id").between(200000L, 201000L) && col("id") % 20 === 4L,
+      useDeletionVectors = dv)
+  private def update(dv: Boolean) =
+    vt.update(col("id").between(200000L, 201000L),
+      Map("amount" -> (col("amount") + lit(1.0)), "tag" -> lit("u")),
+      useDeletionVectors = dv)
+
+  /** (shape, run [[priorDv]] first, the mutation) */
+  private val shapes: Seq[(String, Boolean, Boolean => Int)] = Seq(
+    ("merge (key matches)", false, merge),
+    ("merge (no key match)", false, dv =>
       vt.merge(source(100000L, matching = false), Seq("id"), useDeletionVectors = dv)),
-    "mergeClauses (benchmark clauses)" -> (dv =>
+    ("mergeClauses (benchmark clauses)", false, dv =>
       vt.mergeClauses(source(100000L, matching = true), Seq("id"),
         benchClauses._1, benchClauses._2, useDeletionVectors = dv)),
-    "mergeClauses (upsert clauses)" -> (dv =>
+    ("mergeClauses (upsert clauses)", false, dv =>
       vt.mergeClauses(source(100000L, matching = true), Seq("id"),
         upsertClauses._1, upsertClauses._2, useDeletionVectors = dv)),
-    "delete" -> (dv =>
-      vt.delete(col("id").between(200000L, 201000L) && col("id") % 20 === 4L,
-        useDeletionVectors = dv)),
-    "update" -> (dv =>
-      vt.update(col("id").between(200000L, 201000L),
-        Map("amount" -> (col("amount") + lit(1.0)), "tag" -> lit("u")),
-        useDeletionVectors = dv)))
+    ("delete", false, delete),
+    ("update", false, update),
+    ("merge (directory carries DVs)", true, merge),
+    ("delete (directory carries DVs)", true, delete),
+    ("update (directory carries DVs)", true, update))
 
   /** (shape, useDeletionVectors) -> jobs the shape ran before the fold,
     * measured in this suite's session.
@@ -77,14 +95,22 @@ class MutationJobBudgetSpec extends SparkSuite {
     ("mergeClauses (upsert clauses)", false) -> 11,
     ("mergeClauses (upsert clauses)", true) -> 12,
     ("delete", false) -> 3, ("delete", true) -> 4,
-    ("update", false) -> 3, ("update", true) -> 7)
+    ("update", false) -> 3, ("update", true) -> 7,
+    ("merge (directory carries DVs)", false) -> 8,
+    ("merge (directory carries DVs)", true) -> 15,
+    ("delete (directory carries DVs)", false) -> 9,
+    ("delete (directory carries DVs)", true) -> 10,
+    ("update (directory carries DVs)", false) -> 9,
+    ("update (directory carries DVs)", true) -> 13)
 
-  for ((name, run) <- shapes; dv <- Seq(false, true)) {
+  for ((name, prior, run) <- shapes; dv <- Seq(false, true)) {
     val mode = if (dv) "dv" else "cow"
     test(s"$name, $mode: at most the pinned job count") {
       vt.restore(baseVersion)
+      if (prior) priorDv()
+      val before = vt.latestVersion
       val (v, jobs) = countingJobs(run(dv))
-      assert(v > baseVersion, s"$name $mode committed nothing")
+      assert(v > before, s"$name $mode committed nothing")
       val op = vt.history().filter(col("version") === v).head.getString(1)
       val b = budget((name, dv))
       assert(jobs <= b, s"$name ($mode, committed as $op) ran $jobs jobs, budget $b")
