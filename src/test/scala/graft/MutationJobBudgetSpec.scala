@@ -85,7 +85,7 @@ class MutationJobBudgetSpec extends SparkSuite {
     ("update (directory carries DVs)", true, update))
 
   /** (shape, useDeletionVectors) -> jobs the shape ran before the fold,
-    * measured in this suite's session.
+    * measured under this suite's SparkSession settings.
     */
   private val budget: Map[(String, Boolean), Int] = Map(
     ("merge (key matches)", false) -> 5, ("merge (key matches)", true) -> 12,
