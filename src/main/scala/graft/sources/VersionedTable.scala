@@ -639,7 +639,8 @@ class VersionedTable(spark: SparkSession, dir: String,
       aggs.head.as("_0"),
       aggs.tail.zipWithIndex.map { case (a, i) => a.as(s"_${i + 1}") }: _*)
     // column mapping: files always spell PHYSICAL names
-    toPhysicalDf(observed, l2p).write.parquet(dataDir.toString)
+    try toPhysicalDf(observed, l2p).write.parquet(dataDir.toString)
+    catch { case t: Throwable => fs.delete(dataDir, true); throw t }
     // The metrics arrive via an ASYNC listener bus: wait with a bound, and
     // if the bus dropped the event (bounded queue under pressure —
     // never observed, but a hung commit would be worse than a second
@@ -2191,19 +2192,13 @@ class VersionedTable(spark: SparkSession, dir: String,
     * fusion (one full source pass per merge removed). Without
     * `needDup` (insert-only merges, the CDC append shape) the span
     * stays the cheap global aggregate: map-side partials to one row,
-    * no keyed shuffle. A source the planner estimates below the
-    * broadcast threshold aggregates in ONE task — no exchange, one job
-    * (the sizes merge sources usually have; a large one keeps the
-    * parallel plan).
+    * no keyed shuffle.
     */
-  private def mergeSpanAndDupState(source0: DataFrame, keys: Seq[String],
+  private def mergeSpanAndDupState(source: DataFrame, keys: Seq[String],
                                    needDup: Boolean)
       : (Option[Option[Seq[(String, Option[Any], Option[Any])]]], Boolean) = {
     import org.apache.spark.sql.functions.{col, count, lit, max => fmax, min => fmin, unix_micros}
     import org.apache.spark.sql.types._
-    val small = source0.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      spark.sessionState.conf.autoBroadcastJoinThreshold
-    val source = if (small) source0.coalesce(1) else source0
     val keyDomain: Seq[(String, Option[org.apache.spark.sql.Column])] =
       keys.map { k =>
         k -> (source.schema(k).dataType match {
@@ -2514,29 +2509,24 @@ class VersionedTable(spark: SparkSession, dir: String,
         SchemaCompat.nullableJson(schemaFromJson(j)) != baseSchemaCanon)
     val tCol = col(targetAlias)
     val sCol = col(sourceAlias)
-    // The source pipeline is evaluated ONCE and cached: the span
-    // aggregate, the duplicate-key gate, the clause join (twice, when
-    // the full-outer decomposition's anti side runs), the upsert's
+    // The span aggregate, the duplicate-key gate, the clause join (twice,
+    // when the full-outer decomposition's anti side runs), the upsert's
     // payload and change-data images, and the copy-on-write carried
-    // recompute all read this projection — an unpersisted source would
-    // re-run an arbitrary pipeline for each, and a non-deterministic
-    // one could diverge between them. A deterministic source that
-    // optimizes to rows the driver already holds (a local relation)
-    // re-reads for free, and caching it costs more than the re-reads.
-    val local = source.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] &&
-      source.queryExecution.analyzed.find(_.expressions.exists(!_.deterministic)).isEmpty
+    // recompute each read this projection in their own job. A source
+    // whose rows can differ between those reads — a non-deterministic
+    // expression, or a current-time one (fixed per query, so per job) —
+    // is cached so every read sees the same rows.
+    val unstable = source.queryExecution.analyzed.exists(_.expressions.exists(e =>
+      !e.deterministic ||
+        e.containsPattern(org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE)))
     val src0 = source.select((keys.map(col) :+
       struct(source.columns.toIndexedSeq.map(col): _*).as(sourceAlias)): _*)
     val src =
-      if (local) src0 else src0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (unstable) src0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else src0
     try {
     // NOT MATCHED BY SOURCE claims rows no key span can bound: every
     // active directory is read and every concurrent add conflicts.
-    // Spans are computed from the PERSISTED projection (keys are
-    // top-level columns there), so this is a cache read, not a
-    // source re-evaluation.
-    // ONE cached-source pass serves BOTH the span state and the
+    // ONE source pass serves BOTH the span state and the
     // duplicate-key gate (the gate's groupBy(keys) was previously its
     // own full source pass per merge); insert-only merges keep the
     // cheap global span aggregate (no keyed shuffle).
@@ -2645,11 +2635,10 @@ class VersionedTable(spark: SparkSession, dir: String,
         else if (notMatched.isEmpty) tgt.join(src, keys, "left_outer")
         else tgt.join(src, keys, "left_outer").unionByName(srcOnly)
       }
-    // Clause expressions must be DETERMINISTIC: the classification is
-    // evaluated more than once (counts + payload + CDC project from
-    // the cached claimed rows, but the copy-on-write rewrite re-derives
-    // the carried rows from the unpersisted join), and a rand()-style
-    // condition would let a row be BOTH post-imaged and carried.
+    // Clause expressions must be DETERMINISTIC: every output projects
+    // from the cached claimed rows, and a cached block Spark loses is
+    // recomputed — a rand()-style condition would then claim a
+    // different set than the outputs already written.
     // Checked on the ANALYZED form (an unresolved function node cannot
     // know its own determinism), resolved against the clause join.
     def requireDet(c: org.apache.spark.sql.Column, what: String): Unit =
@@ -2686,8 +2675,8 @@ class VersionedTable(spark: SparkSession, dir: String,
     // Persist only the rows some clause CLAIMED — deleted/updated/
     // inserted-sized, not touched-sized. A 0.3%-selectivity merge into
     // a 100×-scale table must not materialize the whole touched join;
-    // carried rows are re-derived only by the copy-on-write rewrite,
-    // which re-reads everything by definition.
+    // the copy-on-write rewrite finds the carried rows by their file
+    // identity against this set.
     val actedHot = acted.filter(col("__graft_act") > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -2759,11 +2748,14 @@ class VersionedTable(spark: SparkSession, dir: String,
             when(isUpdPre, lit("update_preimage")).otherwise(lit("delete"))
               .as("_change_type") :+ col("__graft_file") :+ col("__graft_pos"): _*)),
         post = updPost, inserts = inserts,
-        // copy-on-write re-derives the carried rows from the UNPERSISTED
-        // join — the rewrite reads every touched row by definition
+        // copy-on-write carries the touched rows whose file identity no
+        // claimed row holds: re-classifying them in the rewrite's own job
+        // could claim a different set (a current-time condition takes a
+        // new value in each job) and drop rows no output records
         rewrite = () => unionAll(
-          acted.filter((isM || isT) && act === 0).select(tImage: _*) +:
-            (updPost.toSeq ++ inserts)).get)
+          tgtRows.join(actedHot.filter(affected).select("__graft_file", "__graft_pos"),
+            Seq("__graft_file", "__graft_pos"), "left_anti")
+            .select(snapCols.map(col): _*) +: (updPost.toSeq ++ inserts)).get)
     } finally actedHot.unpersist()
     } finally src.unpersist()
   }
@@ -2801,12 +2793,14 @@ class VersionedTable(spark: SparkSession, dir: String,
     *  - otherwise copy-on-write: `rewrite` replaces `touched`.
     *    Emptied directories disappear, except that emptying the whole
     *    table keeps one 0-row directory as the schema holder.
-    * A write that throws reclaims the sidecar and CDC this attempt
-    * already wrote. A commit that hides, removes and adds nothing is a
-    * no-op: the current version is returned. Conflicts ride
-    * [[publishMutationRetrying]] with the front end's `addedMayMatch`;
-    * a `delete` payload holds only rows the table already validated,
-    * so it is neither validated nor revalidated against constraints.
+    * A write that throws reclaims everything this attempt already
+    * wrote. A commit that hides, removes and adds nothing is a no-op:
+    * the current version is returned. Conflicts ride
+    * [[publishMutationRetrying]] with the front end's `addedMayMatch`.
+    * `constraints` are the CHECK constraints the payload is validated
+    * against and the retry's validated baseline: the snapshot's, or
+    * none from a front end whose payload holds only rows the table
+    * already validated.
     */
   private def commitMutation(op: String, base: Int, touched: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
@@ -2820,7 +2814,6 @@ class VersionedTable(spark: SparkSession, dir: String,
     import org.apache.spark.sql.functions.{col, element_at, lit, split}
     val v0 = base + 1
     val l2p = renameMap(schema)
-    val checks = if (op == "delete") Map.empty[String, String] else constraints
     def fresh(kind: String): String =
       f"$kind-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
     def reclaim(names: Iterable[String]): Unit =
@@ -2834,7 +2827,7 @@ class VersionedTable(spark: SparkSession, dir: String,
         .write.parquet(new Path(root, name).toString)
     def write(df: Option[DataFrame]): (Seq[String], Long, Map[String, Map[String, ColStat]]) =
       df.fold((Seq.empty[String], 0L, Map.empty[String, Map[String, ColStat]])) { p =>
-        val (name, rows, st) = writePayload(p, v0, checks, l2p)
+        val (name, rows, st) = writePayload(p, v0, constraints, l2p)
         (Seq(name), rows, Map(name -> st))
       }
     def publishAs(commitOp: String, added: Seq[String], removed: Seq[String], rows: Long,
@@ -2845,14 +2838,14 @@ class VersionedTable(spark: SparkSession, dir: String,
         return base
       }
       publishMutationRetrying(commitOp, base, maxRetries, touched,
-        revalidate = if (commitOp.startsWith("delete")) Nil else added, addedMayMatch,
+        revalidate = added, addedMayMatch,
         mkCommit = vv => Commit(vv, commitOp, added, removed, rows,
           System.currentTimeMillis(), txn.map(_._1), txn.map(_._2),
           addedStats = addedStats, cdf = cdf, addedRows = added.map(_ -> rows).toMap,
           dvAdd = dv.map(_._1), dvDirs = dv.toSeq.flatMap(_._2.keys).sorted,
           dvDirRows = dv.fold(Map.empty[String, Long])(_._2),
           schemaJson = schemaJson, featuresAdd = features),
-        validated0 = checks, schemaConflicts = schemaRace, txn = txn)
+        validated0 = constraints, schemaConflicts = schemaRace, txn = txn)
     }
     val appended = dvPayload.orElse((post.toSeq ++ inserts).reduceOption(_.unionByName(_)))
     val preImages = pre match {
@@ -2860,7 +2853,7 @@ class VersionedTable(spark: SparkSession, dir: String,
       case None =>
         val (added, rows, st) = write(appended)
         val cdf = if (!writeChangeData) None
-          else { val n = fresh("cdf"); guarded(added: _*)(writeCdc(n, None)); Some(n) }
+          else { val n = fresh("cdf"); guarded(added :+ n: _*)(writeCdc(n, None)); Some(n) }
         return publishAs(op, added, Nil, rows, st, cdf)
     }
     var reusableCdf: Option[String] = None
@@ -2888,7 +2881,7 @@ class VersionedTable(spark: SparkSession, dir: String,
       reclaim(Seq(dvName))
       if (writeChangeData) reusableCdf = Some(cdfName) else reclaim(Seq(cdfName))
     }
-    val (written, rows, st) = write(Some(rewrite()))
+    val (written, rows, st) = guarded(reusableCdf.toSeq: _*)(write(Some(rewrite())))
     val (added, addedStats) =
       if (rows > 0L) (written, st)
       else if (touched.size < snapshotAt(base).active.size) {
@@ -2898,7 +2891,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     val cdf = if (!writeChangeData) None
       else reusableCdf.orElse {
         val n = fresh("cdf")
-        guarded(added: _*)(writeCdc(n, Some(preImages.drop("__graft_file", "__graft_pos"))))
+        guarded(added :+ n: _*)(writeCdc(n, Some(preImages.drop("__graft_file", "__graft_pos"))))
         Some(n)
       }
     publishAs(op, added, touched, rows, addedStats, cdf)
@@ -3382,12 +3375,12 @@ class VersionedTable(spark: SparkSession, dir: String,
     if (touched.isEmpty) return latest
     val isDelete = assignments.isEmpty
     val rows = scan(touched)
-    // A DV update reads its matches three times (sidecar, change data,
-    // appended images), and every read of a directory that already
-    // carries a sidecar re-runs the hidden-row join: cache them once.
+    // A DV update hides its matches in one job (sidecar and change data)
+    // and appends their updated images in another. Each job plans the
+    // condition anew, and a current-time condition takes a new value in
+    // each: cached, both jobs see the same matches.
     val matched =
-      if (isDelete || !useDeletionVectors || !touched.exists(snap.dvs.contains))
-        rows.filter(hit)
+      if (isDelete || !useDeletionVectors) rows.filter(hit)
       else rows.filter(hit).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the updated image of a row; `guarded` keeps non-matching rows as
     // they are (the copy-on-write rewrite reads every touched row)
@@ -3411,7 +3404,9 @@ class VersionedTable(spark: SparkSession, dir: String,
       addedMayMatch = c =>
         if (c.added.nonEmpty && !readDirsAs(schema, c.added).filter(hit).isEmpty) c.added
         else Nil,
-      constraints = snap.constraints, writeChangeData = writeChangeData,
+      // a delete writes only rows the table already validated
+      constraints = if (isDelete) Map.empty else snap.constraints,
+      writeChangeData = writeChangeData,
       useDeletionVectors = useDeletionVectors, maxRetries = maxRetries)
     finally matched.unpersist()
   }

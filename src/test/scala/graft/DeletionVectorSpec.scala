@@ -422,6 +422,29 @@ class DeletionVectorSpec extends SparkSuite {
     assert(vt.read().filter(col("p") === -5.0).count() === 15) // 100..190 %10
   }
 
+  test("a dv update on a current-time condition hides and re-appends the same rows") {
+    // Row k expires k ms after `start`: every job the update runs plans a
+    // later current_timestamp() and sees more rows expired, so the hidden
+    // rows and their appended images must come from one evaluation.
+    val dir = tmpVt()
+    val vt = new graft.sources.VersionedTable(spark, dir)
+    val n = 100000L
+    vt.append(spark.range(0, n, 1, 2).select(col("id").as("k"), lit("live").as("state")))
+    val start = System.currentTimeMillis() - 100L
+    val v = vt.update(col("k") < unix_millis(current_timestamp()) - lit(start),
+      Map("state" -> lit("expired")), useDeletionVectors = true)
+    assert(vt.history().filter(col("version") === v).head.getString(1) === "update-dv")
+    val rows = vt.read().collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("state")))
+    assert(rows.length === n)
+    assert(rows.map(_._1).distinct.length === n) // no row lost, none doubled
+    val expired = rows.collect { case (k, "expired") => k }
+    assert(expired.nonEmpty)
+    assert(expired.max < rows.collect { case (k, "live") => k }.min) // one cut
+    val ch = vt.changes(v, v)
+    assert(ch.filter(col("_change_type") === "update_preimage").count() === expired.length)
+    assert(ch.filter(col("_change_type") === "update_postimage").count() === expired.length)
+  }
+
   test("DV-vs-rewrite policy: dominant matches rewrite; the threshold is tunable") {
     val dir = tmpVt()
     val vt = new graft.sources.VersionedTable(spark, dir)

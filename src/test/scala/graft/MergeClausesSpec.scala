@@ -259,4 +259,45 @@ class MergeClausesSpec extends SparkSuite {
          |WHEN MATCHED AND s.v > t.v THEN UPDATE SET t.v = s.v""".stripMargin)
     assert(rows(vt).find(_._1 == 1L).map(_._2) === Some(100.0))
   }
+
+  test("a source with a current-time column is read once: table rows equal the change data") {
+    for (dv <- Seq(false, true)) {
+      val vt = new graft.sources.VersionedTable(spark, tmpVt())
+      val old = java.sql.Timestamp.valueOf("2020-01-01 00:00:00")
+      vt.append((0L until 200L).map(k => (k, old)).toDF("k", "ts"))
+      // every job plans its own current_timestamp(): re-read per job, the
+      // payload and the change data would carry different stamps
+      val v = vt.merge((100L until 300L).toDF("k").withColumn("ts", current_timestamp()),
+        Seq("k"), writeChangeData = true, useDeletionVectors = dv)
+      val written = vt.read().filter(col("k") >= 100L)
+      val changed = vt.changes(v, v)
+        .filter(col("_change_type").isin("update_postimage", "insert")).select("k", "ts")
+      assert(written.count() === 200L, s"dv=$dv")
+      assert(written.select("ts").distinct().count() === 1L, s"dv=$dv")
+      assert(written.exceptAll(changed).isEmpty && changed.exceptAll(written).isEmpty,
+        s"dv=$dv: table rows and change data differ")
+    }
+  }
+
+  test("a current-time clause condition claims one set: no row lost, change data exact") {
+    for (dv <- Seq(false, true)) {
+      val vt = new graft.sources.VersionedTable(spark, tmpVt())
+      val n = 100000L
+      vt.append(spark.range(0, n, 1, 2).select(col("id").as("k"), lit(1.0).as("v")))
+      // every row matches; row k expires k ms after `start`, so each job
+      // the merge runs sees more rows expired
+      val start = System.currentTimeMillis() - 100L
+      val v = vt.mergeClauses(
+        spark.range(0, n, 1, 2).select(col("id").as("k"), lit(2.0).as("v")), Seq("k"),
+        matched = Seq(MergeClause(
+          Some(col("t.k") < unix_millis(current_timestamp()) - lit(start)), MergeAction.Delete)),
+        notMatched = Nil, writeChangeData = true, useDeletionVectors = dv)
+      val left = vt.read().select("k").as[Long].collect()
+      val deleted = vt.changes(v, v).filter(col("_change_type") === "delete")
+        .select("k").as[Long].collect()
+      assert(deleted.nonEmpty, s"dv=$dv")
+      assert(left.length + deleted.length === n, s"dv=$dv: rows lost without a change record")
+      assert(deleted.max < left.min, s"dv=$dv")
+    }
+  }
 }
