@@ -2,7 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** PER-FILE deletion-vector sidecars (Delta's bitmap layout,
   * re-expressed): a DV commit's sidecar `dv-vNNNNN-xxxx` is a
@@ -11,21 +14,23 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * (dir, file, pos) parquet all readers must join or the driver must
   * collect.
   *
-  * Why per FILE: every consumer's unit of work is a file. The
-  * vectorized scan plans one-file partitions, so a partition now
-  * carries only the PATHS of its own file's bitmaps (bytes of task
-  * descriptor: tens, not millions) and the executor decodes exactly
-  * what it filters — no driver collect, no inline-position budget, no
-  * stream/change-feed refusal under debt, and a table's total hidden
-  * count stops mattering to any single machine. N DV commits against
-  * one file simply stack N small bitmaps; [[GraftDvBitmap.union]]
-  * merges them at read time and `coalesceDv` merges them at rest.
+  * Why per FILE: every consumer's unit of work is a file. Both read
+  * paths share ONE per-file fold: the driver ships bitmap PATHS keyed
+  * `"<dir>/<file>"` ([[pathsByFile]]), and the task that reads a data
+  * file decodes exactly that file's bitmaps ([[loadUnion]]) and drops
+  * the rows whose row index they hold — the DSv2 scan in its one-file
+  * partitions ([[GraftVtDvBatch]]), every internal read as a scan-side
+  * predicate ([[keep]]). No join, shuffle or broadcast of
+  * positions, no driver collect, and a table's total hidden count
+  * never concentrates on one machine. N DV commits against one file
+  * simply stack N small bitmaps; [[union]] merges them at read time
+  * and [[writeUnions]] (`coalesceDv`) merges them at rest.
   *
   * Encoding (`.dvb`): magic `GDV1`, varlong count, then the SORTED
   * DISTINCT row indices delta-encoded as varlongs — ~1-2 bytes per
   * deleted row on clustered deletes, never worse than ~9. Row indices
-  * are per-file and monotone, exactly what the two-pointer filter in
-  * the read path consumes.
+  * are per-file and monotone, exactly what the read-path filters
+  * consume.
   */
 private[graft] object GraftDvBitmap {
 
@@ -129,41 +134,56 @@ private[graft] object GraftDvBitmap {
     if (w == all.length) all else java.util.Arrays.copyOf(all, w)
   }
 
-  /** Write one sidecar from the (dir, file, pos) triple frame —
-    * executor-side, one task per hash bucket of (dir, file), each
-    * group streamed out as one `.dvb` under
-    * `<root>/<dvName>/<dir>/<file>.dvb`. Deleted-rows-sized shuffle,
-    * no driver involvement beyond the job.
-    *
-    * Returns the PER-DIRECTORY hidden-row counts (post-dedup, i.e.
-    * exactly the positions the bitmaps encode), so callers that need
-    * the DV-vs-rewrite policy numbers and the commit's `dvDirRows` do
-    * not pay a SECOND pass over the triples for a `groupBy(dir)`
-    * count. Counts ride a collection accumulator fed once per flushed
-    * bitmap; accumulator updates inside ACTIONS are applied exactly
-    * once per successful task (restarted/speculative duplicates are
-    * discarded by the DAGScheduler), so the counts are exact under
-    * retries.
+  /** Write one file's bitmap to `target`, staged at an
+    * ATTEMPT-UNIQUE temp name and renamed into place (the log store's
+    * put() pattern): a zombie or speculative duplicate attempt that
+    * keeps writing after the job succeeded can then never tear a
+    * published sidecar — its late bytes land in its own temp, and a
+    * failed rename-over-existing just means the identical-bytes twin
+    * already won.
     */
-  def write(spark: SparkSession, root: Path, dvName: String,
-            triples: DataFrame): Map[String, Long] = {
-    val (fused, finish) = fuseWrite(spark, root, dvName, triples)
-    fused.foreachPartition { it: Iterator[Row] => while (it.hasNext) it.next() }
-    finish()
+  private def publish(conf: Configuration, target: Path,
+                      sortedDistinct: Array[Long]): Unit = {
+    val staged = new Path(target.getParent,
+      s".${target.getName}-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val fs = target.getFileSystem(conf)
+    val os = new java.io.DataOutputStream(
+      new java.io.BufferedOutputStream(fs.create(staged, true)))
+    try encode(sortedDistinct, os) finally os.close()
+    if (!fs.rename(staged, target)) {
+      fs.delete(staged, false)
+      // benign only when a duplicate attempt's identical bytes
+      // already occupy the target; any other rename failure must
+      // fail the task, or the commit would publish a sidecar
+      // name with no bitmap behind it
+      if (!fs.exists(target)) throw new java.io.IOException(
+        s"bitmap publish failed: rename $staged -> $target " +
+          "returned false and no bitmap exists at the target")
+    }
+  }
+
+  /** Write one sidecar `<root>/<dvName>` holding, per data file, the
+    * union of the bitmaps `byFile` lists for it (keyed `"<dir>/<file>"`,
+    * as [[pathsByFile]] returns them). One narrow job: each task decodes
+    * a file's bitmaps and writes its one `.dvb` in-task, so no position
+    * crosses a shuffle or the driver.
+    */
+  def writeUnions(spark: SparkSession, root: Path, dvName: String,
+                  byFile: Map[String, Seq[String]]): Unit = {
+    val conf = new SerConf(spark.sessionState.newHadoopConf())
+    val base = new Path(root, dvName).toString
+    spark.sparkContext.parallelize(byFile.toSeq,
+        math.max(1, math.min(byFile.size, spark.sparkContext.defaultParallelism)))
+      .foreach { case (key, paths) =>
+        publish(conf.value, new Path(base, key + ".dvb"), loadUnion(conf.value, paths))
+      }
   }
 
   /** Pass-through iterator that streams each (dir, file) group of the
-    * sorted input out as one `.dvb` bitmap while yielding every row
-    * unchanged — the machinery [[write]] consumes for its own sake and
-    * [[fuseWrite]] hands to a downstream writer in the same task.
-    * Input MUST arrive sorted by (dir, file, pos) within the partition.
-    *
-    * Each bitmap is staged at an ATTEMPT-UNIQUE temp name and renamed
-    * into place (the log store's put() pattern): a zombie or
-    * speculative duplicate attempt that keeps writing after the job
-    * succeeded can then never tear a published sidecar — its late
-    * bytes land in its own temp, and a failed rename-over-existing
-    * just means the identical-bytes twin already won.
+    * sorted input out as one `.dvb` bitmap ([[publish]]) while yielding
+    * every row unchanged — the machinery [[fuseWrite]] hands to a
+    * downstream writer in the same task. Input MUST arrive sorted by
+    * (dir, file, pos) within the partition.
     */
   private def emitting(it: Iterator[Row], base: String, conf: SerConf,
                        dirCounts: org.apache.spark.util.CollectionAccumulator[(String, Long)],
@@ -171,25 +191,8 @@ private[graft] object GraftDvBitmap {
     new Iterator[Row] {
       private var cur: (String, String) = null
       private val buf = scala.collection.mutable.ArrayBuffer[Long]()
-      private val attempt = java.util.UUID.randomUUID().toString.take(8)
       private def flush(): Unit = if (cur != null) {
-        val dirPath = new Path(base, cur._1)
-        val target = new Path(dirPath, cur._2 + ".dvb")
-        val staged = new Path(dirPath, s".${cur._2}.dvb-$attempt.tmp")
-        val fs = target.getFileSystem(conf.value)
-        val os = new java.io.DataOutputStream(
-          new java.io.BufferedOutputStream(fs.create(staged, true)))
-        try encode(buf.toArray, os) finally os.close()
-        if (!fs.rename(staged, target)) {
-          fs.delete(staged, false)
-          // benign only when a duplicate attempt's identical bytes
-          // already occupy the target; any other rename failure must
-          // fail the task, or the commit would publish a sidecar
-          // name with no bitmap behind it
-          if (!fs.exists(target)) throw new java.io.IOException(
-            s"bitmap publish failed: rename $staged -> $target " +
-              "returned false and no bitmap exists at the target")
-        }
+        publish(conf.value, new Path(base, s"${cur._1}/${cur._2}.dvb"), buf.toArray)
         dirCounts.add((cur._1, buf.length.toLong))
         buf.clear()
         cur = null
@@ -206,7 +209,8 @@ private[graft] object GraftDvBitmap {
       }
     }
 
-  /** The FUSED form of [[write]]: attaches the bitmap emission to `df`
+  /** Write one sidecar from `df`'s (dir, file, pos) triples, FUSED
+    * into the caller's action: attaches the bitmap emission to `df`
     * (which must carry `__graft_dv_dir`/`__graft_dv_file`/
     * `__graft_dv_pos` alongside any payload columns) as a narrow
     * pass-through above the (dir, file) shuffle, and returns the
@@ -215,11 +219,10 @@ private[graft] object GraftDvBitmap {
     * — the DV mutation paths make it the CDC payload write, so one job
     * and one pass over the matches produce BOTH outputs instead of a
     * bitmap job followed by a second read of the persisted matches
-    * (guide §1.2). Retry-safe for the same reasons as [[write]]: the
-    * shuffle+sort is deterministic, bitmaps stage at attempt-unique
-    * names, and the counts accumulator (fed once per flushed bitmap in
-    * the action's result stage) is applied exactly once per successful
-    * task.
+    * (guide §1.2). Retry-safe: the shuffle+sort is deterministic,
+    * bitmaps stage at attempt-unique names ([[publish]]), and the
+    * counts accumulator (fed once per flushed bitmap in the action's
+    * result stage) is applied exactly once per successful task.
     */
   def fuseWrite(spark: SparkSession, root: Path, dvName: String,
                 df: DataFrame): (DataFrame, () => Map[String, Long]) = {
@@ -246,29 +249,20 @@ private[graft] object GraftDvBitmap {
       .map { case (d, xs) => d -> xs.iterator.map(_._2).sum })
   }
 
-  /** The (dir, file, pos) frame of the given sidecars — the fold/anti-
-    * join consumers' view, decoded DISTRIBUTEDLY: the driver lists the
-    * bitmap files (metadata-sized), executors decode their contents.
+  /** The per-file fold as a scan-side predicate ([[GraftDvKeep]]) over
+    * a read's file path and per-file row index: true unless `byFile`'s
+    * bitmaps ([[pathsByFile]]) hide the row.
     */
-  def asFrame(spark: SparkSession, root: Path, sidecars: Seq[String])
-      : DataFrame = {
-    import spark.implicits._
-    val conf = new SerConf(spark.sessionState.newHadoopConf())
-    val entries = listBitmaps(spark, root, sidecars)
-    // partitions SCALE with the listing (~64 bitmap decodes per task,
-    // floor 32 tasks): a flat cap would serialize entries/32 file
-    // opens per task on a many-bitmap table's mutation-discovery fold
-    spark.sparkContext.parallelize(entries,
-      math.max(1, math.min(entries.size, math.max(32, entries.size / 64))))
-      .flatMap { case (dir, file, path) =>
-        load(conf.value, path).iterator.map(pos => (dir, file, pos))
-      }
-      .toDF("__graft_dv_dir", "__graft_dv_file", "__graft_dv_pos")
-  }
+  def keep(spark: SparkSession, byFile: Map[String, Seq[String]],
+           file: Column, pos: Column): Column =
+    GraftSqlBridge.column(GraftDvKeep(GraftSqlBridge.expression(file),
+      GraftSqlBridge.expression(pos), byFile, spark.sparkContext.broadcast(
+        new SerConf(spark.sessionState.newHadoopConf()))))
 
   /** List every bitmap of the given sidecars as (dataDir, dataFile,
     * bitmapPath) — driver-side, #bitmap-files-sized (metadata, not
-    * positions). A sidecar the log names but the filesystem lacks, or
+    * positions): what both read paths' fold ([[pathsByFile]]) and
+    * [[writeUnions]] ship to the tasks that decode. A sidecar the log names but the filesystem lacks, or
     * one in the pre-bitmap positions-parquet layout, fails LOUDLY:
     * reading either as an empty hidden set would silently resurrect
     * deleted rows.
@@ -299,7 +293,7 @@ private[graft] object GraftDvBitmap {
 
   /** `"<dir>/<file>" -> bitmap paths` for the given sidecars,
     * restricted to `dirs` — what the vectorized scan ships in its
-    * one-file partitions.
+    * one-file partitions and [[keep]] in its predicate.
     */
   def pathsByFile(spark: SparkSession, root: Path, sidecars: Seq[String],
                   dirs: Seq[String]): Map[String, Seq[String]] = {
@@ -309,4 +303,43 @@ private[graft] object GraftDvBitmap {
       .groupBy { case (d, f, _) => d + "/" + f }
       .map { case (k, vs) => k -> vs.map(_._3) }
   }
+}
+
+/** [[GraftDvBitmap.keep]]'s predicate. A task carries only the paths
+  * (the Hadoop conf rides a broadcast) and deserializes its own copy of
+  * the plan, so the cache is the task's own: rows of one file arrive
+  * together, each file's bitmaps decode once, and a row costs one
+  * file-key check plus one position probe. Deterministic (filters above
+  * it still push into the parquet scan, whose row index stays the file
+  * position under row-group skipping and splits) and generated inline,
+  * so the filter stays in whole-stage code.
+  */
+private[sources] final case class GraftDvKeep(file: Expression, pos: Expression,
+                                              byFile: Map[String, Seq[String]],
+                                              conf: org.apache.spark.broadcast.Broadcast[
+                                                GraftDvBitmap.SerConf])
+    extends BinaryExpression with Predicate {
+  @transient private var lastFile: UTF8String = _
+  @transient private var hidden: Array[Long] = _
+
+  def keep(path: UTF8String, p: Long): Boolean = {
+    if (!path.equals(lastFile)) {
+      val s = path.toString
+      hidden = byFile.get(s.substring(s.lastIndexOf('/', s.lastIndexOf('/') - 1) + 1))
+        .fold(Array.emptyLongArray)(GraftDvBitmap.loadUnion(conf.value.value, _))
+      lastFile = path.clone() // the row's bytes may be reused for the next row
+    }
+    hidden.length == 0 || java.util.Arrays.binarySearch(hidden, p) < 0
+  }
+
+  override def left: Expression = file
+  override def right: Expression = pos
+  override protected def nullSafeEval(f: Any, p: Any): Any =
+    keep(f.asInstanceOf[UTF8String], p.asInstanceOf[Long])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("dvKeep", this)
+    defineCodeGen(ctx, ev, (f, p) => s"$ref.keep($f, $p)")
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression)
+      : GraftDvKeep = copy(file = l, pos = r)
 }

@@ -18,10 +18,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * whose (file, index) the sidecar hides. Parquet filter pushdown,
   * row-group skipping, and the vectorized reader all apply to BOTH
   * sides; only the final batch→row boundary is paid, and only on the
-  * DV'd files. Each partition ships exactly its own file's hidden
-  * positions (sorted; matched with a two-pointer — the reader streams
+  * DV'd files. Each partition ships exactly its own file's bitmap
+  * PATHS; its reader decodes them ([[GraftDvBitmap.loadUnion]]) and
+  * matches the sorted positions with a two-pointer (the reader streams
   * indices in increasing order per file), so no task carries another
-  * file's deletes.
+  * file's deletes. Every internal read shares this per-file fold — the
+  * same paths and in-task decode, applied as a scan-side predicate
+  * ([[GraftDvBitmap.keep]]).
   */
 private[sources] class GraftVtDvBatch(clean: Batch, dv: Batch,
                                       dvPaths: Map[String, Seq[String]],

@@ -591,7 +591,7 @@ private[graft] class GraftVtScan(spark: SparkSession, vt: VersionedTable,
     * metadata-sized; the executors decode the positions.
     */
   private lazy val dvBitmapPaths: Map[String, Seq[String]] =
-    vt.dvBitmapPaths(version, dvKeptOf(staticKept))
+    vt.dvBitmapPaths(vt.dvsAt(version), dvKeptOf(staticKept))
 
   private def mkParquetScan(dirs: Seq[String], readSchema: StructType)
       : ParquetScan = {

@@ -146,7 +146,7 @@ private[sources] object GraftVtChangeFiles {
           // the feed — each partition's executor decodes its own file
           markers ++= GraftVtFoldedRead.dvPartitionsFor(
             filesUnder(fs, root, d, v, t, cdfCols),
-            vt.dvBitmapPaths(dvV, Seq(d)))
+            vt.dvBitmapPaths(vt.dvsAt(dvV), Seq(d)))
       }
     }
     typedFiles.result().groupBy(_._1).foreach { case (t, fsOfT) =>
@@ -397,7 +397,7 @@ class GraftVtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
       if (dvFiles.nonEmpty) {
         val dirs = dvFiles.map(_.toPath.getParent.getName).distinct
         dvParts ++= GraftVtFoldedRead.dvPartitionsFor(dvFiles,
-          vt.dvBitmapPaths(v, dirs))
+          vt.dvBitmapPaths(vt.dvsAt(v), dirs))
       }
     }
     val cleanParts: Array[InputPartition] =

@@ -1886,17 +1886,17 @@ class VersionedTable(spark: SparkSession, dir: String,
   private[sources] def dvRowCountsAt(v: Int): Map[String, Long] =
     snapshotAt(v).dvRowsByDir
 
-  /** The bitmap paths hiding rows of the given directories at a
-    * version, keyed `"<dir>/<file>"` — what the vectorized DV read
-    * path ships in its one-file input partitions. Metadata-sized
-    * (paths, never positions: each EXECUTOR decodes exactly the
-    * bitmaps of the file it reads), so there is no inline budget, no
-    * driver collect, and no fallback — a table's total hidden count
-    * never concentrates on one machine.
+  /** The bitmap paths hiding rows of the given directories under a
+    * version's DV map ([[dvsAt]]), keyed `"<dir>/<file>"` — what both read paths' per-file
+    * fold ships: the DSv2 scan's one-file input partitions and
+    * [[readDirsFolded]]'s scan-side predicate. Metadata-sized (paths,
+    * never positions: each EXECUTOR decodes exactly the bitmaps of the
+    * file it reads), so there is no inline budget, no driver collect,
+    * and no fallback — a table's total hidden count never concentrates
+    * on one machine.
     */
-  private[sources] def dvBitmapPaths(v: Int, dirs: Seq[String])
+  private[sources] def dvBitmapPaths(dvs: Map[String, Seq[String]], dirs: Seq[String])
       : Map[String, Seq[String]] = {
-    val dvs = snapshotAt(v).dvs
     val sidecars = dirs.flatMap(dvs.get).flatten.distinct
     if (sidecars.isEmpty) return Map.empty
     // manifests are immutable per version: repeated plans of the same
@@ -1910,20 +1910,15 @@ class VersionedTable(spark: SparkSession, dir: String,
     }
   }
 
-  /** A DV sidecar frame: the (directory, file, row-position) triples of
-    * every row the given sidecars hide — decoded distributedly from
-    * the per-file bitmaps (the anti-join fold consumers' view).
-    */
-  private def dvFrame(names: Seq[String]): DataFrame =
-    GraftDvBitmap.asFrame(spark, root, names)
-
   /** Read `dirs` with DELETION VECTORS folded — the merge-on-read path:
-    * directories without DVs read untouched (the common case pays
-    * nothing); DV-bearing directories read with the parquet reader's
-    * `_metadata` row identity (file path + row index) and anti-join
-    * the sidecar's hidden positions away. The sidecar is deleted-rows-
-    * sized (AQE broadcasts it when small), so a selective merge-on-read
-    * DELETE costs its matches at read time instead of a directory
+    * without DVs the directories read untouched (the common case pays
+    * nothing); otherwise the one read of `dirs` carries the per-file
+    * fold the DSv2 scan uses ([[GraftDvBitmap.keep]]): a scan-side
+    * predicate on `_metadata.file_path`/`_metadata.row_index` that
+    * decodes each file's bitmaps in the task reading it — the driver
+    * ships bitmap PATHS ([[dvBitmapPaths]]), never positions, and no
+    * join, shuffle or broadcast is planned. A selective merge-on-read
+    * DELETE thus costs its matches at read time instead of a directory
     * rewrite at write time — OPTIMIZE compacts the debt away (its
     * rewrite reads folded and drops the rewritten directories' DV
     * entries). `schema` imposed when given, mergeSchema otherwise,
@@ -1933,7 +1928,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     * (and row index) as columns — the mutation scans need the file
     * identity of every row, and `input_file_name()` is only reliable
     * BEFORE a join/exchange, so the identity is captured from
-    * `_metadata` on the scan side of the DV anti-join.
+    * `_metadata` at the scan.
     */
   private def readDirsFolded(schema: Option[org.apache.spark.sql.types.StructType],
                              dirs: Seq[String],
@@ -1941,41 +1936,21 @@ class VersionedTable(spark: SparkSession, dir: String,
                              physToLogical: Map[String, String] = Map.empty,
                              tag: Option[String] = None,
                              posTag: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, element_at, split}
+    import org.apache.spark.sql.functions.col
+    val paths = dirs.map(n => new Path(root, n).toString)
+    val r = schema match {
+      case Some(s) => spark.read.schema(physicalize(s)).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+    val hidden = dvBitmapPaths(dvs, dirs)
+    val folded = if (hidden.isEmpty) r else r.filter(GraftDvBitmap.keep(spark,
+      hidden, col("_metadata.file_path"), col("_metadata.row_index")))
+    val t = tag.fold(folded)(tg => folded.withColumn(tg, col("_metadata.file_path")))
+    val tagged = posTag.fold(t)(pt => t.withColumn(pt, col("_metadata.row_index")))
     // column mapping: an imposed schema carries its own map; a
     // mergeSchema read gets the caller's current physical→logical map
-    val p2l = schema.map(sc => renameMap(sc).map(_.swap))
-      .getOrElse(physToLogical)
-    def alias(df: DataFrame): DataFrame =
-      if (p2l.isEmpty) df else df.withColumnsRenamed(p2l)
-    def read(ds: Seq[String]): DataFrame = {
-      val r = schema match {
-        case Some(s) => spark.read.schema(physicalize(s))
-          .parquet(ds.map(n => new Path(root, n).toString): _*)
-        case None => spark.read.option("mergeSchema", "true")
-          .parquet(ds.map(n => new Path(root, n).toString): _*)
-      }
-      val t = tag.fold(r)(tg => r.withColumn(tg, col("_metadata.file_path")))
-      posTag.fold(t)(pt => t.withColumn(pt, col("_metadata.row_index")))
-    }
-    val dvd = dirs.filter(dvs.contains)
-    if (dvd.isEmpty) return alias(read(dirs))
-    val clean = dirs.filterNot(dvs.contains)
-    val hidden = dvFrame(dvd.flatMap(dvs).distinct)
-    val file = tag.fold(col("_metadata.file_path"))(col)
-    val tagged = read(dvd)
-      .withColumn("__graft_d", element_at(split(file, "/"), -2))
-      .withColumn("__graft_f", element_at(split(file, "/"), -1))
-      .withColumn("__graft_i", posTag.fold(col("_metadata.row_index"))(col))
-    val folded = tagged.join(hidden,
-      tagged("__graft_d") === hidden("__graft_dv_dir") &&
-        tagged("__graft_f") === hidden("__graft_dv_file") &&
-        tagged("__graft_i") === hidden("__graft_dv_pos"), "left_anti")
-      .drop("__graft_d", "__graft_f", "__graft_i")
-    // alias on the DV branch too: a caller's condition addresses the
-    // LOGICAL names whether or not sidecars are outstanding
-    alias(if (clean.isEmpty) folded
-      else read(clean).unionByName(folded, allowMissingColumns = schema.isEmpty))
+    val p2l = schema.map(sc => renameMap(sc).map(_.swap)).getOrElse(physToLogical)
+    if (p2l.isEmpty) tagged else tagged.withColumnsRenamed(p2l)
   }
 
   /** Test seam: the candidate directories the last [[delete]]/[[update]]
@@ -2786,7 +2761,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     *    accumulator; data files stay byte-identical and `post ∪
     *    inserts` is appended. [[dvFractionOk]] still gates the commit:
     *    when the matches dominate their directories, a rows-sized
-    *    sidecar every reader anti-joins forever is worse than the
+    *    sidecar every reader folds forever is worse than the
     *    rewrite, so the sidecar is dropped (the CDC is reused when the
     *    table records change data) and copy-on-write follows. A DV
     *    attempt that hid nothing commits append-shaped, or nothing;
@@ -3568,8 +3543,8 @@ class VersionedTable(spark: SparkSession, dir: String,
     // O(1) scans, not O(N) — the per-frame planning chain was the
     // residue after round 17 removed the per-frame footer inference.
     // Only directories carrying deletion vectors at their version keep
-    // a per-occurrence folded frame (the DV anti-join is
-    // version-specific state).
+    // a per-occurrence folded frame (the DV fold is version-specific
+    // state).
     val ps = uniformPhys.get
     val cleanLookup = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int)]
     val dvFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -3775,7 +3750,8 @@ class VersionedTable(spark: SparkSession, dir: String,
     * bitmaps per file that every reader unions at decode time; a data
     * rewrite ([[optimizeDvDebt]]) removes the debt entirely but pays
     * the directory's full write cost. This is the cheap middle step —
-    * one deleted-rows-sized job, one commit, k→1 bitmaps per file —
+    * one narrow job that unions each file's bitmaps in-task and writes
+    * one `.dvb` per file ([[GraftDvBitmap.writeUnions]]), one commit —
     * triggered by sidecar COUNT the way [[optimizeDvDebt]] triggers on
     * hidden fraction. Hidden-row counts (and therefore the
     * metadata-exact COUNT(*)) are carried through unchanged; older
@@ -3786,7 +3762,6 @@ class VersionedTable(spark: SparkSession, dir: String,
     * `maxRetries` times.
     */
   def coalesceDv(minSidecars: Int = 2, maxRetries: Int = 5): Int = {
-    import org.apache.spark.sql.functions.col
     require(minSidecars >= 2, s"minSidecars must be >= 2: $minSidecars")
     var attempt = 0
     while (true) {
@@ -3799,13 +3774,10 @@ class VersionedTable(spark: SparkSession, dir: String,
       if (victims.isEmpty) return latest
       val v0 = latest + 1
       val merged = f"dv-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-      val victimSet = victims.keySet
-      GraftDvBitmap.write(spark, root, merged,
-        GraftDvBitmap.asFrame(spark, root,
-          victims.values.flatten.toSeq.distinct)
-          .filter(col("__graft_dv_dir").isInCollection(victimSet)))
+      GraftDvBitmap.writeUnions(spark, root, merged, GraftDvBitmap.pathsByFile(
+        spark, root, victims.values.flatten.toSeq.distinct, victims.keys.toSeq))
       val newDvs = snap.dvs.map { case (d, scs) =>
-        d -> (if (victimSet.contains(d)) Seq(merged) else scs)
+        d -> (if (victims.contains(d)) Seq(merged) else scs)
       }
       try {
         publish(Commit(v0, "coalesce-dv", Seq.empty, Seq.empty, 0L,

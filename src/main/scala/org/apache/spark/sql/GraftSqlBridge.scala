@@ -14,6 +14,10 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
 
+  /** A Column over a hand-built expression, and back. */
+  def column(e: catalyst.expressions.Expression): Column = classic.ExpressionUtils.column(e)
+  def expression(c: Column): catalyst.expressions.Expression = classic.ExpressionUtils.expression(c)
+
   /** The analyzed logical plan of `df` (for building new plan nodes on
     * top of already-resolved children).
     */

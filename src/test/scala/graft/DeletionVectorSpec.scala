@@ -844,4 +844,80 @@ class DeletionVectorSpec extends SparkSuite {
     assert(vt.dvsAt(3)(d).size === 1)
     assert(vt.read().count() === 90)
   }
+
+  /** Inputs a per-file fold can get wrong — (case, SQL conf held while
+    * the checks run, DV deletes of `k % m == r` as (m, r), rename the
+    * value column). Every case starts from ONE data file of 4,000 rows
+    * sorted by `k` in several row groups, so a pushed-down `k` bound
+    * skips whole row groups and the row index must stay the position
+    * in the file, not in what the scan returned.
+    */
+  private val foldCases: Seq[(String, Map[String, String], Seq[(Long, Long)], Boolean)] = Seq(
+    ("a file of several row groups read under a pushed-down predicate",
+      Map.empty, Seq((7L, 3L)), false),
+    ("a file split across tasks",
+      Map("spark.sql.files.maxPartitionBytes" -> "2048"), Seq((7L, 3L)), false),
+    ("one file hidden by two sidecars", Map.empty, Seq((7L, 3L), (11L, 5L)), false),
+    ("a renamed column and mergeSchema reads", Map.empty, Seq((7L, 3L)), true))
+
+  for ((name, conf, hides, rename) <- foldCases)
+    test(s"per-file DV fold, $name: readAt, changes, dv update and mergeClauses match the model") {
+      import graft.sources.{MergeAction, MergeClause}
+      val dir = tmpVt()
+      val vt = new graft.sources.VersionedTable(spark, dir)
+      spark.conf.set("parquet.block.size", "4096")
+      try vt.append(spark.range(0L, 4000L, 1L, 1)
+        .select(col("id").as("k"), (col("id") * 1.0).as("p")))
+      finally spark.conf.unset("parquet.block.size")
+      val files = new java.io.File(dir).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("v"))
+        .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+      val rowGroups = files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+        try r.getRowGroups.size finally r.close()
+      }
+      assert(rowGroups.toSeq.size === 1 && rowGroups.head >= 3, rowGroups.toSeq)
+      def op(v: Int): String = vt.history().filter(col("version") === v).head.getString(1)
+      var model = (0L until 4000L).map(k => k -> k * 1.0).toMap
+      hides.foreach { case (m, r) =>
+        assert(op(vt.delete(col("k") % m === r, useDeletionVectors = true)) === "delete-dv")
+        model = model.filter { case (k, _) => k % m != r }
+      }
+      assert(vt.dvsAt(vt.latestVersion).values.map(_.size).toSeq === Seq(hides.size))
+      val vc = if (rename) { vt.renameColumn("p", "q"); "q" } else "p"
+      def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+        df.select(col("k"), col(vc)).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        assert(rows(vt.readAt(vt.latestVersion)) === model)
+        assert(rows(vt.readAt(vt.latestVersion).filter(col("k") >= 2500L)) ===
+          model.filter(_._1 >= 2500L))
+        // the update's discovery scan pushes the same kind of bound
+        val vu = vt.update(col("k") >= 3000L && col("k") % 5 === 0L,
+          Map(vc -> (col(vc) + lit(0.5))), useDeletionVectors = true)
+        assert(op(vu) === "update-dv")
+        model = model.map { case (k, x) => k -> (if (k >= 3000L && k % 5 == 0) x + 0.5 else x) }
+        assert(rows(vt.readAt(vu)) === model)
+        val vm = vt.mergeClauses((1000L until 1100L).map(k => (k, -1.0 * k)).toDF("k", vc),
+          Seq("k"), Seq(MergeClause(None, MergeAction.Update(None))),
+          Seq(MergeClause(None, MergeAction.Insert(None))), useDeletionVectors = true)
+        assert(op(vm) === "merge-dv")
+        model = model ++ (1000L until 1100L).map(k => k -> -1.0 * k)
+        assert(rows(vt.readAt(vm)) === model)
+        // a copy-on-write update removes the DV'd directory: the change
+        // feed synthesizes its delete images from a folded read of it
+        val before = model
+        val vw = vt.update(col("k") < 100L, Map(vc -> lit(0.0)))
+        assert(op(vw) === "update")
+        model = model.map { case (k, x) => k -> (if (k < 100L) 0.0 else x) }
+        assert(rows(vt.readAt(vw)) === model)
+        val feed = vt.changes(vw, vw)
+        val deleted = rows(feed.filter(col("_change_type") === "delete"))
+        val inserted = rows(feed.filter(col("_change_type") === "insert"))
+        assert(deleted.forall { case (k, x) => before.get(k).contains(x) })
+        assert(before -- deleted.keys ++ inserted === model)
+      } finally conf.keys.foreach(spark.conf.unset)
+    }
 }

@@ -47,8 +47,7 @@ class DvCdfFusionSpec extends SparkSuite {
     // output 1: the bitmap hides exactly the matched positions
     val dv = vt.dvsAt(v).values.flatten.toSeq.distinct
     assert(dv.size === 1)
-    val hidden = graft.sources.GraftDvBitmap
-      .asFrame(spark, new Path(dir), dv).count()
+    val hidden = hiddenPositions(new Path(dir), dv).size.toLong
     assert(hidden === 10L)
     assert(vt.read().count() === 90L)
     // output 2: the CDC carries exactly the deleted rows

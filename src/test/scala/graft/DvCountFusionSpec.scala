@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 /** Round-17 optimization: the DV-vs-rewrite policy counts ride the
-  * bitmap write job ([[graft.sources.GraftDvBitmap.write]] returns the
-  * per-directory hidden counts) instead of a separate groupBy(dir)
+  * bitmap write job ([[graft.sources.GraftDvBitmap.fuseWrite]] returns
+  * the per-directory hidden counts) instead of a separate groupBy(dir)
   * count pass over the matches. These specs pin the fused counts'
   * exactness and the optimistic-write fallback hygiene: a sidecar the
   * policy refuses (or that turns out empty) is reclaimed, never leaked
@@ -16,6 +16,16 @@ class DvCountFusionSpec extends SparkSuite {
 
   private def tmpVt(): String =
     java.nio.file.Files.createTempDirectory("vt_dv_fusion").toString
+
+  /** Writes a sidecar the way the DV mutations do: one action over the
+    * fused frame, then the per-directory counts.
+    */
+  private def fusedWrite(root: Path, dvName: String,
+                         triples: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+    val (fused, counts) = graft.sources.GraftDvBitmap.fuseWrite(spark, root, dvName, triples)
+    fused.write.format("noop").mode("overwrite").save()
+    counts()
+  }
 
   private def dvDirs(dir: String): Seq[String] =
     new java.io.File(dir).listFiles()
@@ -33,22 +43,19 @@ class DvCountFusionSpec extends SparkSuite {
       ("v00002-bbb", "f9.parquet", 5L),
       ("v00002-bbb", "f9.parquet", 6L))
       .toDF("__graft_dv_dir", "__graft_dv_file", "__graft_dv_pos")
-    val counts = graft.sources.GraftDvBitmap
-      .write(spark, root, "dv-v00003-test", triples)
+    val counts = fusedWrite(root, "dv-v00003-test", triples)
     assert(counts === Map("v00001-aaa" -> 3L, "v00002-bbb" -> 2L))
     // the decoded bitmaps agree with the returned counts — the fused
     // numbers ARE what the sidecar hides, not an estimate of it
-    val recount = graft.sources.GraftDvBitmap
-      .asFrame(spark, root, Seq("dv-v00003-test"))
-      .groupBy("__graft_dv_dir").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val recount = hiddenPositions(root, Seq("dv-v00003-test"))
+      .groupBy(_._1).map { case (d, ps) => d -> ps.size.toLong }
     assert(recount === counts)
   }
 
   test("empty triple frame returns no counts") {
     val dir = tmpVt()
-    val counts = graft.sources.GraftDvBitmap.write(spark, new Path(dir),
-      "dv-v00001-none", Seq.empty[(String, String, Long)]
+    val counts = fusedWrite(new Path(dir), "dv-v00001-none",
+      Seq.empty[(String, String, Long)]
         .toDF("__graft_dv_dir", "__graft_dv_file", "__graft_dv_pos"))
     assert(counts.isEmpty)
   }

@@ -28,6 +28,18 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
 
+  /** The (dir, file, row position) triples the given DV sidecars of the
+    * table at `root` hide, decoded bitmap by bitmap on the driver.
+    */
+  def hiddenPositions(root: org.apache.hadoop.fs.Path,
+                      sidecars: Seq[String]): Seq[(String, String, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    graft.sources.GraftDvBitmap.listBitmaps(spark, root, sidecars)
+      .flatMap { case (d, f, p) =>
+        graft.sources.GraftDvBitmap.load(conf, p).toSeq.map(pos => (d, f, pos))
+      }
+  }
+
   /** Runs `body` and counts the Spark jobs it started. */
   def countingJobs[A](body: => A): (A, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
