@@ -1887,13 +1887,13 @@ class VersionedTable(spark: SparkSession, dir: String,
     snapshotAt(v).dvRowsByDir
 
   /** The bitmap paths hiding rows of the given directories under a
-    * version's DV map ([[dvsAt]]), keyed `"<dir>/<file>"` — what both read paths' per-file
-    * fold ships: the DSv2 scan's one-file input partitions and
-    * [[readDirsFolded]]'s scan-side predicate. Metadata-sized (paths,
-    * never positions: each EXECUTOR decodes exactly the bitmaps of the
-    * file it reads), so there is no inline budget, no driver collect,
-    * and no fallback — a table's total hidden count never concentrates
-    * on one machine.
+    * version's DV map ([[dvsAt]]), keyed `"<dir>/<file>"` — what both
+    * read paths' per-file fold ships: the DSv2 scan's one-file input
+    * partitions and [[readDirsFolded]]'s scan-side predicate.
+    * Metadata-sized (paths, never positions: each EXECUTOR decodes
+    * exactly the bitmaps of the file it reads), so there is no inline
+    * budget, no driver collect, and no fallback — a table's total
+    * hidden count never concentrates on one machine.
     */
   private[sources] def dvBitmapPaths(dvs: Map[String, Seq[String]], dirs: Seq[String])
       : Map[String, Seq[String]] = {
