@@ -293,11 +293,14 @@ private[graft] object GraftDvBitmap {
 
   /** `"<dir>/<file>" -> bitmap paths` for the given sidecars,
     * restricted to `dirs` — what the vectorized scan ships in its
-    * one-file partitions and [[keep]] in its predicate.
+    * one-file partitions and [[keep]] in its predicate. Keys and the
+    * restriction use the directory's last path component, the part a
+    * sidecar spells: a shallow clone names the source's directories by
+    * absolute path.
     */
   def pathsByFile(spark: SparkSession, root: Path, sidecars: Seq[String],
                   dirs: Seq[String]): Map[String, Seq[String]] = {
-    val dirSet = dirs.toSet
+    val dirSet = dirs.map(d => new Path(d).getName).toSet
     listBitmaps(spark, root, sidecars)
       .filter { case (d, _, _) => dirSet.contains(d) }
       .groupBy { case (d, f, _) => d + "/" + f }

@@ -118,6 +118,7 @@ class ShallowCloneSpec extends SparkSuite {
     val clone = new graft.sources.VersionedTable(spark, dst)
     assert(clone.fastCount() === Some(80L))
     assert(clone.read().count() === 80)
+    assert(spark.read.format("graftvt").load(dst).count() === 80)
     assert(clone.tableFeatures().contains("bitmap-dv"))
   }
 
