@@ -262,10 +262,10 @@ private[graft] object GraftDvBitmap {
   /** List every bitmap of the given sidecars as (dataDir, dataFile,
     * bitmapPath) — driver-side, #bitmap-files-sized (metadata, not
     * positions): what both read paths' fold ([[pathsByFile]]) and
-    * [[writeUnions]] ship to the tasks that decode. A sidecar the log names but the filesystem lacks, or
-    * one in the pre-bitmap positions-parquet layout, fails LOUDLY:
-    * reading either as an empty hidden set would silently resurrect
-    * deleted rows.
+    * [[writeUnions]] ship to the tasks that decode. A sidecar the log
+    * names but the filesystem lacks, or one in the pre-bitmap
+    * positions-parquet layout, fails LOUDLY: reading either as an empty
+    * hidden set would silently resurrect deleted rows.
     */
   def listBitmaps(spark: SparkSession, root: Path, sidecars: Seq[String])
       : Seq[(String, String, String)] = {
