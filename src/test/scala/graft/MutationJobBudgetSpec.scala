@@ -123,4 +123,39 @@ class MutationJobBudgetSpec extends SparkSuite {
       assert(jobs <= b, s"$name ($mode, committed as $op) ran $jobs jobs, budget $b")
     }
   }
+
+  /** 500 rows whose odd ids match no base row: an append-shaped payload. */
+  private def fresh = source(300000L, matching = false)
+
+  /** A second DV delete on the directory [[priorDv]] hides rows of, so
+    * that directory stacks two sidecars for `coalesceDv` to merge.
+    */
+  private def twoSidecars(): Unit = {
+    priorDv()
+    vt.delete(col("id").between(200000L, 201000L) && col("id") % 20 === 8L,
+      useDeletionVectors = true)
+  }
+
+  /** (commit path, set-up before counting, the command, jobs pinned on
+    * the commit paths before they shared one commit loop)
+    */
+  private val commitPaths: Seq[(String, () => Unit, () => Int, Int)] = Seq(
+    ("append", () => (), () => vt.append(fresh), 1),
+    ("appendWithRetry", () => (), () => vt.appendWithRetry(fresh), 1),
+    ("appendStreamBatch", () => (), () => vt.appendStreamBatch(fresh, "budget",
+      vt.lastTxnBatch("budget").fold(0L)(_ + 1)).get, 1),
+    ("overwrite", () => (), () => vt.overwrite(fresh), 1),
+    ("optimize", () => (), () => vt.optimize("id", 4), 7),
+    ("coalesceDv", () => twoSidecars(), () => vt.coalesceDv(), 1))
+
+  for ((name, setUp, run, b) <- commitPaths) {
+    test(s"$name: at most the pinned job count") {
+      vt.restore(baseVersion)
+      setUp()
+      val before = vt.latestVersion
+      val (v, jobs) = countingJobs(run())
+      assert(v > before, s"$name committed nothing")
+      assert(jobs <= b, s"$name ran $jobs jobs, budget $b")
+    }
+  }
 }
