@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -38,6 +39,7 @@ private[graft] object GraftDvBitmap {
 
   /** Serializable Hadoop conf carrier for executor-side FS access (the
     * task must resolve the same FileSystem the driver planned with).
+    * Tasks receive it through [[shippedConf]].
     */
   final class SerConf(@transient var value: Configuration)
       extends Serializable {
@@ -51,6 +53,13 @@ private[graft] object GraftDvBitmap {
       value.readFields(in)
     }
   }
+
+  /** The session's Hadoop conf as every task that touches a sidecar
+    * receives it: one broadcast, fetched once per executor, instead of
+    * a copy serialized into each task.
+    */
+  def shippedConf(spark: SparkSession): Broadcast[SerConf] =
+    spark.sparkContext.broadcast(new SerConf(spark.sessionState.newHadoopConf()))
 
   def encode(sortedDistinct: Array[Long], out: java.io.DataOutputStream): Unit = {
     out.writeInt(Magic)
@@ -170,12 +179,13 @@ private[graft] object GraftDvBitmap {
     */
   def writeUnions(spark: SparkSession, root: Path, dvName: String,
                   byFile: Map[String, Seq[String]]): Unit = {
-    val conf = new SerConf(spark.sessionState.newHadoopConf())
+    val conf = shippedConf(spark)
     val base = new Path(root, dvName).toString
     spark.sparkContext.parallelize(byFile.toSeq,
         math.max(1, math.min(byFile.size, spark.sparkContext.defaultParallelism)))
       .foreach { case (key, paths) =>
-        publish(conf.value, new Path(base, key + ".dvb"), loadUnion(conf.value, paths))
+        val hc = conf.value.value
+        publish(hc, new Path(base, key + ".dvb"), loadUnion(hc, paths))
       }
   }
 
@@ -185,14 +195,14 @@ private[graft] object GraftDvBitmap {
     * downstream writer in the same task. Input MUST arrive sorted by
     * (dir, file, pos) within the partition.
     */
-  private def emitting(it: Iterator[Row], base: String, conf: SerConf,
+  private def emitting(it: Iterator[Row], base: String, conf: Broadcast[SerConf],
                        dirCounts: org.apache.spark.util.CollectionAccumulator[(String, Long)],
                        dirIdx: Int, fileIdx: Int, posIdx: Int): Iterator[Row] =
     new Iterator[Row] {
       private var cur: (String, String) = null
       private val buf = scala.collection.mutable.ArrayBuffer[Long]()
       private def flush(): Unit = if (cur != null) {
-        publish(conf.value, new Path(base, s"${cur._1}/${cur._2}.dvb"), buf.toArray)
+        publish(conf.value.value, new Path(base, s"${cur._1}/${cur._2}.dvb"), buf.toArray)
         dirCounts.add((cur._1, buf.length.toLong))
         buf.clear()
         cur = null
@@ -227,7 +237,7 @@ private[graft] object GraftDvBitmap {
   def fuseWrite(spark: SparkSession, root: Path, dvName: String,
                 df: DataFrame): (DataFrame, () => Map[String, Long]) = {
     import org.apache.spark.sql.functions.col
-    val conf = new SerConf(spark.sessionState.newHadoopConf())
+    val conf = shippedConf(spark)
     val base = new Path(root, dvName).toString
     val dirCounts =
       spark.sparkContext.collectionAccumulator[(String, Long)](
@@ -256,8 +266,7 @@ private[graft] object GraftDvBitmap {
   def keep(spark: SparkSession, byFile: Map[String, Seq[String]],
            file: Column, pos: Column): Column =
     GraftSqlBridge.column(GraftDvKeep(GraftSqlBridge.expression(file),
-      GraftSqlBridge.expression(pos), byFile, spark.sparkContext.broadcast(
-        new SerConf(spark.sessionState.newHadoopConf()))))
+      GraftSqlBridge.expression(pos), byFile, shippedConf(spark)))
 
   /** List every bitmap of the given sidecars as (dataDir, dataFile,
     * bitmapPath) — driver-side, #bitmap-files-sized (metadata, not
@@ -319,8 +328,7 @@ private[graft] object GraftDvBitmap {
   */
 private[sources] final case class GraftDvKeep(file: Expression, pos: Expression,
                                               byFile: Map[String, Seq[String]],
-                                              conf: org.apache.spark.broadcast.Broadcast[
-                                                GraftDvBitmap.SerConf])
+                                              conf: Broadcast[GraftDvBitmap.SerConf])
     extends BinaryExpression with Predicate {
   @transient private var lastFile: UTF8String = _
   @transient private var hidden: Array[Long] = _

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory}
@@ -29,7 +30,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 private[sources] class GraftVtDvBatch(clean: Batch, dv: Batch,
                                       dvPaths: Map[String, Seq[String]],
                                       dataTypes: Array[DataType],
-                                      conf: GraftDvBitmap.SerConf)
+                                      conf: Broadcast[GraftDvBitmap.SerConf])
     extends Batch {
 
   private val cleanFactory = clean.createReaderFactory()
@@ -121,7 +122,7 @@ private[sources] class GraftVtCdfReaderFactory(plain: PartitionReaderFactory,
                                                dv: PartitionReaderFactory,
                                                dataTypes: Array[DataType],
                                                cdfTypes: Array[DataType],
-                                               conf: GraftDvBitmap.SerConf)
+                                               conf: Broadcast[GraftDvBitmap.SerConf])
     extends PartitionReaderFactory {
 
   private def outIndices: Array[Int] =
@@ -141,7 +142,7 @@ private[sources] class GraftVtCdfReaderFactory(plain: PartitionReaderFactory,
         new GraftVtFilteringReader(dv.createReader(d.inner),
           outTypes, outIndices,
           GraftVtFilteringReader.dvKeep(
-            GraftDvBitmap.loadUnion(conf.value, d.dvPaths), dataTypes.length))
+            GraftDvBitmap.loadUnion(conf.value.value, d.dvPaths), dataTypes.length))
       case r: GraftVtRowOnlyPartition => plain.createReader(r.inner)
       case other => plain.createReader(other)
     }
@@ -174,7 +175,7 @@ private[sources] class GraftVtCdfReaderFactory(plain: PartitionReaderFactory,
 private[sources] class GraftVtDvReaderFactory(clean: PartitionReaderFactory,
                                               dv: PartitionReaderFactory,
                                               dataTypes: Array[DataType],
-                                              conf: GraftDvBitmap.SerConf,
+                                              conf: Broadcast[GraftDvBitmap.SerConf],
                                               columnarDv: Boolean = false)
     extends PartitionReaderFactory {
 
@@ -182,7 +183,7 @@ private[sources] class GraftVtDvReaderFactory(clean: PartitionReaderFactory,
     p match {
       case d: GraftVtDvPartition =>
         new GraftVtDvRowReader(dv.createReader(d.inner),
-          GraftDvBitmap.loadUnion(conf.value, d.dvPaths), dataTypes)
+          GraftDvBitmap.loadUnion(conf.value.value, d.dvPaths), dataTypes)
       case r: GraftVtRowOnlyPartition => clean.createReader(r.inner)
       case other => clean.createReader(other)
     }
@@ -204,7 +205,7 @@ private[sources] class GraftVtDvReaderFactory(clean: PartitionReaderFactory,
     p match {
       case d: GraftVtDvPartition if columnarDv =>
         new GraftVtDvColumnarReader(dv.createColumnarReader(d.inner),
-          GraftDvBitmap.loadUnion(conf.value, d.dvPaths), dataTypes)
+          GraftDvBitmap.loadUnion(conf.value.value, d.dvPaths), dataTypes)
       case _: GraftVtDvPartition | _: GraftVtRowOnlyPartition =>
         throw new UnsupportedOperationException(
           "DV/row-only partitions read row-based")
@@ -416,7 +417,7 @@ private[sources] case class GraftVtCdfReaders(
     mkDv: () => PartitionReaderFactory,
     dataTypes: Array[DataType],
     cdfTypes: Array[DataType],
-    conf: GraftDvBitmap.SerConf) {
+    conf: Broadcast[GraftDvBitmap.SerConf]) {
   def mkFactory(): PartitionReaderFactory =
     new GraftVtCdfReaderFactory(mkPlain(), mkTyped(), mkDv(),
       dataTypes, cdfTypes, conf)

@@ -12,7 +12,8 @@ import org.apache.spark.sql.streaming.OutputMode
   * }}}
   * Every micro-batch commits through the EXACTLY-ONCE idempotence
   * protocol ([[VersionedTable.appendStreamBatch]], Delta's
-  * `txnAppId`/`txnVersion` shape): the commit is tagged (app, batchId)
+  * `txnAppId`/`txnVersion` shape, checked by the table's one commit
+  * loop on every lost claim): the commit is tagged (app, batchId)
   * and a replayed batch — the crash-between-table-commit-and-checkpoint
   * case — is recognized and SKIPPED, never double-appended, while
   * interleaved writes by other apps or plain appends land freely.

@@ -168,10 +168,10 @@ private[sources] class GraftVtTable(vt: VersionedTable, version: Int,
     new GraftVtScanBuilder(vt, version, rootPath, schema, options, changeFeed)
 
   /** Write path (`df.write.format("graftvt").mode(...)` over an
-    * EXISTING table): append rides the full optimistic-concurrency
-    * commit protocol ([[VersionedTable.appendWithRetry]] — racing
-    * writers all land), overwrite replaces the active set as one
-    * commit. A V1 fallback write: the commit protocol needs the whole
+    * EXISTING table): append rides the table's one commit loop with
+    * retries ([[VersionedTable.appendWithRetry]] — racing writers all
+    * land), overwrite replaces the active set as one commit through the
+    * same loop without retries. A V1 fallback write: the commit protocol needs the whole
     * payload written before one atomic manifest publish, which is
     * exactly the InsertableRelation shape — a per-partition DataWriter
     * commit would buy nothing (parquet tasks already write files; the
@@ -467,7 +467,7 @@ private[sources] class GraftVtScanBuilder(vt: VersionedTable, version: Int,
           .createReaderFactory(),
         dataTypes = physDataCols.fields.map(_.dataType),
         cdfTypes = cdfStruct.fields.map(_.dataType),
-        conf = new GraftDvBitmap.SerConf(spark.sessionState.newHadoopConf()))
+        conf = GraftDvBitmap.shippedConf(spark))
       val fromV = Option(options.get("startingVersion")).map(_.trim.toInt)
         .getOrElse(0)
       val toV = Option(options.get("endingVersion")).map(_.trim.toInt)
@@ -667,7 +667,7 @@ private[graft] class GraftVtScan(spark: SparkSession, vt: VersionedTable,
           GraftVtFoldedRead.withRowIndex(physRequired))
         new GraftVtDvBatch(parquet.toBatch, dvScan.toBatch,
           dvBitmapPaths, physRequired.fields.map(_.dataType),
-          new GraftDvBitmap.SerConf(spark.sessionState.newHadoopConf()))
+          GraftDvBitmap.shippedConf(spark))
       }
     case Some((fromV, toV, cdfCols)) =>
       new GraftVtCdfBatch(spark, vt, rootPath, fromV, toV, cdfCols,

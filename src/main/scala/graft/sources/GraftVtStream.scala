@@ -421,7 +421,7 @@ class GraftVtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
         // dispatching factory: DV partitions filter hidden rows, clean
         // partitions (and whole DV-free batches) delegate untouched
         new GraftVtDvReaderFactory(mkReaderFactory(), mkDv(), dvTypes,
-          new GraftDvBitmap.SerConf(spark.sessionState.newHadoopConf()))
+          GraftDvBitmap.shippedConf(spark))
       case None => mkReaderFactory()
     }
 

@@ -41,10 +41,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    HDFS — see [[atomicClaim]]): a crash mid-commit leaves an orphan
   *    data dir and/or a `.tmp` manifest, both ignored by readers and
   *    reclaimed by [[vacuum]];
-  *    two racing writers contend on the same claim and the loser
-  *    fails loudly (optimistic concurrency, single winner — the same
-  *    protocol as Delta, minus the loser's automatic retry, which
-  *    [[appendWithRetry]] adds for the always-safe append case).
+  *  - every write ends in ONE commit loop ([[commit]]): two racing
+  *    writers contend on the same claim, and the loser re-checks the
+  *    intervening commits under its command's conflict rule and
+  *    retries or fails loudly (optimistic concurrency, single winner —
+  *    the same protocol as Delta).
   *
   * [[vacuum]] is the retention pass: checkpoint the oldest kept
   * version (so it stays resolvable), drop older manifests/checkpoints,
@@ -538,14 +539,13 @@ class VersionedTable(spark: SparkSession, dir: String,
   private def dirSizeBytes(name: String): Long =
     fs.getContentSummary(new Path(root, name)).getLength
 
-  /** Atomically publish manifest `c` as version `c.version`: write to a
-    * `.tmp` sibling, then [[atomicClaim]] the final slot — of two
-    * racing writers exactly one wins; the loser must re-read the log
-    * and retry its whole commit (we fail loudly instead of retrying
-    * silently — the caller decides whether replaying its write is
-    * safe).
+  /** Claim slot `c.version` for manifest `c`: write it to a `.tmp`
+    * sibling, then [[atomicClaim]] the final slot — of two racing
+    * writers exactly one wins. False means another writer holds the
+    * slot; a throw leaves the outcome unknown. Only [[commit]] calls
+    * this.
     */
-  private def publish(c0: Commit): Unit = {
+  private def claim(c0: Commit): Boolean = {
     // Every committed directory carries its byte size in the log (the
     // listing is metadata-only), so DESCRIBE DETAIL and size-based
     // maintenance decisions never scan the table.
@@ -574,14 +574,138 @@ class VersionedTable(spark: SparkSession, dir: String,
       f"${c.version}%08d.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val out = fs.create(tmp, true)
     try out.write(VersionedTable.encodeCommit(c)) finally out.close()
-    val target = manifestPath(c.version)
-    if (!atomicClaim(tmp, target)) {
-      fs.delete(tmp, false)
-      throw new GraftConflictException(
-        s"concurrent commit: version ${c.version} of $dir was published by " +
-          "another writer; re-read the table and retry the commit")
+    val won = atomicClaim(tmp, manifestPath(c.version))
+    if (!won) fs.delete(tmp, false)
+    won
+  }
+
+  /** Commit a metadata-only manifest at exactly `c.version`: no
+    * payload, no retry, no post-commit hook.
+    */
+  private def publish(c: Commit): Unit = commit(c.version - 1, _ => c)
+
+  /** Test seam: runs once per commit, after the payload is written and
+    * before the first claim — specs inject a concurrent commit here
+    * deterministically instead of racing threads.
+    */
+  private[graft] var beforePublish: () => Unit = () => ()
+
+  /** THE commit loop — every write of this table ends here, in Delta's
+    * optimistic-concurrency shape: the payload is written once, then
+    * the loop claims the successor of the newest version this writer
+    * has reconciled against (`mkCommit` builds the manifest for that
+    * slot). Recomputing the slot fresh per attempt would let a stale
+    * manifest land at a later free slot without ever meeting a
+    * conflict — hiding, say, a column a concurrent evolving append
+    * added. On a lost claim, in order:
+    *  - a winner that committed this writer's streaming batch
+    *    (`txn`) makes the command a skip: None;
+    *  - `maxRetries` lost claims end the loop loudly;
+    *  - `conflict` judges every commit that landed since the last
+    *    reconciled version; a reason refuses the retry loudly;
+    *  - a winner that added a CHECK constraint re-validates the
+    *    `revalidate` directories (one constraint read checks every
+    *    directory and becomes the next baseline — re-reading per
+    *    directory would mark a constraint validated that no directory
+    *    was checked against).
+    * A definite loss — a refused retry, exhausted retries, a replay
+    * skip, or a throw while re-reconciling — deletes every directory
+    * in `written`. A throwing claim leaves the outcome unknown and
+    * reclaims nothing; [[vacuum]] reclaims what no manifest names.
+    *
+    * The commit is durable once claimed. The checkpoint and, when the
+    * base snapshot's properties arm it and `hook` is set, the
+    * post-commit hook ([[autoMaintain]]) run after the loop: a lost
+    * maintenance race is swallowed, any other failure there raises
+    * [[GraftPostCommitMaintenanceException]], so a committed write
+    * never reads as failed and is never retried into a double write.
+    */
+  private def commit(base: Int, mkCommit: Int => Commit, maxRetries: Int = 0,
+                     written: Seq[String] = Nil, revalidate: Seq[String] = Nil,
+                     conflict: Commit => Option[String] = _ => None,
+                     txn: Option[(String, Long)] = None,
+                     hook: Boolean = false): Option[Int] = {
+    val armed = hook && maintenanceArmed(base)
+    def reclaim(): Unit = written.foreach(n => fs.delete(new Path(root, n), true))
+    beforePublish()
+    var validated: Option[Map[String, String]] = None
+    var attempt = 0
+    var v = base + 1
+    var won = false
+    while (!won) {
+      val c = try mkCommit(v) catch { case t: Throwable => reclaim(); throw t }
+      won = claim(c)
+      if (!won) {
+        val replayed = try {
+          val latest = latestVersion
+          val skip = txn.exists { case (app, b) => lastCommittedBatch(app).exists(_ >= b) }
+          if (!skip) {
+            if (attempt >= maxRetries) throw new GraftConflictException(
+              s"concurrent commit: version $v of $dir was published by " +
+                "another writer; re-read the table and retry the commit")
+            attempt += 1
+            val winners = (v to latest).map(w => w -> commitAt(w))
+            winners.foreach { case (w, cw) =>
+              conflict(cw).foreach(why => throw new GraftConflictException(
+                s"concurrent commit $w (${cw.op}) of $dir $why; re-run the " +
+                  s"${c.op} on the new snapshot"))
+            }
+            if (revalidate.nonEmpty && winners.exists(_._2.constraintAdd.isDefined)) {
+              val now = currentConstraints
+              val was = validated.getOrElse(
+                if (base < 0) Map.empty[String, String] else snapshotAt(base).constraints)
+              revalidate.foreach(revalidatePayload(_, was, now))
+              validated = Some(now)
+            }
+            v = latest + 1
+          }
+          skip
+        } catch { case t: Throwable => reclaim(); throw t }
+        if (replayed) { reclaim(); return None }
+      }
     }
-    maybeCheckpoint(c.version)
+    try {
+      maybeCheckpoint(v)
+      if (armed) autoMaintain()
+    } catch {
+      case _: GraftConflictException => () // a lost maintenance race
+      case t: Throwable => throw new GraftPostCommitMaintenanceException(v,
+        s"the write COMMITTED at version $v of $dir; only the post-commit " +
+          "checkpoint or auto-maintenance failed — do NOT retry the write " +
+          s"(cause: ${t.getMessage})", t)
+    }
+    Some(v)
+  }
+
+  /** The disjointness rule of a command that read `touched`: a commit
+    * that landed since its snapshot conflicts when it removed a
+    * touched directory (re-committing would resurrect rows the winner
+    * rewrote), attached a deletion vector to one (a rewrite computed
+    * from the pre-DV fold would resurrect the winner's deleted rows,
+    * and a second DV would double-count hidden rows), reset the DV map
+    * (a RESTORE; `coalesce-dv` is exempt — it merges sidecars without
+    * changing one row's visibility or any hidden count), added data
+    * `addedMayMatch` flags (a matching row the command never saw would
+    * silently survive), or made the `schemaRace` change.
+    */
+  private def disjointFrom(touched: Seq[String],
+                           addedMayMatch: Commit => Seq[String] = _ => Nil,
+                           schemaRace: Commit => Boolean = _ => false)
+                          (c: Commit): Option[String] = {
+    val removedHit = c.removed.intersect(touched)
+    val dvHit = if (c.dvAdd.isDefined) c.dvDirs.intersect(touched) else Nil
+    lazy val mayMatch = addedMayMatch(c)
+    if (removedHit.nonEmpty)
+      Some(s"rewrote directories this command read (${removedHit.mkString(", ")})")
+    else if (dvHit.nonEmpty) Some("attached deletion vectors to directories " +
+      s"this command read (${dvHit.mkString(", ")})")
+    else if (c.dvReset.isDefined && c.op != "coalesce-dv")
+      Some("reset the table's deletion-vector state while this command was in flight")
+    else if (mayMatch.nonEmpty) Some("added data that may match this " +
+      s"command's predicate (${mayMatch.mkString(", ")})")
+    else if (schemaRace(c))
+      Some("changed the table schema while this command carried its own schema commit")
+    else None
   }
 
   /** Write the full-active-set checkpoint for `v` if it is on the
@@ -608,9 +732,9 @@ class VersionedTable(spark: SparkSession, dir: String,
   /** Write `df`'s rows as the data payload of version `v` and return
     * (dirName, rowsWritten). The name carries a random suffix so two
     * writers racing toward the same version number never write into
-    * the same directory — the loser's rename fails at [[publish]] and
-    * its orphan payload is reclaimed by [[vacuum]] (the same reason
-    * Delta names data files by GUID while manifests are version-keyed).
+    * the same directory — the loser's claim fails at [[commit]], which
+    * reclaims its payload (the same reason Delta names data files by
+    * GUID while manifests are version-keyed).
     * The row count comes from the written files' parquet footers
     * (metadata-only), not a second data scan.
     */
@@ -967,11 +1091,12 @@ class VersionedTable(spark: SparkSession, dir: String,
     * record the union of the CURRENT schema and this payload's fields
     * — re-publishing the pre-race schema would hide a concurrently
     * added column from every reader. A TYPE conflict on a shared
-    * column aborts loudly and reclaims the payload: the already-written
-    * files carry this writer's physical type, and committing them
-    * under either schema would fail readers of the other.
+    * column aborts loudly ([[commit]] then reclaims the payload): the
+    * already-written files carry this writer's physical type, and
+    * committing them under either schema would fail readers of the
+    * other.
     */
-  private def reconcileSchemaOnRetry(asOf: Int, payloadName: String,
+  private def reconcileSchemaOnRetry(asOf: Int,
                                      payload: org.apache.spark.sql.types.StructType)
       : String = {
     if (asOf < 0) return SchemaCompat.nullableJson(payload)
@@ -979,12 +1104,9 @@ class VersionedTable(spark: SparkSession, dir: String,
     snap.schemaJson.map(schemaFromJson) match {
       case None => SchemaCompat.nullableJson(payload)
       case Some(current) =>
-        def loud(msg: String): Nothing = {
-          fs.delete(new Path(root, payloadName), true)
-          throw new GraftConflictException(
-            s"retried append to $dir conflicts with a concurrent schema " +
-              s"change ($msg); re-align and re-append")
-        }
+        def loud(msg: String): Nothing = throw new GraftConflictException(
+          s"retried append to $dir conflicts with a concurrent schema " +
+            s"change ($msg); re-align and re-append")
         val conflicts = payload.fields.flatMap(f =>
           current.find(_.name.equalsIgnoreCase(f.name)).filter(_.dataType !=
             SchemaCompat.nullableDeep(f.dataType)).map(c =>
@@ -1443,22 +1565,41 @@ class VersionedTable(spark: SparkSession, dir: String,
 
   /** Commit `df` as a new version extending the current active set.
     * Returns the committed version number. Delta-encoded: the manifest
-    * records only the one added directory, whatever the table size.
+    * records only the added directories, whatever the table size. A
+    * concurrent commit fails it loudly ([[appendWithRetry]] retries).
     */
-  def append(df0: DataFrame): Int = {
+  def append(df0: DataFrame): Int = writeAndCommit(df0, maxRetries = 0).get
+
+  /** The one payload-to-manifest path of every append-shaped write:
+    * align `df0` to the table schema (or, to `replace` the active set,
+    * take its own schema), write it once, validated against the base
+    * snapshot's CHECK constraints, and [[commit]] it. No winner
+    * conflicts with an append — its manifest adds this writer's
+    * directories whatever the winner committed — but a retried
+    * manifest re-merges the schema ([[reconcileSchemaOnRetry]]) so it
+    * never hides a column an evolving winner added.
+    */
+  private def writeAndCommit(df0: DataFrame, maxRetries: Int,
+                             txn: Option[(String, Long)] = None,
+                             replace: Boolean = false): Option[Int] = {
     val base = latestVersion
-    val (df, schemaJson) = alignedForAppend(df0, base)
-    val armed = Some(maintenanceArmed(base))
-    val v = base + 1
-    val parts = writePayloadAuto(df, v,
-      if (base < 0) Map.empty else snapshotAt(base).constraints, base)
-    publish(Commit(v, "append", parts.map(_._1), Seq.empty,
-      parts.map(_._2).sum, System.currentTimeMillis(),
-      addedStats = parts.map(p => p._1 -> p._3).toMap,
-      addedRows = parts.map(p => p._1 -> p._2).toMap,
-      schemaJson = Some(schemaJson)))
-    runPostCommitMaintenance(v, armed)
-    v
+    val (df, schemaJson) =
+      if (replace) (df0, SchemaCompat.nullableJson(df0.schema))
+      else alignedForAppend(df0, base)
+    // OVERWRITE writes under the frame's own names: the column map
+    // dissolves with the directories that needed it
+    val parts = writePayloadAuto(df, base + 1,
+      if (base < 0) Map.empty else snapshotAt(base).constraints, base,
+      keepPhysical = !replace)
+    val names = parts.map(_._1)
+    commit(base, v => Commit(v, if (replace) "overwrite" else "append", names,
+        if (replace && base >= 0) activeAt(base) else Nil, parts.map(_._2).sum,
+        System.currentTimeMillis(), txn.map(_._1), txn.map(_._2),
+        addedStats = parts.map(p => p._1 -> p._3).toMap,
+        addedRows = parts.map(p => p._1 -> p._2).toMap,
+        schemaJson = Some(if (v == base + 1) schemaJson
+          else reconcileSchemaOnRetry(v - 1, df.schema))),
+      maxRetries, written = names, revalidate = names, txn = txn, hook = true)
   }
 
   /** Metadata-only COUNT(*) — Delta answers `SELECT COUNT(*)` from its
@@ -1613,7 +1754,7 @@ class VersionedTable(spark: SparkSession, dir: String,
   /** [[append]] with the optimistic-concurrency loser's retry — the
     * full Delta commit protocol: the payload is written ONCE (its
     * uniquely-named directory is version-agnostic; the `v%05d-` prefix
-    * is advisory), then the manifest publish is retried against fresh
+    * is advisory), then the manifest claim is retried against fresh
     * log state until it wins or `maxRetries` conflicts pass. Retrying
     * an append is always safe — a delta manifest adds this writer's
     * directory regardless of what the winner committed, so nothing is
@@ -1621,95 +1762,15 @@ class VersionedTable(spark: SparkSession, dir: String,
     * wrapper: replaying "replace the table" after someone else's
     * commit changes meaning, and that decision belongs to the caller.
     */
-  /** Test seam: runs once after an appendWithRetry payload is fully
-    * written and before its first publish attempt — specs inject a
-    * concurrent commit here deterministically.
-    */
-  private[graft] var beforeAppendPublish: () => Unit = () => ()
+  def appendWithRetry(df0: DataFrame, maxRetries: Int = 5): Int =
+    writeAndCommit(df0, maxRetries).get
 
-  def appendWithRetry(df0: DataFrame, maxRetries: Int = 5): Int = {
-    val base = latestVersion
-    val (df, schemaJson0) = alignedForAppend(df0, base)
-    val armed = Some(maintenanceArmed(base))
-    var schemaJson = schemaJson0
-    var validated = if (base < 0) Map.empty[String, String]
-      else snapshotAt(base).constraints
-    val parts = writePayloadAuto(df, base + 1, validated, base)
-    val names = parts.map(_._1)
-    beforeAppendPublish()
-    var attempt = 0
-    // The attempted slot is ALWAYS the successor of a version this
-    // writer has reconciled against (base at first; the re-read latest
-    // after each loss). Recomputing the slot fresh per attempt would
-    // let a slow writer land a STALE manifest at a later free slot
-    // without ever hitting the conflict path — hiding, for example, a
-    // column a concurrent evolving append added.
-    var expected = base + 1
-    while (true) {
-      try {
-        publish(Commit(expected, "append", names, Seq.empty,
-          parts.map(_._2).sum, System.currentTimeMillis(),
-          addedStats = parts.map(p => p._1 -> p._3).toMap,
-          addedRows = parts.map(p => p._1 -> p._2).toMap,
-          schemaJson = Some(schemaJson)))
-        runPostCommitMaintenance(expected, armed)
-        return expected
-      } catch {
-        case e: IllegalStateException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-          // The winner may have been an addConstraint: re-validate the
-          // already-written payload (EVERY directory of a partitioned
-          // split, each against the SAME pre-loss baseline — the first
-          // directory's refreshed map must not hide a fresh constraint
-          // from the second) before re-claiming a slot — retrying blind
-          // would publish data the new constraint never checked. Any
-          // abort reclaims the whole payload, not just the violating
-          // directory.
-          val baseline = validated
-          // ONE constraint read covers the whole loop AND becomes the
-          // next baseline — a constraint committed between a per-
-          // directory re-read and a post-loop re-read would be marked
-          // validated without ever being checked against the payload.
-          val nowConstraints = currentConstraints
-          try names.foreach(n =>
-            revalidatePayload(n, baseline, Some(nowConstraints)))
-          catch { case t: Throwable =>
-            names.foreach(n => fs.delete(new Path(root, n), true)); throw t
-          }
-          validated = nowConstraints
-          // ...or an EVOLVING append: re-merge the schema so the
-          // retried manifest never hides the winner's columns (loud on
-          // a type conflict — the payload's physical types are final).
-          // Latest is read ONCE and the next attempt targets exactly
-          // its successor: anything landing after this read makes the
-          // next publish fail and re-enter this reconciliation.
-          val upTo = latestVersion
-          try schemaJson = reconcileSchemaOnRetry(upTo, names.head, df.schema)
-          catch { case t: Throwable =>
-            names.foreach(n => fs.delete(new Path(root, n), true)); throw t
-          }
-          expected = upTo + 1
-      }
-    }
-    -1 // unreachable
-  }
-
-  /** Re-check the written payload `name` against constraints that
-    * appeared since `validated` was read (retry-loop support): returns
-    * the now-current constraint set, or deletes the payload and throws
-    * if a new constraint rejects it. Callers revalidating SEVERAL
-    * directories must pass ONE `nowSnapshot` read before the loop and
-    * assign exactly that snapshot afterwards — re-reading per directory
-    * (or once more after the loop) opens a window where a constraint
-    * committed between the reads is marked validated without any
-    * directory ever being checked against it.
+  /** Re-check the written directory `name` against the constraints in
+    * `now` that `validated` lacks (retry-loop support); throws if one
+    * of them rejects a row.
     */
-  private def revalidatePayload(name: String,
-                                validated: Map[String, String],
-                                nowSnapshot: Option[Map[String, String]] = None)
-      : Map[String, String] = {
-    val now = nowSnapshot.getOrElse(currentConstraints)
+  private def revalidatePayload(name: String, validated: Map[String, String],
+                                now: Map[String, String]): Unit = {
     val fresh = now.filter { case (n, ex) => !validated.get(n).contains(ex) }
     if (fresh.nonEmpty) {
       val latestNow = latestVersion
@@ -1719,15 +1780,11 @@ class VersionedTable(spark: SparkSession, dir: String,
       val (_, _, violations) =
         statsOf(new Path(root, name).toString, fresh, p2l)
       val broken = violations.filter(_._2 > 0L)
-      if (broken.nonEmpty) {
-        fs.delete(new Path(root, name), true)
-        throw new IllegalArgumentException(
-          s"retried write to $dir violates CHECK constraint(s) added " +
-            s"concurrently: " + broken.map { case (n, c) =>
-              s"$n [${fresh(n)}] on $c row(s)" }.mkString("; "))
-      }
+      if (broken.nonEmpty) throw new IllegalArgumentException(
+        s"retried write to $dir violates CHECK constraint(s) added " +
+          s"concurrently: " + broken.map { case (n, c) =>
+            s"$n [${fresh(n)}] on $c row(s)" }.mkString("; "))
     }
-    now
   }
 
   /** EXACTLY-ONCE streaming append — the Delta `txnAppId`/`txnVersion`
@@ -1738,68 +1795,15 @@ class VersionedTable(spark: SparkSession, dir: String,
     * with monotonically increasing ids, so "newest committed batch id
     * for this app >= mine" exactly identifies a replay — a crash
     * between the table commit and the checkpoint commit heals as a
-    * skip instead of a double-append. Interleaved commits by OTHER
-    * writers (plain appends, other apps) are walked past when looking
-    * up this app's newest batch id; the walk is bounded in practice by
-    * the interleave distance between this app's commits.
+    * skip instead of a double-append. A replay racer that lands the
+    * same batch while this one is in flight also makes it a skip
+    * ([[commit]] re-checks the tag on every lost claim).
     */
   def appendStreamBatch(df0: DataFrame, app: String, batchId: Long,
                         maxRetries: Int = 5): Option[Int] = {
     require(app.nonEmpty, "app id must be non-empty")
-    if (lastCommittedBatch(app).exists(_ >= batchId)) return None
-    val base = latestVersion
-    val (df, schemaJson0) = alignedForAppend(df0, base)
-    val armed = Some(maintenanceArmed(base))
-    var schemaJson = schemaJson0
-    var validated = if (base < 0) Map.empty[String, String]
-      else snapshotAt(base).constraints
-    val parts = writePayloadAuto(df, base + 1, validated, base)
-    val names = parts.map(_._1)
-    var attempt = 0
-    // Slot discipline identical to appendWithRetry: attempt only the
-    // successor of a version this writer has reconciled against.
-    var expected = base + 1
-    while (true) {
-      try {
-        publish(Commit(expected, "append", names, Seq.empty,
-          parts.map(_._2).sum, System.currentTimeMillis(),
-          Some(app), Some(batchId),
-          addedStats = parts.map(p => p._1 -> p._3).toMap,
-          addedRows = parts.map(p => p._1 -> p._2).toMap,
-          schemaJson = Some(schemaJson)))
-        runPostCommitMaintenance(expected, armed)
-        return Some(expected)
-      } catch {
-        case e: IllegalStateException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-          // The winner might have been a replay racer of the SAME
-          // batch: re-check before re-publishing, dropping our orphan
-          // payload if the batch landed.
-          if (lastCommittedBatch(app).exists(_ >= batchId)) {
-            names.foreach(n => fs.delete(new Path(root, n), true))
-            return None
-          }
-          // ...or an addConstraint / evolving append: re-validate and
-          // re-merge the schema before re-claiming (same multi-
-          // directory baseline-and-reclaim discipline as
-          // appendWithRetry).
-          val baseline = validated
-          try {
-            // same single-read discipline as appendWithRetry
-            val nowConstraints = currentConstraints
-            names.foreach(n =>
-              revalidatePayload(n, baseline, Some(nowConstraints)))
-            validated = nowConstraints
-            val upTo = latestVersion
-            schemaJson = reconcileSchemaOnRetry(upTo, names.head, df.schema)
-            expected = upTo + 1
-          } catch { case t: Throwable =>
-            names.foreach(n => fs.delete(new Path(root, n), true)); throw t
-          }
-      }
-    }
-    None // unreachable
+    if (lastCommittedBatch(app).exists(_ >= batchId)) None
+    else writeAndCommit(df0, maxRetries, txn = Some((app, batchId)))
   }
 
   /** The newest committed batch id for `app`: checkpoints fold every
@@ -1824,19 +1828,8 @@ class VersionedTable(spark: SparkSession, dir: String,
   /** Commit `df` as a new version REPLACING the active set. Old
     * versions stay readable until [[vacuum]].
     */
-  def overwrite(df: DataFrame): Int = {
-    val base = latestVersion
-    val v = base + 1
-    val parts = writePayloadAuto(df, v, currentConstraints, base,
-      keepPhysical = false)
-    val prevActive = if (v == 0) Seq.empty else activeAt(v - 1)
-    publish(Commit(v, "overwrite", parts.map(_._1), prevActive,
-      parts.map(_._2).sum, System.currentTimeMillis(),
-      addedStats = parts.map(p => p._1 -> p._3).toMap,
-      addedRows = parts.map(p => p._1 -> p._2).toMap,
-      schemaJson = Some(df.schema.pipe(graft.sources.SchemaCompat.nullableJson))))
-    v
-  }
+  def overwrite(df: DataFrame): Int =
+    writeAndCommit(df, maxRetries = 0, replace = true).get
 
   /** Union-read a set of this table's data directories (mergeSchema,
     * same as [[readAt]]).
@@ -2770,12 +2763,11 @@ class VersionedTable(spark: SparkSession, dir: String,
     *    table keeps one 0-row directory as the schema holder.
     * A write that throws reclaims everything this attempt already
     * wrote. A commit that hides, removes and adds nothing is a no-op:
-    * the current version is returned. Conflicts ride
-    * [[publishMutationRetrying]] with the front end's `addedMayMatch`.
+    * the current version is returned. The commit rides [[commit]]
+    * under [[disjointFrom]] with the front end's `addedMayMatch`.
     * `constraints` are the CHECK constraints the payload is validated
-    * against and the retry's validated baseline: the snapshot's, or
-    * none from a front end whose payload holds only rows the table
-    * already validated.
+    * against: the snapshot's, or none from a front end whose payload
+    * holds only rows the table already validated.
     */
   private def commitMutation(op: String, base: Int, touched: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
@@ -2812,15 +2804,15 @@ class VersionedTable(spark: SparkSession, dir: String,
         reclaim(added ++ cdf) // hides, removes and adds nothing: no-op
         return base
       }
-      publishMutationRetrying(commitOp, base, maxRetries, touched,
-        revalidate = added, addedMayMatch,
-        mkCommit = vv => Commit(vv, commitOp, added, removed, rows,
+      commit(base, vv => Commit(vv, commitOp, added, removed, rows,
           System.currentTimeMillis(), txn.map(_._1), txn.map(_._2),
           addedStats = addedStats, cdf = cdf, addedRows = added.map(_ -> rows).toMap,
           dvAdd = dv.map(_._1), dvDirs = dv.toSeq.flatMap(_._2.keys).sorted,
           dvDirRows = dv.fold(Map.empty[String, Long])(_._2),
           schemaJson = schemaJson, featuresAdd = features),
-        validated0 = constraints, schemaConflicts = schemaRace, txn = txn)
+        maxRetries, written = added ++ cdf ++ dv.map(_._1), revalidate = added,
+        conflict = disjointFrom(touched, addedMayMatch, schemaRace), txn = txn,
+        hook = true).getOrElse(latestVersion) // a replayed batch: a skip
     }
     val appended = dvPayload.orElse((post.toSeq ++ inserts).reduceOption(_.unionByName(_)))
     val preImages = pre match {
@@ -2872,131 +2864,10 @@ class VersionedTable(spark: SparkSession, dir: String,
     publishAs(op, added, touched, rows, addedStats, cdf)
   }
 
-  /** Test seam: runs once after a merge/delete result is fully written
-    * and before its first publish attempt — specs inject a concurrent
-    * commit here deterministically instead of racing threads.
-    */
-  private[graft] var beforeMutationPublish: () => Unit = () => ()
-
-  /** The optimistic-concurrency loser's retry for row-level MUTATIONS
-    * (merge/delete) — Delta's conflict-detection protocol: on a slot
-    * conflict, re-read the log and re-commit iff every intervening
-    * commit is provably DISJOINT from this mutation. Disjoint means:
-    * the winner removed none of the directories this mutation rewrote
-    * (its inputs would be gone — re-committing would resurrect rows
-    * the winner rewrote and lose the winner's changes), the winner
-    * added no data that may satisfy this mutation's predicate (checked
-    * by `addedMayMatch` — a matching row the mutation never saw would
-    * silently survive), and any concurrently added CHECK constraint
-    * re-validates the `revalidate` payloads. Anything unprovable fails
-    * loudly with the conflicting commit named; `maxRetries` bounds the
-    * loop. A plain concurrent APPEND of out-of-range data — the
-    * overwhelmingly common race at ingestion scale — retries through
-    * without a rewrite.
-    */
-  private def publishMutationRetrying(op: String, base: Int, maxRetries: Int,
-      touched: Seq[String], revalidate: Seq[String],
-      addedMayMatch: Commit => Seq[String], mkCommit: Int => Commit,
-      validated0: Map[String, String],
-      schemaConflicts: Commit => Boolean = _ => false,
-      txn: Option[(String, Long)] = None): Int = {
-    beforeMutationPublish()
-    var validated = validated0
-    var checkedThrough = base
-    var attempt = 0
-    while (true) {
-      val v = checkedThrough + 1
-      // the post-commit maintenance hook runs OUTSIDE this try: an
-      // IllegalStateException escaping it must never read as a slot
-      // conflict here, or the already-committed mutation would retry
-      // and commit twice
-      var committed = false
-      try {
-        publish(mkCommit(v))
-        committed = true
-      } catch {
-        case e: IllegalStateException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-          val newLatest = latestVersion
-          // The winner may have been a REPLAY RACER of this very
-          // (app, batch) — re-check the txn tag BEFORE the conflict
-          // scan (mirroring appendStreamBatch's loop): where the
-          // conflict detectors are inert (an all-null-key span yields
-          // no addedMayMatch) a blind retry would commit the same
-          // batch twice, and even where they fire, the racer should
-          // SKIP gracefully, not fail loudly. The orphan payload this
-          // attempt wrote is unreferenced and reclaimed by vacuum —
-          // the same policy as any lost-race payload.
-          txn.foreach { case (app, b) =>
-            if (lastCommittedBatch(app).exists(_ >= b)) return newLatest
-          }
-          (checkedThrough + 1 to newLatest).foreach { w =>
-            val c = commitAt(w)
-            val removedHit = c.removed.toSet.intersect(touched.toSet)
-            if (removedHit.nonEmpty) throw new GraftConflictException(
-              s"concurrent commit $w (${c.op}) of $dir rewrote directories " +
-                s"this $op read (${removedHit.mkString(", ")}); re-run the " +
-                s"$op on the new snapshot", e)
-            // A winner that ATTACHED a deletion vector to a directory
-            // this mutation read is as fatal as a rewrite of it: this
-            // mutation's output (a rewrite computed from the pre-DV
-            // fold, or a second DV whose per-dir counts would double-
-            // count) would resurrect the winner's deleted rows or
-            // corrupt the metadata-exact COUNT(*). Same rule as Delta:
-            // any concurrent modification of a read file conflicts.
-            val dvHit =
-              (if (c.dvAdd.isDefined) c.dvDirs.toSet else Set.empty[String])
-                .intersect(touched.toSet)
-            if (dvHit.nonEmpty) throw new GraftConflictException(
-              s"concurrent commit $w (${c.op}) of $dir attached deletion " +
-                s"vectors to directories this $op read " +
-                s"(${dvHit.mkString(", ")}); re-run the $op on the new " +
-                "snapshot", e)
-            // A RESTORE replaces the whole DV map — the rows this
-            // mutation read may no longer be the table. Unprovable:
-            // fail loudly. coalesce-dv is the one PROVABLY-SAFE
-            // dvReset: it merges existing sidecars without changing a
-            // single row's visibility or any per-dir hidden count, so
-            // everything this mutation read — and the sidecar/rewrite
-            // it computed — remains exactly valid; background sidecar
-            // maintenance must never kill a concurrent writer.
-            if (c.dvReset.isDefined && c.op != "coalesce-dv")
-              throw new GraftConflictException(
-              s"concurrent commit $w (${c.op}) of $dir reset the table's " +
-                s"deletion-vector state while this $op was in flight; " +
-                s"re-run the $op on the new snapshot", e)
-            val conflicts = addedMayMatch(c)
-            if (conflicts.nonEmpty) throw new GraftConflictException(
-              s"concurrent commit $w (${c.op}) of $dir added data that may " +
-                s"match this $op's predicate (${conflicts.mkString(", ")}); " +
-                s"re-run the $op on the new snapshot", e)
-            if (schemaConflicts(c)) throw new GraftConflictException(
-              s"concurrent commit $w (${c.op}) of $dir changed the table " +
-                s"schema while this $op carried its own schema commit; " +
-                s"re-run the $op on the new snapshot", e)
-            if (c.constraintAdd.isDefined) {
-              // one read, every payload checked against it, that same
-              // snapshot becomes the baseline (see revalidatePayload)
-              val nowConstraints = currentConstraints
-              revalidate.foreach(p =>
-                revalidatePayload(p, validated, Some(nowConstraints)))
-              validated = nowConstraints
-            }
-          }
-          checkedThrough = newLatest
-      }
-      if (committed) {
-        runPostCommitMaintenance(v)
-        return v
-      }
-    }
-    -1 // unreachable
-  }
-
   /** Post-commit OPT-IN auto-maintenance (Delta's auto-compaction
-    * shape): after every successful row-level mutation OR append
-    * commit, the table's own TBLPROPERTIES decide whether a
+    * shape): after every write [[commit]] lands (append, overwrite,
+    * streaming append, DML, OPTIMIZE, coalesce-dv), the base
+    * snapshot's TBLPROPERTIES decide whether a
     * maintenance commit piggybacks in the same session — without it a
     * 100 TB table under a steady delete stream accrues DV debt, and a
     * steady append stream accrues small files, until a human notices.
@@ -3016,16 +2887,16 @@ class VersionedTable(spark: SparkSession, dir: String,
     * Maintenance LOSES races gracefully: a concurrent commit aborts
     * the attempt silently — the user's mutation already succeeded, and
     * the next mutation re-triggers the check. Never recursive: the
-    * maintenance this hook triggers never re-triggers it (the rewrite
-    * path commits through the same retry loop, so a thread-local
-    * guard breaks the cycle; a triggered optimize also never
+    * maintenance this hook triggers never re-triggers it (it commits
+    * through the same loop, so a thread-local guard breaks the cycle;
+    * a triggered optimize also never
     * auto-coalesces behind the user's back). Malformed property values
     * are ignored (a typo must not fail a committed mutation).
     *
     * FAILURE CONTRACT (the hook runs AFTER the user's commit is
-    * durable, so no outcome here may make that commit look failed —
-    * a caller that retried "the failure" would double-apply a
-    * committed mutation):
+    * durable, as does the checkpoint, so no outcome here may make that
+    * commit look failed — a caller that retried "the failure" would
+    * double-apply a committed mutation; [[commit]] enforces it):
     *  - a lost maintenance race ([[GraftConflictException]]) is
     *    swallowed — the mutation already succeeded, and the next
     *    mutation re-triggers the check;
@@ -3053,23 +2924,6 @@ class VersionedTable(spark: SparkSession, dir: String,
     */
   private def maintenanceArmed(base: Int): Boolean =
     base >= 0 && maintenanceKeys.exists(snapshotAt(base).props.contains)
-
-  private def runPostCommitMaintenance(committedVersion: Int,
-      armed: Option[Boolean] = None): Unit = {
-    // ZERO-COST WHEN UNCONFIGURED: tables that never opted in pay
-    // nothing per commit — not even the latest-version probe; armed
-    // tables re-read the post-commit state properly inside the hook.
-    if (armed.contains(false)) return
-    try autoMaintain()
-    catch {
-      case _: GraftConflictException => () // race loss: best-effort hook
-      case t: Throwable => throw new GraftPostCommitMaintenanceException(
-        committedVersion,
-        s"the mutation COMMITTED at version $committedVersion of $dir; " +
-          "only the post-commit auto-maintenance failed — do NOT retry " +
-          s"the mutation (cause: ${t.getMessage})", t)
-    }
-  }
 
   /** Test seam: runs at the top of each triggered maintenance pass —
     * specs inject failures deterministically to pin the contract above.
@@ -3757,44 +3611,36 @@ class VersionedTable(spark: SparkSession, dir: String,
     * metadata-exact COUNT(*)) are carried through unchanged; older
     * versions keep reading their own sidecars until [[vacuum]].
     * Returns the committed version (unchanged when no directory stacks
-    * `minSidecars`). A concurrent commit of any kind invalidates the
-    * merged map — the loser recomputes from the new snapshot, up to
-    * `maxRetries` times.
+    * `minSidecars`). A concurrent commit that leaves every victim's DV
+    * state alone (an append, a DV on another directory) is retried
+    * through: the reset map is rebuilt from the snapshot each attempt
+    * extends, and the union job does not re-run. A winner that changed
+    * a victim's DV state ([[disjointFrom]]) makes it re-plan from the
+    * new snapshot, up to `maxRetries` times.
     */
   def coalesceDv(minSidecars: Int = 2, maxRetries: Int = 5): Int = {
     require(minSidecars >= 2, s"minSidecars must be >= 2: $minSidecars")
-    var attempt = 0
-    while (true) {
-      val latest = latestVersion
-      require(latest >= 0, s"$dir has no committed versions")
-      val snap = snapshotAt(latest)
-      val victims = snap.dvs.collect {
-        case (d, scs) if scs.distinct.size >= minSidecars => d -> scs.distinct
-      }
-      if (victims.isEmpty) return latest
-      val v0 = latest + 1
-      val merged = f"dv-v$v0%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-      GraftDvBitmap.writeUnions(spark, root, merged, GraftDvBitmap.pathsByFile(
-        spark, root, victims.values.flatten.toSeq.distinct, victims.keys.toSeq))
-      val newDvs = snap.dvs.map { case (d, scs) =>
-        d -> (if (victims.contains(d)) Seq(merged) else scs)
-      }
-      try {
-        publish(Commit(v0, "coalesce-dv", Seq.empty, Seq.empty, 0L,
-          System.currentTimeMillis(),
-          dvReset = Some(newDvs), dvResetRows = Some(snap.dvRowsByDir)))
-        return v0
-      } catch {
-        case e: IllegalStateException =>
-          // lost the slot: the merged map may be stale (the winner may
-          // have attached or folded sidecars) — drop this attempt's
-          // merge and recompute from the new snapshot
-          fs.delete(new Path(root, merged), true)
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+    val base = latestVersion
+    require(base >= 0, s"$dir has no committed versions")
+    val victims = snapshotAt(base).dvs.collect {
+      case (d, scs) if scs.distinct.size >= minSidecars => d -> scs.distinct
     }
-    sys.error("unreachable: the retry loop returns or throws")
+    if (victims.isEmpty) return base
+    val merged = f"dv-v${base + 1}%05d-${java.util.UUID.randomUUID().toString.take(8)}"
+    GraftDvBitmap.writeUnions(spark, root, merged, GraftDvBitmap.pathsByFile(
+      spark, root, victims.values.flatten.toSeq.distinct, victims.keys.toSeq))
+    try commit(base, { v =>
+        val snap = snapshotAt(v - 1)
+        Commit(v, "coalesce-dv", Seq.empty, Seq.empty, 0L, System.currentTimeMillis(),
+          dvReset = Some(snap.dvs.map { case (d, scs) =>
+            d -> (if (victims.contains(d)) Seq(merged) else scs) }),
+          dvResetRows = Some(snap.dvRowsByDir))
+      }, maxRetries, written = Seq(merged),
+      conflict = disjointFrom(victims.keys.toSeq), hook = true).get
+    catch {
+      case _: GraftConflictException if maxRetries > 0 =>
+        coalesceDv(minSidecars, maxRetries - 1)
+    }
   }
 
   /** DV-DEBT-scoped OPTIMIZE — `OPTIMIZE t WHERE __dv_fraction >= x`:
@@ -3995,7 +3841,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     * are written exactly once), drop `ck`, and publish ONE "optimize"
     * commit at `base + 1` swapping `removed` (the full active set, or
     * [[optimizeWhere]]'s in-scope subset) for the chunks (a concurrent
-    * commit takes the slot and this publish fails loudly — nothing it
+    * commit that took an input directory fails it loudly — nothing it
     * added can be silently dropped).
     *
     * The write is a SINGLE pass: rows get a chunk id (when-tree binary
@@ -4113,8 +3959,8 @@ class VersionedTable(spark: SparkSession, dir: String,
       if (written.isEmpty) return base // empty table: nothing to compact
       // A compaction must SURVIVE concurrent ingestion — at 100 TB a
       // multi-hour rewrite losing its slot to one tiny append would be
-      // wasted work forever. The loser's retry rides the same protocol
-      // as merge/delete with the simplest possible conflict rule: the
+      // wasted work forever. The loser's retry rides the same commit
+      // loop as merge/delete with the simplest possible conflict rule: the
       // rewrite holds IDENTICAL rows, so the ONLY true conflict is an
       // intervening commit that removed one of this rewrite's input
       // directories (another optimize/mutation/restore took them —
@@ -4127,20 +3973,19 @@ class VersionedTable(spark: SparkSession, dir: String,
       // files now spell. A concurrent schema change would take the slot
       // first and this retry re-reads nothing schema-dependent, so the
       // normalized JSON stays consistent with the rewritten files.
-      publishMutationRetrying("optimize", base, maxRetries = 5,
-        touched = removed, revalidate = Seq.empty,
-        addedMayMatch = _ => Seq.empty,
-        mkCommit = vv => Commit(vv, "optimize", written.map(_._1), removed,
+      commit(base, vv => Commit(vv, "optimize", written.map(_._1), removed,
           written.map(_._2).sum, System.currentTimeMillis(),
           addedStats = written.map(w => w._1 -> w._3).toMap,
           addedRows = written.map(w => w._1 -> w._2).toMap,
           schemaJson = normalizedSchemaJson,
           partitionCols = normalizedPartitionCols),
-        validated0 = Map.empty,
+        maxRetries = 5, written = written.map(_._1),
         // a normalizing rewrite re-records the schema: a concurrent
         // schema commit (alter/evolving append) in the retry window
         // must fail loudly, not be silently overwritten
-        schemaConflicts = c => normalizing && c.schemaJson.isDefined)
+        conflict = disjointFrom(removed,
+          schemaRace = c => normalizing && c.schemaJson.isDefined),
+        hook = true).get
     } finally keyed.unpersist()
   }
 

@@ -491,8 +491,8 @@ class DeletionVectorSpec extends SparkSuite {
     // between the DV write and its publish: the retry proves
     // disjointness (exact scan of the winner's added dirs) and commits
     val racer = new graft.sources.VersionedTable(spark, dir)
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.append((1000L until 1010L).map(k => (k, 0.0)).toDF("k", "p"))
     }
     vt.delete(col("k") < 10L, useDeletionVectors = true)
@@ -501,8 +501,8 @@ class DeletionVectorSpec extends SparkSuite {
     assert(vt.read().count() === 100) // 90 survivors + 10 raced-in rows
     // a concurrent append of MATCHING data fails loudly — committing
     // the DV would silently miss rows the delete never saw
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.append(Seq((5L, 5.0)).toDF("k", "p")) // k=5 < 20: matches
     }
     val e = intercept[IllegalStateException] {
@@ -514,8 +514,8 @@ class DeletionVectorSpec extends SparkSuite {
       === "append")
     assert(vt.read().filter(col("k") === 5L).count() === 1)
     // the same rules hold for the DV update
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.append((2000L until 2005L).map(k => (k, 0.0)).toDF("k", "p"))
     }
     vt.update(col("k") === 15L, Map("p" -> lit(-9.0)),
@@ -535,8 +535,8 @@ class DeletionVectorSpec extends SparkSuite {
     // write delete read must fail loudly — the loser's rewrite was
     // computed from the pre-DV fold and would resurrect the winner's
     // deleted rows.
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.delete(col("k") < 5L, useDeletionVectors = true) // DV on dir A
     }
     val e1 = intercept[IllegalStateException] {
@@ -547,8 +547,8 @@ class DeletionVectorSpec extends SparkSuite {
     assert(vt.read().count() === 195)
     // CASE 2: two racing DV mutations on ONE directory must not both
     // commit — dvRowsByDir would double-count and COUNT(*) would lie.
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.delete(col("k") >= 20L && col("k") < 25L,
         useDeletionVectors = true) // second DV, also dir A
     }
@@ -561,8 +561,8 @@ class DeletionVectorSpec extends SparkSuite {
     assert(vt.fastCount() === Some(190L)) // metadata count stays exact
     // CASE 3: a racing DV on a DISJOINT directory retries through —
     // the overwhelmingly common case, no spurious failure.
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.delete(col("k") >= 190L, useDeletionVectors = true) // dir B
     }
     vt.delete(col("k") < 30L, useDeletionVectors = true) // dir A only
@@ -570,8 +570,8 @@ class DeletionVectorSpec extends SparkSuite {
     assert(vt.fastCount() === Some(160L))
     // CASE 4: a concurrent RESTORE resets the DV map — unprovable,
     // loud.
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.restore(2)
     }
     val e3 = intercept[IllegalStateException] {
@@ -723,8 +723,8 @@ class DeletionVectorSpec extends SparkSuite {
     vt.delete(col("k") < 10L, useDeletionVectors = true)             // v1
     vt.delete(col("k") >= 190L, useDeletionVectors = true)           // v2
     val racer = new graft.sources.VersionedTable(spark, dir)
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       assert(racer.coalesceDv() === 3) // wins the slot mid-flight
     }
     // loses slot 3, retries, commits at 4 — NOT the loud dvReset abort

@@ -155,11 +155,11 @@ class MergeEvolveSpec extends SparkSuite {
     val dir = tmpVt()
     val vt = seed(dir)
     val racer = new graft.sources.VersionedTable(spark, dir)
-    vt.beforeMutationPublish = () => {
+    vt.beforePublish = () => {
       racer.addColumns(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("other",
           org.apache.spark.sql.types.StringType))))
-      vt.beforeMutationPublish = () => ()
+      vt.beforePublish = () => ()
     }
     val e = intercept[IllegalStateException] {
       vt.mergeClauses(evoSrc.toDF("k", "v", "cat", "tag"), Seq("k"),
@@ -178,9 +178,9 @@ class MergeEvolveSpec extends SparkSuite {
     // — its PRESENCE alone must not read as a schema conflict, or an
     // evolving merge could never land under a plain ingestion stream.
     // Keys far from the merge's span, so the added-data detector passes.
-    vt.beforeMutationPublish = () => {
+    vt.beforePublish = () => {
       racer.append(Seq((1000L, 0.5, "q")).toDF("k", "v", "cat"))
-      vt.beforeMutationPublish = () => ()
+      vt.beforePublish = () => ()
     }
     val v = vt.mergeClauses(evoSrc.toDF("k", "v", "cat", "tag"), Seq("k"),
       matched = Seq(MergeClause(None, MergeAction.Update(None))),
@@ -208,15 +208,16 @@ class MergeEvolveSpec extends SparkSuite {
     // the twin lands the SAME (app, batch) while ours is in flight: the
     // retry loop must re-check the txn tag and return gracefully as a
     // skip — not fail loudly, and above all not commit the batch twice
-    vt.beforeMutationPublish = () => {
+    vt.beforePublish = () => {
       mergeIt(racer)
-      vt.beforeMutationPublish = () => ()
+      vt.beforePublish = () => ()
     }
     val v = mergeIt(vt)
     assert(v === vt.latestVersion)
     assert(vt.history().filter(col("op").isin("merge", "merge-dv")).count()
       === 1)
     assert(rows4(vt).count(_._1 == 5L) === 1)
+    assert(unreferencedDirs(dir).isEmpty) // the skip reclaimed its payload
   }
 
   test("streaming CDC apply: micro-batched evolved upserts, exactly-once on full replay") {

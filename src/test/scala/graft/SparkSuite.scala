@@ -40,6 +40,24 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
       }
   }
 
+  /** Directories under the versioned table at `dir` that no manifest of
+    * its log names as data, change data or a deletion-vector sidecar —
+    * what a losing writer left behind for `vacuum`.
+    */
+  def unreferencedDirs(dir: String): Set[String] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val named = fs.listStatus(new org.apache.hadoop.fs.Path(root, "_graft_log"))
+      .map(_.getPath).filter(_.getName.matches("\\d{8}\\.json"))
+      .flatMap { p =>
+        val in = fs.open(p)
+        val c = try graft.sources.VersionedTable.decodeCommit(in) finally in.close()
+        c.added ++ c.cdf ++ c.dvAdd ++ c.dvReset.toSeq.flatMap(_.values.flatten)
+      }.toSet
+    fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
+      .filterNot(_.startsWith("_")).toSet -- named
+  }
+
   /** Runs `body` and counts the Spark jobs it started. */
   def countingJobs[A](body: => A): (A, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)

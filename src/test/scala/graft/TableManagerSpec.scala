@@ -1178,8 +1178,8 @@ class TableManagerSpec extends SparkSuite {
     // Disjoint winner: an append of far-away keys lands between the
     // merge's snapshot read and its publish — the merge re-reads the
     // log, proves disjointness from manifest stats, and re-commits.
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.append(Seq((500L, "r500")).toDF("k", "v"))
     }
     val vMerge = vt.merge(src, Seq("k"))
@@ -1190,21 +1190,23 @@ class TableManagerSpec extends SparkSuite {
     assert(rows.size === 21)
     // Overlapping ADD: the winner appends the merged key itself — the
     // merge result never saw it, so the retry must fail loudly.
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.append(Seq((3L, "hot")).toDF("k", "v"))
     }
     val eAdd = intercept[IllegalStateException] { vt.merge(src, Seq("k")) }
     assert(eAdd.getMessage.contains("added data that may match"))
     // Overlapping REWRITE: the winner deletes a row from a directory the
     // merge read — re-committing would resurrect it.
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.delete(col("k") === 1L)
     }
     val eRm = intercept[IllegalStateException] { vt.merge(src, Seq("k")) }
     assert(eRm.getMessage.contains("rewrote directories"))
-    vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => ()
+    // both losers reclaimed what they wrote
+    assert(unreferencedDirs(dir).isEmpty)
   }
 
   test("optimize retry: a compaction survives concurrent appends, loses to input rewrites") {
@@ -1216,8 +1218,8 @@ class TableManagerSpec extends SparkSuite {
     val racer = tables.versioned(dir)
     // A plain append lands mid-rewrite (the common ingestion race): the
     // optimize retries through and the winner's rows stay active.
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.append(Seq((500L, "mid-rewrite")).toDF("k", "v"))
     }
     val vOpt = vt.optimize("k", targetChunks = 2)
@@ -1228,8 +1230,8 @@ class TableManagerSpec extends SparkSuite {
     assert(vt.activeDirs().size === 3)
     // a concurrent schema EVOLUTION also rides through — the optimize
     // commit records no schema, so the fold keeps the new column
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.addColumns(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("extra",
           org.apache.spark.sql.types.StringType))))
@@ -1238,13 +1240,13 @@ class TableManagerSpec extends SparkSuite {
     assert(vt.read().schema.fieldNames.contains("extra"))
     assert(vt.read().filter(col("extra").isNull).count() === 91)
     // an intervening DELETE rewrote the optimize's inputs: loud
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.delete(col("k") === 1L)
     }
     val e = intercept[IllegalStateException] { vt.optimize("k", 2) }
     assert(e.getMessage.contains("rewrote directories"))
-    vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => ()
     assert(vt.read().count() === 90) // the delete's state, never resurrected
   }
 
@@ -1255,8 +1257,8 @@ class TableManagerSpec extends SparkSuite {
     val racer = tables.versioned(dir)
     // Winner appends non-matching rows: the delete scans exactly those
     // directories, finds no match, and retries through.
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.append(Seq((500L, "r500")).toDF("k", "v"))
     }
     val vDel = vt.delete(col("k") < 3L)
@@ -1265,13 +1267,14 @@ class TableManagerSpec extends SparkSuite {
       (Set(500L) ++ (3L until 10L)))
     // Winner appends a MATCHING row: committing the delete would let it
     // silently survive the predicate — loud failure.
-    vt.beforeMutationPublish = () => {
-      vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.append(Seq((600L, "hot")).toDF("k", "v"))
     }
     val e = intercept[IllegalStateException] { vt.delete(col("k") >= 500L) }
     assert(e.getMessage.contains("added data that may match"))
-    vt.beforeMutationPublish = () => ()
+    vt.beforePublish = () => ()
+    assert(unreferencedDirs(dir).isEmpty) // the loser reclaimed its rewrite
     // Integration: two REAL concurrent merges on disjoint key ranges —
     // with the retry protocol both always land, whatever the interleave.
     val dir2 = tmpVt()

@@ -125,19 +125,19 @@ class VersionedUpdateSpec extends SparkSuite {
     val vt = new graft.sources.VersionedTable(spark, dir)
     vt.append((0L until 20L).map(k => (k, k * 1.0)).toDF("k", "p"))
     // disjoint winner: lands mid-update, cannot match k < 10 → retry wins
-    vt.beforeMutationPublish = () => {
+    vt.beforePublish = () => {
       new graft.sources.VersionedTable(spark, dir)
         .append(Seq((500L, 0.0)).toDF("k", "p"))
-      vt.beforeMutationPublish = () => ()
+      vt.beforePublish = () => ()
     }
     vt.update(col("k") < 10L, Map("p" -> lit(-1.0)))
     assert(vt.read().count() === 21)
     assert(vt.read().filter(col("p") === -1.0).count() === 10)
     // overlapping winner: adds a row the condition matches → loud
-    vt.beforeMutationPublish = () => {
+    vt.beforePublish = () => {
       new graft.sources.VersionedTable(spark, dir)
         .append(Seq((5L, 999.0)).toDF("k", "p"))
-      vt.beforeMutationPublish = () => ()
+      vt.beforePublish = () => ()
     }
     val e = intercept[IllegalStateException] {
       vt.update(col("k") < 10L, Map("p" -> lit(-2.0)))
@@ -260,8 +260,8 @@ class VersionedUpdateSpec extends SparkSuite {
     vt.append(Seq((1L, "a", "t1")).toDF("k", "s", "tag"))
     val racer = new graft.sources.VersionedTable(spark, dir)
     // the racer drops `tag` between this append's write and publish
-    vt.beforeAppendPublish = () => {
-      vt.beforeAppendPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.dropColumns(Seq("tag"))
     }
     val e = intercept[IllegalStateException] {
@@ -270,8 +270,8 @@ class VersionedUpdateSpec extends SparkSuite {
     assert(e.getMessage.contains("concurrently dropped"))
     assert(!vt.read().schema.fieldNames.contains("tag")) // drop holds
     // a disjoint-schema retried append still rides through
-    vt.beforeAppendPublish = () => {
-      vt.beforeAppendPublish = () => ()
+    vt.beforePublish = () => {
+      vt.beforePublish = () => ()
       racer.append(Seq((9L, "z")).toDF("k", "s"))
     }
     vt.appendWithRetry(Seq((3L, "c")).toDF("k", "s"))
