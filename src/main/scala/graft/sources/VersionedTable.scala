@@ -599,7 +599,10 @@ class VersionedTable(spark: SparkSession, dir: String,
     * conflict — hiding, say, a column a concurrent evolving append
     * added. On a lost claim, in order:
     *  - a winner that committed this writer's streaming batch
-    *    (`txn`) makes the command a skip: None;
+    *    (`txn`) makes the command a skip: None. This runs before any
+    *    conflict scan: where a rule is inert (an all-null-key span
+    *    flags no added data) a blind retry would commit the batch
+    *    twice;
     *  - `maxRetries` lost claims end the loop loudly;
     *  - `conflict` judges every commit that landed since the last
     *    reconciled version; a reason refuses the retry loudly;
@@ -628,7 +631,8 @@ class VersionedTable(spark: SparkSession, dir: String,
     val armed = hook && maintenanceArmed(base)
     def reclaim(): Unit = written.foreach(n => fs.delete(new Path(root, n), true))
     beforePublish()
-    var validated: Option[Map[String, String]] = None
+    var validated = if (base < 0 || revalidate.isEmpty) Map.empty[String, String]
+      else snapshotAt(base).constraints
     var attempt = 0
     var v = base + 1
     var won = false
@@ -652,10 +656,8 @@ class VersionedTable(spark: SparkSession, dir: String,
             }
             if (revalidate.nonEmpty && winners.exists(_._2.constraintAdd.isDefined)) {
               val now = currentConstraints
-              val was = validated.getOrElse(
-                if (base < 0) Map.empty[String, String] else snapshotAt(base).constraints)
-              revalidate.foreach(revalidatePayload(_, was, now))
-              validated = Some(now)
+              revalidate.foreach(revalidatePayload(_, validated, now))
+              validated = now
             }
             v = latest + 1
           }
@@ -2889,8 +2891,8 @@ class VersionedTable(spark: SparkSession, dir: String,
     * the next mutation re-triggers the check. Never recursive: the
     * maintenance this hook triggers never re-triggers it (it commits
     * through the same loop, so a thread-local guard breaks the cycle;
-    * a triggered optimize also never
-    * auto-coalesces behind the user's back). Malformed property values
+    * a triggered optimize also never auto-coalesces behind the user's
+    * back). Malformed property values
     * are ignored (a typo must not fail a committed mutation).
     *
     * FAILURE CONTRACT (the hook runs AFTER the user's commit is

@@ -38,14 +38,22 @@ class CommitLoopSpec extends SparkSuite {
     assert(vt.latestVersion === 3)
   }
 
-  test("overwrite runs the post-commit hook its base snapshot arms") {
+  test("overwrite and a user-called coalesceDv run the post-commit hook their base snapshot arms") {
     val vt = new VersionedTable(spark, tmpDir())
     vt.append(rows(0L, 100L))
-    vt.setProperties(Map("graft.autoCoalesce.minSidecars" -> "2"))
-    vt.autoMaintainFault = () => throw new RuntimeException("injected hook fault")
-    val e = intercept[GraftPostCommitMaintenanceException](vt.overwrite(rows(0L, 10L)))
-    assert(e.committedVersion === 2)
+    // armed, but no directory count reaches the threshold
+    vt.setProperties(Map("graft.autoCompact.minFiles" -> "100"))
+    def hookFails(write: => Int): Int = {
+      vt.autoMaintainFault = () => throw new RuntimeException("injected hook fault")
+      try intercept[GraftPostCommitMaintenanceException](write).committedVersion
+      finally vt.autoMaintainFault = () => ()
+    }
+    assert(hookFails(vt.overwrite(rows(0L, 10L))) === 2)
     assert(vt.read().count() === 10)
+    vt.delete(col("k") === 1L, useDeletionVectors = true)
+    vt.delete(col("k") === 2L, useDeletionVectors = true)
+    assert(hookFails(vt.coalesceDv()) === 5)
+    assert(vt.dvsAt(5).values.map(_.distinct.size).toSeq === Seq(1))
   }
 
   test("a plain append that loses its slot reclaims its payload") {
