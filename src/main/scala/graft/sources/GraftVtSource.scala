@@ -23,17 +23,18 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * {{{ spark.read.format("graftvt").load(dir).filter($"k".between(a, b)) }}}
   * (and the same query through SQL over a registered view) prunes
   * whole data directories from MANIFEST statistics before any parquet
-  * footer opens, exactly like [[VersionedTable.readPrunedAll]] — but
-  * without the caller knowing the pruning API exists. This is how
+  * footer opens, through the same data-skipping core ([[DataSkipping]])
+  * as [[VersionedTable.readPrunedAll]] — but without the caller knowing
+  * the pruning API exists. This is how
   * Delta serves its skipping: the relation participates in planning,
   * Catalyst hands the scan its filters, and the scan consults the log.
   * The reference's own reads are exactly this shape (a date-scoped
   * monitoring view — `First experiment/Claude Sonnet 4.py:660-678`).
   *
   * Mechanics: [[GraftVtScanBuilder]] implements
-  * `SupportsPushDownFilters`; the pushed conjuncts' range/equality
-  * bounds feed [[VersionedTable.pruneActiveAll]] and the scan is a
-  * stock [[ParquetScan]] over ONLY the kept directories — so parquet
+  * `SupportsPushDownFilters`; the pushed conjuncts map onto the core's
+  * predicate model ([[DataSkipping.fromFilters]]: ranges, exact IN
+  * lists, null-ness) and the scan is a stock [[ParquetScan]] over ONLY the kept directories — so parquet
   * row-group skipping, vectorized reading, and whole-stage codegen all
   * apply unchanged within them. Every filter is also RETAINED
   * post-scan (manifest pruning is a superset guarantee, directory
@@ -206,8 +207,8 @@ private[sources] class GraftVtTable(vt: VersionedTable, version: Int,
   }
 }
 
-/** The pushdown site: collects the pushed conjuncts' bounds into
-  * stat-domain ranges, prunes the version's active directories on the
+/** The pushdown site: maps the pushed conjuncts onto the data-skipping
+  * core's predicates, prunes the version's active directories on the
   * manifest log, and builds a stock parquet scan over the survivors.
   */
 private[sources] class GraftVtScanBuilder(vt: VersionedTable, version: Int,
@@ -228,28 +229,11 @@ private[sources] class GraftVtScanBuilder(vt: VersionedTable, version: Int,
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
   private var allFilters: Array[Filter] = Array.empty
-  private var ranges: Seq[(String, Option[Any], Option[Any])] = Nil
-  private var notNullCols: Seq[String] = Nil
-  private var isNullCols: Seq[String] = Nil
-
-  private def statBound(v: Any): Option[Any] = GraftVtFilters.statBound(v)
-
-  // Only top-level columns prune (a dotted v1 filter name is a nested
-  // field — the stats index has no entry for it, conservative keep).
-  private def plain(attr: String): Boolean = GraftVtFilters.plain(attr)
-
-  private def toRanges(f: Filter): Seq[(String, Option[Any], Option[Any])] =
-    GraftVtFilters.toRanges(f, vt.cmpBound)
-
-  private def toNullness(f: Filter): (Seq[String], Seq[String]) =
-    GraftVtFilters.toNullness(f)
+  private var preds: Seq[DataSkipping.Pred] = Nil
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     allFilters = filters
-    ranges = filters.toSeq.flatMap(toRanges)
-    val nullness = filters.toSeq.map(toNullness)
-    notNullCols = nullness.flatMap(_._1)
-    isNullCols = nullness.flatMap(_._2)
+    preds = DataSkipping.fromFilters(filters.toSeq)
     // Report the conjuncts that contributed pruning information
     // (explain shows them as PushedFilters); EVERY filter is returned
     // as post-scan — the manifest prune is a superset at directory
@@ -257,8 +241,7 @@ private[sources] class GraftVtScanBuilder(vt: VersionedTable, version: Int,
     // nothing (its unit is a commit), so it reports nothing.
     pushed =
       if (changeFeed) Array.empty
-      else filters.filter(f => toRanges(f).nonEmpty ||
-        toNullness(f) != ((Nil, Nil)))
+      else filters.filter(DataSkipping.fromFilter(_).nonEmpty)
     filters
   }
 
@@ -325,8 +308,7 @@ private[sources] class GraftVtScanBuilder(vt: VersionedTable, version: Int,
       : Option[(StructType, InternalRow)] = {
     import org.apache.spark.sql.types._
     if (changeFeed) return None
-    if (ranges.nonEmpty || notNullCols.nonEmpty || isNullCols.nonEmpty ||
-        pushed.nonEmpty) return None
+    if (preds.nonEmpty) return None
     if (agg.groupByExpressions().nonEmpty) return None
     val funcs = agg.aggregateExpressions()
     if (funcs.isEmpty) return None
@@ -366,9 +348,7 @@ private[sources] class GraftVtScanBuilder(vt: VersionedTable, version: Int,
   private var limitRows: Option[Int] = None
 
   override def pushLimit(n: Int): Boolean = {
-    if (changeFeed || n <= 0 || ranges.nonEmpty || notNullCols.nonEmpty ||
-        isNullCols.nonEmpty || pushed.nonEmpty)
-      return false
+    if (changeFeed || n <= 0 || preds.nonEmpty) return false
     limitRows = Some(n)
     true
   }
@@ -478,9 +458,8 @@ private[sources] class GraftVtScanBuilder(vt: VersionedTable, version: Int,
         cdf = Some((fromV, toV, cdfCols)), cdfReaders = Some(cdfReaders))
     } else {
       val keptAll =
-        if (ranges.isEmpty && notNullCols.isEmpty && isNullCols.isEmpty)
-          vt.activeDirs(Some(version))
-        else vt.pruneActiveAll(ranges, Some(version), notNullCols, isNullCols)._1
+        if (preds.isEmpty) vt.activeDirs(Some(version))
+        else vt.skip(preds, Some(version))._1
       val kept = limitRows.fold(keptAll)(limitPrefix(keptAll, _))
       val dvs = vt.dvsAt(version)
       val l2p = vt.renamesAt(version)
@@ -550,9 +529,10 @@ private[graft] class GraftVtAggregateScan(schema: StructType,
   * the big side of a join whose other side carries a selective filter,
   * Spark executes the small side first and hands the join keys' value
   * set here as an IN filter BEFORE this scan plans its partitions. The
-  * values prune directories by EXACT membership against the manifest
-  * stats ([[VersionedTable.pruneActiveIn]] — tighter than a [min, max]
-  * envelope for scattered key sets), the inner parquet scan rebuilds
+  * filters map through the same data-skipping core as plan-time
+  * pushdown ([[DataSkipping.fromFilters]] — an IN list prunes by EXACT
+  * membership, tighter than a [min, max] envelope for scattered key
+  * sets), the inner parquet scan rebuilds
   * over the survivors, and `toBatch` (re-invoked by `BatchScanExec`
   * after `filter`) plans only them. At 100 TB this is the star-join
   * shape: a dimension filter skips fact directories wholesale. Pruning
@@ -617,35 +597,17 @@ private[graft] class GraftVtScan(spark: SparkSession, vt: VersionedTable,
   override def filterAttributes(): Array[NamedReference] =
     if (cdf.isDefined || version < 0) Array.empty
     else readSchema().fields.collect {
-      case f if {
-        import org.apache.spark.sql.types._
-        f.dataType match {
-          case ByteType | ShortType | IntegerType | LongType | FloatType |
-               DoubleType | StringType | TimestampType | TimestampNTZType => true
-          case _ => false
-        }
-      } => org.apache.spark.sql.connector.expressions.Expressions.column(f.name)
+      case f if DataSkipping.statColumn(f.dataType,
+          org.apache.spark.sql.functions.col(f.name)).isDefined =>
+        org.apache.spark.sql.connector.expressions.Expressions.column(f.name)
     }
 
   override def filter(filters: Array[Filter]): Unit = {
     if (cdf.isDefined || version < 0) return
-    var kept = currentKept
-    filters.foreach {
-      case In(a, vs) if GraftVtFilters.plain(a) && vs.nonEmpty =>
-        // null members never match (SQL: = NULL is never true) and are
-        // dropped; any UNTRANSLATABLE non-null member keeps every
-        // directory (conservative — its rows could live anywhere)
-        val pairs = vs.toSeq.filter(_ != null)
-          .map(v => GraftVtFilters.statBound(v))
-        if (!pairs.exists(_.isEmpty)) {
-          val (k, _) = vt.pruneActiveIn(a, pairs.flatten, Some(version))
-          kept = kept.intersect(k)
-        }
-      case f =>
-        val rs = GraftVtFilters.toRanges(f, vt.cmpBound)
-        if (rs.nonEmpty)
-          kept = kept.intersect(vt.pruneActiveAll(rs, Some(version))._1)
-    }
+    val preds = DataSkipping.fromFilters(filters.toSeq)
+    val kept =
+      if (preds.isEmpty) currentKept
+      else currentKept.intersect(vt.skip(preds, Some(version))._1)
     if (kept.size < currentKept.size) {
       current = mkParquetScan(kept.filterNot(dvMap.contains), physRequired)
       currentKept = kept
@@ -756,89 +718,10 @@ private[graft] object GraftVtTime {
   }
 }
 
-/** The v1-Filter → manifest-stat-domain translation, shared by the
-  * plan-time pushdown ([[GraftVtScanBuilder]]) and the runtime
-  * (dynamic-partition-pruning) filter path ([[GraftVtScan]]).
+/** v1-Filter rewriting for the inner parquet scan (manifest pruning
+  * lives in [[DataSkipping]]).
   */
 private[sources] object GraftVtFilters {
-
-  /** A filter value in the manifest-stat domain: integrals → Long,
-    * fractionals → Double, strings as-is, timestamps → exact epoch
-    * MICROS (both pre- and post-java8 external types — a
-    * seconds-truncated bound could wrongly prune the directory holding
-    * it). Dates/decimals/binary return None: [[VersionedTable]] never
-    * indexes those types, so a range on them cannot prune anyway.
-    */
-  def statBound(v: Any): Option[Any] = v match {
-    case null => None
-    case i: java.lang.Integer => Some(i.longValue)
-    case l: java.lang.Long => Some(l)
-    case s: java.lang.Short => Some(s.longValue)
-    case b: java.lang.Byte => Some(b.longValue)
-    case f: java.lang.Float => Some(f.doubleValue)
-    case d: java.lang.Double => Some(d)
-    case s: String => Some(s)
-    case u: org.apache.spark.unsafe.types.UTF8String =>
-      // runtime (DPP) filter values may arrive as Catalyst internals
-      Some(u.toString)
-    case t: java.sql.Timestamp =>
-      Some(t.getTime * 1000L + (t.getNanos % 1000000) / 1000L)
-    case i: java.time.Instant =>
-      Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    case ldt: java.time.LocalDateTime =>
-      // TIMESTAMP_NTZ literal: the stats were computed by casting NTZ
-      // through the writer session's timezone (statsOf), so the
-      // wall-time bound converts through the CURRENT session zone —
-      // exact when reader and writer agree on the session timezone
-      // (this engine pins UTC everywhere); a mismatched pair should
-      // not prune, so the caller keeps the conservative None path by
-      // configuring the same zone, same as any NTZ consumer.
-      val zone = java.time.ZoneId.of(
-        SparkSession.active.sessionState.conf.sessionLocalTimeZone)
-      val i = ldt.atZone(zone).toInstant
-      Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    case _ => None
-  }
-
-  // Only top-level columns prune (a dotted v1 filter name is a nested
-  // field — the stats index has no entry for it, conservative keep).
-  def plain(attr: String): Boolean = !attr.contains(".")
-
-  /** The directory-prunable ranges of one pushed conjunct. Strict
-    * bounds relax to inclusive (superset — the row filter still
-    * applies); an IN-list collapses to its [min, max] envelope under
-    * the SAME comparison order the stats prune with (`cmp` =
-    * [[VersionedTable.cmpBound]] — a UTF-16 min over an IN-list could
-    * exclude a member from the envelope in UTF-8 stat order and prune
-    * a directory that holds it). Unsupported shapes (Or, IsNull,
-    * functions…) contribute nothing and stay post-scan like everything
-    * else.
-    */
-  def toRanges(f: Filter, cmp: (Any, Any) => Int)
-      : Seq[(String, Option[Any], Option[Any])] =
-    f match {
-      case EqualTo(a, v) if plain(a) =>
-        statBound(v).map(b => (a, Some(b): Option[Any], Some(b): Option[Any])).toSeq
-      case GreaterThan(a, v) if plain(a) =>
-        statBound(v).map(b => (a, Some(b): Option[Any], None: Option[Any])).toSeq
-      case GreaterThanOrEqual(a, v) if plain(a) =>
-        statBound(v).map(b => (a, Some(b): Option[Any], None: Option[Any])).toSeq
-      case LessThan(a, v) if plain(a) =>
-        statBound(v).map(b => (a, None: Option[Any], Some(b): Option[Any])).toSeq
-      case LessThanOrEqual(a, v) if plain(a) =>
-        statBound(v).map(b => (a, None: Option[Any], Some(b): Option[Any])).toSeq
-      case In(a, vs) if plain(a) && vs.nonEmpty =>
-        val bs = vs.toSeq.map(statBound)
-        if (bs.exists(_.isEmpty)) Nil
-        else {
-          val bounds = bs.flatten
-          val lo = bounds.reduce((x, y) => if (cmp(x, y) <= 0) x else y)
-          val hi = bounds.reduce((x, y) => if (cmp(x, y) >= 0) x else y)
-          Seq((a, Some(lo), Some(hi)))
-        }
-      case And(l, r) => toRanges(l, cmp) ++ toRanges(r, cmp)
-      case _ => Nil
-    }
 
   /** Re-address a pushed filter's attributes LOGICAL → PHYSICAL so
     * parquet-level pushdown (row-group/page skipping) keeps working on
@@ -883,20 +766,5 @@ private[sources] object GraftVtFilters {
       case ff: AlwaysFalse => Some(ff)
       case _ => None
     }
-  }
-
-  /** Null-ness conjuncts prune on the manifest's null counts: IS NOT
-    * NULL skips all-null directories, IS NULL skips zero-null ones
-    * (Delta's nullCount statistics). Spark pushes an IsNotNull for
-    * every column a filter references, so this fires on almost every
-    * filtered scan.
-    */
-  def toNullness(f: Filter): (Seq[String], Seq[String]) = f match {
-    case IsNotNull(a) if plain(a) => (Seq(a), Nil)
-    case IsNull(a) if plain(a) => (Nil, Seq(a))
-    case And(l, r) =>
-      val (ln, li) = toNullness(l); val (rn, ri) = toNullness(r)
-      (ln ++ rn, li ++ ri)
-    case _ => (Nil, Nil)
   }
 }

@@ -904,11 +904,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     * bounds), and the data-skipping contract requires exact bounds — a
     * wrong max could prune a directory that holds matching rows. The
     * scan is bounded by the commit's own size and column-pruned to the
-    * indexed/constrained columns.
-    * Supported kinds: integral → Long, timestamp → epoch micros
-    * (exact — a seconds-truncated max could wrongly prune the row
-    * holding it), fractional → Double, string as-is; other types are
-    * simply not indexed (readers keep the directory conservatively).
+    * indexed/constrained columns ([[statAggPlan]]).
     */
   private def statsOf(dataDir: String,
                       constraints: Map[String, String] = Map.empty,
@@ -934,11 +930,8 @@ class VersionedTable(spark: SparkSession, dir: String,
     * grouped multi-directory path ([[statsOfDirs]]), so the three can
     * never drift. Layout (positional): count, then (min, max) per
     * indexable column, then a null count per indexable column, then a
-    * violation count per CHECK constraint (sorted by name).
-    * Supported kinds: integral → Long, timestamp → epoch micros
-    * (exact — a seconds-truncated max could wrongly prune the row
-    * holding it), fractional → Double, string as-is; other types are
-    * simply not indexed (readers keep the directory conservatively).
+    * violation count per CHECK constraint (sorted by name). The
+    * indexed types and their stat kinds are [[DataSkipping.statColumn]].
     * CHECK violation counts use SQL semantics: a NULL constraint
     * result passes, so a violation is exactly `expr <=> false`. NULL
     * counts feed IS NULL / IS NOT NULL pruning and all-null-directory
@@ -949,19 +942,8 @@ class VersionedTable(spark: SparkSession, dir: String,
       : (Array[(String, String, org.apache.spark.sql.Column)],
          Seq[String], Seq[org.apache.spark.sql.Column]) = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val cols = schema.fields.flatMap { f =>
-      f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType =>
-          Some((f.name, "l", col(f.name).cast("long")))
-        case TimestampType | TimestampNTZType =>
-          Some((f.name, "l", unix_micros(col(f.name).cast("timestamp"))))
-        case FloatType | DoubleType =>
-          Some((f.name, "d", col(f.name).cast("double")))
-        case StringType => Some((f.name, "s", col(f.name)))
-        case _ => None
-      }
-    }
+    val cols = schema.fields.flatMap(f =>
+      DataSkipping.statColumn(f.dataType, col(f.name)).map { case (k, c) => (f.name, k, c) })
     val cNames = constraints.keys.toSeq.sorted
     val cAggs = cNames.map(n =>
       sum(when(expr(constraints(n)) <=> lit(false), 1L).otherwise(0L)))
@@ -1651,8 +1633,8 @@ class VersionedTable(spark: SparkSession, dir: String,
       None
     else {
       val bs = bounds.flatten
-      Some((bs.map(_.min).reduce((a, b) => if (cmpBound(a, b) <= 0) a else b),
-        bs.map(_.max).reduce((a, b) => if (cmpBound(a, b) >= 0) a else b)))
+      Some((bs.map(_.min).reduce((a, b) => if (DataSkipping.cmp(a, b) <= 0) a else b),
+        bs.map(_.max).reduce((a, b) => if (DataSkipping.cmp(a, b) >= 0) a else b)))
     }
   }
 
@@ -1957,159 +1939,24 @@ class VersionedTable(spark: SparkSession, dir: String,
 
   /** Stats-pruned candidate set for a row-level mutation's
     * touched-directory DISCOVERY scan (Delta's data-skipping
-    * DELETE/UPDATE): split the predicate into conjuncts, translate
-    * each independently to a v1 [[org.apache.spark.sql.sources.Filter]]
-    * ([[org.apache.spark.sql.execution.datasources.DataSourceStrategy
-    * .translateFilter]] — per-conjunct, so one untranslatable term
-    * never discards the others' pruning power), fold the translated
-    * terms into stat-domain ranges and null-ness facts
-    * ([[GraftVtFilters]] — the SAME translation the DSv2 scan pushes),
-    * and keep only the active directories whose recorded bounds can
-    * intersect them ([[pruneActiveAll]]). Pruning is a superset
-    * guarantee at directory granularity, so the discovery scan's
-    * row-level filter stays authoritative; a predicate with no
-    * stat-expressible conjunct falls back to the full active set.
-    * At 100 TB this is the difference between a `DELETE WHERE day = X`
-    * scanning one ingestion-day's directories and scanning the table
-    * to discover the 1% it will rewrite.
+    * DELETE/UPDATE): the condition goes through the data-skipping core's
+    * Catalyst front end ([[DataSkipping.fromCondition]] — constant
+    * folding, then [[org.apache.spark.sql.execution.datasources
+    * .DataSourceStrategy.translateFilter]] per conjunct, so one
+    * untranslatable term never discards the others' pruning power, then
+    * the SAME v1-filter mapping the DSv2 scan pushes), and only the
+    * active directories whose recorded stats can satisfy it are kept.
+    * Pruning is a superset guarantee at directory granularity, so the
+    * discovery scan's row-level filter stays authoritative; a predicate
+    * with no stat-expressible conjunct keeps the full active set. At
+    * 100 TB this is the difference between a `DELETE WHERE day = X`
+    * scanning one ingestion-day's directories and scanning the table to
+    * discover the 1% it will rewrite.
     */
   private def discoveryCandidates(condition: org.apache.spark.sql.Column,
                                   schema: org.apache.spark.sql.types.StructType,
-                                  active: Seq[String],
                                   version: Int): Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGe, In => CIn, InSet => CInSet, IsNotNull => CNotNull, IsNull => CIsNull, LessThan => CLt, LessThanOrEqual => CLe, Literal => CLit}
-    import org.apache.spark.sql.types._
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    // Top-level column name of a resolved attribute reference (the
-    // condition is ANALYZED against the table schema below, so names
-    // are resolved and implicit casts sit on the literal side);
-    // anything else is not stat-indexable.
-    def attrOf(e: Expression): Option[String] = e match {
-      case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-        Some(a.name)
-      case _ => None
-    }
-    // A LITERAL's value in the manifest-stat domain. Internal values:
-    // timestamps are already epoch micros (the stats' exact unit);
-    // NTZ micros convert through the session zone, matching how
-    // [[statsOf]] recorded them (exact when writer and reader agree —
-    // this engine pins UTC; a mismatched pair keeps conservatively at
-    // the comparison site like any other NTZ consumer). Non-literal
-    // FOLDABLE expressions (the analyzer's Cast-on-the-literal-side
-    // coercions) evaluate once on the driver and recurse.
-    def litOf(e: Expression): Option[Any] = e match {
-      case CLit(null, _) => None
-      case CLit(v, t) => t match {
-        case ByteType => Some(v.asInstanceOf[Byte].toLong)
-        case ShortType => Some(v.asInstanceOf[Short].toLong)
-        case IntegerType => Some(v.asInstanceOf[Int].toLong)
-        case LongType => Some(v.asInstanceOf[Long])
-        case FloatType => Some(v.asInstanceOf[Float].toDouble)
-        case DoubleType => Some(v.asInstanceOf[Double])
-        case StringType => Some(v.toString)
-        case TimestampType => Some(v.asInstanceOf[Long])
-        case TimestampNTZType =>
-          val zone = java.time.ZoneId.of(
-            spark.sessionState.conf.sessionLocalTimeZone)
-          val micros = v.asInstanceOf[Long]
-          val ldt = java.time.LocalDateTime.ofEpochSecond(
-            Math.floorDiv(micros, 1000000L),
-            (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-            java.time.ZoneOffset.UTC)
-          val i = ldt.atZone(zone).toInstant
-          Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-        case _ => None
-      }
-      case other if other.foldable =>
-        try litOf(CLit(other.eval(null), other.dataType))
-        catch { case _: Exception => None }
-      case _ => None
-    }
-    type StatRange = (String, Option[Any], Option[Any])
-    def ranged(a: Expression, l: Expression,
-               mk: (String, Any) => StatRange)
-        : (Seq[StatRange], Seq[String], Seq[String]) =
-      ((for { n <- attrOf(a); v <- litOf(l) } yield mk(n, v)).toSeq, Nil, Nil)
-    // One conjunct's contribution: stat ranges, IS NOT NULL columns,
-    // IS NULL columns. Strict bounds relax to inclusive (superset —
-    // the discovery scan's row filter stays authoritative); reversed
-    // operand orders flip; anything else contributes nothing.
-    def facts(e: Expression): (Seq[StatRange], Seq[String], Seq[String]) = e match {
-      case CEq(a, l) if attrOf(a).isDefined =>
-        ranged(a, l, (n, v) => (n, Some(v), Some(v)))
-      case CEq(l, a) if attrOf(a).isDefined =>
-        ranged(a, l, (n, v) => (n, Some(v), Some(v)))
-      case CGt(a, l) if attrOf(a).isDefined =>
-        ranged(a, l, (n, v) => (n, Some(v), None))
-      case CGe(a, l) if attrOf(a).isDefined =>
-        ranged(a, l, (n, v) => (n, Some(v), None))
-      case CLt(a, l) if attrOf(a).isDefined =>
-        ranged(a, l, (n, v) => (n, None, Some(v)))
-      case CLe(a, l) if attrOf(a).isDefined =>
-        ranged(a, l, (n, v) => (n, None, Some(v)))
-      case CGt(l, a) if attrOf(a).isDefined =>
-        ranged(a, l, (n, v) => (n, None, Some(v)))
-      case CGe(l, a) if attrOf(a).isDefined =>
-        ranged(a, l, (n, v) => (n, None, Some(v)))
-      case CLt(l, a) if attrOf(a).isDefined =>
-        ranged(a, l, (n, v) => (n, Some(v), None))
-      case CLe(l, a) if attrOf(a).isDefined =>
-        ranged(a, l, (n, v) => (n, Some(v), None))
-      case CIn(a, vs) if attrOf(a).isDefined && vs.nonEmpty =>
-        // envelope under the SAME order the stats prune with — null
-        // members never match (SQL IN) and drop; an untranslatable
-        // member keeps conservatively
-        val bs = vs.map(litOf)
-        val nonNullLits = vs.count { case CLit(null, _) => false; case _ => true }
-        if (bs.flatten.size < nonNullLits || bs.flatten.isEmpty) (Nil, Nil, Nil)
-        else {
-          val bounds = bs.flatten
-          val lo = bounds.reduce((x, y) => if (cmpBound(x, y) <= 0) x else y)
-          val hi = bounds.reduce((x, y) => if (cmpBound(x, y) >= 0) x else y)
-          (Seq((attrOf(a).get, Some(lo), Some(hi))), Nil, Nil)
-        }
-      case s: CInSet if attrOf(s.child).isDefined && s.hset.nonEmpty =>
-        // hset holds INTERNAL values — wrap with the raw constructor
-        // (Literal.create expects external ones)
-        val lits = s.hset.toSeq.filter(_ != null).map(v =>
-          litOf(CLit(v, s.child.dataType)))
-        if (lits.exists(_.isEmpty) || lits.isEmpty) (Nil, Nil, Nil)
-        else {
-          val bounds = lits.flatten
-          val lo = bounds.reduce((x, y) => if (cmpBound(x, y) <= 0) x else y)
-          val hi = bounds.reduce((x, y) => if (cmpBound(x, y) >= 0) x else y)
-          (Seq((attrOf(s.child).get, Some(lo), Some(hi))), Nil, Nil)
-        }
-      case CNotNull(a) => (Nil, attrOf(a).toSeq, Nil)
-      case CIsNull(a) => (Nil, Nil, attrOf(a).toSeq)
-      case _ => (Nil, Nil, Nil)
-    }
-    // The condition is ANALYZED against an empty frame of the table
-    // schema (pure driver-side — nothing is listed or read): names
-    // resolve, implicit casts land on the literal side where litOf
-    // folds them. A condition that fails analysis here keeps the full
-    // active set — the real discovery scan then raises the proper
-    // error.
-    val condExpr: Option[Expression] =
-      try {
-        val probe = spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-        probe.filter(condition).queryExecution.analyzed.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition
-        }
-      } catch { case _: Exception => None }
-    val all = condExpr.toSeq.flatMap(conjuncts)
-      .map(c => try facts(c) catch { case _: Exception => (Nil, Nil, Nil) })
-    val ranges = all.flatMap(_._1)
-    val notNull = all.flatMap(_._2)
-    val isNull = all.flatMap(_._3)
-    val kept =
-      if (ranges.isEmpty && notNull.isEmpty && isNull.isEmpty) active
-      else pruneActiveAll(ranges, Some(version), notNull, isNull)._1
+    val kept = skip(DataSkipping.fromCondition(spark, condition, schema), Some(version))._1
     lastDiscoveryDirs = kept
     kept
   }
@@ -2166,22 +2013,10 @@ class VersionedTable(spark: SparkSession, dir: String,
     */
   private def mergeSpanAndDupState(source: DataFrame, keys: Seq[String],
                                    needDup: Boolean)
-      : (Option[Option[Seq[(String, Option[Any], Option[Any])]]], Boolean) = {
-    import org.apache.spark.sql.functions.{col, count, lit, max => fmax, min => fmin, unix_micros}
-    import org.apache.spark.sql.types._
-    val keyDomain: Seq[(String, Option[org.apache.spark.sql.Column])] =
-      keys.map { k =>
-        k -> (source.schema(k).dataType match {
-          case ByteType | ShortType | IntegerType | LongType =>
-            Some(col(k).cast("long"))
-          case TimestampType | TimestampNTZType =>
-            Some(unix_micros(col(k).cast("timestamp")))
-          case FloatType | DoubleType => Some(col(k).cast("double"))
-          case StringType => Some(col(k))
-          case _ => None
-        })
-      }
-    val indexable = keyDomain.collect { case (k, Some(c)) => (k, c) }
+      : (Option[Option[Seq[DataSkipping.Pred]]], Boolean) = {
+    import org.apache.spark.sql.functions.{col, count, lit, max => fmax, min => fmin}
+    val indexable = keys.flatMap(k =>
+      DataSkipping.statColumn(source.schema(k).dataType, col(k)).map(kc => (k, kc._2)))
     if (indexable.isEmpty) {
       // span unprovable (unindexable key type); the duplicate gate
       // still needs its own bounded probe when asked for
@@ -2205,41 +2040,13 @@ class VersionedTable(spark: SparkSession, dir: String,
         }
       val spans = indexable.zipWithIndex.map { case ((k, _), i) =>
         if (row.isNullAt(2 * i)) None
-        else Some((k, Some(row.get(2 * i)): Option[Any],
-          Some(row.get(2 * i + 1)): Option[Any]))
+        else Some(DataSkipping.Range(k, Some(row.get(2 * i)), Some(row.get(2 * i + 1))))
       }
       // an all-null key: no matches
       if (spans.exists(_.isEmpty)) (Some(None), dups)
       else (Some(Some(spans.flatten)), dups)
     }
   }
-
-  /** Stat test of a concurrent winner's added directories against a
-    * merge span — the retry protocol's added-data conflict rule,
-    * shared by every merge commit shape.
-    */
-  private def mergeAddedMayMatch(
-      spanState: Option[Option[Seq[(String, Option[Any], Option[Any])]]],
-      mergeL2p: Map[String, String]): Commit => Seq[String] = c =>
-    spanState match {
-      case Some(None) => Seq.empty // pure insert: nothing can match
-      case None => c.added // unindexable keys: unprovable, conservative
-      case Some(Some(preds)) => c.added.filter { d =>
-        c.addedStats.get(d) match {
-          case None => true // no stats recorded: conservative
-          case Some(st) => preds.forall { case (cn0, lo, hi) =>
-            val cn = mergeL2p.getOrElse(cn0, cn0)
-            st.get(cn) match {
-              case None => true
-              case Some(cs) if cs.min == null => false // all-null key: no match
-              case Some(cs) =>
-                !(lo.exists(l => cmpBound(cs.max, normBound(l)) < 0) ||
-                  hi.exists(h => cmpBound(cs.min, normBound(h)) > 0))
-            }
-          }
-        }
-      }
-    }
 
   /** The FULL Delta-shaped MERGE clause surface in one atomic commit:
     * `WHEN MATCHED [AND c] THEN UPDATE SET .../DELETE`, `WHEN NOT
@@ -2508,14 +2315,23 @@ class VersionedTable(spark: SparkSession, dir: String,
         val dups = active.nonEmpty &&
           src.groupBy(keys.map(col): _*).count()
             .filter(col("count") > 1).limit(1).count() > 0
-        (None: Option[Option[Seq[(String, Option[Any], Option[Any])]]], dups)
+        (None: Option[Option[Seq[DataSkipping.Pred]]], dups)
       } else mergeSpanAndDupState(src, keys, needDup = needDupGate)
+    // The span prunes the touched directories and, on retry, a
+    // concurrent winner's added ones (the added-data conflict rule):
+    // none when the source is all-null keys (a pure insert), all when
+    // the span is unprovable (unindexable keys, BY SOURCE).
     val touched: Seq[String] = spanState match {
       case None => active
       case Some(None) => Seq.empty
-      case Some(Some(preds)) => pruneActiveAll(preds, Some(latest))._1
+      case Some(Some(preds)) => skip(preds, Some(latest))._1
     }
-    val addedMayMatch = mergeAddedMayMatch(spanState, mergeL2p)
+    val addedMayMatch: Commit => Seq[String] = c => spanState match {
+      case None => c.added
+      case Some(None) => Seq.empty
+      case Some(Some(preds)) => DataSkipping.partition(preds, c.added, c.addedStats.get,
+        cn => mergeL2p.getOrElse(cn, cn))._1
+    }
     val castTo = snapSchema.fields.map(f => f.name -> f.dataType).toMap
     // the touched rows with their file identity: one relation (one file
     // listing) every target-side frame below derives from
@@ -3196,7 +3012,7 @@ class VersionedTable(spark: SparkSession, dir: String,
       s"update SET column `$k` is not in the table schema " +
         s"(${schema.fieldNames.mkString(", ")})"))
     val hit = coalesce(condition, lit(false))
-    val candidates = discoveryCandidates(condition, schema, snap.active, latest)
+    val candidates = discoveryCandidates(condition, schema, latest)
     if (candidates.isEmpty) return latest // provably nothing matches
     def scan(dirs: Seq[String]): DataFrame = readDirsFolded(Some(schema), dirs,
       snap.dvs, tag = Some("__graft_file"), posTag = Some("__graft_pos"))
@@ -4021,82 +3837,36 @@ class VersionedTable(spark: SparkSession, dir: String,
     readDirsFolded(snap.schemaJson.map(schemaFromJson), active, snap.dvs)
   }
 
-  /** Normalize a caller-supplied bound to the stat domain: integrals
-    * and timestamps → Long (micros), fractionals → Double, strings
-    * as-is.
+  /** Data skipping (Delta file statistics) through the data-skipping
+    * core ([[DataSkipping]]): split version `v`'s (default: latest)
+    * active directories into (kept, skipped) under a conjunction of
+    * predicates — a directory is skipped only when its recorded stats
+    * provably cannot satisfy them; one without stats for a column keeps.
+    * Pruning happens on MANIFEST metadata before any parquet footer
+    * opens. Predicates name LOGICAL columns; the stats index is keyed by
+    * the stable PHYSICAL names (identity for never-renamed tables).
     */
-  private def normBound(v: Any): Any = v match {
-    case i: Int => i.toLong
-    case s: Short => s.toLong
-    case b: Byte => b.toLong
-    case l: Long => l
-    case f: Float => f.toDouble
-    case d: Double => d
-    case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-    case s: String => s
-    case other => throw new IllegalArgumentException(
-      s"unsupported pruning bound type: ${other.getClass.getName}")
+  private[graft] def skip(preds: Seq[DataSkipping.Pred],
+                          version: Option[Int]): (Seq[String], Seq[String]) = {
+    val v = version.getOrElse(latestVersion)
+    require(v >= 0, s"$dir has no committed versions")
+    val snap = snapshotAt(v)
+    DataSkipping.partition(preds, snap.active, snap.stats.get, toPhysicalName(_, snap))
   }
 
-  /** stat-domain comparison; numeric kinds coerce to Double when
-    * mixed. Strings compare in UNSIGNED UTF-8 BYTE order — the order
-    * Spark's min/max (UTF8String) computed the stats in; Java's
-    * `compareTo` (UTF-16 code units) disagrees with it for
-    * supplementary-plane characters, and a mismatched order could
-    * prune a directory that actually holds matching rows.
-    */
-  private[sources] def cmpBound(a: Any, b: Any): Int = (a, b) match {
-    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-    case (x: String, y: String) =>
-      val xb = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val yb = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      while (i < xb.length && i < yb.length) {
-        val c = (xb(i) & 0xFF) - (yb(i) & 0xFF)
-        if (c != 0) return c
-        i += 1
-      }
-      xb.length - yb.length
-    case (_: String, _) | (_, _: String) => throw new IllegalArgumentException(
-      s"cannot compare string and numeric pruning bounds ($a vs $b)")
-    case _ =>
-      val d = (v: Any) => v match { case l: Long => l.toDouble; case d: Double => d }
-      java.lang.Double.compare(d(a), d(b))
-  }
-
-  /** Data skipping (Delta file statistics): split version `v`'s
-    * (default: latest) active directories into (kept, skipped) for a
-    * range predicate `lower <= colName <= upper` — a directory is
-    * skipped only when its recorded [min, max] provably cannot
-    * intersect the range; directories without stats for the column
-    * (unsupported type, all-null, pre-stats commits) are kept
-    * conservatively. Pruning happens on MANIFEST metadata before any
-    * parquet footer is opened — at 100 TB this is the difference
-    * between touching one ingestion-day's directories and listing
-    * them all; parquet row-group skipping then prunes WITHIN the kept
-    * directories when the caller applies the same predicate.
+  /** [[skip]] for one range `lower <= colName <= upper`; an
+    * unsupported bound type fails loudly.
     */
   def pruneActive(colName: String, lower: Option[Any] = None,
                   upper: Option[Any] = None,
                   version: Option[Int] = None): (Seq[String], Seq[String]) =
     pruneActiveAll(Seq((colName, lower, upper)), version)
 
-  /** Conjunctive multi-column data skipping: a directory survives only
-    * if EVERY (column, lower, upper) range can intersect its recorded
-    * bounds — the reader shape a Z-ORDERED table exists for (each
-    * predicate independently eliminates chunks, and the intersection is
-    * never larger than the tightest single-column prune). Missing stats
-    * for a column keep the directory conservatively, same as
-    * [[pruneActive]]. A bounded predicate also skips directories whose
-    * column is recorded ALL-NULL (no range matches a null — SQL
-    * comparison semantics); an UNBOUNDED (None, None) entry keeps
-    * everything, unchanged.
-    *
-    * `notNullCols` skips directories whose recorded column is all-null
-    * (`IS NOT NULL` can match nothing there); `isNullCols` skips
-    * directories whose recorded null count is ZERO (`IS NULL` can
-    * match nothing) — Delta's nullCount statistics, the shape the
-    * DataSourceV2 scan pushes.
+  /** Conjunctive multi-column [[skip]] — the reader shape a Z-ORDERED
+    * table exists for (each predicate independently eliminates chunks).
+    * A bounded range also skips directories whose column is recorded
+    * ALL-NULL; `notNullCols` (IS NOT NULL) skips all-null directories,
+    * `isNullCols` (IS NULL) those with a zero null count.
     */
   def pruneActiveAll(predicates: Seq[(String, Option[Any], Option[Any])],
                      version: Option[Int] = None,
@@ -4104,75 +3874,16 @@ class VersionedTable(spark: SparkSession, dir: String,
                      isNullCols: Seq[String] = Nil): (Seq[String], Seq[String]) = {
     require(predicates.nonEmpty || notNullCols.nonEmpty || isNullCols.nonEmpty,
       "pruneActiveAll needs at least one predicate")
-    val v = version.getOrElse(latestVersion)
-    require(v >= 0, s"$dir has no committed versions")
-    val snapState = snapshotAt(v)
-    // predicates arrive in LOGICAL names; the stats index is keyed by
-    // the stable PHYSICAL names (identity for never-renamed tables)
-    val norm = predicates.map { case (c, lo, hi) =>
-      (toPhysicalName(c, snapState), lo.map(normBound), hi.map(normBound)) }
-    snapState.active.partition { d =>
-      def statOf(c: String): Option[ColStat] =
-        snapState.stats.get(d).flatMap(_.get(c))
-      norm.forall { case (c, lo, hi) =>
-        statOf(c) match {
-          case None => true
-          case Some(st) if st.min == null => // all-null (or empty) column
-            lo.isEmpty && hi.isEmpty // any actual bound proves no match
-          case Some(st) =>
-            !(lo.exists(l => cmpBound(st.max, l) < 0) ||
-              hi.exists(h => cmpBound(st.min, h) > 0))
-        }
-      } && notNullCols.forall(c => statOf(toPhysicalName(c, snapState)) match {
-        case Some(st) => st.min != null // all-null: IS NOT NULL matches nothing
-        case None => true
-      }) && isNullCols.forall(c => statOf(toPhysicalName(c, snapState)) match {
-        case Some(st) => st.nulls != 0L // zero nulls: IS NULL matches nothing
-        case None => true
-      })
-    }
+    skip(DataSkipping.fromTuples(predicates, notNullCols, isNullCols), version)
   }
 
-  /** Exact IN-list data skipping — the runtime-filter (dynamic
-    * partition pruning) shape: keep a directory iff AT LEAST ONE of
-    * `values` falls inside its recorded [min, max]. Strictly tighter
-    * than collapsing the list to its envelope (a scattered key set
-    * envelopes the whole table but may intersect few directories) at
-    * O(|dirs| · log |values|): values sort once, each directory binary-
-    * searches for a member ≥ its min. Null values never match (SQL IN
-    * semantics); all-null or statless directories keep conservatively
-    * only when stats are absent — an all-null column provably holds no
-    * match and prunes. Returns (kept, skipped) like [[pruneActiveAll]].
+  /** Exact IN-list [[skip]]: keep a directory iff at least one of
+    * `values` falls inside its recorded [min, max] — tighter than the
+    * list's envelope for a scattered key set. Null values never match.
     */
-  def pruneActiveIn(colName0: String, values: Seq[Any],
-                    version: Option[Int] = None): (Seq[String], Seq[String]) = {
-    val v = version.getOrElse(latestVersion)
-    require(v >= 0, s"$dir has no committed versions")
-    val snapState = snapshotAt(v)
-    val colName = toPhysicalName(colName0, snapState)
-    val norm = values.filter(_ != null).map(normBound).distinct
-      .sortWith((a, b) => cmpBound(a, b) < 0).toIndexedSeq
-    if (norm.isEmpty)
-      // IN (NULL,…) or an empty list matches nothing anywhere — but a
-      // statless directory still keeps (cannot prove its column kind)
-      return snapState.active.partition(d =>
-        snapState.stats.get(d).flatMap(_.get(colName)).isEmpty)
-    snapState.active.partition { d =>
-      snapState.stats.get(d).flatMap(_.get(colName)) match {
-        case None => true // no stats: conservative keep
-        case Some(st) if st.min == null => false // all-null: IN never matches
-        case Some(st) =>
-          // smallest value >= st.min; a match exists iff it's <= st.max
-          var lo = 0
-          var hi = norm.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (cmpBound(norm(mid), st.min) < 0) lo = mid + 1 else hi = mid
-          }
-          lo < norm.length && cmpBound(norm(lo), st.max) <= 0
-      }
-    }
-  }
+  def pruneActiveIn(colName: String, values: Seq[Any],
+                    version: Option[Int] = None): (Seq[String], Seq[String]) =
+    skip(Seq(DataSkipping.fromValues(colName, values)), version)
 
   /** [[readAt]] restricted to the [[pruneActiveAll]] survivors of a
     * conjunction of ranges (superset guarantee — the caller still

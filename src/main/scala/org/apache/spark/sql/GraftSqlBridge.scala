@@ -41,6 +41,13 @@ object GraftSqlBridge {
       .toOption.filter(_.schema != null)
       .map(r => r.getValuesMap[Any](r.schema.fieldNames.toIndexedSeq))
 
+  /** Spark's own Catalyst → v1 `Filter` translation of one predicate
+    * (top-level columns only), the one the v1 pushdown path uses.
+    */
+  def translateFilter(e: catalyst.expressions.Expression): Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e,
+      supportNestedPredicatePushdown = false)
+
   /** The planner strategies an extensions object would inject — lets a
     * test assert the `spark.sql.extensions` wiring without building a
     * second SparkSession (the builder reuses the active one).

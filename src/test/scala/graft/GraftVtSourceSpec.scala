@@ -143,11 +143,19 @@ class GraftVtSourceSpec extends SparkSuite {
     vt.append(slice("1997-01-01", "1997-03-01"))
     vt.append(slice("1998-01-01", "1998-03-01"))
     vt.append(slice("1999-01-01", "1999-03-01"))
+    vt.append(slice("1500-01-01", "1500-01-01"))
     val t = spark.read.format("graftvt").load(dir)
     val q = t.filter(col("ts") >= lit("1998-01-15").cast("timestamp") &&
       col("ts") < lit("1998-02-15").cast("timestamp"))
     assert(keptDirs(q) === 1)
     assert(q.count() === 31)
+    // before 1582 a java.sql.Timestamp (hybrid Julian) and the stats'
+    // proleptic-Gregorian micros differ by days: the bound must rebase
+    val old = t.filter(col("ts") === to_timestamp(lit("1500-01-01 00:00:00")))
+    assert(keptDirs(old) === 1)
+    assert(old.count() === 1)
+    val oldTs = java.sql.Timestamp.valueOf("1500-01-01 00:00:00")
+    assert(vt.pruneActive("ts", Some(oldTs), Some(oldTs))._1.size === 1)
   }
 
   test("null-count stats: all-null dirs prune under ranges; IS [NOT] NULL prunes") {
@@ -307,6 +315,15 @@ class GraftVtSourceSpec extends SparkSuite {
     assert(scan.runtimeKept === Some(2))
     assert(scan.parquet.fileIndex.rootPaths.length === 2)
     assert(scan.toBatch.planInputPartitions().nonEmpty)
+  }
+
+  test("a static IN list prunes directories by exact membership, not envelope") {
+    val (dir, _) = threeSliceTable()
+    // {50, 250} envelopes [50, 250], which intersects all three
+    // directories; exact membership keeps the two holding a member
+    val q = spark.read.format("graftvt").load(dir).filter(col("k").isin(50L, 250L))
+    assert(keptDirs(q) === 2)
+    assert(q.count() === 2)
   }
 
   test("a selective dimension filter dynamically prunes fact directories through a join") {

@@ -76,6 +76,14 @@ class VersionedUpdateSpec extends SparkSuite {
     // an untranslatable predicate falls back to the full active set
     vt.delete(col("k") % 9999 === 1234)
     assert(vt.lastDiscoveryDirs.toSet === vt.activeDirs(Some(v)).toSet)
+    // IN keys scattered across the chunks: exactly the directories whose
+    // [min, max] holds a member, not every directory in the envelope
+    val keys = Seq(500L, 3500L)
+    val holding = keys.flatMap(k => vt.pruneActive("k", Some(k), Some(k))._1).toSet
+    assert(vt.pruneActive("k", Some(keys.min), Some(keys.max))._1.size > holding.size)
+    vt.delete(col("k").isin(keys: _*))
+    assert(vt.lastDiscoveryDirs.toSet === holding)
+    assert(vt.read().filter(col("k").isin(keys: _*)).isEmpty)
   }
 
   test("update casts assigned values to the column's physical type; schema never drifts") {
