@@ -158,4 +158,48 @@ class MutationJobBudgetSpec extends SparkSuite {
       assert(jobs <= b, s"$name ran $jobs jobs, budget $b")
     }
   }
+
+  /** (maintenance entry point, set-up before counting, the command, jobs
+    * pinned) — the layout rewrites beside `optimize` above. The DV-debt
+    * forms rewrite the one directory [[priorDv]] hides rows of.
+    */
+  private val maintenance: Seq[(String, () => Unit, () => Int, Int)] = Seq(
+    ("optimizeWhere", () => (), () =>
+      vt.optimizeWhere("id", 2, "id", Some(0L), Some(60000L)), 8),
+    ("optimizeZOrder", () => (), () => vt.optimizeZOrder(Seq("id", "amount"), 4), 9),
+    ("compact", () => (), () => vt.compact(4), 7),
+    ("optimizeDvDebt (hash key)", () => priorDv(), () => vt.optimizeDvDebt(0.001, 2), 8),
+    ("optimizeDvDebt (column key)", () => priorDv(), () =>
+      vt.optimizeDvDebt(0.001, 2, Some("id")), 8))
+
+  for ((name, setUp, run, b) <- maintenance) {
+    test(s"$name: at most the pinned job count") {
+      vt.restore(baseVersion)
+      setUp()
+      val before = vt.latestVersion
+      val (v, jobs) = countingJobs(run())
+      assert(v > before, s"$name committed nothing")
+      assert(jobs <= b, s"$name ran $jobs jobs, budget $b")
+    }
+  }
+
+  test("auto-compaction fold: at most the pinned job count beyond the append") {
+    vt.restore(baseVersion)
+    val (_, plain) = countingJobs(vt.append(fresh))
+    vt.restore(baseVersion)
+    // every active directory is small: the armed append's hook folds
+    // the 20 base directories and the appended one into one
+    val armed = Map("graft.autoCompact.minFiles" -> "21",
+      "graft.autoCompact.smallBytes" -> (1L << 30).toString)
+    vt.setProperties(armed)
+    try {
+      val before = vt.latestVersion
+      val (_, jobs) = countingJobs(vt.append(fresh))
+      assert(vt.latestVersion === before + 2, "the append did not fold")
+      assert(vt.activeDirs().size === 1)
+      val b = 6
+      assert(jobs - plain <= b,
+        s"the fold ran ${jobs - plain} jobs beyond the append, budget $b")
+    } finally vt.unsetProperties(armed.keys.toSeq)
+  }
 }
