@@ -146,7 +146,7 @@ object PlanDumps {
       "# listings. Any schema evolution / rename / widen in history\n" +
       "# falls back to the historical inference path unchanged.\n\n" +
       fmt(imposedRead))
-    // ---- rewriteClustered: chunk stats from the cache, not a re-read
+    // ---- the layout rewrite: chunk stats from the cache, not a re-read
     val chunkDemo = tmp + "/chunks"
     df.withColumn("__graft_chunk", (col("id") % 3).cast("long"))
       .write.partitionBy("__graft_chunk").parquet(chunkDemo)

@@ -149,16 +149,19 @@ case class GraftDescribeHistory(target: String) extends LeafRunnableCommand {
     VersionedSql.resolveTarget(spark, target)._1.history().collect().toSeq
 }
 
-/** `OPTIMIZE t [WHERE c BETWEEN a AND b] [ZORDER BY (...)] [INTO n
-  * CHUNKS]` — the transactional rewrite: no columns → bin-packing
-  * [[graft.sources.VersionedTable.compact]], one column →
-  * range-clustered [[graft.sources.VersionedTable.optimize]], 2+ →
-  * [[graft.sources.VersionedTable.optimizeZOrder]]. A WHERE range
+/** `OPTIMIZE t [WHERE c BETWEEN a AND b | WHERE __dv_fraction >= x]
+  * [ZORDER BY (...)] [INTO n CHUNKS]` — every form is the table's one
+  * layout rewrite with a scope and a key: no columns → hash key
+  * ([[graft.sources.VersionedTable.compact]]), one column → its range
+  * ([[graft.sources.VersionedTable.optimize]]), 2+ → z-order
+  * ([[graft.sources.VersionedTable.optimizeZOrder]]). A WHERE range
   * scopes the rewrite to the directories whose stats can intersect it
   * ([[graft.sources.VersionedTable.optimizeWhere]] — the 100 TB form:
   * compact the hot ingestion window, leave the cold bulk untouched),
-  * clustering on the ZORDER column when given, else on the scope
-  * column itself. Chunk count defaults to the recorded-bytes / 128 MB
+  * and `__dv_fraction` to the DV-debt directories
+  * ([[graft.sources.VersionedTable.optimizeDvDebt]]), clustering on the
+  * ZORDER column when given, else on the scope column (WHERE) or a hash
+  * (DV debt). Chunk count defaults to the recorded-bytes / 128 MB
   * metadata estimate. A bridge-named table's catalog view is
   * re-pointed at the new snapshot afterwards.
   */

@@ -32,6 +32,16 @@ private[sources] object SchemaCompat {
   def nullableJson(s: StructType): String =
     nullableDeep(s).asInstanceOf[StructType].json
 
+  /** True iff Spark's hash expressions accept `dt`: they reject a map
+    * (unordered — no canonical hash) at any depth.
+    */
+  def hashable(dt: DataType): Boolean = dt match {
+    case _: org.apache.spark.sql.types.MapType => false
+    case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
+    case s: StructType => s.fields.forall(f => hashable(f.dataType))
+    case _ => true
+  }
+
   /** The accepted widening casts, listed explicitly rather than by a
     * numeric rank — a rank order would silently admit the LOSSY
     * promotions (int→float and long→float overflow a 24-bit mantissa).

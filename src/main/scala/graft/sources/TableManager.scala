@@ -71,17 +71,10 @@ class TableManager(spark: SparkSession) {
     if (partitionBy.isEmpty) df
     else if (filesPerPartition <= 1) df.repartition(partitionBy.map(col): _*)
     else {
-      // Salt from the hashABLE columns only: Spark's hash expressions
-      // reject MapType (unordered — no canonical hash), so a row with
-      // a map column would fail analysis if hashed whole.
-      def hashable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-        case _: org.apache.spark.sql.types.MapType => false
-        case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
-        case s: StructType => s.fields.forall(f => hashable(f.dataType))
-        case _ => true
-      }
+      // Salt from the hashABLE columns only: a row with a map column
+      // would fail analysis if hashed whole.
       val saltCols = df.schema.fields
-        .filter(f => !partitionBy.contains(f.name) && hashable(f.dataType))
+        .filter(f => !partitionBy.contains(f.name) && SchemaCompat.hashable(f.dataType))
         .map(f => col(f.name))
       // All-map payload: no deterministic salt available — fall back
       // to the unsalted aligned write rather than a nondeterministic

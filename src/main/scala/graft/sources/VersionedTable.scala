@@ -222,6 +222,31 @@ object VersionedTable {
     s.copy(stats = typedStats(s.stats))
   }
 
+  /** Which active directories a layout [[VersionedTable.rewrite]] replaces. */
+  private sealed trait Scope
+  private object Scope {
+    case object All extends Scope
+    /** the [[VersionedTable.skip]] survivors of a conjunction of predicates */
+    final case class Where(preds: Seq[DataSkipping.Pred]) extends Scope
+    /** the directories [[VersionedTable.dvDebt]] selects */
+    final case class DvDebt(minFraction: Double) extends Scope
+    final case class Dirs(dirs: Seq[String]) extends Scope
+  }
+
+  /** The double-valued key a layout [[VersionedTable.rewrite]] cuts its
+    * chunks on and sorts them by.
+    */
+  private sealed trait Key
+  private object Key {
+    /** one numeric or timestamp column */
+    final case class Range(col: String) extends Key
+    /** the Morton interleave of per-column equi-depth bucket ids */
+    final case class ZOrder(cols: Seq[String], bitsPerCol: Int) extends Key
+    /** a hash of the hashable columns (bin-packing, no clustering) */
+    case object Hash extends Key
+    case object Const extends Key
+  }
+
   /** CONVERT an existing FLAT parquet directory into a versioned table
     * IN PLACE (Delta's `CONVERT TO DELTA`): every `*.parquet` file is
     * RENAMED (metadata-only — no data copied or rewritten, whatever
@@ -275,7 +300,7 @@ class VersionedTable(spark: SparkSession, dir: String,
   private def fs: FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  import VersionedTable.{ColStat, Commit, Snapshot}
+  import VersionedTable.{ColStat, Commit, Key, Scope, Snapshot}
 
   private def manifestPath(v: Int): Path = new Path(logDir, f"$v%08d.json")
   private def checkpointPath(v: Int): Path =
@@ -1231,7 +1256,8 @@ class VersionedTable(spark: SparkSession, dir: String,
     require(ghost.isEmpty,
       s"column(s) ${ghost.mkString(", ")} were dropped but their bytes " +
         s"still live in active directories of $dir — re-adding would " +
-        "resurface old values; run OPTIMIZE (full rewrite) first")
+        "resurface old values; rewrite those directories first (any " +
+        "OPTIMIZE or DML rewrite of a directory sheds the bytes)")
     val evolved = org.apache.spark.sql.types.StructType(
       existing.fields ++ cols.fields)
     val v = latest + 1
@@ -2693,11 +2719,12 @@ class VersionedTable(spark: SparkSession, dir: String,
     *  - `graft.autoCompact.minFiles` = k >= 2 (with
     *    `graft.autoCompact.smallBytes`, default 32 MiB): when k active
     *    DV-free directories each sit under the byte threshold, they
-    *    are folded into one via [[compactDirs]] (unpartitioned tables;
+    *    are folded into one by a [[rewrite]] of exactly those
+    *    directories with a constant key (unpartitioned tables;
     *    recorded manifest bytes decide — no filesystem walk);
     *  - `graft.autoOptimize.dvFraction` = x in (0, 1]: directories
-    *    whose cumulative hidden fraction reached x are rewritten via
-    *    [[optimizeDvDebt]] (chunk count = #debt directories, or
+    *    whose cumulative hidden fraction reached x are rewritten as
+    *    [[optimizeDvDebt]] does (chunk count = #debt directories, or
     *    `graft.autoOptimize.targetChunks`);
     *  - `graft.autoCoalesce.minSidecars` = k >= 2: directories
     *    stacking >= k sidecars get them merged metadata-only via
@@ -2779,23 +2806,17 @@ class VersionedTable(spark: SparkSession, dir: String,
           val small = snap.active.filter(d => !snap.dvs.contains(d) &&
             snap.dirBytes.get(d).exists(_ < smallBytes))
           if (small.size >= k)
-            try compactDirs(small, latest)
+            try rewrite(Scope.Dirs(small), Key.Const, 1, latest)
             catch { case _: GraftConflictException => () }
         }
       }
     props.get("graft.autoOptimize.dvFraction").flatMap(_.toDoubleOption)
       .filter(x => x > 0.0 && x <= 1.0).foreach { x =>
-        val debtDirs = snap.active.count { d =>
-          val hidden = snap.dvRowsByDir.getOrElse(d, 0L)
-          hidden > 0L && (snap.dirRows.get(d) match {
-            case Some(rows) if rows > 0L => hidden.toDouble / rows >= x
-            case _ => true
-          })
-        }
+        val debtDirs = dvDebt(snap, x).size
         if (debtDirs > 0) {
           val chunks = props.get("graft.autoOptimize.targetChunks")
             .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(debtDirs)
-          try optimizeDvDebt(x, chunks)
+          try rewrite(Scope.DvDebt(x), Key.Hash, chunks, latest)
           catch { case _: GraftConflictException => () }
         }
       }
@@ -3314,44 +3335,18 @@ class VersionedTable(spark: SparkSession, dir: String,
   }
 
   /** Transactional OPTIMIZE [ZORDER] — Delta's compaction as ONE
-    * commit: rewrite the current active set into `targetChunks`
-    * RANGE-DISJOINT directories clustered on `clusterBy` (chunk
-    * boundaries from approximate quantiles), then publish a single
-    * "optimize" manifest removing the old directories and adding the
-    * chunks. Readers never see a half-compacted table (old versions
-    * stay readable until vacuum), and because data-skipping stats are
-    * per-directory, range-disjoint chunks make [[pruneActive]] TIGHT
-    * after compaction — a range predicate keeps ~1/targetChunks of the
-    * table instead of every append-order directory it used to
-    * straddle. Rows with a NULL cluster key ride the last chunk.
-    * Returns the committed version.
+    * commit: [[rewrite]] the current active set into `targetChunks`
+    * RANGE-DISJOINT directories clustered on `clusterBy` (numeric or
+    * timestamp; chunk boundaries from approximate quantiles). Readers
+    * never see a half-compacted table (old versions stay readable until
+    * vacuum), and because data-skipping stats are per-directory,
+    * range-disjoint chunks make [[pruneActive]] TIGHT after compaction —
+    * a range predicate keeps ~1/targetChunks of the table instead of
+    * every append-order directory it used to straddle. Rows with a NULL
+    * cluster key ride the last chunk. Returns the committed version.
     */
-  def optimize(clusterBy: String, targetChunks: Int): Int = {
-    require(targetChunks >= 1, s"targetChunks must be >= 1: $targetChunks")
-    import org.apache.spark.sql.functions.col
-    // The snapshot is pinned BEFORE the rewrite: a commit landing while
-    // it runs trips the optimistic publish, and the retry re-commits
-    // IFF no intervening commit removed this rewrite's inputs (a plain
-    // concurrent append — the common ingestion race — rides through;
-    // its directories stay active untouched).
-    val base = latestVersion
-    require(base >= 0, s"$dir has no committed versions")
-    val snap = readAt(base)
-    // approxQuantile wants a numeric column: timestamps/integrals
-    // shadow-cast to double for the BOUNDARIES only — rows are
-    // filtered on the shadow, written with their original columns.
-    val ck = "__graft_ck"
-    snap.schema(clusterBy).dataType match {
-      case _: org.apache.spark.sql.types.NumericType => ()
-      case org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.TimestampNTZType => ()
-      case other => throw new IllegalArgumentException(
-        s"optimize clusterBy must be numeric or timestamp, got " +
-          s"${other.simpleString} (a string cast would null every key)")
-    }
-    val keyed = snap.withColumn(ck, col(clusterBy).cast("double"))
-    rewriteClustered(keyed, ck, targetChunks, base, activeAt(base))
-  }
+  def optimize(clusterBy: String, targetChunks: Int): Int =
+    rewrite(Scope.All, Key.Range(clusterBy), targetChunks)
 
   /** Predicate-scoped OPTIMIZE — Delta's `OPTIMIZE ... WHERE`: rewrite
     * ONLY the active directories whose recorded `scopeCol` range can
@@ -3370,50 +3365,11 @@ class VersionedTable(spark: SparkSession, dir: String,
     */
   def optimizeWhere(clusterBy: String, targetChunks: Int, scopeCol: String,
                     lower: Option[Any], upper: Option[Any]): Int = {
-    import org.apache.spark.sql.functions.col
     require(lower.isDefined || upper.isDefined,
       "optimizeWhere needs at least one bound (use optimize() for the " +
         "whole table)")
-    val base = latestVersion
-    require(base >= 0, s"$dir has no committed versions")
-    val (kept, _) = pruneActive(scopeCol, lower, upper, Some(base))
-    if (kept.isEmpty) return base
-    val scopeSnap = snapshotAt(base)
-    val scope = readDirsFolded(None, kept, scopeSnap.dvs,
-      scopeSnap.schemaJson.map(j => renameMap(schemaFromJson(j)).map(_.swap))
-        .getOrElse(Map.empty))
-    scope.schema(clusterBy).dataType match {
-      case _: org.apache.spark.sql.types.NumericType => ()
-      case org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.TimestampNTZType => ()
-      case other => throw new IllegalArgumentException(
-        s"optimize clusterBy must be numeric or timestamp, got " +
-          s"${other.simpleString}")
-    }
-    val ck = "__graft_ck"
-    rewriteClustered(scope.withColumn(ck, col(clusterBy).cast("double")),
-      ck, targetChunks, base, kept)
-  }
-
-  /** Fold EXACTLY `dirs` (small-file debt — the auto-compaction hook's
-    * unit of work) into one directory via the clustered-rewrite
-    * machinery with a constant key and a single chunk: the same
-    * commit protocol, column-mapping back-rename, and
-    * concurrent-ingestion retry as OPTIMIZE, scoped to the named
-    * directories — every other directory survives byte-identical.
-    * Callers pass DV-free directories only (a DV'd directory's debt is
-    * [[optimizeDvDebt]]'s job). Returns the committed version.
-    */
-  private def compactDirs(dirs: Seq[String], base: Int): Int = {
-    import org.apache.spark.sql.functions.lit
-    val snap = snapshotAt(base)
-    val p2l = snap.schemaJson
-      .map(j => renameMap(schemaFromJson(j)).map(_.swap))
-      .getOrElse(Map.empty)
-    val scope = readDirsFolded(None, dirs, snap.dvs, p2l)
-    rewriteClustered(
-      scope.withColumn("__graft_ck", lit(0.0).cast("double")),
-      "__graft_ck", targetChunks = 1, base, dirs)
+    rewrite(Scope.Where(DataSkipping.fromTuples(Seq((scopeCol, lower, upper)))),
+      Key.Range(clusterBy), targetChunks)
   }
 
   /** METADATA-ONLY DV maintenance: merge every directory's stacked
@@ -3476,89 +3432,34 @@ class VersionedTable(spark: SparkSession, dir: String,
     */
   def optimizeDvDebt(minFraction: Double, targetChunks: Int,
                      clusterBy: Option[String] = None): Int = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, struct, xxhash64}
     require(minFraction > 0.0 && minFraction <= 1.0,
       s"minFraction must be in (0, 1]: $minFraction")
-    val base = latestVersion
-    require(base >= 0, s"$dir has no committed versions")
-    val snap = snapshotAt(base)
-    val kept = snap.active.filter { d =>
-      val hidden = snap.dvRowsByDir.getOrElse(d, 0L)
-      hidden > 0L && (snap.dirRows.get(d) match {
-        case Some(rows) if rows > 0L => hidden.toDouble / rows >= minFraction
-        case _ => true // debt of unknown proportion: compact it
-      })
-    }
-    if (kept.isEmpty) return base
-    val p2l = snap.schemaJson
-      .map(j => renameMap(schemaFromJson(j)).map(_.swap)).getOrElse(Map.empty)
-    val scope = readDirsFolded(None, kept, snap.dvs, p2l)
-    val ck = "__graft_ck"
-    val keyed = clusterBy match {
-      case Some(c) =>
-        scope.schema(c).dataType match {
-          case _: org.apache.spark.sql.types.NumericType => ()
-          case org.apache.spark.sql.types.TimestampType |
-               org.apache.spark.sql.types.TimestampNTZType => ()
-          case other => throw new IllegalArgumentException(
-            s"optimize clusterBy must be numeric or timestamp, got " +
-              s"${other.simpleString}")
-        }
-        scope.withColumn(ck, col(c).cast("double"))
-      case None =>
-        def hashable(dt: org.apache.spark.sql.types.DataType): Boolean =
-          dt match {
-            case _: org.apache.spark.sql.types.MapType => false
-            case a: org.apache.spark.sql.types.ArrayType =>
-              hashable(a.elementType)
-            case s: org.apache.spark.sql.types.StructType =>
-              s.fields.forall(f => hashable(f.dataType))
-            case _ => true
-          }
-        val hashCols = scope.schema.fields
-          .filter(f => hashable(f.dataType)).map(f => col(f.name))
-        if (hashCols.isEmpty) scope.withColumn(ck, lit(0.0))
-        else scope.withColumn(ck,
-          pmod(xxhash64(struct(hashCols.toIndexedSeq: _*)), lit(1000000L))
-            .cast("double"))
-    }
-    rewriteClustered(keyed, ck, targetChunks, base, kept)
+    rewrite(Scope.DvDebt(minFraction), clusterBy.fold[Key](Key.Hash)(Key.Range), targetChunks)
   }
+
+  /** The active directories of `snap` whose hidden fraction (DV-hidden
+    * rows over recorded rows) reached `minFraction`; hidden rows in a
+    * directory of unknown row count are debt of unknown proportion and
+    * count too.
+    */
+  private def dvDebt(snap: Snapshot, minFraction: Double): Seq[String] =
+    snap.active.filter { d =>
+      val hidden = snap.dvRowsByDir.getOrElse(d, 0L)
+      hidden > 0L && snap.dirRows.get(d).forall(rows =>
+        rows <= 0L || hidden.toDouble / rows >= minFraction)
+    }
 
   /** Bare OPTIMIZE — bin-packing compaction without a cluster key
     * (Delta's no-ZORDER form): rewrite the active set into
     * `targetChunks` directories in ONE transactional commit, rows
-    * spread deterministically by a hash of the hashable columns (the
-    * same transactional staging/publish as [[optimize]], with a hash
-    * key instead of a range key — re-runs land identical chunks, but
-    * no range-pruning benefit accrues; use a clustered form for that).
-    * The small-files problem this solves is real at any scale: a
-    * streaming sink committing every micro-batch leaves thousands of
-    * tiny directories whose per-file open cost dominates reads.
+    * spread deterministically by a hash of the hashable columns (re-runs
+    * land identical chunks, but no range-pruning benefit accrues; use a
+    * clustered form for that). The small-files problem this solves is
+    * real at any scale: a streaming sink committing every micro-batch
+    * leaves thousands of tiny directories whose per-file open cost
+    * dominates reads.
     */
-  def compact(targetChunks: Int): Int = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, struct, xxhash64}
-    require(targetChunks >= 1, s"targetChunks must be >= 1: $targetChunks")
-    val base = latestVersion
-    require(base >= 0, s"$dir has no committed versions")
-    val snap = readAt(base)
-    def hashable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.MapType => false
-      case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
-      case s: org.apache.spark.sql.types.StructType =>
-        s.fields.forall(f => hashable(f.dataType))
-      case _ => true
-    }
-    val hashCols = snap.schema.fields
-      .filter(f => hashable(f.dataType)).map(f => col(f.name))
-    val ck = "__graft_ck"
-    val keyed =
-      if (hashCols.isEmpty) snap.withColumn(ck, lit(0.0))
-      else snap.withColumn(ck,
-        pmod(xxhash64(struct(hashCols.toIndexedSeq: _*)), lit(1000000L))
-          .cast("double"))
-    rewriteClustered(keyed, ck, targetChunks, base, activeAt(base))
-  }
+  def compact(targetChunks: Int): Int = rewrite(Scope.All, Key.Hash, targetChunks)
 
   /** The chunk count a size-driven maintenance pass targets: recorded
     * active bytes over `targetBytes` (Delta's ~128 MB–1 GB file-size
@@ -3578,16 +3479,14 @@ class VersionedTable(spark: SparkSession, dir: String,
   }
 
   /** Multi-dimensional OPTIMIZE ZORDER BY: rewrite the active set into
-    * chunks clustered on the Z-ORDER (Morton) curve over 2+ columns, so
-    * [[pruneActive]] skips directories on a range predicate over ANY of
-    * them — the locality trade Delta's ZORDER makes. Each column is
-    * first equi-depth bucketed (approximate quantile cuts → bucket id,
-    * the skew-robust choice: a uniform-width grid would collapse a
-    * skewed column into one cell), the per-column bucket ids are
-    * bit-interleaved into the z-value with plain shift/and/or column
-    * arithmetic (codegen'd, no UDF), and the z-value becomes the chunk
-    * key for the same transactional range-chunk rewrite as the
-    * single-column form. Null/NaN keys ride the top bucket. With k
+    * chunks clustered on the Z-ORDER (Morton) curve over 2+ numeric or
+    * timestamp columns, so [[pruneActive]] skips directories on a range
+    * predicate over ANY of them — the locality trade Delta's ZORDER
+    * makes. Each column is first equi-depth bucketed (approximate
+    * quantile cuts → bucket id, the skew-robust choice: a uniform-width
+    * grid would collapse a skewed column into one cell), and the
+    * per-column bucket ids are bit-interleaved into the z-value the
+    * chunks are cut on. Null/NaN keys ride the top bucket. With k
     * columns at `bitsPerCol` bits, a narrow range on one column keeps
     * ~targetChunks^((k-1)/k) chunks instead of all of them — strictly
     * coarser per-dimension than a single-column cluster, the price of
@@ -3595,85 +3494,112 @@ class VersionedTable(spark: SparkSession, dir: String,
     */
   def optimizeZOrder(clusterBy: Seq[String], targetChunks: Int,
                      bitsPerCol: Int = 8): Int = {
-    import org.apache.spark.sql.functions._
     require(clusterBy.size >= 2,
       "optimizeZOrder needs >= 2 columns (use optimize(col, n) for one)")
     require(bitsPerCol >= 1 && bitsPerCol * clusterBy.size <= 48,
       s"bitsPerCol * columns must fit a double-exact long: " +
         s"$bitsPerCol * ${clusterBy.size}")
-    val base = latestVersion
-    require(base >= 0, s"$dir has no committed versions")
-    val snap = readAt(base)
-    clusterBy.foreach(c => snap.schema(c).dataType match {
-      case _: org.apache.spark.sql.types.NumericType => ()
-      case org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.TimestampNTZType => ()
-      case other => throw new IllegalArgumentException(
-        s"optimizeZOrder column `$c` must be numeric or timestamp, got " +
-          other.simpleString)
-    })
-    val buckets = 1 << bitsPerCol
-    // Equi-depth bucket id per column: value → #quantile-cuts below it.
-    // The cuts are a driver-side constant (≤255 per column), so the
-    // assignment is a pure column expression the planner folds into one
-    // codegen'd projection — no second shuffle, no UDF.
-    val shadow = clusterBy.map(c => s"__graft_z_$c")
-    var keyed = clusterBy.zip(shadow).foldLeft(snap) { case (df, (c, s)) =>
-      df.withColumn(s, col(c).cast("double"))
-    }
-    // ONE multi-column quantile job for every dimension's cuts (a
-    // per-column call would scan the full table k times).
-    val allCuts = keyed.stat.approxQuantile(shadow.toArray,
-      (1 until buckets).map(_.toDouble / buckets).toArray, 0.001)
-    val bucketIds = shadow.zip(allCuts).map { case (s, rawCuts) =>
-      val cuts = rawCuts.distinct.sorted
-      // Balanced when-tree binary search: id = #cuts strictly below the
-      // value — log2(buckets) comparisons per row, not buckets.
-      def search(loIdx: Int, hiIdx: Int): org.apache.spark.sql.Column =
-        if (loIdx == hiIdx) lit(loIdx.toLong)
-        else {
-          val mid = (loIdx + hiIdx) / 2
-          when(col(s) <= cuts(mid), search(loIdx, mid))
-            .otherwise(search(mid + 1, hiIdx))
-        }
-      // nulls/NaN to the top bucket (approxQuantile ignored them)
-      when(col(s).isNull || isnan(col(s)), lit((buckets - 1).toLong))
-        .otherwise(search(0, cuts.length))
-    }
-    // Morton interleave: bit j of column i lands at position j*k + i.
-    val k = clusterBy.size
-    val zTerms = for (i <- bucketIds.indices; j <- 0 until bitsPerCol)
-      yield shiftleft(shiftright(bucketIds(i), j).bitwiseAND(lit(1L)),
-        j * k + i)
-    val ck = "__graft_ck"
-    keyed = keyed.withColumn(ck,
-      zTerms.reduce(_ bitwiseOR _).cast("double")).drop(shadow: _*)
-    rewriteClustered(keyed, ck, targetChunks, base, activeAt(base))
+    rewrite(Scope.All, Key.ZOrder(clusterBy, bitsPerCol), targetChunks)
   }
 
-  /** The shared transactional rewrite behind [[optimize]] and
-    * [[optimizeZOrder]]: chunk `keyed` into up-to-`targetChunks`
-    * range-disjoint directories on the `ck` double column (boundaries
-    * from approximate quantiles, rows sorted by `ck` within chunks,
-    * null keys riding the last chunk — assigned by chunk ID, so they
-    * are written exactly once), drop `ck`, and publish ONE "optimize"
-    * commit at `base + 1` swapping `removed` (the full active set, or
-    * [[optimizeWhere]]'s in-scope subset) for the chunks (a concurrent
-    * commit that took an input directory fails it loudly — nothing it
-    * added can be silently dropped).
-    *
-    * The write is a SINGLE pass: rows get a chunk id (when-tree binary
-    * search over the cuts), shuffle once on it, sort within tasks by
-    * (chunk, key), and a partitionBy write emits every chunk directory
-    * in one job — not one filtered scan per chunk. The staged
-    * partition directories are then renamed (metadata-only) into
-    * top-level data directories.
+  /** Number of `cuts` (sorted, distinct) strictly below `v`: a balanced
+    * when-tree binary search, log2(cuts) comparisons per row, written as
+    * plain column expressions the planner codegens (no UDF).
     */
-  private def rewriteClustered(keyed0: DataFrame, ck: String,
-                               targetChunks: Int, base: Int,
-                               removed: Seq[String]): Int = {
+  private def cutsBelow(v: org.apache.spark.sql.Column,
+                        cuts: Array[Double]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{lit, when}
+    def search(lo: Int, hi: Int): org.apache.spark.sql.Column =
+      if (lo == hi) lit(lo.toLong)
+      else {
+        val mid = (lo + hi) / 2
+        when(v <= cuts(mid), search(lo, mid)).otherwise(search(mid + 1, hi))
+      }
+    search(0, cuts.length)
+  }
+
+  /** The ONE layout rewrite behind every OPTIMIZE form, [[compact]],
+    * the auto-compaction fold and the DV-debt rewrite: read `scope`'s
+    * directories at `base` exactly as [[readAt]] reads a version — under
+    * `base`'s recorded schema, DVs folded in the scan — so narrow files
+    * of a widened column upcast and a dropped column's bytes are shed;
+    * put `key` on every row; chunk into up-to-`targetChunks`
+    * range-disjoint directories on it (boundaries from approximate
+    * quantiles, rows sorted by the key within chunks, null keys riding
+    * the last chunk — assigned by chunk ID, so they are written exactly
+    * once); and publish ONE "optimize" commit at `base + 1` swapping the
+    * scope for the chunks. Returns the committed version, or `base`
+    * when the scope is empty.
+    *
+    * The write is a SINGLE pass: rows get a chunk id, shuffle once on
+    * it, sort within tasks by (chunk, key), and a partitionBy write
+    * emits every chunk directory in one job — not one filtered scan per
+    * chunk. The staged partition directories are then renamed
+    * (metadata-only) into top-level data directories.
+    */
+  private def rewrite(scope: Scope, key: Key, targetChunks: Int,
+                      base: Int = latestVersion): Int = {
     require(targetChunks >= 1, s"targetChunks must be >= 1: $targetChunks")
-    import org.apache.spark.sql.functions.{col, lit, when}
+    require(base >= 0, s"$dir has no committed versions")
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{Metadata, NumericType, StructType,
+      TimestampNTZType, TimestampType}
+    // The snapshot is pinned BEFORE the rewrite: a commit landing while
+    // it runs trips the optimistic publish, and the retry re-commits
+    // IFF no intervening commit removed this rewrite's inputs (a plain
+    // concurrent append — the common ingestion race — rides through;
+    // its directories stay active untouched).
+    val snap = snapshotAt(base)
+    val removed = scope match {
+      case Scope.All => snap.active
+      case Scope.Where(preds) => skip(preds, Some(base))._1
+      case Scope.DvDebt(x) => dvDebt(snap, x)
+      case Scope.Dirs(ds) => ds
+    }
+    if (removed.isEmpty) return base
+    // `base` is the latest version, so its directories cannot have been
+    // vacuumed; a non-empty snapshot always records its schema
+    val logSchema = snap.schemaJson.map(schemaFromJson)
+    val scoped = readDirsFolded(logSchema, removed, snap.dvs)
+    // approxQuantile wants a numeric column: timestamps/integrals
+    // shadow-cast to double for the key only — rows are written with
+    // their original columns.
+    def ordered(c: String): org.apache.spark.sql.Column =
+      scoped.schema(c).dataType match {
+        case _: NumericType | TimestampType | TimestampNTZType => col(c).cast("double")
+        case other => throw new IllegalArgumentException(
+          s"optimize column `$c` must be numeric or timestamp, got " +
+            s"${other.simpleString} (a string cast would null every key)")
+      }
+    val ck = "__graft_ck"
+    val keyed0 = key match {
+      case Key.Range(c) => scoped.withColumn(ck, ordered(c))
+      case Key.ZOrder(cs, bits) =>
+        // Equi-depth bucket id per column from ONE multi-column quantile
+        // job (a per-column call would scan the full table k times); the
+        // cuts are a driver-side constant (< 2^bits per column).
+        val buckets = 1 << bits
+        val shadow = cs.map(c => s"__graft_z_$c")
+        val dims = cs.zip(shadow).foldLeft(scoped) { case (df, (c, s)) =>
+          df.withColumn(s, ordered(c)) }
+        val allCuts = dims.stat.approxQuantile(shadow.toArray,
+          (1 until buckets).map(_.toDouble / buckets).toArray, 0.001)
+        // nulls/NaN to the top bucket (approxQuantile ignored them)
+        val ids = shadow.zip(allCuts).map { case (s, cuts) =>
+          when(col(s).isNull || isnan(col(s)), lit((buckets - 1).toLong))
+            .otherwise(cutsBelow(col(s), cuts.distinct.sorted)) }
+        // Morton interleave: bit j of column i lands at position j*k + i.
+        val z = for (i <- ids.indices; j <- 0 until bits)
+          yield shiftleft(shiftright(ids(i), j).bitwiseAND(lit(1L)), j * cs.size + i)
+        dims.withColumn(ck, z.reduce(_ bitwiseOR _).cast("double")).drop(shadow: _*)
+      case Key.Hash =>
+        val hashCols = scoped.schema.fields
+          .filter(f => SchemaCompat.hashable(f.dataType)).map(f => col(f.name))
+        scoped.withColumn(ck,
+          if (hashCols.isEmpty) lit(0.0)
+          else pmod(xxhash64(struct(hashCols.toIndexedSeq: _*)), lit(1000000L)).cast("double"))
+      case Key.Const => scoped.withColumn(ck, lit(0.0))
+    }
     val v = base + 1
     // Column mapping at the rewrite: a FULL rewrite (every active
     // directory removed) NORMALIZES — files are written under the
@@ -3681,29 +3607,21 @@ class VersionedTable(spark: SparkSession, dir: String,
     // physical-name map, restoring the vectorized DSv2 path a renamed
     // table traded away; a partial rewrite (OPTIMIZE ... WHERE)
     // back-renames so all files keep spelling physical names.
-    val logSchema = snapshotAt(base).schemaJson.map(schemaFromJson)
     val l2pAll = logSchema.map(renameMap).getOrElse(Map.empty)
-    val normalizing =
-      l2pAll.nonEmpty && removed.toSet == activeAt(base).toSet
+    val normalizing = l2pAll.nonEmpty && removed.toSet == snap.active.toSet
     val writeL2p = if (normalizing) Map.empty[String, String] else l2pAll
     val normalizedSchemaJson =
       if (!normalizing) None
       else logSchema.map(sc => SchemaCompat.nullableJson(
-        org.apache.spark.sql.types.StructType(sc.fields.map(f =>
-          f.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))))
+        StructType(sc.fields.map(f => f.copy(metadata = Metadata.empty)))))
     // Recorded partition columns are create-time PHYSICAL names; a
     // normalizing rewrite dissolves the physical map, so they must be
     // re-recorded under the logical names the map-free schema now
     // spells — otherwise partitionColumns() serves a name absent from
     // the schema and later appends silently stop splitting.
-    val normalizedPartitionCols = {
-      val recorded = snapshotAt(base).partitionCols
-      if (!normalizing || recorded.isEmpty) Nil
-      else {
-        val p2l = l2pAll.map(_.swap)
-        recorded.map(c => p2l.getOrElse(c, c))
-      }
-    }
+    val normalizedPartitionCols =
+      if (!normalizing) Nil
+      else snap.partitionCols.map(c => l2pAll.map(_.swap).getOrElse(c, c))
     // The cluster key is evaluated ONCE: the quantile pass and the
     // write re-scan this frame, and a z-order key in particular is an
     // expensive projection that must not be recomputed per pass.
@@ -3714,19 +3632,11 @@ class VersionedTable(spark: SparkSession, dir: String,
         else keyed.stat.approxQuantile(ck,
           (1 until targetChunks).map(_.toDouble / targetChunks).toArray, 0.01)
           .distinct.sorted // duplicate cuts would emit empty chunks
-      // chunk id = #cuts strictly below the key (balanced when-tree);
-      // null keys go to the LAST chunk by id — never duplicated.
-      def search(loIdx: Int, hiIdx: Int): org.apache.spark.sql.Column =
-        if (loIdx == hiIdx) lit(loIdx.toLong)
-        else {
-          val mid = (loIdx + hiIdx) / 2
-          when(col(ck) <= cuts(mid), search(loIdx, mid))
-            .otherwise(search(mid + 1, hiIdx))
-        }
+      // null keys go to the LAST chunk by id — never duplicated
       val chunkId =
         if (cuts.isEmpty) lit(0L)
         else when(col(ck).isNull, lit(cuts.length.toLong))
-          .otherwise(search(0, cuts.length))
+          .otherwise(cutsBelow(col(ck), cuts))
       val staging = new Path(root,
         f"_staging-v$v%05d-${java.util.UUID.randomUUID().toString.take(8)}")
       toPhysicalDf(keyed.withColumn("__graft_chunk", chunkId)
@@ -3740,27 +3650,23 @@ class VersionedTable(spark: SparkSession, dir: String,
         .sortBy(_._1)
         .zipWithIndex.map { case ((id, p), i) =>
           val name = f"v$v%05d-opt$i%03d-${java.util.UUID.randomUUID().toString.take(8)}"
-          // stats now come from the cached cluster frame, so a silently
-          // failed rename would no longer fail the read-back stats job —
-          // it must fail HERE, or the commit publishes a directory that
-          // does not exist (same pattern as writePayloadSplit)
+          // stats come from the cached cluster frame, so a silently
+          // failed rename would not fail a read-back — it must fail
+          // HERE, or the commit publishes a directory that does not
+          // exist (same pattern as writePayloadSplit)
           require(fs.rename(p, new Path(root, name)),
             s"staging rename $p -> $name failed")
           (id, name)
         }
-      // ONE grouped stats job per rewrite (was one job PER chunk until
-      // round 17, then one grouped READ-BACK job) — now grouped by
-      // chunk id over the CACHED cluster frame instead of re-reading
-      // every byte just written: same aggregates over the same rows
-      // the write serialized (parquet round-trips every indexed type
-      // losslessly — the writePayload-fusion argument), keyed back to
-      // directories through the chunk ids the staging layout recorded.
-      // At table scale this removes a full re-read of the rewritten
-      // data per OPTIMIZE/ZORDER/auto-compaction.
+      // ONE stats job per rewrite, grouped by chunk id over the CACHED
+      // cluster frame instead of re-reading every byte just written:
+      // same aggregates over the same rows the write serialized (parquet
+      // round-trips every indexed type losslessly — the writePayload-
+      // fusion argument), keyed back to directories through the chunk
+      // ids the staging layout recorded.
       val statsFrame = keyed.withColumn("__graft_chunk", chunkId).drop(ck)
       val (cols, cNames, aggs) = statAggPlan(
-        org.apache.spark.sql.types.StructType(
-          statsFrame.schema.fields.filterNot(_.name == "__graft_chunk")),
+        StructType(statsFrame.schema.fields.filterNot(_.name == "__graft_chunk")),
         Map.empty)
       val chunkStats = statsFrame.groupBy(col("__graft_chunk"))
         .agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()
@@ -3774,7 +3680,7 @@ class VersionedTable(spark: SparkSession, dir: String,
         }
       }
       fs.delete(staging, true) // _SUCCESS and friends
-      if (written.isEmpty) return base // empty table: nothing to compact
+      if (written.isEmpty) return base // empty scope: nothing to compact
       // A compaction must SURVIVE concurrent ingestion — at 100 TB a
       // multi-hour rewrite losing its slot to one tiny append would be
       // wasted work forever. The loser's retry rides the same commit

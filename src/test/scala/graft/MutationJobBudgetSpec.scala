@@ -161,16 +161,19 @@ class MutationJobBudgetSpec extends SparkSuite {
 
   /** (maintenance entry point, set-up before counting, the command, jobs
     * pinned) — the layout rewrites beside `optimize` above. The DV-debt
-    * forms rewrite the one directory [[priorDv]] hides rows of.
+    * forms rewrite the one directory [[priorDv]] hides rows of. While
+    * `optimizeWhere`, `optimizeDvDebt` and the auto-compaction fold read
+    * their scope with a parquet footer merge instead of the recorded
+    * schema, each ran one job more: 8, 8/8 and 6.
     */
   private val maintenance: Seq[(String, () => Unit, () => Int, Int)] = Seq(
     ("optimizeWhere", () => (), () =>
-      vt.optimizeWhere("id", 2, "id", Some(0L), Some(60000L)), 8),
+      vt.optimizeWhere("id", 2, "id", Some(0L), Some(60000L)), 7),
     ("optimizeZOrder", () => (), () => vt.optimizeZOrder(Seq("id", "amount"), 4), 9),
     ("compact", () => (), () => vt.compact(4), 7),
-    ("optimizeDvDebt (hash key)", () => priorDv(), () => vt.optimizeDvDebt(0.001, 2), 8),
+    ("optimizeDvDebt (hash key)", () => priorDv(), () => vt.optimizeDvDebt(0.001, 2), 7),
     ("optimizeDvDebt (column key)", () => priorDv(), () =>
-      vt.optimizeDvDebt(0.001, 2, Some("id")), 8))
+      vt.optimizeDvDebt(0.001, 2, Some("id")), 7))
 
   for ((name, setUp, run, b) <- maintenance) {
     test(s"$name: at most the pinned job count") {
@@ -197,7 +200,7 @@ class MutationJobBudgetSpec extends SparkSuite {
       val (_, jobs) = countingJobs(vt.append(fresh))
       assert(vt.latestVersion === before + 2, "the append did not fold")
       assert(vt.activeDirs().size === 1)
-      val b = 6
+      val b = 5
       assert(jobs - plain <= b,
         s"the fold ran ${jobs - plain} jobs beyond the append, budget $b")
     } finally vt.unsetProperties(armed.keys.toSeq)

@@ -246,6 +246,35 @@ class VersionedUpdateSpec extends SparkSuite {
     assert(vt.read().filter(col("tag").isNull).count() === 1)
   }
 
+  test("a partial OPTIMIZE sheds a dropped column's bytes like a DML rewrite") {
+    val dir = tmpVt()
+    val vt = new graft.sources.VersionedTable(spark, dir)
+    (0 until 4).foreach(d => vt.append((d * 100 until (d + 1) * 100)
+      .map(i => (i.toLong, i * 1.5, s"t$i")).toDF("k", "p", "tag")))
+    vt.dropColumns(Seq("tag"))
+    val before = vt.activeDirs().toSet
+    val v = vt.optimizeWhere("k", 1, "k", Some(0L), Some(150L))
+    val rewritten = vt.activeDirs().filterNot(before)
+    assert(rewritten.size === 1 && vt.activeDirs().size === 3)
+    val path = new org.apache.hadoop.fs.Path(dir, rewritten.head)
+    assert(spark.read.parquet(path.toString).schema.fieldNames.toSeq === Seq("k", "p"))
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(new org.apache.hadoop.fs.Path(dir, f"_graft_log/$v%08d.json"))
+    val c = try graft.sources.VersionedTable.decodeCommit(in) finally in.close()
+    assert(c.addedStats(rewritten.head).keySet === Set("k", "p"))
+    // the two untouched directories still hold `tag`: re-adding it stays
+    // refused until they are rewritten too
+    val tag = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("tag",
+        org.apache.spark.sql.types.StringType)))
+    assert(intercept[IllegalArgumentException](vt.addColumns(tag))
+      .getMessage.contains("still live"))
+    vt.optimizeWhere("k", 1, "k", Some(200L), None)
+    vt.addColumns(tag)
+    assert(vt.read().filter(col("tag").isNull).count() === 400)
+    assert(vt.read().agg(sum(col("p"))).head.getDouble(0) === (0 until 400).map(_ * 1.5).sum)
+  }
+
   test("mutations on a created-but-never-written table are clean no-ops / inserts") {
     val dir = tmpVt()
     val vt = new graft.sources.VersionedTable(spark, dir)

@@ -146,6 +146,42 @@ class WidenColumnSpec extends SparkSuite {
     assert(vt.read().filter(col("k") === 50L).head.getDouble(1) === 5.5)
   }
 
+  test("partial rewrites and auto-compaction read narrow and wide files under the widened type") {
+    val dir = tmpVt()
+    val vt = new graft.sources.VersionedTable(spark, dir)
+    (0 until 6).foreach(d =>
+      vt.append((d * 500 until (d + 1) * 500).map(i => (i, s"r$i")).toDF("k", "s")))
+    vt.widenColumn("k", LongType)
+    val wide = (0L until 500L).map(i => (3_000_000_000L + i, s"w$i"))
+    vt.append(wide.toDF("k", "s"))
+    var model = (0 until 3000).map(i => (i.toLong, s"r$i")) ++ wide
+    // DV debt on a narrow directory and on the wide one
+    val hide = (col("k") < 500L || col("k") >= 3_000_000_000L) && col("k") % 10 === 0L
+    vt.delete(hide, useDeletionVectors = true)
+    model = model.filterNot { case (k, _) => (k < 500L || k >= 3_000_000_000L) && k % 10 == 0 }
+    def check(): Unit = {
+      val df = vt.read()
+      assert(df.schema.fields.map(_.dataType).toSeq === Seq(LongType, StringType))
+      assert(df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+        === model.sortBy(_._1))
+    }
+    val dvV = vt.optimizeDvDebt(0.05, 1)
+    assert(vt.history().filter(col("version") === dvV).head.getString(1) === "optimize")
+    check()
+    // scope: the last two narrow directories and the debt rewrite's
+    // wide one
+    val whereV = vt.optimizeWhere("k", 2, "k", Some(2000L), None)
+    assert(whereV === dvV + 1)
+    check()
+    vt.setProperties(Map("graft.autoCompact.minFiles" -> "2"))
+    val more = (0L until 100L).map(i => (4_000_000_000L + i, s"m$i"))
+    val appended = vt.append(more.toDF("k", "s"))
+    model ++= more
+    assert(vt.latestVersion === appended + 1) // the fold committed
+    assert(vt.activeDirs().size === 1)
+    check()
+  }
+
   test("MERGE schema evolution widens existing columns the source spells wider") {
     val dir = tmpVt()
     val vt = new graft.sources.VersionedTable(spark, dir)
