@@ -3558,9 +3558,9 @@ class VersionedTable(spark: SparkSession, dir: String,
     }
     if (removed.isEmpty) return base
     // `base` is the latest version, so its directories cannot have been
-    // vacuumed; a non-empty snapshot always records its schema
-    val logSchema = snap.schemaJson.map(schemaFromJson)
-    val scoped = readDirsFolded(logSchema, removed, snap.dvs)
+    // vacuumed
+    val logSchema = tableSchemaAt(base)
+    val scoped = readDirsFolded(Some(logSchema), removed, snap.dvs)
     // approxQuantile wants a numeric column: timestamps/integrals
     // shadow-cast to double for the key only — rows are written with
     // their original columns.
@@ -3607,13 +3607,13 @@ class VersionedTable(spark: SparkSession, dir: String,
     // physical-name map, restoring the vectorized DSv2 path a renamed
     // table traded away; a partial rewrite (OPTIMIZE ... WHERE)
     // back-renames so all files keep spelling physical names.
-    val l2pAll = logSchema.map(renameMap).getOrElse(Map.empty)
+    val l2pAll = renameMap(logSchema)
     val normalizing = l2pAll.nonEmpty && removed.toSet == snap.active.toSet
     val writeL2p = if (normalizing) Map.empty[String, String] else l2pAll
     val normalizedSchemaJson =
       if (!normalizing) None
-      else logSchema.map(sc => SchemaCompat.nullableJson(
-        StructType(sc.fields.map(f => f.copy(metadata = Metadata.empty)))))
+      else Some(SchemaCompat.nullableJson(
+        StructType(logSchema.fields.map(f => f.copy(metadata = Metadata.empty)))))
     // Recorded partition columns are create-time PHYSICAL names; a
     // normalizing rewrite dissolves the physical map, so they must be
     // re-recorded under the logical names the map-free schema now
