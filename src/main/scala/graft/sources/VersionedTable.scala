@@ -1936,7 +1936,6 @@ class VersionedTable(spark: SparkSession, dir: String,
   private def readDirsFolded(schema: Option[org.apache.spark.sql.types.StructType],
                              dirs: Seq[String],
                              dvs: Map[String, Seq[String]],
-                             physToLogical: Map[String, String] = Map.empty,
                              tag: Option[String] = None,
                              posTag: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -1951,8 +1950,8 @@ class VersionedTable(spark: SparkSession, dir: String,
     val t = tag.fold(folded)(tg => folded.withColumn(tg, col("_metadata.file_path")))
     val tagged = posTag.fold(t)(pt => t.withColumn(pt, col("_metadata.row_index")))
     // column mapping: an imposed schema carries its own map; a
-    // mergeSchema read gets the caller's current physical→logical map
-    val p2l = schema.map(sc => renameMap(sc).map(_.swap)).getOrElse(physToLogical)
+    // mergeSchema read leaves the files' physical names to the caller
+    val p2l = schema.map(sc => renameMap(sc).map(_.swap)).getOrElse(Map.empty)
     if (p2l.isEmpty) tagged else tagged.withColumnsRenamed(p2l)
   }
 
