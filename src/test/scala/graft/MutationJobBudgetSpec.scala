@@ -186,6 +186,31 @@ class MutationJobBudgetSpec extends SparkSuite {
     }
   }
 
+  /** (change-feed range, set-up returning the range, jobs pinned) — the
+    * jobs of building `changes(from, to)` and counting its rows.
+    */
+  private val feeds: Seq[(String, () => (Int, Int), Int)] = Seq(
+    ("changes(v, v) of a copy-on-write merge with change data", () => {
+      val v = vt.merge(source(100000L, matching = true), Seq("id"),
+        writeChangeData = true)
+      (v, v)
+    }, 2),
+    ("changes(v, v) of a merge-on-read merge", () => {
+      val v = merge(dv = true)
+      (v, v)
+    }, 2),
+    ("changes(0, 19) over the 20 base appends", () => (0, baseVersion), 2))
+
+  for ((name, setUp, b) <- feeds) {
+    test(s"$name: at most the pinned job count") {
+      vt.restore(baseVersion)
+      val (from, to) = setUp()
+      val (rows, jobs) = countingJobs(vt.changes(from, to).count())
+      assert(rows > 0L, s"$name served no rows")
+      assert(jobs <= b, s"$name ran $jobs jobs, budget $b")
+    }
+  }
+
   test("auto-compaction fold: at most the pinned job count beyond the append") {
     vt.restore(baseVersion)
     val (_, plain) = countingJobs(vt.append(fresh))
