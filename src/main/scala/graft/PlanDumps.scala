@@ -120,32 +120,6 @@ object PlanDumps {
       "# (Plan below is the single remaining pass — the bitmap write's\n" +
       "# shuffle+sort; foreachPartition wraps it.)\n\n" + fmt(triples))
 
-    // ---- changes(): per-version parquet footer inference skipped on
-    // constant-schema tables
-    val cdfDemo = tmp + "/cdf-v00004-demo"
-    df.withColumn("_change_type", lit("insert")).write.parquet(cdfDemo)
-    val inferRead = spark.read.option("mergeSchema", "true").parquet(cdfDemo)
-    w("cdf_changes_before.txt",
-      "# BEFORE (rounds <=16): changes(from, to) planned every synthesis\n" +
-      "# frame with mergeSchema inference and every persisted-CDC frame\n" +
-      "# with plain schema inference — one driver-side file listing plus\n" +
-      "# a parquet footer-read JOB per frame, O(versions in range) of\n" +
-      "# them per changes() call, all recomputing a schema the log\n" +
-      "# already records.\n\n" + fmt(inferRead))
-    val knownSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields.map(f => f.copy(metadata =
-        org.apache.spark.sql.types.Metadata.empty)))
-      .add("_change_type", org.apache.spark.sql.types.StringType)
-    val imposedRead = spark.read.schema(knownSchema).parquet(cdfDemo)
-    w("cdf_changes_after.txt",
-      "# AFTER (round 17): when every commit in 0..toVersion recorded the\n" +
-      "# SAME schema (checked from the already-parsed manifests — pure\n" +
-      "# metadata), every data file and CDC payload provably spells\n" +
-      "# exactly that physical schema, so changes() IMPOSES it on every\n" +
-      "# frame read: zero footer-inference jobs, zero mergeSchema\n" +
-      "# listings. Any schema evolution / rename / widen in history\n" +
-      "# falls back to the historical inference path unchanged.\n\n" +
-      fmt(imposedRead))
     // ---- the layout rewrite: chunk stats from the cache, not a re-read
     val chunkDemo = tmp + "/chunks"
     df.withColumn("__graft_chunk", (col("id") % 3).cast("long"))

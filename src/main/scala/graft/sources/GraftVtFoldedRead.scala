@@ -95,52 +95,42 @@ private[sources] case class GraftVtRowOnlyPartition(inner: FilePartition)
   override def preferredLocations(): Array[String] = inner.preferredLocations()
 }
 
-/** CDC-sidecar files of a merge-on-read UPDATE/MERGE commit, read for
-  * ONE change type: the sidecar mixes pre/post/insert rows in one
-  * directory with the type EMBEDDED as a data column, so the change
-  * feed plans the same files once per type, each partition keeping
-  * only the rows whose embedded type equals the one its injected
-  * partition value announces.
+/** Files of a commit's persisted change data: each row carries its
+  * change type as a data column, read in the position the injected
+  * `_change_type` takes for every other partition — so they read
+  * columnar exactly when plain files do, unless `rowOnly` (the batch
+  * also holds DV partitions).
   */
-private[sources] case class GraftVtTypedCdcPartition(inner: FilePartition,
-                                                     wanted: String)
+private[sources] case class GraftVtCdcPartition(inner: FilePartition,
+                                                rowOnly: Boolean)
     extends InputPartition {
   override def preferredLocations(): Array[String] = inner.preferredLocations()
 }
 
 /** The change feed's dispatching factory: plain file partitions
-  * delegate untouched; DV-fold partitions filter the prior snapshot's
-  * hidden rows by row index (a removed DV'd directory must not
-  * re-report rows an earlier DV delete already emitted); typed-CDC
-  * partitions filter a mixed sidecar by its embedded change type. The
-  * filtering readers' inner schemas append the marker column AFTER the
-  * data columns, BEFORE the injected cdf partition columns — the
-  * projection drops exactly the marker.
+  * delegate untouched; CDC partitions read through the factory whose
+  * data columns end in the embedded `_change_type`; DV-fold partitions
+  * filter the prior snapshot's hidden rows by row index (a removed
+  * DV'd directory must not re-report rows an earlier DV delete already
+  * emitted) — their reader's schema appends the row index AFTER the
+  * data columns, BEFORE the injected cdf partition columns, and the
+  * projection drops exactly that marker.
   */
 private[sources] class GraftVtCdfReaderFactory(plain: PartitionReaderFactory,
-                                               typed: PartitionReaderFactory,
+                                               cdc: PartitionReaderFactory,
                                                dv: PartitionReaderFactory,
                                                dataTypes: Array[DataType],
                                                cdfTypes: Array[DataType],
                                                conf: Broadcast[GraftDvBitmap.SerConf])
     extends PartitionReaderFactory {
 
-  private def outIndices: Array[Int] =
-    GraftVtFilteringReader.skipOne(dataTypes.length, cdfTypes.length)
-  private def outTypes: Array[DataType] = dataTypes ++ cdfTypes
-
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
-      case t: GraftVtTypedCdcPartition =>
-        val want = org.apache.spark.unsafe.types.UTF8String
-          .fromString(t.wanted)
-        val at = dataTypes.length
-        new GraftVtFilteringReader(typed.createReader(t.inner),
-          outTypes, outIndices,
-          r => !r.isNullAt(at) && r.getUTF8String(at).equals(want))
+      case c: GraftVtCdcPartition => cdc.createReader(c.inner)
       case d: GraftVtDvPartition =>
         new GraftVtFilteringReader(dv.createReader(d.inner),
-          outTypes, outIndices,
+          dataTypes ++ cdfTypes,
+          GraftVtFilteringReader.skipOne(dataTypes.length, cdfTypes.length),
           GraftVtFilteringReader.dvKeep(
             GraftDvBitmap.loadUnion(conf.value.value, d.dvPaths), dataTypes.length))
       case r: GraftVtRowOnlyPartition => plain.createReader(r.inner)
@@ -148,15 +138,16 @@ private[sources] class GraftVtCdfReaderFactory(plain: PartitionReaderFactory,
     }
 
   override def supportColumnarReads(p: InputPartition): Boolean = p match {
-    case _: GraftVtTypedCdcPartition | _: GraftVtDvPartition |
-         _: GraftVtRowOnlyPartition => false
+    case c: GraftVtCdcPartition => !c.rowOnly && cdc.supportColumnarReads(c.inner)
+    case _: GraftVtDvPartition | _: GraftVtRowOnlyPartition => false
     case other => plain.supportColumnarReads(other)
   }
 
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     p match {
-      case _: GraftVtTypedCdcPartition | _: GraftVtDvPartition |
+      case c: GraftVtCdcPartition if !c.rowOnly => cdc.createColumnarReader(c.inner)
+      case _: GraftVtCdcPartition | _: GraftVtDvPartition |
            _: GraftVtRowOnlyPartition =>
         throw new UnsupportedOperationException(
           "marker partitions read row-based")
@@ -216,8 +207,8 @@ private[sources] class GraftVtDvReaderFactory(clean: PartitionReaderFactory,
 /** Filters the inner reader's rows with `keep` and projects a marker
   * column back off: the output row is the input's fields at
   * `outIndices` (typed by `outTypes`), which the callers build as
-  * "everything except the marker index". Shared by the DV row-index
-  * filter and the typed-CDC change-type filter.
+  * "everything except the marker index". Shared by the batch scan's
+  * and the change feed's DV row-index filters.
   */
 private[sources] class GraftVtFilteringReader(
     inner: PartitionReader[InternalRow],
@@ -407,19 +398,19 @@ private[sources] class GraftVtDvColumnarReader(
 }
 
 /** The change feed's three reader factories (plain / embedded-type /
-  * row-index marker schemas) plus the types the dispatching factory's
-  * projections need — built once at scan construction, shipped to the
-  * batch and the micro-batch stream.
+  * row-index schemas) plus the types the DV projection needs — built
+  * once at scan construction, shipped to the batch and the micro-batch
+  * stream.
   */
 private[sources] case class GraftVtCdfReaders(
     mkPlain: () => PartitionReaderFactory,
-    mkTyped: () => PartitionReaderFactory,
+    mkCdc: () => PartitionReaderFactory,
     mkDv: () => PartitionReaderFactory,
     dataTypes: Array[DataType],
     cdfTypes: Array[DataType],
     conf: Broadcast[GraftDvBitmap.SerConf]) {
   def mkFactory(): PartitionReaderFactory =
-    new GraftVtCdfReaderFactory(mkPlain(), mkTyped(), mkDv(),
+    new GraftVtCdfReaderFactory(mkPlain(), mkCdc(), mkDv(),
       dataTypes, cdfTypes, conf)
 }
 

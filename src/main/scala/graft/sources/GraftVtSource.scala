@@ -413,8 +413,10 @@ private[sources] class GraftVtScanBuilder(vt: VersionedTable, version: Int,
       // commit, not the active set); filters stay post-scan as always.
       val dataCols = StructType(required.fields.filterNot(f =>
         GraftVtChangeFiles.cdfSchema.fieldNames.contains(f.name)))
-      val cdfCols = required.fields.map(_.name)
-        .filter(GraftVtChangeFiles.cdfSchema.fieldNames.contains).toSeq
+      // in cdfSchema order, whatever the requested order: a CDC file's
+      // embedded type then sits exactly where the injected one would
+      val cdfCols = GraftVtChangeFiles.cdfSchema.fieldNames
+        .filter(required.fieldNames.contains).toSeq
       val cdfStruct = StructType(cdfCols.map(n =>
         GraftVtChangeFiles.cdfSchema(n)))
       // physical schemas like the batch scan: every data file and CDC
@@ -425,24 +427,28 @@ private[sources] class GraftVtScanBuilder(vt: VersionedTable, version: Int,
         baseSchema.fields.find(_.name.equalsIgnoreCase(f.name)).getOrElse(f))))
       val emptyIndex = new InMemoryFileIndex(spark, Nil,
         options.asScala.toMap, Some(physBase), NoopCache, None, None)
-      def mkCdfScan(readData: StructType): ParquetScan = ParquetScan(spark,
-        spark.sessionState.newHadoopConfWithOptions(options.asScala.toMap),
-        emptyIndex,
-        dataSchema = physBase,
-        readDataSchema = readData,
-        readPartitionSchema = cdfStruct,
-        pushedFilters = Array.empty,
-        options = options)
+      def mkCdfScan(readData: StructType,
+                    partition: StructType = cdfStruct): ParquetScan =
+        ParquetScan(spark,
+          spark.sessionState.newHadoopConfWithOptions(options.asScala.toMap),
+          emptyIndex,
+          dataSchema = physBase,
+          readDataSchema = readData,
+          readPartitionSchema = partition,
+          pushedFilters = Array.empty,
+          options = options)
       val readerScan = mkCdfScan(physDataCols)
-      // the marker-schema factories: embedded change type (mixed DV-CDC
-      // sidecars read per type) and row index (removed/restored DV'd
-      // directories fold) — both appended AFTER the data columns,
-      // BEFORE the injected cdf partition columns
+      // the CDC factory reads a requested change type from the files'
+      // own column, so only the commit version is injected; the DV
+      // factory appends the row index AFTER the data columns, BEFORE
+      // the injected cdf partition columns
+      val (cdcType, cdcInjected) = cdfStruct.fields
+        .partition(_.name == GraftVtChangeFiles.ChangeType)
       val cdfReaders = GraftVtCdfReaders(
         mkPlain = () => readerScan.createReaderFactory(),
-        mkTyped = () => mkCdfScan(StructType(physDataCols.fields :+
-          StructField(GraftVtChangeFiles.ChangeType,
-            org.apache.spark.sql.types.StringType))).createReaderFactory(),
+        mkCdc = () => mkCdfScan(StructType(physDataCols.fields ++
+          cdcType.map(_.copy(nullable = true))), StructType(cdcInjected))
+          .createReaderFactory(),
         mkDv = () => mkCdfScan(GraftVtFoldedRead.withRowIndex(physDataCols))
           .createReaderFactory(),
         dataTypes = physDataCols.fields.map(_.dataType),

@@ -17,12 +17,14 @@ case class GraftVtOffset(version: Int) extends Offset {
   override def json(): String = s"""{"version":$version}"""
 }
 
-/** Shared change-feed/stream file planning: the parquet files one
-  * commit contributes, each tagged with the (change-type,
-  * commit-version) PARTITION VALUES the reader appends to every row —
-  * constants never touch the data files, exactly how a partitioned
-  * table serves its partition columns. `cdfCols` is the REQUESTED
-  * subset (column pruning may drop either), in requested order.
+/** The change feed — batch `readChangeFeed`, its streaming form and
+  * [[VersionedTable.changes]] — and the plain stream's file planning:
+  * the parquet files one commit contributes, each tagged with the
+  * (change-type, commit-version) PARTITION VALUES the reader appends to
+  * every row — constants never touch the data files, exactly how a
+  * partitioned table serves its partition columns. `cdfCols` is the
+  * REQUESTED subset (column pruning may drop either), in
+  * [[cdfSchema]] order.
   */
 private[sources] object GraftVtChangeFiles {
 
@@ -34,12 +36,15 @@ private[sources] object GraftVtChangeFiles {
     org.apache.spark.sql.types.StructField(CommitVersion,
       org.apache.spark.sql.types.IntegerType, nullable = false)))
 
-  def partitionValues(cdfCols: Seq[String], changeType: String,
+  /** The injected values of `cdfCols`; `changeType = None` leaves the
+    * type out, for files that carry it as a data column.
+    */
+  def partitionValues(cdfCols: Seq[String], changeType: Option[String],
                       version: Int): InternalRow =
-    InternalRow.fromSeq(cdfCols.map {
+    InternalRow.fromSeq(cdfCols.flatMap {
       case ChangeType =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(changeType)
-      case CommitVersion => version
+        changeType.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+      case CommitVersion => Some(version)
     })
 
   /** One directory's contribution to a change feed at one commit:
@@ -47,58 +52,44 @@ private[sources] object GraftVtChangeFiles {
     * DV-FOLD directories filter the `dvVersion` snapshot's hidden rows
     * by row index first (a removed DV'd directory must not re-report
     * rows an earlier DV delete already emitted; a restore can re-add
-    * directories WITH sidecars); TYPED-CDC directories are the mixed
-    * sidecars of merge-on-read UPDATE/MERGE commits, filtered per
-    * EMBEDDED change type.
+    * directories WITH sidecars); CDC directories are a commit's
+    * persisted change data, each row typed by its embedded
+    * `_change_type` column.
     */
-  sealed trait ChangeUnit { def dir: String; def changeType: String }
+  sealed trait ChangeUnit
   case class PlainChange(dir: String, changeType: String) extends ChangeUnit
   case class DvFoldChange(dir: String, changeType: String, dvVersion: Int)
       extends ChangeUnit
-  case class TypedCdcChange(dir: String, changeType: String) extends ChangeUnit
+  case class CdcChange(dir: String) extends ChangeUnit
 
-  /** The change units commit `v` contributes to a CHANGE FEED: appends
-    * synthesize `insert` from their added directories, mutations also
-    * `delete` from their removed ones — the add/remove synthesis
-    * [[VersionedTable.changes]] serves (rewritten-but-unchanged rows
-    * appear as delete+insert pairs); DV commits serve their PERSISTED
-    * exact CDC (delete-dv whole, update-dv/merge-dv split per embedded
-    * type). `optimize` emits nothing — identical data by contract.
+  /** The change units commit `v` contributes, decided by its manifest:
+    * an `optimize` commit nothing (identical data by contract); a
+    * commit that persisted change data that directory, whatever its
+    * op; any other commit `insert` from its added directories and
+    * `delete` from its removed ones, each folded under the deletion
+    * vectors of the version it was visible at (rewritten-but-unchanged
+    * rows appear as delete+insert pairs).
     */
   def changeDirs(vt: VersionedTable, v: Int): Seq[ChangeUnit] = {
-    val (op, added) = vt.commitSummary(v)
-    op match {
-      case "optimize" | "constraint" | "properties" => Nil
-      case "delete-dv" =>
-        // a merge-on-read delete adds/removes nothing — its exact
-        // deleted rows ride the CDC sidecar it always persists (the
-        // file holds the base columns plus an unprojected embedded
-        // _change_type; the injected partition value supplies the type)
-        vt.cdfSummary(v).map(PlainChange(_, "delete")).toSeq
-      case "update-dv" =>
-        vt.cdfSummary(v).toSeq.flatMap(d => Seq(
-          TypedCdcChange(d, "update_preimage"),
-          TypedCdcChange(d, "update_postimage")))
-      case "merge-dv" =>
-        vt.cdfSummary(v).toSeq.flatMap(d => Seq(
-          TypedCdcChange(d, "update_preimage"),
-          TypedCdcChange(d, "update_postimage"),
-          TypedCdcChange(d, "insert")))
-      case _ =>
-        val removed = vt.removedSummary(v)
-        val dvsNow = vt.dvsAt(v)
-        val dvsPrev = if (v > 0) vt.dvsAt(v - 1) else Map.empty[String, Seq[String]]
-        added.map(d =>
-          if (dvsNow.contains(d)) DvFoldChange(d, "insert", v)
-          else PlainChange(d, "insert")) ++
-          removed.map(d =>
-            if (dvsPrev.contains(d)) DvFoldChange(d, "delete", v - 1)
-            else PlainChange(d, "delete"))
+    val c = vt.commitAt(v)
+    def synthesis(dirs: Seq[String], changeType: String, dvVersion: Int) =
+      if (dirs.isEmpty) Nil
+      else {
+        val dvs = vt.dvsAt(dvVersion)
+        dirs.map(d =>
+          if (dvs.contains(d)) DvFoldChange(d, changeType, dvVersion)
+          else PlainChange(d, changeType))
+      }
+    if (c.op == "optimize") Nil
+    else c.cdf match {
+      case Some(d) => Seq(CdcChange(d))
+      case None =>
+        synthesis(c.added, "insert", v) ++ synthesis(c.removed, "delete", v - 1)
     }
   }
 
   private def filesUnder(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                         d: String, v: Int, changeType: String,
+                         d: String, v: Int, changeType: Option[String],
                          cdfCols: Seq[String]): Seq[PartitionedFile] = {
     val p = new Path(root, d)
     require(fs.exists(p),
@@ -112,18 +103,21 @@ private[sources] object GraftVtChangeFiles {
         st.getModificationTime, st.getLen, Map.empty))
   }
 
-  def filesOf(spark: SparkSession, root: Path, vt: VersionedTable,
-              units: Seq[ChangeUnit], v: Int,
-              cdfCols: Seq[String]): Seq[PartitionedFile] = {
+  /** The files of `dirs` at version `v`, without change-feed columns:
+    * what the plain row stream serves.
+    */
+  def filesOf(spark: SparkSession, root: Path, dirs: Seq[String],
+              v: Int): Seq[PartitionedFile] = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    units.flatMap(u => filesUnder(fs, root, u.dir, v, u.changeType, cdfCols))
+    dirs.flatMap(d => filesUnder(fs, root, d, v, None, Nil))
   }
 
   /** Plan the change units of versions `vs` into input partitions:
-    * plain files pack normally (row-only-wrapped when markers share
-    * the batch — the exec node needs uniform columnar support),
-    * typed-CDC files pack per wanted type, DV-fold directories go one
-    * file per partition with exactly that file's hidden positions.
+    * plain files pack normally, CDC files pack the same way for the
+    * reader of their embedded type, DV-fold directories go one file per
+    * partition with exactly that file's hidden positions. DV partitions
+    * read rows, so when a batch holds any, the others are marked
+    * row-only (the exec node needs uniform columnar support).
     */
   def planUnits(spark: SparkSession, root: Path, vt: VersionedTable,
                 unitsByVersion: Seq[(Int, Seq[ChangeUnit])],
@@ -131,34 +125,27 @@ private[sources] object GraftVtChangeFiles {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
     val plain = Seq.newBuilder[PartitionedFile]
-    val typedFiles = Seq.newBuilder[(String, PartitionedFile)]
-    val markers = Array.newBuilder[InputPartition]
-    var hasMarkers = false
+    val cdc = Seq.newBuilder[PartitionedFile]
+    val dvParts = Array.newBuilder[InputPartition]
     unitsByVersion.foreach { case (v, units) =>
       units.foreach {
-        case PlainChange(d, t) => plain ++= filesUnder(fs, root, d, v, t, cdfCols)
-        case TypedCdcChange(d, t) =>
-          hasMarkers = true
-          typedFiles ++= filesUnder(fs, root, d, v, t, cdfCols).map((t, _))
+        case PlainChange(d, t) =>
+          plain ++= filesUnder(fs, root, d, v, Some(t), cdfCols)
+        case CdcChange(d) => cdc ++= filesUnder(fs, root, d, v, None, cdfCols)
         case DvFoldChange(d, t, dvV) =>
-          hasMarkers = true
           // bitmap paths, never positions: debt size is irrelevant to
           // the feed — each partition's executor decodes its own file
-          markers ++= GraftVtFoldedRead.dvPartitionsFor(
-            filesUnder(fs, root, d, v, t, cdfCols),
+          dvParts ++= GraftVtFoldedRead.dvPartitionsFor(
+            filesUnder(fs, root, d, v, Some(t), cdfCols),
             vt.dvBitmapPaths(vt.dvsAt(dvV), Seq(d)))
       }
     }
-    typedFiles.result().groupBy(_._1).foreach { case (t, fsOfT) =>
-      FilePartition.getFilePartitions(spark, fsOfT.map(_._2), maxBytes)
-        .foreach(fp => markers += GraftVtTypedCdcPartition(fp, t))
-    }
-    val plainParts: Array[InputPartition] =
-      FilePartition.getFilePartitions(spark, plain.result(), maxBytes)
-        .map(fp =>
-          if (hasMarkers) GraftVtRowOnlyPartition(fp): InputPartition
-          else fp: InputPartition).toArray
-    plainParts ++ markers.result()
+    val dv = dvParts.result()
+    def pack(files: Seq[PartitionedFile])(wrap: FilePartition => InputPartition) =
+      FilePartition.getFilePartitions(spark, files, maxBytes).map(wrap).toArray
+    pack(plain.result())(fp =>
+      if (dv.nonEmpty) GraftVtRowOnlyPartition(fp) else fp) ++
+      pack(cdc.result())(GraftVtCdcPartition(_, rowOnly = dv.nonEmpty)) ++ dv
   }
 }
 
@@ -300,9 +287,9 @@ class GraftVtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
     * feed plans through [[GraftVtChangeFiles.planUnits]] instead).
     */
   private def filesOf(v: Int): Seq[PartitionedFile] = {
-    val (op, added) = vt.commitSummary(v)
-    val dirsWithType: Seq[(String, String)] = op match {
-      case "append" | "convert" => added.map((_, "insert"))
+    val c = vt.commitAt(v)
+    val dirs: Seq[String] = c.op match {
+      case "append" | "convert" => c.added
       case "optimize" => Nil // dataChange = false: same rows, never replay
       case "constraint" | "properties" => Nil // metadata-only commits
       // a schema commit adds/removes no rows; whether the stream can
@@ -310,7 +297,7 @@ class GraftVtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
       // schema-change guard in planInputPartitions, never by a raw
       // parquet cast failure rows later
       case "alter" => Nil
-      case _ if ignoreChanges => added.map((_, "insert"))
+      case _ if ignoreChanges => c.added
       case other => throw new IllegalStateException(
         s"streaming read of $rootPath hit a '$other' commit at version $v — " +
           "a streamed table must be append-only past the stream's start; " +
@@ -318,9 +305,7 @@ class GraftVtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
           "rewritten rows (rows the rewrite did not change arrive AGAIN), " +
           "or option(\"readChangeFeed\", \"true\") for tagged changes")
     }
-    GraftVtChangeFiles.filesOf(spark, root, vt,
-      dirsWithType.map { case (d, t) => GraftVtChangeFiles.PlainChange(d, t) },
-      v, cdfCols)
+    GraftVtChangeFiles.filesOf(spark, root, dirs, v)
   }
 
   /** MID-STREAM SCHEMA-CHANGE GUARD (Delta's contract): the read
@@ -350,9 +335,9 @@ class GraftVtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
       assertSchemaServable(e, vt.snapshotSchemaJson(e))
     else (s + 1 to e).foreach(v => assertSchemaServable(v, vt.commitSchemaJson(v)))
     if (changeFeed)
-      // the change feed plans through the shared unit planner: DV
-      // commits serve their persisted CDC (split per embedded type),
-      // removed/restored DV'd directories fold by row index
+      // the change feed plans through the shared unit planner: commits
+      // serve their persisted CDC, removed/restored DV'd directories
+      // fold by row index
       return GraftVtChangeFiles.planUnits(spark, root, vt,
         (s + 1 to e).map(v => (v, GraftVtChangeFiles.changeDirs(vt, v))),
         cdfCols)
@@ -365,10 +350,8 @@ class GraftVtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
         // The initial batch IS the snapshot at `e`: active directories,
         // not a commit-by-commit replay — a historical overwrite or
         // merge is already folded into the active set.
-        GraftVtChangeFiles.filesOf(spark, root, vt,
-          vt.activeDirs(Some(e))
-            .map(GraftVtChangeFiles.PlainChange(_, "insert")),
-          e, cdfCols).map((e, _))
+        GraftVtChangeFiles.filesOf(spark, root, vt.activeDirs(Some(e)), e)
+          .map((e, _))
       else (s + 1 to e).flatMap(v => filesOf(v).map((v, _)))
     val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
     // ONE snapshot fold per distinct version in the batch — the

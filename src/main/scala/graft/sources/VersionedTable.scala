@@ -372,25 +372,6 @@ class VersionedTable(spark: SparkSession, dir: String,
         .foldLeft(-1)(math.max)
   }
 
-  /** The (op, added-directories) pair of one committed version — what
-    * the streaming source replays the log by. Package-private: the
-    * manifest schema stays an implementation detail.
-    */
-  private[sources] def commitSummary(v: Int): (String, Seq[String]) = {
-    val c = commitAt(v)
-    (c.op, c.added)
-  }
-
-  /** The directories one commit REMOVED — the change feed's `delete`
-    * synthesis source (they remain readable until [[vacuum]]).
-    */
-  private[sources] def removedSummary(v: Int): Seq[String] = commitAt(v).removed
-
-  /** One commit's persisted CDC directory, if any — the change-feed
-    * source for merge-on-read deletes (which always write one).
-    */
-  private[graft] def cdfSummary(v: Int): Option[String] = commitAt(v).cdf
-
   /** Recorded (logical rows, physical bytes) of specific directories
     * at a version — the V1 fallback scan's reported statistics, so
     * joins against DV/renamed snapshots still plan sanely. None when
@@ -410,8 +391,10 @@ class VersionedTable(spark: SparkSession, dir: String,
     (rows, bytes)
   }
 
-
-  private def commitAt(v: Int): Commit = {
+  /** One committed manifest — what the streaming source and the change
+    * feed replay the log by. Fails loudly for a vacuumed version.
+    */
+  private[sources] def commitAt(v: Int): Commit = {
     val p = manifestPath(v)
     require(fs.exists(p),
       s"version $v does not exist in $dir (latest: $latestVersion; " +
@@ -3137,200 +3120,35 @@ class VersionedTable(spark: SparkSession, dir: String,
 
   /** Change data feed (Delta's `readChangeFeed`): every row added or
     * removed by commits `fromVersion..toVersion` (both inclusive),
-    * tagged `_change_type` and `_commit_version`. Appends synthesize
-    * `insert` rows from their added directories and overwrites also
-    * `delete` rows from their removed ones — no extra storage, exactly
-    * like Delta serving CDF from add/remove actions. An `optimize`
-    * commit emits NOTHING (the data is identical by contract). A merge
-    * or delete committed with `writeChangeData = true` serves its
-    * persisted row-level CDC (`update_preimage`/`update_postimage`/
-    * `insert`, or `delete`); without it they degrade to the coarse
-    * synthesis — rewritten-but-unchanged rows then appear as
-    * delete+insert pairs, the documented trade-off of not paying the
-    * CDC write.
+    * tagged `_change_type` and `_commit_version`, under the table
+    * schema at `toVersion`. It is the batch DSv2 change feed
+    * ([[GraftVtChangeFiles]]) over this handle, the same relation
+    * `spark.read.format("graftvt").option("readChangeFeed", true)`
+    * builds: a commit that persisted change data (every merge-on-read
+    * command, and a copy-on-write one with `writeChangeData = true`)
+    * serves it; any other commit synthesizes `insert` rows from its
+    * added directories and `delete` rows from its removed ones, deletion
+    * vectors folded — no extra storage, exactly like Delta serving CDF
+    * from add/remove actions. Rewritten-but-unchanged rows then appear
+    * as delete+insert pairs, the documented trade-off of not paying the
+    * CDC write. An `optimize` commit emits NOTHING (the data is
+    * identical by contract). A range starting below the oldest
+    * surviving version fails here, not at the first action.
     */
   def changes(fromVersion: Int, toVersion: Int): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val latest = latestVersion
     require(0 <= fromVersion && fromVersion <= toVersion && toVersion <= latest,
       s"changes($fromVersion, $toVersion) out of range for $dir (latest $latest)")
-    def existing(dirs: Seq[String], v: Int): Seq[String] = {
-      dirs.foreach(n => require(fs.exists(new Path(root, n)),
-        s"data directory $n of commit $v was vacuumed; its changes are gone"))
-      dirs
-    }
-    val p2lNow = snapshotAt(toVersion).schemaJson
-      .map(j => renameMap(schemaFromJson(j)).map(_.swap)).getOrElse(Map.empty)
-    def aliasNow(df: DataFrame): DataFrame =
-      if (p2lNow.isEmpty) df else df.withColumnsRenamed(p2lNow)
-    // When every commit up to toVersion recorded the SAME schema (the
-    // common case: no evolution, no rename, no widen in the table's
-    // whole history), every data file AND every persisted CDC payload
-    // provably spells exactly that physical schema — impose it on
-    // every read below and skip the per-version parquet footer
-    // inference (one driver-side listing + schema job per frame,
-    // O(versions) of them per changes() call). Any schema variation
-    // in history falls back to the historical mergeSchema inference,
-    // byte-for-byte the old behavior. Metadata-only check: commit
-    // manifests are already parsed and cached.
-    val uniformPhys: Option[org.apache.spark.sql.types.StructType] = {
-      // After a vacuum the manifests below the surviving floor are gone
-      // and full-history uniformity can no longer be PROVEN (a restore
-      // may re-add pre-floor directories written under an older
-      // physical schema that the checkpoint's folded schemaJson hides)
-      // — fall back to inference instead of guessing. One existence
-      // probe: commits are dense, so manifest 0 surviving means the
-      // whole 0..toVersion chain does.
-      if (!fs.exists(manifestPath(0))) None
-      else {
-        val defined = (0 to toVersion).iterator
-          .flatMap(v => commitAt(v).schemaJson).toSeq.distinct
-        if (defined.size == 1) Some(physicalize(schemaFromJson(defined.head)))
-        else None
-      }
-    }
-    def emptyFeed: DataFrame = readAt(toVersion).limit(0)
-      .withColumn("_change_type", lit(""))
-      .withColumn("_commit_version", lit(0))
-    if (uniformPhys.isEmpty) {
-      // schema evolved somewhere in history (or the early manifests are
-      // vacuumed): the historical per-version inference path, unchanged
-      val frames = (fromVersion to toVersion).flatMap { v =>
-        val c = commitAt(v)
-        c.op match {
-          case "optimize" => Nil
-          case _ if c.cdf.isDefined => // merge/delete committed with CDC
-            val cdfPath = new Path(root, c.cdf.get).toString
-            Seq(aliasNow(spark.read.parquet(cdfPath))
-              .withColumn("_commit_version", lit(v)))
-          case _ =>
-            // synthesis folds DELETION VECTORS: an added directory serves
-            // its rows as visible AT v (a restore re-adds dirs with their
-            // DV state), a removed one as visible at v-1 — raw reads
-            // would re-report rows an earlier DV delete already emitted
-            val ins =
-              if (c.added.isEmpty) Nil
-              else Seq(aliasNow(readDirsFolded(None, existing(c.added, v),
-                snapshotAt(v).dvs))
-                .withColumn("_change_type", lit("insert")))
-            val del =
-              if (c.removed.isEmpty) Nil
-              else Seq(aliasNow(readDirsFolded(None, existing(c.removed, v),
-                snapshotAt(v - 1).dvs))
-                .withColumn("_change_type", lit("delete")))
-            (ins ++ del).map(_.withColumn("_commit_version", lit(v)))
-        }
-      }
-      return frames.reduceOption(_.unionByName(_, allowMissingColumns = true))
-        .getOrElse(emptyFeed)
-    }
-    // Uniform-schema fast path: ONE folded relation over every clean
-    // synthesis directory in range (change type and commit version
-    // attached by a broadcast join against a dir-name lookup the log
-    // already knows — dir names alone cannot carry the version, a
-    // RESTORE re-adds old-named directories at a new version) plus ONE
-    // relation over every persisted CDC directory (those ARE named for
-    // their commit version — every writer stamps `cdf-v%05d-`), instead
-    // of one planned relation per version. An N-version range plans
-    // O(1) scans, not O(N) — the per-frame planning chain was the
-    // residue after round 17 removed the per-frame footer inference.
-    // Only directories carrying deletion vectors at their version keep
-    // a per-occurrence folded frame (the DV fold is version-specific
-    // state).
-    val ps = uniformPhys.get
-    val cleanLookup = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int)]
-    val dvFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val cdcEntries = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
-    (fromVersion to toVersion).foreach { v =>
-      val c = commitAt(v)
-      c.op match {
-        case "optimize" => ()
-        case _ if c.cdf.isDefined =>
-          cdcEntries += ((c.cdf.get, v))
-        case _ =>
-          def syn(dirs: Seq[String], dvs: Map[String, Seq[String]], ct: String): Unit =
-            if (dirs.nonEmpty) {
-              existing(dirs, v)
-              val (dvd, clean) = dirs.partition(dvs.contains)
-              clean.foreach(d => cleanLookup += ((d, ct, v)))
-              if (dvd.nonEmpty)
-                dvFrames += aliasNow(readDirsFolded(Some(ps), dvd, dvs))
-                  .withColumn("_change_type", lit(ct))
-                  .withColumn("_commit_version", lit(v))
-            }
-          syn(c.added, snapshotAt(v).dvs, "insert")
-          if (c.removed.nonEmpty) syn(c.removed, snapshotAt(v - 1).dvs, "delete")
-      }
-    }
-    import org.apache.spark.sql.functions.{broadcast, col, element_at,
-      regexp_extract, split}
-    val chdir = element_at(split(col("_metadata.file_path"), "/"), -2)
-    def readClean(dirs: Seq[String]): DataFrame = spark.read.schema(ps)
-      .parquet(dirs.map(n => new Path(root, n).toString): _*)
-    // A payload directory is NAMED for the version its writer aimed at,
-    // which an optimistic-concurrency RETRY can miss (the commit lands
-    // later under the same directory name) — so a name-derived version
-    // is used ONLY where the driver verified name == log version; every
-    // other occurrence gets its version from the log (literal columns
-    // for a handful of relations, one broadcast-joined lookup beyond
-    // that, so an N-version range still plans O(1) scans).
-    val nameV = "^v(\\d+)-.*".r
-    def nameVersion(d: String): Option[Int] =
-      nameV.findFirstMatchIn(d).map(_.group(1).toInt)
-    val (insNamed, oddClean) = cleanLookup.toSeq.partition { case (d, ct, v) =>
-      ct == "insert" && nameVersion(d).contains(v) }
-    val synParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (insNamed.nonEmpty) {
-      // single-version group (changes(v, v), the streaming feed's
-      // per-batch shape): a literal beats a per-row name parse
-      val vs = insNamed.map(_._3).distinct
-      synParts += readClean(insNamed.map(_._1).distinct)
-        .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version",
-          if (vs.size == 1) lit(vs.head)
-          else regexp_extract(chdir, "^v(\\d+)-", 1).cast("int"))
-    }
-    if (oddClean.nonEmpty) {
-      // deletes (their removal version is never in the dir name) and
-      // restore-re-adds: few in a typical range — literal relations per
-      // (type, version); a delete-heavy range folds into one scan with
-      // a broadcast lookup instead
-      if (oddClean.size <= 8)
-        oddClean.groupBy(e => (e._2, e._3)).toSeq.sortBy(_._1)
-          .foreach { case ((ct, v), es) =>
-            synParts += readClean(es.map(_._1))
-              .withColumn("_change_type", lit(ct))
-              .withColumn("_commit_version", lit(v))
-          }
-      else {
-        import spark.implicits._
-        val lk = oddClean.toDF("__graft_chdir", "_change_type", "_commit_version")
-        synParts += readClean(oddClean.map(_._1).distinct)
-          .withColumn("__graft_chdir", chdir)
-          .join(broadcast(lk), Seq("__graft_chdir"))
-          .drop("__graft_chdir")
-      }
-    }
-    val cdcFrames = if (cdcEntries.isEmpty) Nil else {
-      def readCdc(names: Seq[String]): DataFrame = spark.read
-        .schema(ps.add("_change_type", org.apache.spark.sql.types.StringType))
-        .parquet(names.map(n => new Path(root, n).toString): _*)
-      val cdfNameV = "^cdf-v(\\d+)-.*".r
-      val (named, odd) = cdcEntries.toSeq.partition { case (d, v) =>
-        cdfNameV.findFirstMatchIn(d).map(_.group(1).toInt).contains(v) }
-      val fromNames =
-        if (named.isEmpty) None
-        else Some(readCdc(named.map(_._1)).withColumn("_commit_version",
-          if (named.size == 1) lit(named.head._2)
-          else regexp_extract(chdir, "^cdf-v(\\d+)-", 1).cast("int")))
-      // CDC of a retried commit: name != version, version via literal
-      val fromLog = odd.map { case (d, v) =>
-        readCdc(Seq(d)).withColumn("_commit_version", lit(v)) }
-      fromNames.toSeq ++ fromLog
-    }
-    (synParts.map(aliasNow) ++ dvFrames ++ cdcFrames.map(aliasNow))
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .getOrElse(emptyFeed)
+    commitAt(fromVersion) // throws for a vacuumed start
+    val schema = org.apache.spark.sql.types.StructType(
+      tableSchemaAt(toVersion).fields ++ GraftVtChangeFiles.cdfSchema.fields)
+    val options = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("startingVersion", fromVersion.toString,
+        "endingVersion", toVersion.toString))
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new GraftVtTable(this, toVersion, dir, schema, timeTravelled = true,
+          changeFeed = true), None, None, options))
   }
 
   /** Transactional OPTIMIZE [ZORDER] — Delta's compaction as ONE

@@ -91,8 +91,12 @@ class DvCdfFusionSpec extends SparkSuite {
     assert(dirsWith(dir, "dv-").isEmpty, "sidecar leaked")
     // every surviving cdf-* directory must be referenced by a commit —
     // the refused attempts' optimistic CDC writes were all reclaimed
-    val referenced = (0 to vt.latestVersion)
-      .flatMap(v => vt.cdfSummary(v)).toSet
+    val logDir = new org.apache.hadoop.fs.Path(dir, "_graft_log")
+    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val referenced = (0 to vt.latestVersion).flatMap { v =>
+      val in = fs.open(new org.apache.hadoop.fs.Path(logDir, f"$v%08d.json"))
+      try graft.sources.VersionedTable.decodeCommit(in).cdf finally in.close()
+    }.toSet
     val onDisk = dirsWith(dir, "cdf-").toSet
     assert(onDisk === referenced,
       s"unreferenced CDC directories leaked: ${onDisk -- referenced}")

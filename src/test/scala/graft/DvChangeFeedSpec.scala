@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Change feeds over merge-on-read commits: the DSv2 file-level feed
-  * (batch `readChangeFeed` and the streaming form) serves DV commits
-  * from their persisted CDC — mixed-type sidecars split per embedded
-  * change type — and folds deletion vectors when a rewrite removes (or
-  * a restore re-adds) a DV'd directory. Every shape is pinned against
-  * the row-level batch feed ([[graft.sources.VersionedTable.changes]]),
-  * which was already exact.
+/** The one change feed — batch `readChangeFeed`, its streaming form and
+  * [[graft.sources.VersionedTable.changes]], which is the batch feed
+  * over its own handle. A commit that persisted change data (every
+  * merge-on-read command, a copy-on-write one with `writeChangeData`)
+  * serves it, each row typed by its embedded `_change_type`; any other
+  * commit synthesizes inserts and deletes from its added and removed
+  * directories, folding deletion vectors when a rewrite removes (or a
+  * restore re-adds) a DV'd directory. Every case asserts hand-written
+  * rows.
   */
 class DvChangeFeedSpec extends SparkSuite {
   import spark.implicits._
@@ -37,14 +39,12 @@ class DvChangeFeedSpec extends SparkSuite {
       useDeletionVectors = true)                                        // v2
     assert(vt.history().orderBy("version").collect().map(_.getAs[String]("op"))
       .toSeq === Seq("append", "update-dv", "merge-dv"))
-    val got = sig(cdf(dir, 1, 2))
-    val want = sig(vt.changes(1, 2)
-      .select("k", "p", "_change_type", "_commit_version"))
-    assert(got === want)
-    // type split is real: v1 contributes pre+post pairs only
-    assert(got.filter(_._4 == 1).map(_._3).distinct.sorted ===
-      Seq("update_postimage", "update_preimage"))
-    assert(got.filter(_._4 == 2).count(_._3 == "insert") === 1)
+    val want = ((0L until 5L).flatMap(k => Seq(
+      (k, k * 1.0, "update_preimage", 1), (k, -1.0, "update_postimage", 1))) ++
+      Seq((50L, 50.0, "update_preimage", 2), (50L, -2.0, "update_postimage", 2),
+        (500L, 5.0, "insert", 2))).sorted
+    assert(sig(cdf(dir, 1, 2)) === want)
+    assert(sig(vt.changes(1, 2)) === want)
   }
 
   test("CDF folds DVs when a rewrite removes a DV'd directory") {
@@ -53,13 +53,11 @@ class DvChangeFeedSpec extends SparkSuite {
     vt.append((0L until 50L).map(k => (k, k * 1.0)).toDF("k", "p"))    // v0
     vt.delete(col("k") < 5L, useDeletionVectors = true)                // v1
     vt.overwrite(Seq((999L, 0.0)).toDF("k", "p"))                      // v2
-    val got = sig(cdf(dir, 2, 2))
-    val want = sig(vt.changes(2, 2)
-      .select("k", "p", "_change_type", "_commit_version"))
-    assert(got === want)
     // the five DV-hidden rows are NOT re-reported as deletes
-    assert(got.count(_._3 == "delete") === 45)
-    assert(got.count(_._3 == "insert") === 1)
+    val want = ((5L until 50L).map(k => (k, k * 1.0, "delete", 2)) :+
+      ((999L, 0.0, "insert", 2))).sorted
+    assert(sig(cdf(dir, 2, 2)) === want)
+    assert(sig(vt.changes(2, 2)) === want)
   }
 
   test("CDF serves renamed tables under the logical names") {
@@ -79,13 +77,10 @@ class DvChangeFeedSpec extends SparkSuite {
       .collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2), r.getInt(3)))
       .toSeq.sorted
-    val want = sig(vt.changes(2, 3)
-      .withColumnRenamed("price", "p")
-      .select("k", "p", "_change_type", "_commit_version"))
-      .map { case (k, p, t, v) => (k, p, t, v) }
+    val want = ((0L until 3L).map(k => (k, k * 1.0, "delete", 2)) :+
+      ((100L, 9.0, "insert", 3))).sorted
     assert(got === want)
-    assert(got.count(_._3 == "delete") === 3)
-    assert(got.count(_._3 == "insert") === 1)
+    assert(sig(vt.changes(2, 3).withColumnRenamed("price", "p")) === want)
   }
 
   test("changes() on a surviving range works after vacuum deleted early manifests") {
@@ -95,16 +90,110 @@ class DvChangeFeedSpec extends SparkSuite {
     vt.append((10L until 20L).map(k => (k, k * 1.0)).toDF("k", "p"))   // v1
     vt.append((20L until 30L).map(k => (k, k * 1.0)).toDF("k", "p"))   // v2
     vt.append((30L until 40L).map(k => (k, k * 1.0)).toDF("k", "p"))   // v3
-    val want = sig(vt.changes(2, 3)
-      .select("k", "p", "_change_type", "_commit_version"))
+    val want = (20L until 40L).map(k => (k, k * 1.0, "insert", (k / 10).toInt))
     vt.vacuum(keepLast = 2) // manifests 0..1 gone; v2..v3 survive
-    // pre-fix this threw "version 0 does not exist" from the uniform-
-    // schema probe walking the whole history; now it falls back to
-    // inference and serves the surviving range identically
-    val got = sig(vt.changes(2, 3)
-      .select("k", "p", "_change_type", "_commit_version"))
-    assert(got === want)
-    assert(got.count(_._3 == "insert") === 20)
+    // neither feed needs the vacuumed history below the range
+    assert(sig(vt.changes(2, 3)) === want)
+    assert(sig(cdf(dir, 2, 3)) === want)
+    // at the floor: an append removes nothing, so its feed needs no
+    // state of the vacuumed version before it
+    vt.delete(col("k") === 35L)                                         // v4
+    vt.vacuum(keepLast = 2) // manifests 0..2 gone; v3..v4 survive
+    val floor = (30L until 40L).map(k => (k, k * 1.0, "insert", 3)) ++
+      (30L until 40L).map(k => (k, k * 1.0, "delete", 4)) ++
+      (30L until 40L).filter(_ != 35L).map(k => (k, k * 1.0, "insert", 4))
+    assert(sig(vt.changes(3, 4)) === floor.sorted)
+    assert(sig(cdf(dir, 3, 4)) === floor.sorted)
+    // v4's deletes are rows of v3's directory under v3's deletion
+    // vectors; once v3 is vacuumed too, the feed of v4 fails loudly
+    // instead of dropping them
+    vt.vacuum(keepLast = 1)
+    val e = intercept[Exception](vt.changes(4, 4).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("vacuumed")), e.toString)
+  }
+
+  /** Every row a change-feed stream from `from` delivers once the
+    * table's current commits are processed.
+    */
+  private def streamed(dir: String, from: Int): Seq[(Long, Double, String, Int)] = {
+    val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, String, Int)]
+    val q = spark.readStream.format("graftvt")
+      .option("readChangeFeed", "true").option("startingVersion", from.toString)
+      .load(dir).writeStream
+      .option("checkpointLocation", tmpVt())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        sunk ++= b.select("k", "p", "_change_type", "_commit_version").collect()
+          .map(r => (r.getLong(0), r.getDouble(1), r.getString(2), r.getInt(3)))
+        ()
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    sunk.toSeq.sorted
+  }
+
+  test("copy-on-write delete, update and merge with writeChangeData serve their CDC") {
+    val dir = tmpVt()
+    val vt = new graft.sources.VersionedTable(spark, dir)
+    vt.append((0L until 10L).map(k => (k, k * 1.0)).toDF("k", "p"))    // v0
+    vt.delete(col("k") < 2L, writeChangeData = true)                    // v1
+    vt.update(col("k") === 5L, Map("p" -> lit(-5.0)),
+      writeChangeData = true)                                           // v2
+    vt.merge(Seq((7L, 70.0), (20L, 20.0)).toDF("k", "p"), Seq("k"),
+      writeChangeData = true)                                           // v3
+    assert(vt.history().orderBy("version").collect().map(_.getAs[String]("op"))
+      .toSeq === Seq("append", "delete", "update", "merge"))
+    // the rows each command changed, not the rewritten directories
+    val want = Seq(
+      (0L, 0.0, "delete", 1), (1L, 1.0, "delete", 1),
+      (5L, 5.0, "update_preimage", 2), (5L, -5.0, "update_postimage", 2),
+      (7L, 7.0, "update_preimage", 3), (7L, 70.0, "update_postimage", 3),
+      (20L, 20.0, "insert", 3)).sorted
+    assert(sig(cdf(dir, 1, 3)) === want)
+    assert(streamed(dir, 1) === want)
+    assert(sig(vt.changes(1, 3)) === want)
+  }
+
+  test("a merge-on-read clause merge serves its MATCHED DELETE rows") {
+    val dir = tmpVt()
+    val vt = new graft.sources.VersionedTable(spark, dir)
+    vt.append((0L until 20L).map(k => (k, k * 1.0)).toDF("k", "p"))    // v0
+    vt.mergeClauses(Seq((3L, -1.0), (4L, 40.0), (30L, 30.0)).toDF("k", "p"),
+      Seq("k"),
+      matched = Seq(
+        graft.sources.MergeClause(Some(col("s.p") < 0),
+          graft.sources.MergeAction.Delete),
+        graft.sources.MergeClause(None, graft.sources.MergeAction.Update(
+          Some(Map("p" -> col("s.p")))))),
+      notMatched = Seq(graft.sources.MergeClause(None,
+        graft.sources.MergeAction.Insert(None))),
+      useDeletionVectors = true)                                        // v1
+    assert(vt.history().orderBy("version").collect().map(_.getAs[String]("op"))
+      .toSeq === Seq("append", "merge-dv"))
+    val want = Seq(
+      (3L, 3.0, "delete", 1),
+      (4L, 4.0, "update_preimage", 1), (4L, 40.0, "update_postimage", 1),
+      (30L, 30.0, "insert", 1)).sorted
+    assert(sig(cdf(dir, 1, 1)) === want)
+    assert(streamed(dir, 1) === want)
+    assert(sig(vt.changes(1, 1)) === want)
+  }
+
+  test("changes() serves the schema of its last version; a vacuumed start fails at the call") {
+    val dir = tmpVt()
+    val vt = new graft.sources.VersionedTable(spark, dir)
+    vt.append(Seq((1L, 1.0, "a"), (2L, 2.0, "b")).toDF("k", "p", "tag")) // v0
+    vt.dropColumns(Seq("tag"))                                          // v1
+    vt.append(Seq((3L, 3.0)).toDF("k", "p"))                            // v2
+    val feed = vt.changes(0, 2)
+    assert(feed.columns.toSeq === Seq("k", "p", "_change_type", "_commit_version"))
+    assert(sig(feed) === Seq((1L, 1.0, "insert", 0), (2L, 2.0, "insert", 0),
+      (3L, 3.0, "insert", 2)))
+    // before the drop, the column is still there
+    assert(vt.changes(0, 0).columns.toSeq ===
+      Seq("k", "p", "tag", "_change_type", "_commit_version"))
+    vt.vacuum(keepLast = 1) // manifests 0..1 gone
+    intercept[IllegalArgumentException] { vt.changes(0, 2) }
+    assert(sig(vt.changes(2, 2)) === Seq((3L, 3.0, "insert", 2)))
   }
 
   test("changes() attributes a restore-re-added directory to the restore version") {
@@ -113,8 +202,7 @@ class DvChangeFeedSpec extends SparkSuite {
     vt.append((0L until 5L).map(k => (k, k * 1.0)).toDF("k", "p"))     // v0: dirA
     vt.overwrite((10L until 13L).map(k => (k, k * 1.0)).toDF("k", "p")) // v1: -dirA +dirB
     vt.restore(0)                                                       // v2: -dirB +dirA
-    val got = sig(vt.changes(0, 2)
-      .select("k", "p", "_change_type", "_commit_version"))
+    val got = sig(vt.changes(0, 2))
     // dirA rows: insert@0, delete@1, insert@2 — the dir NAME says v0,
     // so the commit version must come from the log, not the path
     val aRow = got.filter(_._1 == 0L).map(x => (x._3, x._4)).sorted
@@ -143,8 +231,10 @@ class DvChangeFeedSpec extends SparkSuite {
     vt.update(col("k") === 1L, Map("p" -> lit(-9.0)),
       useDeletionVectors = true)                                        // v2
     q.processAllAvailable(); q.stop()
-    val want = sig(vt.changes(0, 2)
-      .select("k", "p", "_change_type", "_commit_version"))
+    val want = ((0L until 60L).map(k => (k, k * 1.0, "insert", 0)) ++
+      (0L until 60L by 6L).map(k => (k, k * 1.0, "delete", 1)) ++
+      Seq((1L, 1.0, "update_preimage", 2), (1L, -9.0, "update_postimage", 2))).sorted
     assert(sunk.sorted.toSeq === want)
+    assert(sig(cdf(dir, 0, 2)) === want)
   }
 }

@@ -495,8 +495,12 @@ class PropertySpec extends SparkSuite {
     //   - replaying changes(v, v) onto the model at v-1 gives the model
     //     at v (removals: delete / update_preimage; additions: insert /
     //     update_postimage; multiset, so a removal of a row the model
-    //     never held fails).
-    // At the end every recorded version time-travels back to its model.
+    //     never held fails);
+    //   - on a step drawn with writeChangeData the feed is exact: no row
+    //     is both removed and added by the one commit.
+    // At the end every recorded version time-travels back to its model,
+    // and one random range changes(a, b) replays version by version
+    // from the model at a-1 to the model at b.
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions.{col, concat, lit}
     import graft.sources.{MergeAction, MergeClause, VersionedTable}
@@ -504,19 +508,26 @@ class PropertySpec extends SparkSuite {
     val tables = new graft.sources.TableManager(spark)
     def bag(rows: Iterable[(Long, String)]): Map[(Long, String), Int] =
       rows.groupBy(identity).map { case (r, xs) => r -> xs.size }
-    def replay(vt: VersionedTable, v: Int, prev: Model, what: String): Model = {
-      val feed = vt.changes(v, v).select("k", "s", "_change_type").collect()
-        .map(r => ((r.getLong(0), r.getString(1)), r.getString(2)))
+    /** (commit version, (row, change type)) of changes(a, b). */
+    def feedOf(vt: VersionedTable, a: Int, b: Int): Seq[(Int, ((Long, String), String))] =
+      vt.changes(a, b).select("k", "s", "_change_type", "_commit_version").collect()
+        .map(r => (r.getInt(3), ((r.getLong(0), r.getString(1)), r.getString(2)))).toSeq
+    /** `prev` with one commit's feed applied. */
+    def replay(feed: Seq[((Long, String), String)], prev: Model, what: String,
+               exact: Boolean): Model = {
+      val removed = feed.collect {
+        case (r, t) if t == "delete" || t == "update_preimage" => r }
+      val added = feed.collect {
+        case (r, t) if t == "insert" || t == "update_postimage" => r }
+      if (exact) assert(removed.intersect(added).isEmpty,
+        s"$what: rows both removed and added: ${removed.intersect(added)}")
       var b = bag(prev)
-      feed.filter(f => f._2 == "delete" || f._2 == "update_preimage").foreach {
-        case (r, _) =>
-          assert(b.getOrElse(r, 0) > 0, s"$what: changes($v, $v) removes $r, " +
-            "which the model at v-1 does not hold")
-          b = if (b(r) == 1) b - r else b.updated(r, b(r) - 1)
+      removed.foreach { r =>
+        assert(b.getOrElse(r, 0) > 0, s"$what: removes $r, " +
+          "which the model at v-1 does not hold")
+        b = if (b(r) == 1) b - r else b.updated(r, b(r) - 1)
       }
-      feed.filter(f => f._2 == "insert" || f._2 == "update_postimage").foreach {
-        case (r, _) => b = b.updated(r, b.getOrElse(r, 0) + 1)
-      }
+      added.foreach(r => b = b.updated(r, b.getOrElse(r, 0) + 1))
       assert(b.values.forall(_ == 1), s"$what: replay duplicates a row")
       b.keys.toMap
     }
@@ -536,9 +547,16 @@ class PropertySpec extends SparkSuite {
       var model: Model = Map.empty
       // (version per table, model at those versions): time-travel sweep
       var history = Vector.empty[(Seq[Int], Model)]
+      // per table (by useDeletionVectors): the model at every version
+      val models = Map(false -> scala.collection.mutable.Map.empty[Int, Model],
+        true -> scala.collection.mutable.Map.empty[Int, Model])
       val init = randRows(6)
       model = init.toMap
-      each((vt, _) => vt.append(df(init)))
+      each { (vt, dv) =>
+        val v = vt.append(df(init))
+        models(dv)(v) = model
+        v
+      }
       history :+= ((vts.map(_._2.latestVersion), model))
       for (step <- 1 to 14) {
         val prev = model
@@ -547,6 +565,7 @@ class PropertySpec extends SparkSuite {
         // replay exactly
         val cdc = rnd.nextBoolean()
         val opKind = rnd.nextInt(10)
+        val exact = cdc && Set(2, 3, 8, 9).contains(opKind)
         opKind match {
           case 0 => // append fresh keys only (append never upserts)
             val rows = randRows(4).filterNot(r => model.contains(r._1))
@@ -646,9 +665,25 @@ class PropertySpec extends SparkSuite {
           assert(vt.fastCount() === Some(model.size.toLong), what)
           val sr = vt.statRange("k")
           assert(sr.isEmpty || sr === range, s"$what: statRange $sr != model $range")
-          if (v != v0) assert(replay(vt, v, prev, what) === model,
-            s"$what: changes($v, $v) replayed onto v-1 != model at v")
+          if (v != v0) {
+            assert(replay(feedOf(vt, v, v).map(_._2), prev, s"$what: changes($v, $v)",
+              exact) === model, s"$what: changes($v, $v) replayed onto v-1 != model at v")
+            models(dv)(v) = model
+          }
         }
+      }
+      vts.foreach { case (dv, vt) =>
+        val latest = vt.latestVersion
+        assert(models(dv).keySet === (0 to latest).toSet,
+          s"seed $seed: a step committed more than one version")
+        val a = 1 + rnd.nextInt(latest)
+        val b = a + rnd.nextInt(latest - a + 1)
+        val what = s"seed $seed ${if (dv) "dv" else "cow"} changes($a, $b)"
+        val feed = feedOf(vt, a, b)
+        val got = (a to b).foldLeft(models(dv)(a - 1)) { (m, v) =>
+          replay(feed.collect { case (`v`, f) => f }, m, s"$what at $v", exact = false)
+        }
+        assert(got === models(dv)(b), s"$what replayed onto a-1 != model at b")
       }
       vts.foreach { case (_, vt) =>
         opsSeen ++= vt.history().collect().map(_.getString(1)) }
