@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression}
 import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, ReplaceExpressions, SimplifyCasts}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => CFilter}
@@ -159,11 +159,13 @@ private[graft] object DataSkipping {
     * own type) and constant-folded so the analyzer's literal-side casts
     * become literals, split into conjuncts and translated one by one (one
     * untranslatable conjunct never discards the others) by Spark's own
-    * `translateFilter`. A condition that fails analysis yields nothing;
-    * the caller's real scan raises the proper error.
+    * `translateFilter`. Current-time functions take the command's
+    * instant `now`, the one its scans use. A condition that fails
+    * analysis yields nothing; the caller's real scan raises the proper
+    * error.
     */
   def fromCondition(spark: SparkSession, condition: Column,
-                    schema: StructType): Seq[Pred] = {
+                    schema: StructType, now: java.time.Instant): Seq[Pred] = {
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
@@ -172,10 +174,10 @@ private[graft] object DataSkipping {
       val probe = spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
       val plan = ConstantFolding(SimplifyCasts(ReplaceExpressions(
-        probe.filter(condition).queryExecution.analyzed)))
+        GraftSqlBridge.analyzed(GraftSqlBridge.atInstant(probe.filter(condition), now)))))
       val cond = plan.collectFirst { case f: CFilter => f.condition }
       fromFilters(cond.toSeq.flatMap(conjuncts)
-        .flatMap(org.apache.spark.sql.GraftSqlBridge.translateFilter))
+        .flatMap(GraftSqlBridge.translateFilter))
     } catch { case NonFatal(_) => Nil }
   }
 

@@ -68,7 +68,8 @@ private[sources] object GraftVtChangeFiles {
     * op; any other commit `insert` from its added directories and
     * `delete` from its removed ones, each folded under the deletion
     * vectors of the version it was visible at (rewritten-but-unchanged
-    * rows appear as delete+insert pairs).
+    * rows appear as delete+insert pairs), so removals fail loudly once
+    * the version before `v` is vacuumed.
     */
   def changeDirs(vt: VersionedTable, v: Int): Seq[ChangeUnit] = {
     val c = vt.commitAt(v)
@@ -84,6 +85,9 @@ private[sources] object GraftVtChangeFiles {
     else c.cdf match {
       case Some(d) => Seq(CdcChange(d))
       case None =>
+        require(c.removed.isEmpty || vt.hasManifest(v - 1), s"the change feed of version $v " +
+          s"needs version ${v - 1}, which was vacuumed: version $v removed directories whose " +
+          s"rows it reports as deletes of version ${v - 1}; start after version $v")
         synthesis(c.added, "insert", v) ++ synthesis(c.removed, "delete", v - 1)
     }
   }

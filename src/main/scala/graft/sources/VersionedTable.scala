@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 
 /** Versioned-snapshot table: the offline stand-in for Delta's
   * `DESCRIBE HISTORY` / `VERSION AS OF` surface
@@ -33,8 +33,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    `overwrite` removes the previous active set and adds one, while
   *    the old directories stay readable through old versions;
   *  - `readAt(v)` unions exactly version v's active directories
-  *    (mergeSchema — an evolving append widens later reads, old
-  *    versions keep their shape); `history()` folds the manifests once
+  *    (under the schema v recorded — an evolving append widens later
+  *    reads, old versions keep their shape); `history()` folds the manifests once
   *    (O(total deltas), not O(versions × active));
   *  - commits are ATOMIC via write-tmp + an atomic claim of the next
   *    log slot (hard-link on local filesystems, no-overwrite rename on
@@ -277,8 +277,8 @@ object VersionedTable {
     val name = f"v00000-conv-${java.util.UUID.randomUUID().toString.take(8)}"
     val target = new Path(vt.root, name)
     vt.fs.mkdirs(target)
-    files.foreach(f =>
-      vt.fs.rename(f.getPath, new Path(target, f.getPath.getName)))
+    files.foreach(f => require(vt.fs.rename(f.getPath, new Path(target, f.getPath.getName)),
+      s"convert rename ${f.getPath} -> $name failed"))
     val (rows, stats, _) = vt.statsOf(target.toString)
     vt.publish(Commit(0, "convert", Seq(name), Seq.empty, rows,
       System.currentTimeMillis(), addedStats = Map(name -> stats),
@@ -395,12 +395,12 @@ class VersionedTable(spark: SparkSession, dir: String,
     * feed replay the log by. Fails loudly for a vacuumed version.
     */
   private[sources] def commitAt(v: Int): Commit = {
-    val p = manifestPath(v)
-    require(fs.exists(p),
+    require(hasManifest(v),
       s"version $v does not exist in $dir (latest: $latestVersion; " +
         "it may have been vacuumed)")
     parseManifest(v)
   }
+  private[sources] def hasManifest(v: Int): Boolean = fs.exists(manifestPath(v))
 
   /** The newest checkpoint at or below `v`, if any. The common case —
     * resolving a recent version — is served by the `_last_checkpoint`
@@ -781,7 +781,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     // scan) fall back to the historical read-back, which computes the
     // same numbers from the files.
     val (rows, stats, violations) =
-      org.apache.spark.sql.GraftSqlBridge.awaitObserved(obs).map(m =>
+      GraftSqlBridge.awaitObserved(obs).map(m =>
         decodeStatRow(statCols, cNames, l2p, i => m.getOrElse(s"_$i", null)))
       .getOrElse(statsOf(dataDir.toString, constraints, l2p.map(_.swap)))
     val broken = violations.filter(_._2 > 0L)
@@ -1824,29 +1824,6 @@ class VersionedTable(spark: SparkSession, dir: String,
   def overwrite(df: DataFrame): Int =
     writeAndCommit(df, maxRetries = 0, replace = true).get
 
-  /** Union-read a set of this table's data directories (mergeSchema,
-    * same as [[readAt]]).
-    */
-  private def readDirs(dirs: Seq[String]): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(dirs.map(n => new Path(root, n).toString): _*)
-
-  /** [[readDirs]] with the TABLE schema imposed: directories missing an
-    * evolved column read it as null, and a dropped column's residual
-    * bytes stay hidden — the read every row-level mutation must use
-    * (a physical mergeSchema read would crash on evolved columns the
-    * touched directories never held, and resurrect dropped ones).
-    */
-  private def readDirsAs(schema: org.apache.spark.sql.types.StructType,
-                         dirs: Seq[String]): DataFrame = {
-    // column mapping: files spell physical names — read them, serve
-    // logical (identity for never-renamed tables)
-    val l2p = renameMap(schema)
-    val raw = spark.read.schema(physicalize(schema))
-      .parquet(dirs.map(n => new Path(root, n).toString): _*)
-    if (l2p.isEmpty) raw else raw.withColumnsRenamed(l2p.map(_.swap))
-  }
-
   /** The deletion-vector state of a version: data directory → the DV
     * sidecar directories whose (file, row-position) entries hide rows
     * from it. Package-private: the DSv2 scan consults it to route
@@ -1907,8 +1884,10 @@ class VersionedTable(spark: SparkSession, dir: String,
     * DELETE thus costs its matches at read time instead of a directory
     * rewrite at write time — OPTIMIZE compacts the debt away (its
     * rewrite reads folded and drops the rewritten directories' DV
-    * entries). `schema` imposed when given, mergeSchema otherwise,
-    * matching [[readDirsAs]]/[[readDirs]].
+    * entries). The table `schema` is imposed: directories missing an
+    * evolved column read it as null, a dropped column's residual bytes
+    * stay hidden, and a renamed column's physical name serves its
+    * logical one. No parquet footer is opened at plan time.
     *
     * `tag` (and `posTag`) RETAIN each surviving row's source file path
     * (and row index) as columns — the mutation scans need the file
@@ -1916,25 +1895,20 @@ class VersionedTable(spark: SparkSession, dir: String,
     * BEFORE a join/exchange, so the identity is captured from
     * `_metadata` at the scan.
     */
-  private def readDirsFolded(schema: Option[org.apache.spark.sql.types.StructType],
+  private def readDirsFolded(schema: org.apache.spark.sql.types.StructType,
                              dirs: Seq[String],
                              dvs: Map[String, Seq[String]],
                              tag: Option[String] = None,
                              posTag: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
     val paths = dirs.map(n => new Path(root, n).toString)
-    val r = schema match {
-      case Some(s) => spark.read.schema(physicalize(s)).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    val r = spark.read.schema(physicalize(schema)).parquet(paths: _*)
     val hidden = dvBitmapPaths(dvs, dirs)
     val folded = if (hidden.isEmpty) r else r.filter(GraftDvBitmap.keep(spark,
       hidden, col("_metadata.file_path"), col("_metadata.row_index")))
     val t = tag.fold(folded)(tg => folded.withColumn(tg, col("_metadata.file_path")))
     val tagged = posTag.fold(t)(pt => t.withColumn(pt, col("_metadata.row_index")))
-    // column mapping: an imposed schema carries its own map; a
-    // mergeSchema read leaves the files' physical names to the caller
-    val p2l = schema.map(sc => renameMap(sc).map(_.swap)).getOrElse(Map.empty)
+    val p2l = renameMap(schema).map(_.swap)
     if (p2l.isEmpty) tagged else tagged.withColumnsRenamed(p2l)
   }
 
@@ -1944,30 +1918,6 @@ class VersionedTable(spark: SparkSession, dir: String,
     * manifest-admitted subset instead of the whole active set.
     */
   private[graft] var lastDiscoveryDirs: Seq[String] = Nil
-
-  /** Stats-pruned candidate set for a row-level mutation's
-    * touched-directory DISCOVERY scan (Delta's data-skipping
-    * DELETE/UPDATE): the condition goes through the data-skipping core's
-    * Catalyst front end ([[DataSkipping.fromCondition]] — constant
-    * folding, then [[org.apache.spark.sql.execution.datasources
-    * .DataSourceStrategy.translateFilter]] per conjunct, so one
-    * untranslatable term never discards the others' pruning power, then
-    * the SAME v1-filter mapping the DSv2 scan pushes), and only the
-    * active directories whose recorded stats can satisfy it are kept.
-    * Pruning is a superset guarantee at directory granularity, so the
-    * discovery scan's row-level filter stays authoritative; a predicate
-    * with no stat-expressible conjunct keeps the full active set. At
-    * 100 TB this is the difference between a `DELETE WHERE day = X`
-    * scanning one ingestion-day's directories and scanning the table to
-    * discover the 1% it will rewrite.
-    */
-  private def discoveryCandidates(condition: org.apache.spark.sql.Column,
-                                  schema: org.apache.spark.sql.types.StructType,
-                                  version: Int): Seq[String] = {
-    val kept = skip(DataSkipping.fromCondition(spark, condition, schema), Some(version))._1
-    lastDiscoveryDirs = kept
-    kept
-  }
 
   /** Delta-style MERGE upsert in ONE atomic commit: every source row
     * replaces the target row with the same `keys` (whole-row) or is
@@ -2062,6 +2012,9 @@ class VersionedTable(spark: SparkSession, dir: String,
     * [AND c] THEN UPDATE SET .../DELETE` — first-match-wins within
     * each group, a target row no clause claims is carried through
     * unchanged, a source row no INSERT claims is dropped.
+    * Current-time functions in the source, the clause conditions and
+    * the assignments are evaluated once per command: every job it runs
+    * sees the same instant.
     *
     * The join is ONE full-outer join on the same-name equality `keys`
     * (per-key conjunctive stat pruning of the touched directories and
@@ -2297,15 +2250,17 @@ class VersionedTable(spark: SparkSession, dir: String,
     // The span aggregate, the duplicate-key gate, the clause join (twice,
     // when the full-outer decomposition's anti side runs), the upsert's
     // payload and change-data images, and the copy-on-write carried
-    // recompute each read this projection in their own job. A source
-    // whose rows can differ between those reads — a non-deterministic
-    // expression, or a current-time one (fixed per query, so per job) —
-    // is cached so every read sees the same rows.
-    val unstable = source.queryExecution.analyzed.exists(_.expressions.exists(e =>
-      !e.deterministic ||
-        e.containsPattern(org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE)))
-    val src0 = source.select((keys.map(col) :+
-      struct(source.columns.toIndexedSeq.map(col): _*).as(sourceAlias)): _*)
+    // recompute each read this projection in their own job. Every frame
+    // built from the source or the clauses evaluates current-time
+    // functions at one instant, `now`, pinned before any persist (a frame
+    // pinned after it no longer matches the cached plan); a source whose
+    // rows can still differ between reads, a non-deterministic one, is
+    // cached so every read sees the same rows.
+    val now = java.time.Instant.now()
+    def pin(df: DataFrame): DataFrame = GraftSqlBridge.atInstant(df, now)
+    val unstable = source.queryExecution.analyzed.exists(_.expressions.exists(!_.deterministic))
+    val src0 = pin(source.select((keys.map(col) :+
+      struct(source.columns.toIndexedSeq.map(col): _*).as(sourceAlias)): _*))
     val src =
       if (unstable) src0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else src0
     try {
@@ -2343,7 +2298,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     val castTo = snapSchema.fields.map(f => f.name -> f.dataType).toMap
     // the touched rows with their file identity: one relation (one file
     // listing) every target-side frame below derives from
-    lazy val tgtRows = readDirsFolded(Some(snapSchema), touched, snapState.dvs,
+    lazy val tgtRows = readDirsFolded(snapSchema, touched, snapState.dvs,
       tag = Some("__graft_file"), posTag = Some("__graft_pos"))
     val insertOnly = matched.isEmpty && notMatchedBySource.isEmpty
     // A target row matched by MORE than one source row fails loudly (its
@@ -2471,7 +2426,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     // a 100×-scale table must not materialize the whole touched join;
     // the copy-on-write rewrite finds the carried rows by their file
     // identity against this set.
-    val actedHot = acted.filter(col("__graft_act") > 0)
+    val actedHot = pin(acted.filter(col("__graft_act") > 0))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val act = col("__graft_act")
@@ -2523,7 +2478,7 @@ class VersionedTable(spark: SparkSession, dir: String,
           : Seq[DataFrame] =
         cs.zipWithIndex.flatMap { case (cl, i) =>
           img(cl.action).map(cols =>
-            actedHot.filter(rowClass && act === (i + 1)).select(cols: _*))
+            pin(actedHot.filter(rowClass && act === (i + 1)).select(cols: _*)))
         }
       val updOf: MergeAction => Option[Seq[org.apache.spark.sql.Column]] = {
         case MUpdate(a) => Some(updImage(a))
@@ -2543,9 +2498,8 @@ class VersionedTable(spark: SparkSession, dir: String,
               .as("_change_type") :+ col("__graft_file") :+ col("__graft_pos"): _*)),
         post = updPost, inserts = inserts,
         // copy-on-write carries the touched rows whose file identity no
-        // claimed row holds: re-classifying them in the rewrite's own job
-        // could claim a different set (a current-time condition takes a
-        // new value in each job) and drop rows no output records
+        // claimed row holds: one anti-join against the cached claimed
+        // rows, not a second source join and clause chain
         rewrite = () => unionAll(
           tgtRows.join(actedHot.filter(affected).select("__graft_file", "__graft_pos"),
             Seq("__graft_file", "__graft_pos"), "left_anti")
@@ -2959,7 +2913,8 @@ class VersionedTable(spark: SparkSession, dir: String,
     * commit's CDC (`_change_type = "delete"`), making [[changes]]
     * exact; without it the synthesis reports the rewritten
     * directories' survivors as delete+insert pairs too (a DV commit
-    * always persists its CDC).
+    * always persists its CDC). Current-time functions are evaluated
+    * once per command: every job it runs sees the same instant.
     */
   def delete(condition: org.apache.spark.sql.Column,
              writeChangeData: Boolean = false, maxRetries: Int = 5,
@@ -2976,8 +2931,9 @@ class VersionedTable(spark: SparkSession, dir: String,
     * validated against the table's CHECK constraints in the same job
     * that indexes the payload ([[writePayload]]). `writeChangeData =
     * true` persists the exact CDC (`update_preimage`/
-    * `update_postimage`). Returns the committed version, or the
-    * CURRENT version unchanged when nothing matches.
+    * `update_postimage`). Current-time functions are evaluated once
+    * per command, as in [[delete]]. Returns the committed version, or
+    * the CURRENT version unchanged when nothing matches.
     */
   def update(condition: org.apache.spark.sql.Column,
              assignments: Map[String, org.apache.spark.sql.Column],
@@ -2990,8 +2946,13 @@ class VersionedTable(spark: SparkSession, dir: String,
 
   /** The source-less front end of [[commitMutation]]: `condition` maps
     * each row to the action — deleted when `assignments` is empty,
-    * updated otherwise. Discovery is stats-bounded
-    * ([[discoveryCandidates]]), then ONE scan over the candidates
+    * updated otherwise. Discovery is stats-bounded (Delta's
+    * data-skipping DELETE/UPDATE): the condition goes through the
+    * data-skipping core's Catalyst front end
+    * ([[DataSkipping.fromCondition]]), and only the active directories
+    * whose recorded stats can satisfy it are candidates — a superset at
+    * directory granularity, so a predicate with no stat-expressible
+    * conjunct keeps the full active set. ONE scan over the candidates
     * yields a metadata-sized result (distinct FILE names → their
     * parent directories); only those are touched. The table schema is
     * the LOG-recorded one: a condition or assignment on an evolved
@@ -3015,23 +2976,22 @@ class VersionedTable(spark: SparkSession, dir: String,
       s"update SET column `$k` is not in the table schema " +
         s"(${schema.fieldNames.mkString(", ")})"))
     val hit = coalesce(condition, lit(false))
-    val candidates = discoveryCandidates(condition, schema, latest)
+    // every frame below evaluates current-time functions at one instant
+    val now = java.time.Instant.now()
+    def pin(df: DataFrame): DataFrame = GraftSqlBridge.atInstant(df, now)
+    val candidates = skip(DataSkipping.fromCondition(spark, condition, schema, now),
+      Some(latest))._1
+    lastDiscoveryDirs = candidates
     if (candidates.isEmpty) return latest // provably nothing matches
-    def scan(dirs: Seq[String]): DataFrame = readDirsFolded(Some(schema), dirs,
+    def scan(dirs: Seq[String]): DataFrame = readDirsFolded(schema, dirs,
       snap.dvs, tag = Some("__graft_file"), posTag = Some("__graft_pos"))
     val touched = touchedManifestNames(
-      scan(candidates).filter(hit).select(col("__graft_file"))
+      pin(scan(candidates).filter(hit)).select(col("__graft_file"))
         .distinct().collect().map(_.getString(0)).toSeq, candidates)
     if (touched.isEmpty) return latest
     val isDelete = assignments.isEmpty
     val rows = scan(touched)
-    // A DV update hides its matches in one job (sidecar and change data)
-    // and appends their updated images in another. Each job plans the
-    // condition anew, and a current-time condition takes a new value in
-    // each: cached, both jobs see the same matches.
-    val matched =
-      if (isDelete || !useDeletionVectors) rows.filter(hit)
-      else rows.filter(hit).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val matched = pin(rows.filter(hit))
     // the updated image of a row; `guarded` keeps non-matching rows as
     // they are (the copy-on-write rewrite reads every touched row)
     def assigned(guarded: Boolean): Seq[org.apache.spark.sql.Column] =
@@ -3041,24 +3001,24 @@ class VersionedTable(spark: SparkSession, dir: String,
           if (guarded) when(hit, v).otherwise(col(f.name)) else v
         }.as(f.name)
       }
-    try commitMutation(if (isDelete) "delete" else "update", latest, touched, schema,
+    commitMutation(if (isDelete) "delete" else "update", latest, touched, schema,
       pre = Some(matched.withColumn("_change_type",
         lit(if (isDelete) "delete" else "update_preimage"))),
-      post = if (isDelete) None else Some(matched.select(assigned(guarded = false): _*)),
+      post = if (isDelete) None else Some(pin(matched.select(assigned(guarded = false): _*))),
       inserts = None,
       rewrite = () => {
         val untagged = rows.drop("__graft_file", "__graft_pos")
-        if (isDelete) untagged.filter(not(hit))
-        else untagged.select(assigned(guarded = true): _*)
+        pin(if (isDelete) untagged.filter(not(hit))
+          else untagged.select(assigned(guarded = true): _*))
       },
       addedMayMatch = c =>
-        if (c.added.nonEmpty && !readDirsAs(schema, c.added).filter(hit).isEmpty) c.added
+        if (c.added.nonEmpty &&
+            !pin(readDirsFolded(schema, c.added, Map.empty).filter(hit)).isEmpty) c.added
         else Nil,
       // a delete writes only rows the table already validated
       constraints = if (isDelete) Map.empty else snap.constraints,
       writeChangeData = writeChangeData,
       useDeletionVectors = useDeletionVectors, maxRetries = maxRetries)
-    finally matched.unpersist()
   }
 
   /** The DV-vs-rewrite policy: a DV commits only while every touched
@@ -3133,19 +3093,21 @@ class VersionedTable(spark: SparkSession, dir: String,
     * as delete+insert pairs, the documented trade-off of not paying the
     * CDC write. An `optimize` commit emits NOTHING (the data is
     * identical by contract). A range starting below the oldest
-    * surviving version fails here, not at the first action.
+    * surviving version fails here, not at the first action, and so does
+    * one whose first commit removed directories of a vacuumed version.
     */
   def changes(fromVersion: Int, toVersion: Int): DataFrame = {
     val latest = latestVersion
     require(0 <= fromVersion && fromVersion <= toVersion && toVersion <= latest,
       s"changes($fromVersion, $toVersion) out of range for $dir (latest $latest)")
-    commitAt(fromVersion) // throws for a vacuumed start
+    // throws for a vacuumed start, or one whose deletes need a vacuumed version
+    GraftVtChangeFiles.changeDirs(this, fromVersion)
     val schema = org.apache.spark.sql.types.StructType(
       tableSchemaAt(toVersion).fields ++ GraftVtChangeFiles.cdfSchema.fields)
     val options = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       java.util.Map.of("startingVersion", fromVersion.toString,
         "endingVersion", toVersion.toString))
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+    GraftSqlBridge.ofRows(spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
         new GraftVtTable(this, toVersion, dir, schema, timeTravelled = true,
           changeFeed = true), None, None, options))
@@ -3377,7 +3339,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     // `base` is the latest version, so its directories cannot have been
     // vacuumed
     val logSchema = tableSchemaAt(base)
-    val scoped = readDirsFolded(Some(logSchema), removed, snap.dvs)
+    val scoped = readDirsFolded(logSchema, removed, snap.dvs)
     // approxQuantile wants a numeric column: timestamps/integrals
     // shadow-cast to double for the key only — rows are written with
     // their original columns.
@@ -3548,16 +3510,14 @@ class VersionedTable(spark: SparkSession, dir: String,
     // A CREATEd-but-never-written table (or a schema-recorded version
     // whose every directory a later delete dropped) reads as an EMPTY
     // frame with the recorded schema — never an error.
-    if (active.isEmpty && snap.schemaJson.isDefined)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schemaFromJson(snap.schemaJson.get))
-    require(active.nonEmpty, s"version $v of $dir has no data directories")
+    val schema = tableSchemaAt(v)
+    if (active.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val dirs = active.map(n => new Path(root, n)) // fail fast on vacuumed data
     dirs.foreach(p => require(fs.exists(p),
       s"data directory $p of version $v was vacuumed; only versions >= " +
         "the retention window are readable"))
-    readDirsFolded(snap.schemaJson.map(schemaFromJson), active, snap.dvs)
+    readDirsFolded(schema, active, snap.dvs)
   }
 
   /** Data skipping (Delta file statistics) through the data-skipping
@@ -3620,10 +3580,7 @@ class VersionedTable(spark: SparkSession, dir: String,
     // every directory pruned is a legitimate answer (the range holds
     // no rows): an empty frame with the snapshot's schema
     if (kept.isEmpty) readAt(v).limit(0)
-    else {
-      val sn = snapshotAt(v)
-      readDirsFolded(sn.schemaJson.map(schemaFromJson), kept, sn.dvs)
-    }
+    else readDirsFolded(tableSchemaAt(v), kept, snapshotAt(v).dvs)
   }
 
   /** [[readAt]] with [[pruneActive]] data skipping applied: the

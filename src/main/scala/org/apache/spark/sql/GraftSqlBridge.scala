@@ -24,6 +24,32 @@ object GraftSqlBridge {
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[CDataFrame].queryExecution.analyzed
 
+  /** `df` with every current-time expression evaluated at `now`: the
+    * substitution Spark's `ComputeCurrentTime` makes once per query,
+    * made once per command, so the several jobs of one command see one
+    * instant. `df` itself when its plan has no current-time expression.
+    */
+  def atInstant(df: DataFrame, now: java.time.Instant): DataFrame = {
+    import catalyst.expressions._, catalyst.util.DateTimeUtils._, types._
+    val plan = analyzed(df)
+    val current: catalyst.trees.TreePatternBits => Boolean =
+      _.containsPattern(catalyst.trees.TreePattern.CURRENT_LIKE)
+    if (!current(plan)) return df
+    val micros = instantToMicros(now)
+    val zone = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    ofRows(df.sparkSession, plan.transformDownWithSubqueriesAndPruning(current) { case p =>
+      p.transformExpressionsWithPruning(current) {
+        case _: CurrentTimestamp | _: Now => Literal.create(micros, TimestampType)
+        case d: CurrentDate => Literal.create(microsToDays(micros, d.zoneId), DateType)
+        case t: LocalTimestamp => Literal.create(
+          localDateTimeToMicros(java.time.LocalDateTime.ofInstant(now, t.zoneId)), TimestampNTZType)
+        case t: CurrentTime => Literal.create(truncateTimeToPrecision(
+          instantToNanosOfDay(now, zone), t.precision), TimeType(t.precision))
+        case _: CurrentTimeZone => Literal.create(zone, StringType)
+      }
+    })
+  }
+
   /** Wait for a write-fused observation's metrics. The listener bus
     * delivers them asynchronously, so the common case is a handful of
     * milliseconds after the write action returns. None means they will

@@ -128,7 +128,8 @@ class DataSkippingSpec extends SparkSuite {
         val cond = atoms.map(column).reduce(_ && _)
         def kept(preds: Seq[DataSkipping.Pred]): Seq[String] =
           DataSkipping.partition(preds, dirs, stats.get)._1
-        val viaCatalyst = kept(DataSkipping.fromCondition(spark, cond, schema))
+        val viaCatalyst = kept(DataSkipping.fromCondition(spark, cond, schema,
+          java.time.Instant.now()))
         val viaFilter = kept(DataSkipping.fromFilters(atoms.map(filter)))
         val viaTuples = kept(tuples(atoms))
         val ctx = s"trial $trial: $atoms over $rows with $stats"

@@ -106,11 +106,15 @@ class DvChangeFeedSpec extends SparkSuite {
     assert(sig(cdf(dir, 3, 4)) === floor.sorted)
     // v4's deletes are rows of v3's directory under v3's deletion
     // vectors; once v3 is vacuumed too, the feed of v4 fails loudly
-    // instead of dropping them
+    // instead of dropping them: changes() at the call, the DSv2 feed
+    // when it plans, both naming the version asked for and the one gone
     vt.vacuum(keepLast = 1)
-    val e = intercept[Exception](vt.changes(4, 4).collect())
+    val want4 = "the change feed of version 4 needs version 3, which was vacuumed"
+    assert(intercept[IllegalArgumentException](vt.changes(4, 4)).getMessage
+      .contains(want4))
+    val e = intercept[Exception](cdf(dir, 4, 4).collect())
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(_.getMessage.contains("vacuumed")), e.toString)
+      .exists(_.getMessage.contains(want4)), e.toString)
   }
 
   /** Every row a change-feed stream from `from` delivers once the

@@ -6,7 +6,8 @@ import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
 
 /** The local filesystem under its own `faultfs:` scheme, failing the
-  * file creations a spec arms with [[FaultFileSystem.failCreate]]. A
+  * file creations a spec arms with [[FaultFileSystem.failCreate]] and
+  * refusing the renames it arms with [[FaultFileSystem.failRename]]. A
   * separate scheme leaves the suite's cached `file:` filesystem
   * untouched: only tables opened at a `faultfs://` path see faults.
   */
@@ -27,11 +28,18 @@ class FaultFileSystem extends RawLocalFileSystem {
     super.create(f, permission, overwrite, bufferSize, replication, blockSize,
       progress)
   }
+  override def rename(src: Path, dst: Path): Boolean =
+    !FaultFileSystem.failRename(src) && super.rename(src, dst)
 }
 
 object FaultFileSystem {
   /** Which created paths fail with an IOException; none by default. */
   @volatile var failCreate: Path => Boolean = _ => false
+
+  /** Which renamed source paths return false, as a filesystem refusing
+    * a rename does; none by default.
+    */
+  @volatile var failRename: Path => Boolean = _ => false
 
   def check(f: Path): Unit =
     if (failCreate(f)) throw new java.io.IOException(s"injected fault: create $f")

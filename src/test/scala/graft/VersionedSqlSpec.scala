@@ -188,6 +188,22 @@ class VersionedSqlSpec extends SparkSuite {
         .getMessage.contains("no *.parquet"))
   }
 
+  test("convert fails loudly and writes no log when a file cannot be moved") {
+    val local = tmpVt()
+    (0L until 100L).map(k => (k, s"r$k")).toDF("k", "s")
+      .repartition(3).write.mode("overwrite").parquet(local)
+    val refused = new java.io.File(local).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).min
+    val dir = FaultFileSystem.bind(spark, local)
+    FaultFileSystem.failRename = _.getName == refused
+    val e = try intercept[IllegalArgumentException](
+        graft.sources.VersionedTable.convert(spark, dir))
+      finally FaultFileSystem.failRename = _ => false
+    assert(e.getMessage.contains(refused), e.getMessage)
+    assert(!new java.io.File(local, "_graft_log").exists())
+    assert(new java.io.File(local, refused).exists())
+  }
+
   test("loud errors: unversioned names, malformed bounds; plain SQL is untouched") {
     val e = intercept[Exception] { spark.sql("DESCRIBE HISTORY no_such_vt_table") }
     assert(e.getMessage.contains("not a versioned table"))
